@@ -57,15 +57,15 @@ def main() -> None:
     cache_sf_tables(spark, args.sf_dir)
     queries = e.queries()
 
-    # Count jobs via the AppStatusStore (all jobs, any thread): setJobGroup
-    # is thread-local under pinned-thread PySpark, so jobs launched from
-    # worker threads (e.g. ann_recall_report's ThreadPoolExecutor index
-    # builds) never join the group and a group-based count undercounts
-    # exactly the queries this profiler inspects (round-10 ADVICE).
-    store = spark.sparkContext._jsc.sc().statusStore()
+    # Count jobs by the DAG scheduler's next job ID (all jobs, any thread):
+    # setJobGroup is thread-local under pinned-thread PySpark, so jobs
+    # launched from worker threads (e.g. ann_recall_report's
+    # ThreadPoolExecutor index builds) never join a group, and the status
+    # store's job list is capped at spark.ui.retainedJobs (1000) entries.
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
 
     def n_jobs() -> int:
-        return store.jobsList(None).size()
+        return dag.nextJobId()
 
     # warm the JVM on the first named query once, untimed
     if names:
