@@ -41,14 +41,3 @@ def decode_image(data: bytes) -> np.ndarray:
         "arithmetic/12-bit/lossless JPEG)"
     )
 
-
-def image_meta(data: bytes) -> tuple[int, int]:
-    """(width, height) from headers only — no pixel decode."""
-    fmt = image_format(data)
-    if fmt == "png":
-        w, h, _bit, _color = P.png_meta(data)
-        return w, h
-    if fmt == "jpeg":
-        w, h, _nc = J.jpeg_meta(data)
-        return w, h
-    raise ValueError(f"unrecognized image magic {bytes(data[:4])!r}")

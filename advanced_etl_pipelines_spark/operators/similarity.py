@@ -154,37 +154,6 @@ def brute_force_topk(
     )
 
 
-def _band_signatures(v, planes: list[list[float]], bands: int):
-    """Array of per-band bucket signatures (ints) from hyperplane signs.
-
-    ``bind_once`` pins the (possibly non-trivial) vector expression to a
-    single evaluation per row; otherwise Catalyst inlines it into every
-    plane's fold (n_planes re-evaluations)."""
-    from advanced_etl_pipelines_spark.functions.text import bind_once
-
-    per_band = len(planes) // bands
-
-    def build(vv):
-        band_cols = []
-        for b in range(bands):
-            sig = F.lit(0)
-            for p in planes[b * per_band : (b + 1) * per_band]:
-                bit = F.when(
-                    F.aggregate(
-                        F.zip_with(vv, F.lit(p), lambda x, y: x * y),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                    >= 0,
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-                sig = sig * 2 + bit
-            band_cols.append(sig)
-        return F.array(*band_cols)
-
-    return bind_once(v, build)
-
-
 def _kmeans_centroids(
     corpus: DataFrame,
     vec_col: str,
@@ -219,16 +188,6 @@ def _kmeans_centroids(
                 m = members.sum(axis=0)
                 cent[c] = m / max(np.linalg.norm(m), 1e-12)
     return cent.tolist()
-
-
-def _centroid_scores(v, centroids: list[list[float]]):
-    """Array of dot(v, centroid_c) per cluster; v bound once per row."""
-    from advanced_etl_pipelines_spark.functions.text import bind_once
-
-    def build(vv):
-        return F.array(*[dot(vv, F.lit(c)) for c in centroids])
-
-    return bind_once(v, build)
 
 
 def ivf_topk(

@@ -293,10 +293,12 @@ def write_staged(df: DataFrame, path: str) -> None:
     """S5 equivalent: Parquet partitioned by city, time-sorted within
     partitions (timestamped CSV in the reference; partition pruning
     replaces latest-wins filename sorting, and the time sort keeps
-    row-group min/max stats tight for time-range scans)."""
-    df.sortWithinPartitions("time").write.mode("overwrite").partitionBy(
-        "city"
-    ).parquet(path)
+    row-group min/max stats tight for time-range scans).  The sort leads
+    with ``city`` because ``partitionBy`` requires that ordering and would
+    otherwise replace a time-only sort with its own."""
+    df.sortWithinPartitions("city", "time").write.mode(
+        "overwrite"
+    ).partitionBy("city").parquet(path)
 
 
 def _recompute_guard(df: DataFrame) -> DataFrame:

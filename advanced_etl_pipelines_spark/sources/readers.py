@@ -149,15 +149,6 @@ def read_sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, f"{sf_dir}/{name}.parquet")
 
 
-def latest_path(dir_path: str, pattern: str) -> str | None:
-    """S6 latest-wins discovery: glob + lexicographic sort, take last
-    (`ETL_Multi_Lvl_API/load.py:40-44`; `ETL_Weather_API/load.py:106-107`).
-    Works because the reference timestamps filenames in sortable UTC format;
-    in the lakehouse layout this becomes "read newest partition"."""
-    matches = sorted(glob.glob(os.path.join(dir_path, pattern)))
-    return matches[-1] if matches else None
-
-
 SF_TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

@@ -10,42 +10,41 @@ driver's capture window — the summary line now carries only the top-10
 slowest queries inline; the complete map lives in the artifact file.
 
 Timing = wall-clock of plan construction + collect() per query, warm
-session (JVM/session startup excluded).  `value` is the sum over all
-queries — the headline "full registry sweep" number recorded per round
-against BASELINE.md.
+session (JVM/session startup excluded), best of RUNS.  `value` is the
+sum over all queries — the headline "full registry sweep" number
+recorded per round against BASELINE.md.  Every query is timed by
+time_query(), which also counts the Spark jobs its best run launched;
+the artifact carries them as a per-query `jobs` map plus
+splits.jobs_total.  Job counts do not move with box speed, so a change
+in them is a change in the code's work, read directly off two
+artifacts; probe_sec is the box-speed index.
 
-Regression guard (round-6 VERDICT item 7): each query's time is
-checked against the COMMITTED bench_queries.json with a budget of
-2x max(committed, 0.5s) — the 0.5s floor keeps sub-100ms queries from
-tripping on scheduler noise.  Any violation is listed on stderr and
-the process exits 1 (after the summary line, so the driver still
-parses the run), making a per-query regression fail the builder's own
-sweep instead of waiting for the judge's diff.  Per-query ratios are
-first divided by the sweep's MEDIAN ratio (clamped >= 1, full sweeps
-only) so a uniformly loaded box doesn't false-positive — see
-guard_violations.  A VIOLATING run writes its per-query map to
-bench_queries.failed.json and leaves the committed baseline untouched
-(round-7 VERDICT item 2).  Position-localized JVM warm-up (round-7:
-sweep positions 0-39 at 1.86x vs 1.08x for the rest, 16 false flags)
-is retired by an untimed warm-up pass over the first
-SPARK_GRAFT_BENCH_WARMUP queries before timing starts.  New queries
-(absent from the committed artifact) and non-default sf dirs are
-skipped; SPARK_GRAFT_BENCH_GUARD=0 disables.
+Regression guard (round-6 VERDICT item 7): at the default sf each
+query's time is checked against the COMMITTED bench_queries.json with a
+budget of 2x max(committed, 0.5s) — the 0.5s floor keeps sub-100ms
+queries from tripping on scheduler noise.  Any violation is listed on
+stderr and the process exits 1 (after the summary line, so the run
+still parses), making a per-query regression fail the sweep itself
+instead of surfacing only in a later diff.  Per-query ratios
+are first divided by the sweep's MEDIAN ratio (clamped >= 1, full
+sweeps only) so a uniformly loaded box doesn't false-positive — see
+guard_violations.  Violators are re-measured once before the verdict.
+A VIOLATING run writes its per-query map to bench_queries.failed.json
+and leaves the committed baseline untouched (round-7 VERDICT item 2).
+Position-localized JVM warm-up (round-7: sweep positions 0-39 at 1.86x
+vs 1.08x for the rest, 16 false flags) is retired by an untimed
+warm-up pass over the first WARMUP queries before timing starts.  New
+queries (absent from the committed artifact) and non-default sf dirs
+are not guarded.
 
-Cross-refresh drift chain (round-8 VERDICT item 1): every guard-clean
-refresh REPLACES the baseline, so per-refresh normalization can only
-see one step of drift — splits.cumulative_load chains the unclamped
-median ratio across refreshes from a fixed anchor, probe_ref_sec
-carries the anchor box's fixed CPU-probe time, and the run WARNs when
-the chain exceeds CUM_DRIFT_WARN with probe_ratio attributing box vs
-code.  Both anchors name the driver-r8 box (279.5 s, probe 0.315 s)
-since round 10 — the original r6 time anchor predates the probe, and
-the r6->r8 segment it carried was proven pure box band by the r9
-chain datapoints.  See chain_drift().
+``python bench.py --only q1 q2 ...`` times just the named queries the
+same way (cache, warm-up, best of RUNS) and prints one row per query:
+best, build, exec and jobs.  It writes no artifact and runs no guard.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -61,28 +60,12 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 # normalizer (round-7 ADVICE) — surfaced as a stderr WARN, never silent
 LOAD_WARN_RATIO = 1.5
 
-# cumulative cross-refresh drift above which the chained index alarms
-# (round-8 VERDICT item 1): the per-refresh median normalizer absorbs
-# anything under LOAD_WARN_RATIO by design, so a <=1.2x-per-round
-# uniform slowdown could ratchet into the committed baseline forever
-# (observed: 227.8 s r6 -> 237.8 s r7 -> 284.2 s r8 at constant 321
-# queries, every step individually guard-clean).  cumulative_load
-# chains the UNCLAMPED median ratio across refreshes from a fixed
-# anchor (the driver-r8 box since round 10 — see chain_drift), so
-# compounded drift trips an alarm even though no single refresh does.
-CUM_DRIFT_WARN = 1.5
-
-# Eligibility floor for the drift CHAIN's unclamped median (the guard's
-# 2x clamp keeps its own 0.5 s floor — timing methodology unchanged).
-# The chain excludes committed-sub-floor queries because their ratios
-# are fixed-overhead/JIT noise, not signal; round 11's optimizations +
-# fast-box adoption pushed sub-0.5 s queries to 190/321, tripping the
-# round-9 tripwire (the chain median would have drawn on the slow half
-# only).  0.3 s keeps 223/321 eligible on the round-11 baseline while
-# staying ~3x the measured fixed per-query overhead; the tripwire test
-# asserts against THIS constant so the next speed-up trips it again
-# instead of silently thinning the median.
-CHAIN_FLOOR = 0.3
+# untimed warm-up queries before the timed region (see main), best-of-N
+# runs per query, and the most guard violators re-measured before the
+# verdict (a sweep-wide regression is not diluted by re-measure time)
+WARMUP = 30
+RUNS = 2
+REMEASURE_MAX = 20
 
 # sf>=1 sweep order: graph family first (round-8 VERDICT item 3).  The
 # round-8 sf1 sweep measured triangle_count at 62 s in-sweep vs 22.6 s
@@ -151,7 +134,6 @@ def estimate_load(
     timings: dict[str, float],
     committed: dict[str, float],
     floor: float = 0.5,
-    clamp: bool = True,
 ) -> float:
     """Sweep-wide load factor: the median per-query ratio vs the
     committed baseline, clamped >= 1 (a FASTER box never hides a
@@ -159,119 +141,56 @@ def estimate_load(
     degenerate subset keeps strict load=1 semantics).  Pure, shared by
     the guard and the summary line so the artifact self-normalizes
     across boxes (round-7 VERDICT item 6: three rounds of judge effort
-    re-derived "the box was Nx slow" from per-query diffs).
-
-    ``clamp=False`` returns the raw median — the drift CHAIN must see a
-    faster box as < 1 so the cumulative index walks back down when the
-    hardware recovers; the clamped value feeds only the guard.  The
-    chain's median is computed ONLY over queries whose committed time
-    is >= the floor (round-9 ADVICE): the guard's t/max(committed,
-    floor) denominator is fine for a one-shot >=1-clamped verdict, but
-    sub-floor queries' ratios read t/0.5 instead of t/committed —
-    systematically < 1 — and once they crossed half the registry the
-    raw median would multiply a spurious < 1 factor into
-    cumulative_load every refresh, silently unwinding the chain.  The
-    chain caller passes ``floor=CHAIN_FLOOR`` (0.3 s — round 11's
-    speed-ups pushed sub-0.5 s queries past half the registry, firing
-    the round-9 tripwire; the guard keeps 0.5).
-    tests/test_bench_guard.py pins both the exclusion and that the
-    committed baseline keeps enough above-CHAIN_FLOOR queries for the
-    chain median to be meaningful."""
-    if clamp:
-        ratios = sorted(
-            t / max(committed[name], floor)
-            for name, t in timings.items()
-            if name in committed
-        )
-    else:
-        ratios = sorted(
-            t / committed[name]
-            for name, t in timings.items()
-            if name in committed and committed[name] >= floor
-        )
+    re-derived "the box was Nx slow" from per-query diffs)."""
+    ratios = sorted(
+        t / max(committed[name], floor)
+        for name, t in timings.items()
+        if name in committed
+    )
     if len(ratios) < 20:
         return 1.0
     med = ratios[len(ratios) // 2]
-    return max(1.0, med) if clamp else med
+    return max(1.0, med)
 
 
-def chain_drift(
-    prior_splits: dict, load_raw: float, probe_sec: float
-) -> dict:
-    """Chained cross-refresh drift index (round-8 VERDICT item 1).
+def time_query(fn, spark, sf_dir: str, runs: int = RUNS):
+    """(best, build, exec, jobs) of the best of ``runs`` runs of one
+    registry query: best is the wall-clock of plan construction +
+    collect(), split into build (Python plan construction — lazy, no
+    job) and exec (collect: analysis + optimization + run), and jobs is
+    the number of Spark jobs that run launched.  The first run pays plan
+    + codegen compilation, a one-time cost that is noise at any real
+    scale.
 
-    Each guard-clean refresh replaces the committed baseline, so the
-    per-refresh median normalizer can only ever see ONE step of drift —
-    this chains the steps: ``cumulative_load`` multiplies the committed
-    baseline's value by this sweep's UNCLAMPED median ratio (raw, so
-    box-speed recovery unwinds the index), ``probe_ref_sec`` carries
-    the anchor box's fixed CPU-probe time forward verbatim, and
-    ``probe_ratio`` = this run's probe / the anchor's attributes an
-    alarm to box speed (probe is data-independent CPU work) vs code.
-    ``drift_anchor`` documents where the chain is pinned.  Seeds for a
-    baseline that predates the chain: cumulative_load starts at this
-    run's raw median, probe_ref at this run's probe.
+    Jobs are counted by the DAG scheduler's next job ID (all jobs, any
+    thread): setJobGroup is thread-local under pinned-thread PySpark, so
+    jobs launched from worker threads (e.g. ann_recall_report's
+    ThreadPoolExecutor index builds) never join a group, and the status
+    store's job list is capped at spark.ui.retainedJobs entries.
 
-    ANCHOR (re-unified round 10): both the time anchor and probe_ref
-    name the SAME box — the driver-r8 box (279.5 s sweep, probe
-    0.315 s).  Through round 9 the time anchor was the r6 quiet box
-    (227.8 s, pre-probe, so its probe was never measured) while
-    probe_ref came from driver-r8, smearing drift_net by the two
-    boxes' constant speed offset; and the r9 chain datapoints proved
-    the r6->r8 227.8->284.2 s segment was pure box band (zero code
-    information), so the committed baseline was re-stamped by dividing
-    the r6-seeded cumulative_load by that 1.227 seed.  The retired
-    segment is recorded in SCALE.md §16 and BASELINE.md.
-
-    Degenerate prior (round-9 ADVICE): a hand-edited / partial
-    baseline that carries cumulative_load but LOST probe_ref_sec would
-    silently reseed the probe anchor from the current run — probe_ratio
-    resets to 1.0 while cumulative_load keeps its accumulated value, so
-    drift_net would misattribute all prior box drift to code.  That
-    case now WARNs on stderr and refuses to emit drift_net (None);
-    cumulative_load still chains.  Pure apart from the stderr warn;
-    pinned by tests/test_bench_guard.py."""
-    prior_cum = float(prior_splits.get("cumulative_load", 1.0))
-    cum = round(prior_cum * load_raw, 3)
-    reseeding = not prior_splits.get("probe_ref_sec")
-    probe_ref = float(prior_splits.get("probe_ref_sec") or probe_sec or 1.0)
-    probe_ratio = (
-        round(probe_sec / probe_ref, 3) if probe_ref else 1.0
+    Intermediates the query pinned via tracked_persist are released
+    after the runs — between queries, not between the runs of one query
+    (warm reruns legitimately share a query's own caches); without this
+    a sweep accumulates every persisted intermediate in the CacheManager
+    until the session ends (ADVICE r3, medium)."""
+    from advanced_etl_pipelines_spark.operators.caching import (
+        release_tracked_caches,
     )
-    anchor_lost = reseeding and prior_cum != 1.0
-    if anchor_lost:
-        print(
-            "WARN drift chain probe anchor lost: prior splits carry"
-            f" cumulative_load={prior_cum} but no probe_ref_sec —"
-            " probe_ref reseeded from THIS run, so drift_net would"
-            " misattribute accumulated box drift to code; drift_net"
-            " withheld (restore probe_ref_sec in the committed"
-            " baseline to resume box attribution)",
-            file=sys.stderr,
-        )
-    # box-normalized code drift: cumulative_load folds together box
-    # speed and code cost vs the anchor; dividing by probe_ratio
-    # (pure-CPU box index) isolates the code term.  Needed because
-    # the chain can legitimately sit BELOW 1 on a fast box (first
-    # observed: 0.846 in round 9), where an absolute 1.5x threshold
-    # on cumulative_load alone would let a uniform code regression
-    # climb back through ~1.8x of headroom unalarmed.
-    drift_net = (
-        None
-        if anchor_lost
-        else (round(cum / probe_ratio, 3) if probe_ratio else cum)
-    )
-    return {
-        "cumulative_load": cum,
-        "probe_ref_sec": round(probe_ref, 3),
-        "probe_ratio": probe_ratio,
-        "drift_net": drift_net,
-        "drift_anchor": prior_splits.get(
-            "drift_anchor",
-            "driver-r8 box 279.5s, probe 0.315 (r6->r8 segment retired"
-            " as box band, SCALE.md §16)",
-        ),
-    }
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    best = None
+    for _ in range(runs):
+        j0 = dag.nextJobId()
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.collect()
+        t2 = time.perf_counter()
+        if best is None or t2 - t0 < best[0]:
+            best = (t2 - t0, t1 - t0, t2 - t1, dag.nextJobId() - j0)
+    release_tracked_caches()
+    total, build, exe, jobs = best
+    return round(total, 3), round(build, 3), round(exe, 3), jobs
 
 
 def guard_violations(
@@ -310,7 +229,15 @@ def guard_violations(
     ]
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument(
+        "--only",
+        nargs="+",
+        metavar="QUERY",
+        help="time just these queries; print a row each, write nothing",
+    )
+    args = ap.parse_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -322,6 +249,9 @@ def main() -> None:
     import __spark_entry__ as entry_mod
 
     queries = entry_mod.queries()
+    unknown = sorted(set(args.only or ()) - set(queries))
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
 
     # Warm the JVM + parquet footer caches outside the timed region.
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
@@ -340,33 +270,37 @@ def main() -> None:
 
         cache_sec = round(cache_sf_tables(spark, sf_dir), 3)
 
-    # Untimed warm-up pass (round-7 VERDICT item 1): a cold JVM pays
-    # JIT/codegen/GC-sizing warm-up for roughly the first 30-40 sweep
-    # positions — the driver's round-7 run showed positions 0-39 at
-    # 1.86x median while positions 40+ sat at 1.08x, and best-of-2
-    # back-to-back runs cannot absorb a cost that spans many queries.
-    # Running the sweep's first SPARK_GRAFT_BENCH_WARMUP queries once
-    # untimed (default 30, 0 disables) retires that warm-up before the
-    # timed region starts, so the regression guard sees steady-state
-    # numbers at every position.
-    from advanced_etl_pipelines_spark.operators.caching import (
-        release_tracked_caches,
-    )
-
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
 
-    # execution order: registration order, graph family hoisted first
-    # at sf >= 1 (round-8 VERDICT item 3 — see GRAPH_FIRST_PREFIXES)
-    order = sweep_order(queries, sf_val)
+    # execution order: the --only names as given, else registration
+    # order with the graph family hoisted first at sf >= 1 (round-8
+    # VERDICT item 3 — see GRAPH_FIRST_PREFIXES)
+    order = args.only or sweep_order(queries, sf_val)
 
-    n_warm = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "30"))
-    for name in order[: max(n_warm, 0)]:
-        queries[name](spark, sf_dir).collect()
-        release_tracked_caches()
+    # Untimed warm-up pass (round-7 VERDICT item 1): a cold JVM pays
+    # JIT/codegen/GC-sizing warm-up for roughly the first 30-40 sweep
+    # positions — the round-7 sweep showed positions 0-39 at
+    # 1.86x median while positions 40+ sat at 1.08x, and best-of-2
+    # back-to-back runs cannot absorb a cost that spans many queries.
+    # Running the first WARMUP queries once untimed retires that warm-up
+    # before the timed region starts, so the regression guard sees
+    # steady-state numbers at every position.
+    for name in order[:WARMUP]:
+        time_query(queries[name], spark, sf_dir, runs=1)
+
+    if args.only:
+        print(
+            f"{'query':42s} {'best':>7s} {'build':>7s} {'exec':>7s}"
+            f" {'jobs':>5s}"
+        )
+        for name in order:
+            best, build, exe, jobs = time_query(queries[name], spark, sf_dir)
+            print(f"{name:42s} {best:7.3f} {build:7.3f} {exe:7.3f} {jobs:5d}")
+        return
 
     # Tiny fixed CPU-bound probe, timed: a data-independent
     # load-normalization index for cross-box comparison (round-7
@@ -379,66 +313,37 @@ def main() -> None:
     ).collect()
     probe_sec = round(time.perf_counter() - t0, 3)
 
-    # Best-of-N per query (default 2): the first run pays plan + codegen
-    # compilation, a one-time cost that is noise at any real scale.
-    # Per-query time splits into build (Python plan construction — lazy,
-    # no job) and exec (collect: analysis + optimization + run); the
-    # split's p50/p95 goes into the artifact so compile-vs-execute
-    # dominance is measurable per scale factor.
-    runs = max(int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")), 1)
     timings: dict[str, float] = {}
     build_s: dict[str, float] = {}
     exec_s: dict[str, float] = {}
-    for name in order:
-        fn = queries[name]
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.collect()
-            t2 = time.perf_counter()
-            if t2 - t0 < best:
-                best = t2 - t0
-                build_s[name] = round(t1 - t0, 3)
-                exec_s[name] = round(t2 - t1, 3)
-        timings[name] = round(best, 3)
-        # Release intermediates the query pinned via tracked_persist —
-        # between queries, not between the best-of-N runs of one query
-        # (warm reruns legitimately share a query's own caches, same as
-        # r3 methodology).  Without this a 289-query sweep accumulates
-        # every persisted intermediate in the CacheManager until the
-        # session ends (ADVICE r3, medium).
-        release_tracked_caches()
+    jobs: dict[str, int] = {}
 
-    # regression guard: committed per-query map, read BEFORE any write.
-    # The baseline is read whenever it would be REPLACED (default sf)
-    # regardless of SPARK_GRAFT_BENCH_GUARD — a guard-off run still
-    # writes bench_queries.json, and losing prior_splits there would
-    # silently erase the drift chain's seed; the env toggle only
-    # disables the violation verdict.
-    default_sf = is_default_sf(sf_dir)
+    def measure(name: str) -> None:
+        t = time_query(queries[name], spark, sf_dir)
+        timings[name], build_s[name], exec_s[name], jobs[name] = t
+
+    for name in order:
+        measure(name)
+
+    # regression guard: committed per-query map, read BEFORE any write,
+    # and only at the default sf (other dirs are never guarded, so an
+    # empty map makes the verdict below vacuous)
     here = os.path.dirname(os.path.abspath(__file__))
     committed: dict[str, float] = {}
-    prior_splits: dict = {}
-    guard_on = (
-        os.environ.get("SPARK_GRAFT_BENCH_GUARD", "1") != "0" and default_sf
-    )
     baseline_path = os.path.join(here, artifact_name_for(sf_dir))
-    if default_sf and os.path.exists(baseline_path):
+    if is_default_sf(sf_dir) and os.path.exists(baseline_path):
         try:
             with open(baseline_path) as f:
                 prior = json.load(f)
             if prior.get("sf") == 0.1:
                 committed = prior.get("queries", {})
-                prior_splits = prior.get("splits", {})
         except (json.JSONDecodeError, OSError):
             pass
 
     # Guard verdict FIRST, artifact write second (round-7 VERDICT item
     # 2): a violating run routes to bench_queries.failed.json so the
     # committed baseline is never replaced by a failing sweep.
-    violations = guard_violations(timings, committed) if guard_on else []
+    violations = guard_violations(timings, committed)
 
     # Targeted re-measure of violators (round-8): best-of-2 occasionally
     # lands BOTH samples of one query inside a GC/compile burst —
@@ -454,35 +359,14 @@ def main() -> None:
     # landed fast, and committed best-of-4 budgets for exactly the
     # noisiest queries).  Re-measured names are recorded in the
     # artifact (splits.remeasured) so baseline refreshes are auditable.
-    # Capped so a sweep-wide real regression isn't diluted by
-    # re-measure time; SPARK_GRAFT_BENCH_REMEASURE=0 disables.
     remeasured: list[str] = []
-    if (
-        violations
-        and len(violations) <= 20
-        and os.environ.get("SPARK_GRAFT_BENCH_REMEASURE", "1") != "0"
-    ):
+    if violations and len(violations) <= REMEASURE_MAX:
         for name, _t, _base in violations:
             remeasured.append(name)
-            best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                df = queries[name](spark, sf_dir)
-                t1 = time.perf_counter()
-                df.collect()
-                t2 = time.perf_counter()
-                if t2 - t0 < best:
-                    best = t2 - t0
-                    build_s[name] = round(t1 - t0, 3)
-                    exec_s[name] = round(t2 - t1, 3)
-            timings[name] = round(best, 3)
-            release_tracked_caches()
+            measure(name)
         violations = guard_violations(timings, committed)
 
     load = round(estimate_load(timings, committed), 3)
-    load_raw = round(
-        estimate_load(timings, committed, floor=CHAIN_FLOOR, clamp=False), 3
-    )
     artifact = os.path.join(
         here, artifact_name_for(sf_dir, violated=bool(violations))
     )
@@ -500,15 +384,8 @@ def main() -> None:
         "build_p95": pct(list(build_s.values()), 0.95),
         "exec_p50": pct(list(exec_s.values()), 0.50),
         "exec_p95": pct(list(exec_s.values()), 0.95),
+        "jobs_total": sum(jobs.values()),
     }
-    # chained cross-refresh drift index (round-8 VERDICT item 1): only
-    # meaningful against the committed default-sf baseline — a clean
-    # run's artifact BECOMES the next baseline, so writing the chained
-    # fields here is what advances the chain.
-    chained: dict = {}
-    if committed:
-        chained = chain_drift(prior_splits, load_raw, probe_sec)
-        splits.update(chained)
     with open(artifact, "w") as f:
         json.dump(
             {
@@ -518,6 +395,7 @@ def main() -> None:
                 "queries": timings,
                 "build": build_s,
                 "exec": exec_s,
+                "jobs": jobs,
             },
             f,
             indent=1,
@@ -541,18 +419,8 @@ def main() -> None:
         "cache_build_sec": cache_sec,
         "probe_sec": probe_sec,
         "load_median_ratio": load,
-        "cumulative_load": chained.get("cumulative_load"),
-        "probe_ratio": chained.get("probe_ratio"),
-        "drift_net": chained.get("drift_net"),
         "queries": top10,
     }
-    # chained keys are OMITTED (not null) when absent — an empty chain
-    # (non-default sf dir, first run, or a withheld drift_net) printed
-    # "cumulative_load": null and a strict driver-side parse assuming
-    # numeric fields would trip on it (round-9 ADVICE)
-    for k in ("cumulative_load", "probe_ratio", "drift_net"):
-        if summary[k] is None:
-            del summary[k]
     print(json.dumps(summary))
     if load > LOAD_WARN_RATIO:
         # round-7 ADVICE: the median normalizer can absorb a sweep-wide
@@ -562,28 +430,6 @@ def main() -> None:
             f" {LOAD_WARN_RATIO}x: heavy box load, or a sweep-wide"
             " regression hiding in the normalizer — re-run on a quiet"
             " box before trusting this sweep",
-            file=sys.stderr,
-        )
-    if chained and (
-        chained["cumulative_load"] > CUM_DRIFT_WARN
-        or (chained["drift_net"] or 0) > CUM_DRIFT_WARN
-    ):
-        # round-8 VERDICT item 1: compounded <=1.2x-per-refresh drift
-        # that no single refresh can see.  drift_net (cumulative /
-        # probe_ratio) is the box-normalized code term, so the alarm
-        # holds even when a fast box has pushed cumulative_load below
-        # 1; probe_ratio attributes a raw cumulative alarm: ~equal to
-        # cumulative_load means the BOX slowed, near 1.0 means CODE.
-        net = chained["drift_net"]
-        print(
-            f"WARN cumulative drift {chained['cumulative_load']:.2f}x /"
-            f" box-normalized {'withheld' if net is None else f'{net:.2f}x'}"
-            " since anchor"
-            f" ({chained['drift_anchor']}) exceeds {CUM_DRIFT_WARN}x;"
-            f" probe_ratio {chained['probe_ratio']:.2f}x — if the"
-            " box-normalized term is high this is compounded CODE"
-            " drift ratcheted through guard-clean refreshes: bisect"
-            " before committing this baseline",
             file=sys.stderr,
         )
 

@@ -6,11 +6,10 @@ executable and auditable).
 
 Semantics that matter (pinned by tests/test_round_close.py):
 
-* Every run normalizes and CHAINS against the SAME committed baseline:
-  bench.py replaces bench_queries.json on a guard-clean run, so the
-  committed artifact is snapshotted before the pair and restored before
-  each run — otherwise run 2 would normalize against run 1 and the
-  drift chain would advance twice for one adoption.
+* Every run is guarded against the SAME committed baseline: bench.py
+  replaces bench_queries.json on a guard-clean run, so the committed
+  artifact is snapshotted before the pair and restored before each run
+  — otherwise run 2 would be guarded and normalized against run 1.
 * Adopt-the-quieter: the guard-clean run with the smaller sweep total
   wins (same-day totals vary 236-274 s at sf0.1 on this box — the
   quieter run is the better code measurement, and the guard already
@@ -19,20 +18,16 @@ Semantics that matter (pinned by tests/test_round_close.py):
   bench_queries.failed.json by bench.py) is NOT adoptable; if no run is
   clean the committed baseline is left byte-identical and the script
   exits 1.
-* The child env PINS the convention's semantics: SPARK_GRAFT_SF_DIR is
-  forced to bench.py's default (an inherited sf1 dir would route bench's
-  artifact to bench_sf1.json, leaving BASELINE as the restored snapshot
-  — this script would then "adopt" the committed baseline as if it were
-  a fresh sweep and print its chain datapoint as new) and
-  SPARK_GRAFT_BENCH_GUARD is forced on (guard-off rc=0 is not
-  "guard-clean", so a regressing run must never be adoptable here).
+* The child env PINS SPARK_GRAFT_SF_DIR to bench.py's default, which
+  is also where bench.py's guard is on: an inherited sf1 dir would
+  route bench's artifact to bench_sf1.json unguarded, leaving BASELINE
+  as the restored snapshot — this script would then "adopt" the
+  committed baseline as if it were a fresh sweep.
 
-Usage:  python scripts/round_close.py          # the round-close pair
-        SPARK_GRAFT_CLOSE_RUNS=3 python scripts/round_close.py
+Usage:  python scripts/round_close.py
 
-Prints ONE JSON line: adopted run, both totals, and the adopted
-artifact's chain datapoint (cumulative_load / probe_ratio / drift_net)
-— the numbers BASELINE.md's round row records.
+Prints ONE JSON line: adopted run, both totals and the adopted total —
+the numbers BASELINE.md's round row records.
 """
 
 from __future__ import annotations
@@ -46,6 +41,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 BENCH = os.path.join(REPO, "bench.py")
 BASELINE = os.path.join(REPO, "bench_queries.json")
+RUNS = 2
 
 sys.path.insert(0, REPO)
 from bench import DEFAULT_SF_DIR  # noqa: E402  (import is side-effect free)
@@ -74,29 +70,22 @@ def pick_quieter(artifacts: list[dict | None]) -> int | None:
 
 
 def main() -> int:
-    runs = max(int(os.environ.get("SPARK_GRAFT_CLOSE_RUNS", "2")), 1)
     snapshot: bytes | None = None
     if os.path.exists(BASELINE):
         with open(BASELINE, "rb") as f:
             snapshot = f.read()
 
     artifacts: list[dict | None] = []
-    for i in range(runs):
-        # restore the committed baseline so every run of the pair
-        # normalizes + chains against the SAME prior (see module doc)
+    for i in range(RUNS):
+        # restore the committed baseline so every run of the pair is
+        # guarded against the SAME prior (see module doc)
         if snapshot is not None:
             with open(BASELINE, "wb") as f:
                 f.write(snapshot)
-        # pin the convention's semantics regardless of the caller's
-        # shell: default sf (anything else routes the artifact away
-        # from BASELINE and the adopt step would re-adopt the restored
-        # snapshot as "new"), guard ON (rc=0 with the guard disabled
-        # is not guard-clean)
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_SF_DIR=DEFAULT_SF_DIR,
-            SPARK_GRAFT_BENCH_GUARD="1",
-        )
+        # pin the default sf regardless of the caller's shell: anything
+        # else routes the artifact away from BASELINE, unguarded, and the
+        # adopt step would re-adopt the restored snapshot as "new"
+        env = dict(os.environ, SPARK_GRAFT_SF_DIR=DEFAULT_SF_DIR)
         rc = subprocess.call([sys.executable, BENCH], env=env)
         art = None
         if rc == 0 and os.path.exists(BASELINE):
@@ -107,7 +96,7 @@ def main() -> int:
                 art = None
         artifacts.append(art)
         print(
-            f"round_close: run {i + 1}/{runs} rc={rc}"
+            f"round_close: run {i + 1}/{RUNS} rc={rc}"
             f" total={total(art)}",
             file=sys.stderr,
         )
@@ -128,7 +117,6 @@ def main() -> int:
     adopted = artifacts[pick]
     with open(BASELINE, "w") as f:
         json.dump(adopted, f, indent=1, sort_keys=True)
-    splits = adopted.get("splits", {})
     print(
         json.dumps(
             {
@@ -137,10 +125,6 @@ def main() -> int:
                 "runs_total": [total(a) for a in artifacts],
                 "value": total(adopted),
                 "unit": "sec",
-                "cumulative_load": splits.get("cumulative_load"),
-                "probe_ratio": splits.get("probe_ratio"),
-                "drift_net": splits.get("drift_net"),
-                "drift_anchor": splits.get("drift_anchor"),
             }
         )
     )

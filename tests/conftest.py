@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import time
 
 import pytest
 
@@ -17,6 +18,45 @@ def spark():
         "spark.sql.shuffle.partitions": "8",
     })
     yield s
+
+
+def drain(query, timeout_s: int = 300):
+    """Wait until a started streaming query has consumed all of its
+    input, stop it, and re-raise its failure, if any.
+
+    An availableNow query ends by itself once its input is processed.
+    One with processing-time timers never does: the timers keep
+    scheduling batches that read no input.  availableNow runs no such
+    batch while input remains, so the first one marks the input as
+    consumed.  A query still reading input after ``timeout_s`` fails the
+    test instead of being checked on partial output."""
+    deadline = time.monotonic() + timeout_s
+    try:
+        while query.isActive and not any(
+            p.numInputRows == 0 for p in query.recentProgress
+        ):
+            if time.monotonic() > deadline:
+                raise AssertionError(
+                    f"stream {query.name!r} still reading input after"
+                    f" {timeout_s}s"
+                )
+            time.sleep(0.1)
+    finally:
+        query.stop()
+    query.awaitTermination()  # re-raises the query's failure
+    return query
+
+
+def run_available_now(stream_df, name):
+    """Drain ``stream_df`` into the in-memory table ``name`` (update mode,
+    availableNow trigger)."""
+    return drain(
+        stream_df.writeStream.outputMode("update")
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def rows_to_tuples(df, cols=None):

@@ -92,8 +92,8 @@ def test_warmup_pass_is_wired():
     import inspect
 
     src = inspect.getsource(_bench().main)
-    warm = src.index("SPARK_GRAFT_BENCH_WARMUP")
-    timed = src.index("best = float(\"inf\")")
+    warm = src.index("for name in order[:WARMUP]")
+    timed = src.index("for name in order:\n        measure(name)")
     assert warm < timed
     assert src.index("probe_sec = round") < timed
 
@@ -105,195 +105,6 @@ def test_estimate_load_is_surfaced_and_clamped():
     # clamped at 1 on a fast box; degenerate overlap -> 1
     assert est({f"q{i}": 0.5 for i in range(30)}, committed) == 1.0
     assert est({"q1": 3.0}, committed) == 1.0
-    # clamp=False (the drift chain's view) returns the raw median so a
-    # faster box UNWINDS the cumulative index; degenerate still 1.0
-    assert est({f"q{i}": 0.5 for i in range(30)}, committed, clamp=False) == 0.5
-    assert est({"q1": 0.2}, committed, clamp=False) == 1.0
-
-
-def test_chain_median_excludes_subfloor_committed_queries():
-    """Round-9 ADVICE (medium): the guard's t/max(committed, 0.5)
-    denominator is fine for its >=1-clamped one-shot verdict, but fed
-    raw into the CHAIN it turns every sub-floor query into a ratio of
-    t/0.5 — systematically < 1 — and 143/321 committed queries already
-    sit under the floor.  Once they crossed half the registry, the raw
-    median would multiply a spurious < 1 into cumulative_load every
-    refresh, silently unwinding the chain.  clamp=False therefore
-    computes the median ONLY over committed >= floor, with exact
-    t/committed ratios."""
-    est = _bench().estimate_load
-    # 25 above-floor queries steady at 1.2x, 26 sub-floor queries whose
-    # floored ratios would read 0.04/0.5 = 0.08 and drag the raw median
-    # to a fabricated "fast box"
-    committed = {f"big{i}": 2.0 for i in range(25)}
-    committed.update({f"tiny{i}": 0.02 for i in range(26)})
-    timings = {f"big{i}": 2.4 for i in range(25)}
-    timings.update({f"tiny{i}": 0.04 for i in range(26)})
-    assert est(timings, committed, clamp=False) == 1.2
-    # the guard's clamped view keeps the floored denominators (the
-    # sub-floor majority's 0.08 ratios own its median, then the >=1
-    # clamp holds) — exactly the fabricated <1 factor the chain's
-    # unclamped path must never see
-    assert est(timings, committed) == 1.0
-    # and if too few above-floor queries remain, the chain median
-    # degenerates to 1.0 (no fabricated factor) instead of trusting a
-    # handful of samples
-    few = {f"big{i}": 2.0 for i in range(5)}
-    few.update({f"tiny{i}": 0.02 for i in range(40)})
-    t_few = {f"big{i}": 2.4 for i in range(5)}
-    t_few.update({f"tiny{i}": 0.04 for i in range(40)})
-    assert est(t_few, few, clamp=False) == 1.0
-
-
-def test_committed_baseline_keeps_chain_median_meaningful():
-    """The hazard above only stays theoretical while the committed
-    baseline keeps a healthy above-floor population: fail loudly when
-    sub-CHAIN_FLOOR queries reach half the registry (round-9 ADVICE
-    asked for exactly this tripwire — at that point the chain's
-    eligible set is the slow half only, and the convention needs
-    rethinking).  Round 11 fired the original 0.5 s version of this
-    tripwire (190/321 sub-floor after the optimization rounds' real
-    speed-ups landed in a fast-box baseline) and took the remedy the
-    docstring prescribed: the chain got its own CHAIN_FLOOR (0.3 s,
-    ~3x the fixed per-query overhead; guard clamp unchanged at 0.5),
-    and this test now asserts against that constant so the NEXT
-    speed-up fires it again instead of silently thinning the median."""
-    import json
-
-    floor = _bench().CHAIN_FLOOR
-    path = os.path.join(os.path.dirname(__file__), "..", "bench_queries.json")
-    with open(path) as f:
-        q = json.load(f)["queries"]
-    sub = sum(1 for v in q.values() if v < floor)
-    assert sub / len(q) < 0.5, (
-        f"{sub}/{len(q)} committed queries below the {floor}s chain "
-        "floor — the drift chain's median now reflects only the "
-        "above-floor half; revisit CHAIN_FLOOR before refreshing again"
-    )
-    assert len(q) - sub >= 20  # the chain median never degenerates
-
-
-def test_drift_chain_multiplies_raw_median_and_carries_anchor():
-    """Round-8 VERDICT item 1: committed baselines ratcheted
-    227.8 -> 237.8 -> 284.2 s at constant 321 queries, each refresh
-    individually guard-clean — the chain must make the COMPOUNDED
-    factor visible.  Pins: multiplication by the raw (unclamped)
-    median, verbatim carry of probe_ref_sec + drift_anchor, probe
-    attribution ratio, and the seeds for a pre-chain baseline."""
-    chain = _bench().chain_drift
-    prior = {
-        "cumulative_load": 1.2,
-        "probe_ref_sec": 0.3,
-        "drift_anchor": "driver-r8 box 279.5s, probe 0.315 (r6->r8"
-        " segment retired as box band, SCALE.md §16)",
-    }
-    out = chain(prior, load_raw=1.1, probe_sec=0.45)
-    assert out["cumulative_load"] == 1.32  # 1.2 * 1.1
-    assert out["probe_ref_sec"] == 0.3  # anchor carried, never refreshed
-    assert out["probe_ratio"] == 1.5  # 0.45 / 0.3 — box attribution
-    assert out["drift_net"] == 0.88  # 1.32 / 1.5 — box-normalized code term
-    assert out["drift_anchor"] == prior["drift_anchor"]
-    # a faster box UNWINDS the chain (raw median < 1)
-    assert chain(prior, load_raw=0.9, probe_sec=0.3)["cumulative_load"] == 1.08
-    # pre-chain baseline: seed from this run (cum = raw, ref = probe)
-    seeded = chain({}, load_raw=1.05, probe_sec=0.4)
-    assert seeded["cumulative_load"] == 1.05
-    assert seeded["probe_ref_sec"] == 0.4
-    assert seeded["probe_ratio"] == 1.0
-    # the below-1 masking hole (first observed: chain at 0.846 on a
-    # fast box): compounding code regressions must not hide behind box
-    # speed.  After one 1.6x uniform step the absolute threshold is
-    # still blind (cum 1.35 < 1.5) — that single step is caught by the
-    # per-refresh LOAD_WARN instead — but drift_net carries the full
-    # box-normalized code term forward so the NEXT compounding step
-    # (1.35 * 1.2 = 1.62) alarms, where cumulative_load alone would
-    # need the box to cooperate.
-    masked = chain(
-        {"cumulative_load": 0.846, "probe_ref_sec": 0.315},
-        load_raw=1.6,
-        probe_sec=0.315,
-    )
-    assert masked["cumulative_load"] < 1.5  # absolute threshold blind
-    assert masked["drift_net"] == masked["cumulative_load"]  # probe 1.0
-    again = chain(
-        {"cumulative_load": masked["cumulative_load"],
-         "probe_ref_sec": 0.315},
-        load_raw=1.2,
-        probe_sec=0.315,
-    )
-    assert again["drift_net"] > 1.5  # compounding trips the alarm
-
-
-def test_chain_refuses_drift_net_when_probe_anchor_is_lost(capsys):
-    """Round-9 ADVICE (low): a partial / hand-edited baseline carrying
-    cumulative_load but NO probe_ref_sec silently reseeds the probe
-    anchor from the current run — probe_ratio resets to 1.0 while
-    cumulative_load keeps its history, so drift_net would misattribute
-    all accumulated box drift to code.  chain_drift must WARN and
-    withhold drift_net (None); cumulative_load still chains."""
-    chain = _bench().chain_drift
-    out = chain({"cumulative_load": 1.3}, load_raw=1.1, probe_sec=0.4)
-    assert out["cumulative_load"] == 1.43
-    assert out["probe_ref_sec"] == 0.4  # reseeded, by necessity
-    assert out["probe_ratio"] == 1.0
-    assert out["drift_net"] is None  # refused, not fabricated
-    assert "probe anchor lost" in capsys.readouterr().err
-    # the legit fresh-seed path (no history at all) keeps drift_net and
-    # stays silent
-    seeded = chain({}, load_raw=1.05, probe_sec=0.4)
-    assert seeded["drift_net"] == 1.05
-    assert capsys.readouterr().err == ""
-    # and both anchors in the default anchor string name the SAME box
-    # (round-10: the r6 time anchor + driver-r8 probe pair smeared
-    # drift_net by the boxes' constant offset)
-    assert "driver-r8" in seeded["drift_anchor"]
-    # main() survives a withheld drift_net: the alarm guards the None
-    # and the summary omits None chained keys instead of printing null
-    # (round-9 ADVICE, low)
-    import inspect
-
-    src = inspect.getsource(_bench().main)
-    assert '(chained["drift_net"] or 0) > CUM_DRIFT_WARN' in src
-    assert "del summary[k]" in src
-
-
-def test_drift_alarm_and_chain_are_wired_into_main():
-    """main() must chain vs the COMMITTED baseline's splits, write the
-    chained fields into the artifact (a clean run's artifact becomes
-    the next baseline — writing them IS advancing the chain), and warn
-    above CUM_DRIFT_WARN.  Structurally pinned like the exit path."""
-    import inspect
-
-    b = _bench()
-    assert b.CUM_DRIFT_WARN == 1.5
-    src = inspect.getsource(b.main)
-    chain_at = src.index("chain_drift(prior_splits, load_raw, probe_sec)")
-    write_at = src.index('with open(artifact, "w")')
-    assert chain_at < write_at  # chained fields land in the artifact
-    assert "splits.update(chained)" in src
-    assert 'chained["cumulative_load"] > CUM_DRIFT_WARN' in src
-    # the alarm must ALSO fire on the box-normalized code term, or a
-    # fast box's sub-1 chain masks a uniform code regression (None-
-    # guarded: a withheld drift_net can't crash the alarm)
-    assert '(chained["drift_net"] or 0) > CUM_DRIFT_WARN' in src
-    # the committed baseline carries the chain's seed, so history
-    # predating any given refresh is already in the index
-    import json
-
-    path = os.path.join(os.path.dirname(__file__), "..", "bench_queries.json")
-    with open(path) as f:
-        splits = json.load(f)["splits"]
-    # the chain is UNCLAMPED by design — it sat at 0.846 after the
-    # round-9 fast-box refreshes — so pin presence and positivity, not
-    # a floor
-    assert splits["cumulative_load"] > 0
-    assert splits["probe_ref_sec"] > 0
-    assert splits["drift_net"] > 0
-    # round 10: the committed baseline was re-stamped onto the unified
-    # driver-r8 anchor (cumulative_load / the 1.227 r6 seed — that
-    # segment was proven box band by the r9 datapoints, so dropping it
-    # loses no code information and un-smears drift_net)
-    assert "driver-r8" in splits["drift_anchor"]
 
 
 def test_remeasure_uses_fresh_budget_and_is_audited():
@@ -305,11 +116,16 @@ def test_remeasure_uses_fresh_budget_and_is_audited():
     audits."""
     import inspect
 
-    src = inspect.getsource(_bench().main)
-    rem_at = src.index("SPARK_GRAFT_BENCH_REMEASURE")
-    # fresh best inside the remeasure loop: a second float("inf") reset
-    # AFTER the remeasure gate, not `best = timings[name]`
-    assert 'best = float("inf")' in src[rem_at:]
+    b = _bench()
+    src = inspect.getsource(b.main)
+    rem_at = src.index("len(violations) <= REMEASURE_MAX")
+    # a fresh best inside the remeasure loop: the violator goes back
+    # through time_query, which takes no prior sample to start from,
+    # not `best = timings[name]`
+    assert "measure(name)" in src[rem_at:]
+    assert list(inspect.signature(b.time_query).parameters) == [
+        "fn", "spark", "sf_dir", "runs"
+    ]
     assert "best = timings[name]" not in src
     assert "remeasured.append(name)" in src
     assert '"remeasured": sorted(remeasured)' in src
@@ -348,9 +164,9 @@ def test_sweep_order_hoists_graph_family_at_scale():
     import inspect
 
     src = inspect.getsource(_bench().main)
-    assert "order = sweep_order(queries, sf_val)" in src
-    assert "for name in order[: max(n_warm, 0)]" in src
-    assert "for name in order:" in src
+    assert "order = args.only or sweep_order(queries, sf_val)" in src
+    assert "for name in order[:WARMUP]" in src
+    assert "for name in order:\n        measure(name)" in src
 
 
 def test_failed_run_never_routes_to_committed_baseline():
@@ -388,7 +204,7 @@ def test_violators_are_remeasured_before_the_verdict():
 
     src = inspect.getsource(_bench().main)
     first = src.index("violations = guard_violations")
-    rem = src.index("SPARK_GRAFT_BENCH_REMEASURE")
+    rem = src.index("len(violations) <= REMEASURE_MAX")
     second = src.index("violations = guard_violations", first + 1)
     route = src.index("violated=bool(violations)")
     assert first < rem < second < route
@@ -418,18 +234,51 @@ def test_artifact_name_routes_nondefault_sf_dirs_away_from_baseline():
     )
 
 
-def test_guard_off_run_still_reads_prior_splits_for_the_chain():
-    """A SPARK_GRAFT_BENCH_GUARD=0 default-sf run still REPLACES
-    bench_queries.json, so it must still read the committed baseline's
-    splits — otherwise it silently erases the drift chain's seed.  The
-    env toggle may only disable the violation verdict."""
-    import inspect
 
-    src = inspect.getsource(_bench().main)
-    # baseline read is gated on default_sf, NOT on guard_on
-    assert "if default_sf and os.path.exists(baseline_path)" in src
-    # the verdict (and only the verdict) respects the toggle
-    assert (
-        "violations = guard_violations(timings, committed) if guard_on"
-        in src
-    )
+def test_time_query_and_only_mode_on_a_fake_registry(
+    spark, monkeypatch, capsys
+):
+    """time_query reports the Spark jobs of its best run and splits its
+    time into build + exec; ``--only`` times just the named queries,
+    prints one row each and writes no artifact."""
+    import sys
+    import types
+
+    from pyspark.sql import functions as F
+
+    from advanced_etl_pipelines_spark import session
+    from conftest import SF_SMOKE
+
+    b = _bench()
+    fake = {
+        "fake_grouped": lambda s, sf: s.range(100)
+        .groupBy((F.col("id") % 3).alias("k"))
+        .count(),
+        "fake_sum": lambda s, sf: s.range(10).selectExpr("sum(id) AS s"),
+    }
+    for fn in fake.values():
+        best, build, exe, jobs = b.time_query(fn, spark, SF_SMOKE)
+        assert jobs >= 1
+        assert abs(build + exe - best) <= 0.002  # each rounded to 1 ms
+
+    entry = types.ModuleType("__spark_entry__")
+    entry.queries = lambda: dict(fake)
+    monkeypatch.setitem(sys.modules, "__spark_entry__", entry)
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMOKE)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_CACHE", "0")
+    here = os.path.dirname(os.path.abspath(b.__file__))
+
+    def files():
+        return {
+            n: os.stat(os.path.join(here, n)).st_mtime_ns
+            for n in os.listdir(here)
+        }
+
+    before = files()
+    b.main(["--only", "fake_sum", "fake_grouped"])
+    rows = [r.split() for r in capsys.readouterr().out.splitlines()]
+    assert rows[0] == ["query", "best", "build", "exec", "jobs"]
+    assert [r[0] for r in rows[1:]] == ["fake_sum", "fake_grouped"]
+    assert all(int(r[4]) >= 1 for r in rows[1:])
+    assert files() == before

@@ -185,6 +185,18 @@ def test_aq_warehouse_holds_staged_rows(spark, processed):
     assert got.risk_class.tolist() == want.risk_class.tolist()
 
 
+def test_aq_staged_files_are_time_sorted(processed):
+    """Each staged city file keeps time order: the writer's required
+    ``city`` ordering must not replace ``write_staged``'s time sort."""
+    import pyarrow.parquet as pq
+
+    files = glob.glob(str(processed / "staged_aq" / "city=*" / "*.parquet"))
+    assert files
+    for path in files:
+        times = pq.read_table(path, columns=["time"]).column("time").to_pylist()
+        assert times == sorted(times), path
+
+
 def test_aq_summary_metrics(processed):
     st = _expected_aq_staged()
     out = _read_csv(str(processed / "aq" / "summary_metrics"))

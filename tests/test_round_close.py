@@ -38,17 +38,16 @@ def test_adopt_the_quieter_rule():
 
 
 def test_pair_runs_against_the_same_committed_baseline():
-    """Both runs must normalize + chain against the SAME prior: the
-    committed baseline is snapshotted once, restored before EACH run,
-    and restored again before the adopt decision — otherwise run 2
-    would normalize against run 1's artifact and the drift chain would
-    advance twice for one adoption.  Structurally pinned, like
-    bench.py's own wiring tests (a real pair is a ~10-min sweep)."""
+    """Both runs must be guarded against the SAME prior: the committed
+    baseline is snapshotted once, restored before EACH run, and restored
+    again before the adopt decision — otherwise run 2 would be guarded
+    against run 1's artifact.  Structurally pinned, like bench.py's own
+    wiring tests (a real pair is a ~10-min sweep)."""
     import inspect
 
     src = inspect.getsource(_rc().main)
     snap = src.index("snapshot = f.read()")
-    loop = src.index("for i in range(runs)")
+    loop = src.index("for i in range(RUNS)")
     restore_in_loop = src.index("f.write(snapshot)", loop)
     call = src.index("subprocess.call")
     restore_before_adopt = src.index("f.write(snapshot)", call)
@@ -60,19 +59,16 @@ def test_pair_runs_against_the_same_committed_baseline():
 
 
 def test_child_env_pins_default_sf_and_guard_on():
-    """The bench subprocess env must force the default sf dir and the
-    guard ON, regardless of the caller's shell: an inherited
-    SPARK_GRAFT_SF_DIR routes bench's artifact away from BASELINE, so
-    the adopt step would re-adopt the restored committed snapshot as a
-    "fresh" sweep and print its chain datapoint as new; an inherited
-    SPARK_GRAFT_BENCH_GUARD=0 makes a regressing run rc=0 and therefore
-    adoptable, which is not guard-clean."""
+    """The bench subprocess env must force the default sf dir, which is
+    where bench.py's guard is on, regardless of the caller's shell: an
+    inherited SPARK_GRAFT_SF_DIR routes bench's artifact away from
+    BASELINE unguarded, so the adopt step would re-adopt the restored
+    committed snapshot as a "fresh" sweep."""
     import inspect
 
     mod = _rc()
     src = inspect.getsource(mod.main)
     assert "SPARK_GRAFT_SF_DIR=DEFAULT_SF_DIR" in src
-    assert 'SPARK_GRAFT_BENCH_GUARD="1"' in src
     assert "env=env" in src
     # the pinned default is bench.py's own, not a copy that could skew
     import bench

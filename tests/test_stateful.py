@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import time
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,28 +11,9 @@ from advanced_etl_pipelines_spark.streaming.stateful import (
     sessionize_stream,
 )
 from advanced_etl_pipelines_spark.streaming.windows import file_event_stream
+from conftest import run_available_now
 
 SF = "/root/testdata/sf0.001"
-
-
-def _run_available_now(stream_df, name, timeout_s: int = 25):
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination takes SECONDS; a query holding processing-time
-    # timeouts can outlive its data, so stop it once the data is drained.
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        deadline = time.time() + 30
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.2)
-    assert not q.isActive
-    return q
 
 
 def test_running_user_stats_accumulates_across_batches(spark, tmp_path):
@@ -48,7 +27,7 @@ def test_running_user_stats_accumulates_across_batches(spark, tmp_path):
     stream = file_event_stream(
         spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
     )
-    _run_available_now(running_user_stats(stream), "running_stats")
+    run_available_now(running_user_stats(stream), "running_stats")
 
     # memory sink in update mode appends each emission; take the max
     # n_events per user = final state
@@ -75,7 +54,7 @@ def test_sessionize_stream_matches_batch_session_count(spark, tmp_path):
     events.coalesce(1).write.parquet(src)
 
     stream = file_event_stream(spark, src, spark.read.parquet(src).schema)
-    _run_available_now(
+    run_available_now(
         sessionize_stream(stream, gap_seconds=1800, timeout_ms=3000), "sessions"
     )
 
@@ -119,7 +98,7 @@ def test_sessionize_gap_splits_sessions(spark, tmp_path):
     src = str(tmp_path / "landing")
     df.coalesce(1).write.parquet(src)
     stream = file_event_stream(spark, src, spark.read.parquet(src).schema)
-    _run_available_now(
+    run_available_now(
         sessionize_stream(stream, gap_seconds=1800, timeout_ms=3000), "gap_sessions"
     )
     out = spark.sql("SELECT * FROM gap_sessions").collect()

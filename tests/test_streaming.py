@@ -14,16 +14,9 @@ from advanced_etl_pipelines_spark.streaming.windows import (
     start_upsert_stream,
     windowed_event_stats,
 )
+from conftest import drain
 
 SF = "/root/testdata/sf0.001"
-
-
-def _await(query, timeout_s: int = 120) -> None:
-    query.awaitTermination(timeout_s)  # seconds, not ms
-    deadline = time.time() + timeout_s
-    while query.isActive and time.time() < deadline:
-        time.sleep(0.2)
-    assert not query.isActive, "stream did not finish"
 
 
 def test_stream_equals_batch(spark, tmp_path):
@@ -46,7 +39,7 @@ def test_stream_equals_batch(spark, tmp_path):
         ["window_start", "window_end", "event_type"],
         str(tmp_path / "ckpt"),
     )
-    _await(q)
+    drain(q)
     got = {tuple(r) for r in spark.read.parquet(out).collect()}
     assert got == expected
     assert len(got) > 0
@@ -74,7 +67,7 @@ def test_late_data_converges(spark, tmp_path):
             ["window_start", "window_end", "event_type"],
             ckpt,
         )
-        _await(q)
+        drain(q)
 
     run_once()
     got1 = spark.read.parquet(out).collect()
@@ -212,7 +205,7 @@ def test_session_window_stream_equals_batch(spark, tmp_path):
         str(tmp_path / "ckpt"),
         output_mode="append",
     )
-    _await(q)
+    drain(q)
     got = {tuple(r) for r in spark.read.parquet(out).collect()}
     assert got <= expected, "stream emitted a session batch never saw"
     assert closed <= got, "a watermark-closed session was never emitted"
@@ -243,7 +236,7 @@ def test_medallion_stream_idempotent_rollup(spark, tmp_path):
         q = start_medallion_stream(
             stream, bronze, silver, str(tmp_path / ckpt)
         )
-        _await(q)
+        drain(q)
 
     run("ckpt1")
     want = {
@@ -347,7 +340,7 @@ def test_medallion_stream_recovers_from_mid_batch_kill(
 
     # restart from the same checkpoint with the real sink
     monkeypatch.setattr(sinks_mod, "upsert_parquet", real_upsert)
-    _await(start())
+    drain(start())
 
     want = {
         (r["d"], r["event_type"], r["n_events"], round(r["sum_value"], 6))

@@ -4,7 +4,6 @@ semantics under availableNow processing."""
 from __future__ import annotations
 
 import datetime as dt
-import time
 
 from pyspark.sql import functions as F
 
@@ -13,14 +12,7 @@ from advanced_etl_pipelines_spark.streaming.windows import (
     file_event_stream,
     interval_join_streams,
 )
-
-
-def _await(query, timeout_s: int = 120) -> None:
-    query.awaitTermination(timeout_s)
-    deadline = time.time() + timeout_s
-    while query.isActive and time.time() < deadline:
-        time.sleep(0.2)
-    assert not query.isActive
+from conftest import drain
 
 
 def _ts(minute: int) -> dt.datetime:
@@ -51,7 +43,7 @@ def test_stream_dedup_drops_watermark_window_dups(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _await(q)
+    drain(q)
     got = spark.read.parquet(out)
     assert got.count() == 3
     assert sorted(r.k for r in got.select("k").collect()) == [1, 2, 3]
@@ -84,7 +76,7 @@ def test_interval_join_matches_batch_join(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _await(q)
+    drain(q)
     got = sorted(
         (r.click_id, r.amount) for r in spark.read.parquet(out).collect()
     )
@@ -147,7 +139,7 @@ def test_interval_join_left_outer_emits_unmatched(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _await(q)
+    drain(q)
     got = sorted(
         (r.click_id, r.amount) for r in spark.read.parquet(out).collect()
     )
@@ -187,7 +179,7 @@ def test_stream_dedup_replay_matches_batch_twin(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _await(q)
+    drain(q)
     got = {
         r["event_type"]: r["n"]
         for r in spark.read.parquet(out)
@@ -222,7 +214,7 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _await(q)
+    drain(q)
     got = sorted(
         (r.eid, r.tier) for r in spark.read.parquet(out).collect()
     )
@@ -311,7 +303,7 @@ def test_interval_join_recovers_from_mid_batch_kill(spark, tmp_path):
     assert calls["n"] == 2
 
     calls["die"] = False
-    _await(start())
+    drain(start())
 
     got = collections.Counter(
         (r.click_id, r.amount)

@@ -10,8 +10,6 @@ suite skipped 3 tests wherever protobuf was absent; VERDICT.md)."""
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
 from advanced_etl_pipelines_spark.sources.readers import read_sf_table
@@ -22,26 +20,9 @@ from advanced_etl_pipelines_spark.streaming.transform_state import (
     sessionize_auto,
 )
 from advanced_etl_pipelines_spark.streaming.windows import file_event_stream
+from conftest import drain, run_available_now
 
 SF = "/root/testdata/sf0.001"
-
-
-def _run_available_now(stream_df, name, timeout_s: int = 40):
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        deadline = time.time() + 30
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.2)
-    assert not q.isActive
-    return q
 
 
 def test_tws_running_stats_accumulates_across_batches(spark, tmp_path):
@@ -54,7 +35,7 @@ def test_tws_running_stats_accumulates_across_batches(spark, tmp_path):
     stream = file_event_stream(
         spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
     )
-    _run_available_now(running_user_stats_auto(stream), "tws_running")
+    run_available_now(running_user_stats_auto(stream), "tws_running")
 
     got = (
         spark.sql("SELECT * FROM tws_running")
@@ -84,7 +65,7 @@ def test_tws_sessionize_matches_classic_twin(spark, tmp_path):
     events.coalesce(1).write.parquet(src)
 
     stream = file_event_stream(spark, src, spark.read.parquet(src).schema)
-    _run_available_now(
+    run_available_now(
         sessionize_auto(stream, gap_seconds=1800, timeout_ms=3000), "tws_sessions"
     )
 
@@ -126,7 +107,7 @@ def test_tws_sessionize_gap_splits_and_timer_closes(spark, tmp_path):
     src = str(tmp_path / "landing")
     df.coalesce(1).write.parquet(src)
     stream = file_event_stream(spark, src, spark.read.parquet(src).schema)
-    _run_available_now(
+    run_available_now(
         sessionize_auto(stream, gap_seconds=1800, timeout_ms=2000), "tws_gap"
     )
     out = spark.sql("SELECT * FROM tws_gap").collect()
@@ -223,12 +204,7 @@ def test_stateful_processor_recovers_from_mid_batch_kill(spark, tmp_path):
     assert calls["n"] == 2
 
     calls["die"] = False
-    q2 = start()
-    q2.awaitTermination(120)
-    deadline = time.time() + 30
-    while q2.isActive and time.time() < deadline:
-        time.sleep(0.2)
-    assert not q2.isActive
+    drain(start())
 
     rows = (
         spark.read.option("basePath", out)
