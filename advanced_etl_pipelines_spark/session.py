@@ -13,6 +13,26 @@ choices are scale-oriented:
   survive a 1000× scale-up.
 * Arrow on — any pandas interchange (plots, mapInPandas media decode) is
   batch-columnar, never row-at-a-time.
+* A generated-class cache of ``CODEGEN_CACHE_ENTRIES`` — Spark keeps 100
+  compiled classes by default and evicts the least recently used first.
+  Workloads that re-run the same plan shapes cycle through more classes
+  than that (measured: 191 for one pass over 16 short registry queries,
+  110 for the medallion pipelines on a repeated batch), so most classes
+  were evicted before their next use and each op paid Janino
+  compilation again, at 9–15 ms a class.  1024 holds either set with
+  room to spare but not a whole registry sweep (about 3.9k classes at
+  sf0.01, which would cost another ~24 MB of Metaspace); the sweep runs
+  each query back to back, so its warm runs need only that query's
+  classes (68 at most on a first run).  The setting is static: it takes effect only
+  when ``get_spark`` builds the session (``extra_conf`` may override
+  it).
+* Generated class names without the whole-stage codegen ID — AQE
+  numbers a query's codegen stages as it plans them, in an order that
+  depends on which sibling stage finished first, and the ID is part of
+  the class name, so an unchanged stage body compiled again under a
+  swapped ID (``simpsons_paradox_probe`` recompiled 4 classes on repeat
+  runs).  This one is a runtime setting, so ``configure_existing``
+  applies it too.
 """
 
 from __future__ import annotations
@@ -22,6 +42,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
+# Generated classes Spark keeps compiled (its default is 100); see the
+# module docstring.
+CODEGEN_CACHE_ENTRIES = "1024"
 
 
 def get_spark(
@@ -68,6 +91,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -76,11 +101,17 @@ def get_spark(
 
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of our config to a session we did
-    not create (the driver hands us one in ``__spark_entry__``)."""
+    not create (the driver hands us one in ``__spark_entry__``).
+
+    Static settings are not in that subset: such a session keeps its own
+    codegen cache size (Spark's default is 100 classes), which cannot be
+    changed at runtime, so a workload cycling through more generated
+    classes than that recompiles them on every pass."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     # same rationale as get_spark: nested lazy-checkpoint broadcasts in
     # the iterative operators need headroom beyond the 300s default
     spark.conf.set("spark.sql.broadcastTimeout", "1800")
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     return spark

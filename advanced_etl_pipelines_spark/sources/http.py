@@ -96,16 +96,19 @@ def fetch_many(
 def fetch_partition(
     specs: Iterator[tuple[str, str, dict]],
     **kw,
-) -> Iterator[tuple[str, str]]:
+) -> Iterator[tuple[str, str | None]]:
     """S1 at scale: the ``mapPartitions`` body for a distributed URL
     fan-out — ``rdd.mapPartitions(lambda it: fetch_partition(it))``.
-    Yields (name, payload_json) strings; retries stay per-executor."""
+    Yields (name, payload_json) strings; retries stay per-executor.  A
+    fetch that fails after its retries yields (name, None), as in
+    ``fetch_many``, so the caller can count the failures."""
     for name, url, params in specs:
         try:
             payload = fetch_with_retry(url, params, **kw)
+        except Exception:  # noqa: BLE001 — continue-on-failure per spec
+            yield name, None
+        else:
             yield name, json.dumps(payload)
-        except Exception:  # noqa: BLE001
-            continue
 
 
 def land_raw_json(

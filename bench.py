@@ -13,11 +13,12 @@ Timing = wall-clock of plan construction + collect() per query, warm
 session (JVM/session startup excluded), best of RUNS.  `value` is the
 sum over all queries — the headline "full registry sweep" number
 recorded per round against BASELINE.md.  Every query is timed by
-time_query(), which also counts the Spark jobs its best run launched;
-the artifact carries them as a per-query `jobs` map plus
-splits.jobs_total.  Job counts do not move with box speed, so a change
-in them is a change in the code's work, read directly off two
-artifacts; probe_sec is the box-speed index.
+time_query(), which also counts the Spark jobs its best run launched
+and the generated classes each run compiled; the artifact carries them
+as per-query `jobs` and `compiles` ([cold, warm]) maps plus
+splits.jobs_total and splits.compiles_total.  Neither count moves with
+box speed, so a change in them is a change in the code's work, read
+directly off two artifacts; probe_sec is the box-speed index.
 
 Regression guard (round-6 VERDICT item 7): at the default sf each
 query's time is checked against the COMMITTED bench_queries.json with a
@@ -39,7 +40,8 @@ are not guarded.
 
 ``python bench.py --only q1 q2 ...`` times just the named queries the
 same way (cache, warm-up, best of RUNS) and prints one row per query:
-best, build, exec and jobs.  It writes no artifact and runs no guard.
+best, build, exec, jobs and compiles (cold/warm).  It writes no
+artifact and runs no guard.
 """
 
 from __future__ import annotations
@@ -154,19 +156,25 @@ def estimate_load(
 
 
 def time_query(fn, spark, sf_dir: str, runs: int = RUNS):
-    """(best, build, exec, jobs) of the best of ``runs`` runs of one
-    registry query: best is the wall-clock of plan construction +
+    """(best, build, exec, jobs, compiles) of the best of ``runs`` runs
+    of one registry query: best is the wall-clock of plan construction +
     collect(), split into build (Python plan construction — lazy, no
-    job) and exec (collect: analysis + optimization + run), and jobs is
-    the number of Spark jobs that run launched.  The first run pays plan
-    + codegen compilation, a one-time cost that is noise at any real
-    scale.
+    job) and exec (collect: analysis + optimization + run), jobs is the
+    number of Spark jobs that run launched, and compiles lists the
+    classes Janino compiled in each run, in run order ([cold, warm] at
+    the default RUNS).  Only the first run of a plan shape should
+    compile: later runs find their generated classes in Spark's codegen
+    cache (sized in session.py), so a nonzero warm count means a cache
+    too small for the working set or a run whose generated code differs
+    from the run before it.
 
     Jobs are counted by the DAG scheduler's next job ID (all jobs, any
     thread): setJobGroup is thread-local under pinned-thread PySpark, so
     jobs launched from worker threads (e.g. ann_recall_report's
     ThreadPoolExecutor index builds) never join a group, and the status
     store's job list is capped at spark.ui.retainedJobs entries.
+    Compiles come from the JVM-wide CodegenMetrics counter, so they
+    likewise cover every thread.
 
     Intermediates the query pinned via tracked_persist are released
     after the runs — between queries, not between the runs of one query
@@ -178,19 +186,26 @@ def time_query(fn, spark, sf_dir: str, runs: int = RUNS):
     )
 
     dag = spark.sparkContext._jsc.sc().dagScheduler()
+    # histogram of Janino compile times: its count is the classes
+    # compiled so far (codegen cache hits compile nothing)
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiled = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
     best = None
+    compiles = []
     for _ in range(runs):
         j0 = dag.nextJobId()
+        c0 = compiled.getCount()
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
         df.collect()
         t2 = time.perf_counter()
+        compiles.append(compiled.getCount() - c0)
         if best is None or t2 - t0 < best[0]:
             best = (t2 - t0, t1 - t0, t2 - t1, dag.nextJobId() - j0)
     release_tracked_caches()
     total, build, exe, jobs = best
-    return round(total, 3), round(build, 3), round(exe, 3), jobs
+    return round(total, 3), round(build, 3), round(exe, 3), jobs, compiles
 
 
 def guard_violations(
@@ -295,11 +310,16 @@ def main(argv: list[str] | None = None) -> None:
     if args.only:
         print(
             f"{'query':42s} {'best':>7s} {'build':>7s} {'exec':>7s}"
-            f" {'jobs':>5s}"
+            f" {'jobs':>5s} {'compiles':>9s}"
         )
         for name in order:
-            best, build, exe, jobs = time_query(queries[name], spark, sf_dir)
-            print(f"{name:42s} {best:7.3f} {build:7.3f} {exe:7.3f} {jobs:5d}")
+            best, build, exe, jobs, compiles = time_query(
+                queries[name], spark, sf_dir
+            )
+            print(
+                f"{name:42s} {best:7.3f} {build:7.3f} {exe:7.3f} {jobs:5d}"
+                f" {'/'.join(map(str, compiles)):>9s}"
+            )
         return
 
     # Tiny fixed CPU-bound probe, timed: a data-independent
@@ -317,10 +337,12 @@ def main(argv: list[str] | None = None) -> None:
     build_s: dict[str, float] = {}
     exec_s: dict[str, float] = {}
     jobs: dict[str, int] = {}
+    compiles: dict[str, list[int]] = {}
 
     def measure(name: str) -> None:
         t = time_query(queries[name], spark, sf_dir)
-        timings[name], build_s[name], exec_s[name], jobs[name] = t
+        (timings[name], build_s[name], exec_s[name], jobs[name],
+         compiles[name]) = t
 
     for name in order:
         measure(name)
@@ -385,6 +407,7 @@ def main(argv: list[str] | None = None) -> None:
         "exec_p50": pct(list(exec_s.values()), 0.50),
         "exec_p95": pct(list(exec_s.values()), 0.95),
         "jobs_total": sum(jobs.values()),
+        "compiles_total": sum(map(sum, compiles.values())),
     }
     with open(artifact, "w") as f:
         json.dump(
@@ -396,6 +419,7 @@ def main(argv: list[str] | None = None) -> None:
                 "build": build_s,
                 "exec": exec_s,
                 "jobs": jobs,
+                "compiles": compiles,
             },
             f,
             indent=1,

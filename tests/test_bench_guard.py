@@ -238,9 +238,11 @@ def test_artifact_name_routes_nondefault_sf_dirs_away_from_baseline():
 def test_time_query_and_only_mode_on_a_fake_registry(
     spark, monkeypatch, capsys
 ):
-    """time_query reports the Spark jobs of its best run and splits its
-    time into build + exec; ``--only`` times just the named queries,
-    prints one row each and writes no artifact."""
+    """time_query reports the Spark jobs of its best run, splits its
+    time into build + exec and counts each run's compiled classes (the
+    warm run finds every class in the codegen cache); ``--only`` times
+    just the named queries, prints one row each and writes no
+    artifact."""
     import sys
     import types
 
@@ -257,8 +259,9 @@ def test_time_query_and_only_mode_on_a_fake_registry(
         "fake_sum": lambda s, sf: s.range(10).selectExpr("sum(id) AS s"),
     }
     for fn in fake.values():
-        best, build, exe, jobs = b.time_query(fn, spark, SF_SMOKE)
+        best, build, exe, jobs, compiles = b.time_query(fn, spark, SF_SMOKE)
         assert jobs >= 1
+        assert len(compiles) == b.RUNS and compiles[1] == 0
         assert abs(build + exe - best) <= 0.002  # each rounded to 1 ms
 
     entry = types.ModuleType("__spark_entry__")
@@ -278,7 +281,9 @@ def test_time_query_and_only_mode_on_a_fake_registry(
     before = files()
     b.main(["--only", "fake_sum", "fake_grouped"])
     rows = [r.split() for r in capsys.readouterr().out.splitlines()]
-    assert rows[0] == ["query", "best", "build", "exec", "jobs"]
+    assert rows[0] == ["query", "best", "build", "exec", "jobs", "compiles"]
     assert [r[0] for r in rows[1:]] == ["fake_sum", "fake_grouped"]
     assert all(int(r[4]) >= 1 for r in rows[1:])
+    # compiled by the direct calls above: the cache holds every class
+    assert all(r[5] == "0/0" for r in rows[1:])
     assert files() == before

@@ -153,10 +153,8 @@ def _assert_frame(got: pd.DataFrame, want: pd.DataFrame) -> None:
                 assert g == str(w), (col, g, w)
 
 
-@pytest.fixture(scope="module")
-def processed(spark, tmp_path_factory):
-    tmp = tmp_path_factory.mktemp("pipelines")
-    raw, weather = _land(tmp)
+def _run_both(spark, tmp, raw, weather):
+    """Run both pipelines on the landed batch, writing under ``tmp``."""
     aq_t = aq.run_pipeline(
         spark, raw, str(tmp / "staged_aq"), str(tmp / "aq"),
         upsert=lambda df: upsert_parquet_partitioned(
@@ -168,7 +166,33 @@ def processed(spark, tmp_path_factory):
         append=lambda df: append_parquet(df, str(tmp / "wh_wx")),
     )
     assert set(aq_t) == set(wx_t) == {"transform", "load", "analysis"}
+
+
+@pytest.fixture(scope="module")
+def processed(spark, tmp_path_factory):
+    tmp = tmp_path_factory.mktemp("pipelines")
+    _run_both(spark, tmp, *_land(tmp))
     return tmp
+
+
+def test_repeated_batch_compiles_nothing(spark, tmp_path):
+    """A repeated batch finds every generated class in Spark's codegen
+    cache: the pipelines' working set fits the cache ``get_spark`` sizes,
+    and no plan puts per-batch values into generated code.  The first
+    run upserts into an empty warehouse and the later ones merge into
+    its rows, so the second and third runs run the same plans.  In a
+    fresh session the three runs compile 110 classes; with Spark's
+    default of 100 entries, which evicts the least recently used class
+    first, the third run recompiles 30 of them."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiled = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+    landed = _land(tmp_path)
+    counts = []
+    for _ in range(3):
+        c0 = compiled.getCount()
+        _run_both(spark, tmp_path, *landed)
+        counts.append(compiled.getCount() - c0)
+    assert counts[2] == 0, counts
 
 
 def test_aq_warehouse_holds_staged_rows(spark, processed):

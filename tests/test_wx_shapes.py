@@ -46,8 +46,9 @@ def test_short_metric_array_pads_null(spark, tmp_path):
 
 
 def test_fetch_partition_generator():
-    """The mapPartitions fetch body: yields (name, json) for successes,
-    silently skips failures — no Spark needed to test the generator."""
+    """The mapPartitions fetch body: yields (name, json) for successes
+    and (name, None) for failures, so none is dropped silently — no
+    Spark needed to test the generator."""
 
     def transport(url, params, timeout):
         if "bad" in url:
@@ -68,5 +69,6 @@ def test_fetch_partition_generator():
             sleep=lambda s: None,
         )
     )
-    assert [n for n, _ in out] == ["a", "c"]
+    assert [n for n, _ in out] == ["a", "bad", "c"]
     assert json.loads(out[0][1]) == {"u": "http://a"}
+    assert out[1][1] is None
