@@ -145,17 +145,6 @@ def value_counts_pct(
     return counts.withColumn("pct", F.col("cnt") * 100.0 / total)
 
 
-def top_n_by_count(df: DataFrame, col: str, n: int) -> DataFrame:
-    """A12 top-N groups by row count (`ETL_Multi_Lvl_API/etl_analysis.py:304`)
-    with deterministic tie-break on the key."""
-    return (
-        df.groupBy(col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc(col))
-        .limit(n)
-    )
-
-
 def resample_avg(
     df: DataFrame,
     ts_col: str,

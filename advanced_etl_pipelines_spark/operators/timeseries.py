@@ -157,25 +157,6 @@ def resample_gapfill(
     )
 
 
-def trailing_window(
-    df: DataFrame, key: str, ts: str, seconds: int
-) -> Window:
-    """RANGE frame spanning the trailing ``seconds`` (inclusive of the
-    current row's instant), keyed per partition — ordered by epoch
-    MICROSECONDS (integer) so the frame boundary is exact at the
-    timestamp's full resolution.  The earlier second-resolution
-    ``unix_timestamp`` ordering truncated sub-second components, so a
-    row sitting within one second of the 24 h boundary could fall
-    inside the truncated frame but outside the exact one — invisible at
-    sf0.01, caught by the sf1 answer gate against DuckDB's
-    microsecond-exact RANGE INTERVAL semantics."""
-    return (
-        Window.partitionBy(key)
-        .orderBy(F.unix_micros(F.col(ts).cast("timestamp")))
-        .rangeBetween(-seconds * 1_000_000, 0)
-    )
-
-
 def band_join_bucketed(
     fact: DataFrame,
     bands: DataFrame,

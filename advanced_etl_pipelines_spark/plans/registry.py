@@ -16,48 +16,54 @@ Conventions that make the driver's order-insensitive value-hash stable:
 
 Scale notes are inline per query: which side broadcasts, where the shuffle
 is, why the plan survives 100 TB.
+
+A query is registered one of two ways.  ``@query(name, oracle)`` decorates
+a DataFrame body, for plans SQL cannot express or runs slower as SQL;
+``sql_query(name, text, doc)`` registers a query whose SQL text runs
+unchanged on both engines.  For a SQL entry the text is both the Spark
+plan and the DuckDB oracle, so the conventions above bind a single text:
+a rounding or ordering slip changes both answers alike and the oracle
+gate cannot see it.  ``tests/test_sql_entries.py`` catches it instead,
+by pinning each SQL entry to the answer digests of the DataFrame body it
+replaced.
 """
 
 from __future__ import annotations
 
+import functools
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from advanced_etl_pipelines_spark.functions.features import (
-    aqi_category_pm25,
-    epoch_seconds,
-    risk_class_from_severity,
-    temp_category,
-)
+from advanced_etl_pipelines_spark.functions.features import epoch_seconds
 from advanced_etl_pipelines_spark.operators import relational as R
 from advanced_etl_pipelines_spark.operators import scale as S
-from advanced_etl_pipelines_spark.sources.readers import read_sf_table
+from advanced_etl_pipelines_spark.session import configure_existing
+from advanced_etl_pipelines_spark.sources.readers import read_sf_table, sql
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE_SQL: dict[str, str] = {}
 SF_PINNED_ORACLES: set[str] = set()
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Table loader for registry queries.  Applies the runtime-settable
-    session config first: the driver invokes ``queries()[name]`` with its
-    OWN (unconfigured) session, and a non-UTC session timezone would
-    shift every hour()/window() result relative to the DuckDB oracle."""
-    from advanced_etl_pipelines_spark.session import configure_existing
-
-    configure_existing(spark)
-    return read_sf_table(spark, sf_dir, name)
+# entries whose plan is their oracle text (``sql_query``)
+SQL_QUERIES: set[str] = set()
 
 
 def query(
     name: str, oracle: str | None = None, sf_pinned: bool = False
 ):
-    """Register a query and (optionally) its DuckDB oracle SQL.
+    """Register a query written as a DataFrame body and (optionally) its
+    DuckDB oracle SQL.
+
+    The registered callable applies the runtime-settable session config
+    once, then builds the body: the driver invokes ``queries()[name]``
+    with its OWN (unconfigured) session, and a non-UTC session timezone
+    would shift every hour()/window() result relative to the DuckDB
+    oracle.
 
     ``sf_pinned=True`` marks an oracle whose SQL encodes an
     expected-output frame computed at the driver's sf0.01 (a VALUES
@@ -69,14 +75,37 @@ def query(
     """
 
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            configure_existing(spark)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = run
         if oracle is not None:
             ORACLE_SQL[name] = oracle
             if sf_pinned:
                 SF_PINNED_ORACLES.add(name)
-        return fn
+        return run
 
     return deco
+
+
+def sql_query(name: str, text: str, doc: str) -> None:
+    """Register a query written as SQL: ``text`` is both its Spark plan
+    (``readers.sql``) and its DuckDB oracle, so the entry has one
+    implementation.  ``doc`` is its one-sentence description, with the
+    reference citation where it has one."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return sql(spark, sf_dir, text)
+
+    run.__name__ = run.__qualname__ = f"q_{name}"
+    run.__doc__ = doc
+    # the registering module names the query's family (QUERIES.md)
+    run.__module__ = sys._getframe(1).f_globals["__name__"]
+    QUERIES[name] = run
+    ORACLE_SQL[name] = text
+    SQL_QUERIES.add(name)
 
 
 # Rounding convention (see module docstring): an epsilon far above double
@@ -101,7 +130,7 @@ def r2(c) -> F.Column:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "agg_dedup_mean",
     """
     SELECT user_id, event_type,
@@ -109,18 +138,11 @@ def r2(c) -> F.Column:
            COUNT(*) AS cnt
     FROM events GROUP BY user_id, event_type
     """,
+    "A1 group-by mean dedup (`ETL_Multi_Lvl_API/transform.py:259-262`).",
 )
-def q_agg_dedup_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 group-by mean dedup (`ETL_Multi_Lvl_API/transform.py:259-262`).
-    One hash-agg shuffle on the grouping key; partial agg map-side."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("user_id", "event_type").agg(
-        r4(F.avg("value")).alias("avg_value"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
 
 
-@query(
+sql_query(
     "pivot_avg_wide",
     """
     SELECT user_id,
@@ -131,17 +153,12 @@ def q_agg_dedup_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + AVG(value) FILTER (WHERE event_type = 'view'), 4) AS view
     FROM events GROUP BY user_id
     """,
+    "A2 long->wide pivot with mean "
+    "(`ETL_Multi_Lvl_API/transform.py:196-202`).",
 )
-def q_pivot_avg_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 long->wide pivot with mean (`ETL_Multi_Lvl_API/transform.py:196-202`).
-    Explicit pivot values -> single job, fixed schema."""
-    ev = _t(spark, sf_dir, "events")
-    types = ["click", "error", "purchase", "signup", "view"]
-    wide = ev.groupBy("user_id").pivot("event_type", types).agg(F.avg("value"))
-    return wide.select("user_id", *[r4(F.col(t)).alias(t) for t in types])
 
 
-@query(
+sql_query(
     "crosstab_pct",
     """
     WITH counts AS (
@@ -157,79 +174,42 @@ def q_pivot_avg_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + p_cnt * 100.0 / (f_cnt + o_cnt + p_cnt), 4) AS pct_p
     FROM counts
     """,
+    "A3 crosstab with totals/pcts "
+    "(`ETL_Multi_Lvl_API/etl_analysis.py:230-245`).",
 )
-def q_crosstab_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 crosstab with totals/pcts (`ETL_Multi_Lvl_API/etl_analysis.py:230-245`)."""
-    orders = _t(spark, sf_dir, "orders")
-    wide = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .count()
-        .na.fill(0)
-        .withColumnsRenamed({"F": "f_cnt", "O": "o_cnt", "P": "p_cnt"})
-    )
-    total = F.col("f_cnt") + F.col("o_cnt") + F.col("p_cnt")
-    return wide.select(
-        "o_orderpriority",
-        "f_cnt",
-        "o_cnt",
-        "p_cnt",
-        total.alias("total"),
-        r4(F.col("f_cnt") * 100.0 / total).alias("pct_f"),
-        r4(F.col("o_cnt") * 100.0 / total).alias("pct_o"),
-        r4(F.col("p_cnt") * 100.0 / total).alias("pct_p"),
-    )
 
 
-@query(
+sql_query(
     "argmax_group_avg",
     """
     SELECT c_mktsegment, ROUND(1e-9 + AVG(c_acctbal), 4) AS avg_acctbal
     FROM customer GROUP BY c_mktsegment
     ORDER BY AVG(c_acctbal) DESC, c_mktsegment ASC LIMIT 1
     """,
+    "A4/A5 argmax over group aggregate "
+    "(`ETL_Multi_Lvl_API/etl_analysis.py:171-190`).",
 )
-def q_argmax_group_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/A5 argmax over group aggregate
-    (`ETL_Multi_Lvl_API/etl_analysis.py:171-190`).  TakeOrderedAndProject —
-    no global sort at scale."""
-    cust = _t(spark, sf_dir, "customer")
-    out = R.argmax_group_avg(cust, "c_mktsegment", "c_acctbal", "avg_acctbal")
-    return out.select("c_mktsegment", r4(F.col("avg_acctbal")).alias("avg_acctbal"))
 
 
-@query(
+sql_query(
     "argmax_hour_of_day",
     """
     SELECT EXTRACT(hour FROM ts) AS hour_of_day, ROUND(1e-9 + AVG(value), 4) AS avg_value
     FROM events GROUP BY 1 ORDER BY AVG(value) DESC, 1 ASC LIMIT 1
     """,
+    "A6 worst hour-of-day (`ETL_Multi_Lvl_API/etl_analysis.py:201-215`).",
 )
-def q_argmax_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6 worst hour-of-day (`ETL_Multi_Lvl_API/etl_analysis.py:201-215`)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.hour("ts").cast("bigint").alias("hour_of_day"))
-        .agg(F.avg("value").alias("avg_value"))
-        .orderBy(F.desc("avg_value"), F.asc("hour_of_day"))
-        .limit(1)
-        .select("hour_of_day", r4(F.col("avg_value")).alias("avg_value"))
-    )
 
 
-@query(
+sql_query(
     "value_counts_pct",
     """
     SELECT l_returnflag, COUNT(*) AS cnt,
            ROUND(1e-9 + COUNT(*) * 100.0 / SUM(COUNT(*)) OVER (), 4) AS pct
     FROM lineitem GROUP BY l_returnflag
     """,
+    "A7 value-counts -> pct (`ETL_Multi_Lvl_API/etl_analysis.py:193-198`).",
 )
-def q_value_counts_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 value-counts -> pct (`ETL_Multi_Lvl_API/etl_analysis.py:193-198`)."""
-    li = _t(spark, sf_dir, "lineitem")
-    out = R.value_counts_pct(li, "l_returnflag")
-    return out.select("l_returnflag", "cnt", r4(F.col("pct")).alias("pct"))
 
 
 @query(
@@ -244,7 +224,7 @@ def q_value_counts_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_global_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 one-row global summary (`ETL_Weather_API/etl_analysis.py:107-114`)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     return ev.agg(
         F.count(F.lit(1)).alias("rows"),
         F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("time_min"),
@@ -253,38 +233,28 @@ def q_global_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "group_mean_date_hour",
     """
     SELECT CAST(ts AS DATE) AS date, EXTRACT(hour FROM ts) AS hour,
            ROUND(1e-9 + AVG(value), 4) AS avg_value
     FROM events GROUP BY 1, 2
     """,
+    "A9 hourly-avg analytics (`ETL_Weather_API/etl_analysis.py:126-130`).",
 )
-def q_group_mean_date_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9 hourly-avg analytics (`ETL_Weather_API/etl_analysis.py:126-130`)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.to_date("ts").alias("date"), F.hour("ts").cast("bigint").alias("hour")
-    ).agg(r4(F.avg("value")).alias("avg_value"))
 
 
-@query(
+sql_query(
     "group_mean_daily",
     """
     SELECT CAST(ts AS DATE) AS date, ROUND(1e-9 + AVG(value), 4) AS avg_value
     FROM events GROUP BY 1
     """,
+    "A10 daily mean (`ETL_Weather_API/etl_analysis.py:144-146`).",
 )
-def q_group_mean_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10 daily mean (`ETL_Weather_API/etl_analysis.py:144-146`)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy(F.to_date("ts").alias("date")).agg(
-        r4(F.avg("value")).alias("avg_value")
-    )
 
 
-@query(
+sql_query(
     "multi_col_grouped_mean",
     """
     SELECT l_returnflag,
@@ -293,27 +263,19 @@ def q_group_mean_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + AVG(l_discount), 4) AS avg_disc
     FROM lineitem GROUP BY l_returnflag
     """,
+    "A11 multi-column grouped mean "
+    "(`ETL_Multi_Lvl_API/etl_analysis.py:260`).",
 )
-def q_multi_col_grouped_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A11 multi-column grouped mean (`ETL_Multi_Lvl_API/etl_analysis.py:260`)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        r4(F.avg("l_quantity")).alias("avg_qty"),
-        r4(F.avg("l_extendedprice")).alias("avg_price"),
-        r4(F.avg("l_discount")).alias("avg_disc"),
-    )
 
 
-@query(
+sql_query(
     "top_n_by_count",
     """
     SELECT user_id, COUNT(*) AS cnt FROM events
     GROUP BY user_id ORDER BY cnt DESC, user_id ASC LIMIT 6
     """,
+    "A12 top-6 by row count (`ETL_Multi_Lvl_API/etl_analysis.py:304`).",
 )
-def q_top_n_by_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 top-6 by row count (`ETL_Multi_Lvl_API/etl_analysis.py:304`)."""
-    return R.top_n_by_count(_t(spark, sf_dir, "events"), "user_id", 6)
 
 
 @query(
@@ -329,7 +291,7 @@ def q_resample_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13 hourly resample via event-time window
     (`ETL_Multi_Lvl_API/etl_analysis.py:308-320`).  One grouped pass for all
     series (the reference loops per city in Python)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     out = R.resample_avg(ev, "ts", "1 hour", ["event_type"], "value")
     return out.select(
         "event_type",
@@ -339,7 +301,7 @@ def q_resample_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "histogram_40",
     """
     WITH b AS (SELECT MIN(l_extendedprice) AS lo, MAX(l_extendedprice) AS hi
@@ -349,14 +311,12 @@ def q_resample_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS cnt
     FROM lineitem, b GROUP BY 1
     """,
+    "A14 equal-width histogram, 40 bins "
+    "(`ETL_Multi_Lvl_API/etl_analysis.py:266-275`).",
 )
-def q_histogram_40(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A14 equal-width histogram, 40 bins
-    (`ETL_Multi_Lvl_API/etl_analysis.py:266-275`)."""
-    return R.histogram(_t(spark, sf_dir, "lineitem"), "l_extendedprice", 40)
 
 
-@query(
+sql_query(
     "union_all_counts",
     """
     SELECT o_orderpriority, COUNT(*) AS cnt FROM (
@@ -365,21 +325,14 @@ def q_histogram_40(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'O'
     ) GROUP BY 1
     """,
+    "A17 unionByName concat (`ETL_Multi_Lvl_API/transform.py:242`).",
 )
-def q_union_all_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A17 unionByName concat (`ETL_Multi_Lvl_API/transform.py:242`)."""
-    orders = _t(spark, sf_dir, "orders")
-    f = orders.where(F.col("o_orderstatus") == "F").select("o_orderpriority")
-    o = orders.where(F.col("o_orderstatus") == "O").select("o_orderpriority")
-    return R.union_all(f, o).groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
 
 
 # --- §2.4 feature expressions transposed to testdata -----------------------
 
 
-@query(
+sql_query(
     "feature_aqi_category",
     """
     SELECT CASE
@@ -394,22 +347,12 @@ def q_union_all_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS cnt
     FROM lineitem GROUP BY 1
     """,
+    "F1 gapped AQI boundaries (`ETL_Multi_Lvl_API/transform.py:42-59`) "
+    "applied to a scaled price — values in the (50,51)...",
 )
-def q_feature_aqi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1 gapped AQI boundaries (`ETL_Multi_Lvl_API/transform.py:42-59`)
-    applied to a scaled price — values in the (50,51)... gaps land in
-    'Unknown', pinning the exact reference semantics."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.select(
-            aqi_category_pm25(F.col("l_extendedprice") / 100).alias("aqi_category")
-        )
-        .groupBy("aqi_category")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
-@query(
+sql_query(
     "feature_severity_risk",
     """
     WITH sev AS (
@@ -425,30 +368,12 @@ def q_feature_aqi(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + AVG(severity), 4) AS avg_severity
     FROM sev GROUP BY 1
     """,
+    "F2 null-as-zero weighted severity + F3 risk thresholds "
+    "(`ETL_Multi_Lvl_API/transform.py:62-80`) on lineitem columns.",
 )
-def q_feature_severity_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F2 null-as-zero weighted severity + F3 risk thresholds
-    (`ETL_Multi_Lvl_API/transform.py:62-80`) on lineitem columns."""
-    li = _t(spark, sf_dir, "lineitem")
-    z = lambda c: F.coalesce(c.cast("double"), F.lit(0.0))  # noqa: E731
-    sev = (
-        z(F.col("l_quantity")) * 5.0
-        + z(F.col("l_discount") * 100) * 3.0
-        + z(F.col("l_tax") * 100) * 4.0
-        + z(F.col("l_linenumber").cast("double")) * 4.0
-    )
-    return (
-        li.select(sev.alias("severity"))
-        .select(risk_class_from_severity("severity").alias("risk_class"), "severity")
-        .groupBy("risk_class")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            r4(F.avg("severity")).alias("avg_severity"),
-        )
-    )
 
 
-@query(
+sql_query(
     "feature_temp_category",
     """
     SELECT CASE
@@ -461,18 +386,11 @@ def q_feature_severity_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS cnt
     FROM events GROUP BY 1
     """,
+    "F6 pd.cut right-closed bins (`ETL_Weather_API/transform.py:75`).",
 )
-def q_feature_temp_category(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6 pd.cut right-closed bins (`ETL_Weather_API/transform.py:75`)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.select(temp_category("value").alias("temp_category"))
-        .groupBy("temp_category")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
-@query(
+sql_query(
     "feature_feels_like",
     """
     SELECT event_type,
@@ -480,18 +398,12 @@ def q_feature_temp_category(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS avg_feels_like
     FROM events GROUP BY event_type
     """,
+    "F7 humidity-adjusted proxy formula (`ETL_Weather_API/transform.py:77`) "
+    "transposed onto events columns.",
 )
-def q_feature_feels_like(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F7 humidity-adjusted proxy formula (`ETL_Weather_API/transform.py:77`)
-    transposed onto events columns."""
-    ev = _t(spark, sf_dir, "events")
-    feels = F.col("value") - (
-        (F.col("user_id") % 100).cast("double") / F.lit(100.0)
-    ) * F.lit(2.0)
-    return ev.groupBy("event_type").agg(r4(F.avg(feels)).alias("avg_feels_like"))
 
 
-@query(
+sql_query(
     "param_normalize",
     """
     SELECT CASE LOWER(TRIM(event_type))
@@ -510,24 +422,10 @@ def q_feature_feels_like(spark: SparkSession, sf_dir: str) -> DataFrame:
              ELSE NULL END IS NOT NULL
     GROUP BY 1
     """,
+    "P3 parameter-name normalization with unknown-drop "
+    "(`ETL_Multi_Lvl_API/transform.py:171-192`): chained when() over a "
+    "trimmed/lowered key, nulls filtered.",
 )
-def q_param_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3 parameter-name normalization with unknown-drop
-    (`ETL_Multi_Lvl_API/transform.py:171-192`): chained when() over a
-    trimmed/lowered key, nulls filtered."""
-    ev = _t(spark, sf_dir, "events")
-    key = F.lower(F.trim(F.col("event_type")))
-    canonical = (
-        F.when(key.isin("click", "view"), F.lit("interaction"))
-        .when(key.isin("purchase", "signup"), F.lit("conversion"))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    return (
-        ev.select(canonical.alias("canonical"))
-        .where(F.col("canonical").isNotNull())
-        .groupBy("canonical")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 @query(
@@ -542,47 +440,34 @@ def q_param_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_extract_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F10 key-variant coalesce (`ETL_Multi_Lvl_API/transform.py:110-118`)
     over a semi-structured JSON column."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     k = F.coalesce(
         F.get_json_object("props", "$.k").cast("double"), F.col("value")
     )
     return ev.groupBy("event_type").agg(r4(F.avg(k)).alias("avg_k"))
 
 
-@query(
+sql_query(
     "filter_project_limit",
     """
     SELECT event_id, user_id, ROUND(1e-9 + value, 4) AS value
     FROM events WHERE event_type = 'click' AND value > 5.0
     ORDER BY event_id ASC LIMIT 2000
     """,
+    "P6/P11/P12: filter + projection + deterministic limit "
+    "(`ETL_Multi_Lvl_API/etl_analysis.py:268,308,336`).",
 )
-def q_filter_project_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6/P11/P12: filter + projection + deterministic limit
-    (`ETL_Multi_Lvl_API/etl_analysis.py:268,308,336`).  Predicate and column
-    pruning both reach the parquet scan."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.where((F.col("event_type") == "click") & (F.col("value") > 5.0))
-        .orderBy(F.asc("event_id"))
-        .limit(2000)
-        .select("event_id", "user_id", r4(F.col("value")).alias("value"))
-    )
 
 
-@query(
+sql_query(
     "trim_normalize_count",
     """
     SELECT TRIM(LOWER(source)) AS source_norm, COUNT(*) AS cnt
     FROM documents GROUP BY 1
     """,
+    "P10 string trim normalization "
+    "(`ETL_Multi_Lvl_API/etl_analysis.py:352-353`).",
 )
-def q_trim_normalize_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P10 string trim normalization (`ETL_Multi_Lvl_API/etl_analysis.py:352-353`)."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.groupBy(
-        F.trim(F.lower(F.col("source"))).alias("source_norm")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 # ---------------------------------------------------------------------------
@@ -590,7 +475,7 @@ def q_trim_normalize_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "join_star_dims",
     """
     SELECT r_name, COUNT(*) AS cnt, ROUND(1e-9 + AVG(c_acctbal), 4) AS avg_acctbal
@@ -599,26 +484,13 @@ def q_trim_normalize_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region ON n_regionkey = r_regionkey
     GROUP BY r_name
     """,
+    "Star-schema dim joins: both dims broadcast (nation=25, region=5 rows) "
+    "so the fact side never shuffles for the join — only the final tiny "
+    "aggregate exchanges.",
 )
-def q_join_star_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-schema dim joins: both dims broadcast (nation=25, region=5 rows)
-    so the fact side never shuffles for the join — only the final tiny
-    aggregate exchanges."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            r4(F.avg("c_acctbal")).alias("avg_acctbal"),
-        )
-    )
 
 
-@query(
+sql_query(
     "join_fact_revenue",
     """
     SELECT o_orderpriority,
@@ -627,63 +499,33 @@ def q_join_star_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority
     """,
+    "Fact-to-fact join on the order key.",
 )
-def q_join_fact_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact-to-fact join on the order key.  At 100 TB this is a shuffle
-    (sort-merge / shuffled-hash) on l_orderkey — co-partitioned if both
-    tables are bucketed by orderkey, which the sinks module supports."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            r2(F.sum(revenue)).alias("revenue"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
-@query(
+sql_query(
     "join_semi",
     """
     SELECT c_mktsegment, COUNT(*) AS cnt FROM customer
     WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
     GROUP BY c_mktsegment
     """,
+    "Left-semi join: customers with at least one order.",
 )
-def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join: customers with at least one order."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
-@query(
+sql_query(
     "join_anti",
     """
     SELECT c_mktsegment, COUNT(*) AS cnt FROM customer
     WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
     GROUP BY c_mktsegment
     """,
+    "Left-anti join: customers with no orders.",
 )
-def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join: customers with no orders."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
-@query(
+sql_query(
     "window_topk_per_group",
     """
     SELECT o_custkey, o_orderkey, rn FROM (
@@ -693,24 +535,11 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders)
     WHERE rn <= 3
     """,
+    "Window ranking: top-3 orders per customer.",
 )
-def q_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window ranking: top-3 orders per customer.  Spark rewrites
-    rn<=3 into a per-partition top-k (WindowGroupLimit) — no full sort
-    of each group at scale."""
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.select(
-            "o_custkey", "o_orderkey", F.row_number().over(w).alias("rn")
-        )
-        .where(F.col("rn") <= 3)
-    )
 
 
-@query(
+sql_query(
     "rollup_pricing",
     """
     SELECT l_returnflag, l_linestatus,
@@ -719,16 +548,9 @@ def q_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS cnt
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
+    "ROLLUP grouping sets — subtotals + grand total in one pass (Spark "
+    "expands to a single Expand+HashAggregate, no re-scan).",
 )
-def q_rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP grouping sets — subtotals + grand total in one pass
-    (Spark expands to a single Expand+HashAggregate, no re-scan)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.sum("l_quantity").cast("double").alias("sum_qty"),
-        r2(F.sum("l_extendedprice")).alias("sum_price"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
 
 
 @query(
@@ -746,7 +568,7 @@ def q_rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lag_gap_seconds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAG window: inter-event gap per user, averaged by type — the
     sessionization primitive."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     ts_s = epoch_seconds("ts")
     gap = ts_s - F.lag(ts_s).over(w)
@@ -757,7 +579,7 @@ def q_lag_gap_seconds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "tpch_q1_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
@@ -773,28 +595,8 @@ def q_lag_gap_seconds(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '2024-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
+    "Flagship: TPC-H Q1-style pricing summary.",
 )
-def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: TPC-H Q1-style pricing summary.  Scan -> partial agg ->
-    one small exchange -> final agg, fully in whole-stage codegen; the
-    shipdate predicate pushes into the parquet scan."""
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("2024-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").cast("double").alias("sum_qty"),
-            r2(F.sum("l_extendedprice")).alias("sum_base_price"),
-            r2(F.sum(disc_price)).alias("sum_disc_price"),
-            r2(F.sum(charge)).alias("sum_charge"),
-            r4(F.avg("l_quantity")).alias("avg_qty"),
-            r4(F.avg("l_extendedprice")).alias("avg_price"),
-            r4(F.avg("l_discount")).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
 
 
 @query(
@@ -814,9 +616,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-style: filtered dim broadcast into fact joins, top-10 by
     revenue with deterministic tie-break."""
-    cust = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    cust = read_sf_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
+    orders = read_sf_table(spark, sf_dir, "orders")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -834,7 +636,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "tpch_q4_order_priority",
     """
     SELECT o_orderpriority, COUNT(*) AS order_count
@@ -843,20 +645,9 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
                   WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
     GROUP BY o_orderpriority
     """,
+    "TPC-H Q4-style: EXISTS decorrelates to a left-semi join; the probe side "
+    "carries only (l_orderkey, l_shipdate) thanks to column pruning.",
 )
-def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4-style: EXISTS decorrelates to a left-semi join; the probe
-    side carries only (l_orderkey, l_shipdate) thanks to column pruning."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    cond = (F.col("l_orderkey") == F.col("o_orderkey")) & (
-        F.col("l_shipdate") > F.col("o_orderdate")
-    )
-    return (
-        orders.join(li, cond, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
 
 
 @query(
@@ -880,8 +671,8 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass over lineitem), top-20 with deterministic tie-break.  The
     HAVING aggregate is partial+final; the qualifying-key set is tiny and
     broadcasts into both joins."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = read_sf_table(spark, sf_dir, "lineitem")
+    orders = read_sf_table(spark, sf_dir, "orders")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("tq"))
@@ -906,7 +697,7 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "grouping_sets_volume",
     """
     SELECT COALESCE(l_returnflag, 'ALL') AS l_returnflag,
@@ -916,25 +707,9 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
     """,
+    "GROUPING SETS (superset of the rollup surface): one Expand-based pass "
+    "over the fact table instead of three scans + union.",
 )
-def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS (superset of the rollup surface): one Expand-based
-    pass over the fact table instead of three scans + union."""
-    li = _t(spark, sf_dir, "lineitem")
-    gs = li.groupingSets(
-        [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
-        "l_returnflag",
-        "l_linestatus",
-    )
-    return gs.agg(
-        F.sum("l_quantity").cast("double").alias("sum_qty"),
-        F.count(F.lit(1)).alias("cnt"),
-    ).select(
-        F.coalesce("l_returnflag", F.lit("ALL")).alias("l_returnflag"),
-        F.coalesce("l_linestatus", F.lit("ALL")).alias("l_linestatus"),
-        "sum_qty",
-        "cnt",
-    )
 
 
 @query(
@@ -955,7 +730,7 @@ def q_distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``percentile`` == DuckDB ``quantile_cont``, verified bit-equal).  At
     100 TB swap in ``approx_percentile`` (t-digest sketch, one pass,
     mergeable across partitions) — the exact form needs a per-group sort."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     # one percentile buffer for all three cut points (array form), not
     # three independent value-count maps over the same column
     pcts = F.expr("percentile(l_extendedprice, array(0.5D, 0.95D, 0.99D))")
@@ -994,7 +769,7 @@ def q_distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide->long unpivot (the inverse of A2's pivot) via ``stack`` —
     a zero-shuffle Expand projection feeding one aggregate."""
-    part = _t(spark, sf_dir, "part")
+    part = read_sf_table(spark, sf_dir, "part")
     long = part.select(
         "p_brand",
         F.expr(
@@ -1005,7 +780,7 @@ def q_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return long.groupBy("p_brand", "metric").agg(r4(F.avg("v")).alias("avg_v"))
 
 
-@query(
+sql_query(
     "corr_price_quantity",
     """
     SELECT l_returnflag,
@@ -1013,15 +788,9 @@ def q_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + covar_samp(l_extendedprice, l_quantity), 4) AS price_qty_cov
     FROM lineitem GROUP BY l_returnflag
     """,
+    "Bivariate stats per group: Pearson corr + sample covariance — "
+    "single-pass co-moment aggregates, partial+final like any hash agg.",
 )
-def q_corr_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bivariate stats per group: Pearson corr + sample covariance —
-    single-pass co-moment aggregates, partial+final like any hash agg."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        r4(F.corr("l_extendedprice", "l_quantity")).alias("price_qty_corr"),
-        r4(F.covar_samp("l_extendedprice", "l_quantity")).alias("price_qty_cov"),
-    )
 
 
 @query(
@@ -1044,7 +813,7 @@ def q_corr_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_set_ops_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT set algebra over customer key sets (Spark plans
     them as left-semi/left-anti aggregates — no full materialization)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_sf_table(spark, sf_dir, "orders")
     buyers = orders.where(F.col("o_orderstatus") == "F").select(
         F.col("o_custkey").alias("k")
     ).distinct()
@@ -1092,7 +861,7 @@ def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-count subtotal frame.  No executor ever sorts more than
     its own value range.  ``equi_depth_histogram_ntile`` keeps the
     row-split NTILE form as the small-data parity twin."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     d = (
         li.select(F.col("l_extendedprice").alias("v"))
         .groupBy("v")
@@ -1112,7 +881,7 @@ def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "equi_depth_histogram_ntile",
     """
     WITH t AS (SELECT l_extendedprice AS v,
@@ -1122,24 +891,9 @@ def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + MIN(v), 4) AS lo, ROUND(1e-9 + MAX(v), 4) AS hi
     FROM t GROUP BY bucket
     """,
+    "Row-split NTILE equi-depth histogram — the small-data parity twin of "
+    "``equi_depth_histogram``.",
 )
-def q_equi_depth_histogram_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-split NTILE equi-depth histogram — the small-data parity twin
-    of ``equi_depth_histogram``.  Exactly n/10 rows per bucket, but the
-    global NTILE needs a total order (single-partition window) and ties
-    split by arbitrary row order; registered for parity with engines
-    whose histogram uses NTILE semantics.  The scale path is the
-    prefix-sum form in ``equi_depth_histogram``."""
-    li = _t(spark, sf_dir, "lineitem")
-    w = Window.orderBy(F.asc("l_extendedprice"))
-    t = li.select(
-        F.col("l_extendedprice").alias("v"), F.ntile(10).over(w).alias("bucket")
-    )
-    return t.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        r4(F.min("v")).alias("lo"),
-        r4(F.max("v")).alias("hi"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1178,15 +932,15 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_nationkey equality rides along as a post-join filter, so the one
     shuffle is lineitem⋈orders on orderkey (AQE may convert even that to
     broadcast at small sf)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").where(
+    cust = read_sf_table(spark, sf_dir, "customer")
+    orders = read_sf_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    li = read_sf_table(spark, sf_dir, "lineitem")
+    supp = read_sf_table(spark, sf_dir, "supplier")
+    nat = read_sf_table(spark, sf_dir, "nation")
+    reg = read_sf_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -1206,7 +960,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "tpch_q6_forecast_revenue",
     """
     SELECT ROUND(1e-9 + SUM(l_extendedprice * l_discount), 2) AS revenue,
@@ -1217,31 +971,11 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
+    "TPC-H Q6: pure scan-filter-aggregate.",
 )
-def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6: pure scan-filter-aggregate.  Every predicate is a parquet
-    pushed filter (min/max row-group pruning does the heavy lifting on
-    time-sorted data); no shuffle at all beyond the final single-row
-    reduce.  The canonical "is pushdown working" probe."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            r2(F.sum(F.col("l_extendedprice") * F.col("l_discount"))).alias(
-                "revenue"
-            ),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
 
 
-@query(
+sql_query(
     "tpch_q7_volume_shipping",
     """
     SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
@@ -1260,51 +994,13 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate < TIMESTAMP '1998-01-01'
     GROUP BY sn.n_name, cn.n_name, YEAR(l_shipdate)
     """,
+    "TPC-H Q7: bilateral trade volume between nation pairs by year (four "
+    "nations rather than TPC-H's two so sf0.001 smoke data still produces "
+    "matches).",
 )
-def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7: bilateral trade volume between nation pairs by year
-    (four nations rather than TPC-H's two so sf0.001 smoke data still
-    produces matches).
-    Two aliases of the same dim (nation) join different keys — both
-    broadcast; the nation-name predicates semi-reduce customer and
-    supplier BEFORE they hit the fact join (Catalyst pushes the filter
-    through the join), so the big-side shuffle carries only qualifying
-    rows."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    sn = nat.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    ).where(F.col("supp_nation").isin("NATION_1", "NATION_2", "NATION_3", "NATION_4"))
-    cn = nat.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-    ).where(F.col("cust_nation").isin("NATION_1", "NATION_2", "NATION_3", "NATION_4"))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(sn), supp.s_nationkey == F.col("sn_key"))
-        .join(F.broadcast(cn), cust.c_nationkey == F.col("cn_key"))
-        .where(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("int").alias("l_year"),
-        )
-        .agg(
-            r2(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            ).alias("revenue")
-        )
-    )
 
 
-@query(
+sql_query(
     "tpch_q9_nation_year_profit",
     """
     SELECT n_name, CAST(YEAR(o_orderdate) AS INT) AS o_year,
@@ -1317,43 +1013,12 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p_type = 'PROMO'
     GROUP BY n_name, YEAR(o_orderdate)
     """,
+    "TPC-H Q9 shape (minus ps_supplycost, which the schema lacks): revenue "
+    "by supplier nation × order year for one product type.",
 )
-def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (minus ps_supplycost, which the schema lacks):
-    revenue by supplier nation × order year for one product type.  The
-    p_type filter reduces part to ~1/6 before broadcasting; lineitem
-    never shuffles for the three dim joins — only for orders."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    part = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .groupBy(
-            "n_name", F.year("o_orderdate").cast("int").alias("o_year")
-        )
-        .agg(
-            # whole-unit rounding, not cents: this sum grows with data
-            # volume (3e8 at sf1, where double ulp is already 6e-8), so
-            # cross-engine accumulation-order noise ~1e-7 flips a
-            # 2-decimal boundary roughly once per hundred rows — the
-            # sf1 gate measured exactly that (3 rows of 175 off by
-            # 0.01).  At step 1.0 the flip probability drops to ~1e-7
-            # per row.  Same ROUND(x+eps, 0) on the oracle side.
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                + F.lit(1e-9),
-                0,
-            ).alias("amount")
-        )
-    )
 
 
-@query(
+sql_query(
     "tpch_q10_returned_items",
     """
     SELECT c_custkey, c_name,
@@ -1369,43 +1034,11 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_custkey, c_name, c_acctbal, n_name
     ORDER BY revenue DESC, c_custkey ASC LIMIT 20
     """,
+    "TPC-H Q10: top-20 customers by lost revenue on returned items.",
 )
-def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10: top-20 customers by lost revenue on returned items.
-    Date predicate prunes orders at scan; returnflag prunes lineitem at
-    scan; the group-by key includes the (functionally dependent) customer
-    attributes so no second join-back is needed.  TakeOrderedAndProject
-    caps the sort at k=20 per partition."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
-    )
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    nat = _t(spark, sf_dir, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("rev_raw")
-        )
-        .orderBy(F.desc("rev_raw"), F.asc("c_custkey"))
-        .limit(20)
-        .select(
-            "c_custkey",
-            "c_name",
-            r2(F.col("rev_raw")).alias("revenue"),
-            r2(F.col("c_acctbal")).alias("c_acctbal"),
-            "n_name",
-        )
-    )
 
 
-@query(
+sql_query(
     "tpch_q13_order_count_distribution",
     """
     WITH per_cust AS (
@@ -1416,26 +1049,12 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_count, COUNT(*) AS custdist
     FROM per_cust GROUP BY c_count
     """,
+    "TPC-H Q13: distribution of orders-per-customer, left outer join so "
+    "zero-order customers count with c_count=0.",
 )
-def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13: distribution of orders-per-customer, left outer join so
-    zero-order customers count with c_count=0.  Two cascaded hash aggs;
-    the second one is tiny (distinct counts).  The join-side predicate
-    must live in the JOIN CONDITION, not a WHERE (a WHERE would turn the
-    outer join inner and drop the zero bucket)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").where(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-@query(
+sql_query(
     "tpch_q14_promo_effect",
     """
     SELECT ROUND(1e-9 + 100.0 *
@@ -1446,30 +1065,13 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate >= TIMESTAMP '1997-03-01'
       AND l_shipdate <  TIMESTAMP '1997-04-01'
     """,
+    "TPC-H Q14: promo revenue share for one month — conditional aggregation "
+    "over a broadcast dim join; the month predicate prunes row groups on "
+    "time-sorted lineitem.",
 )
-def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14: promo revenue share for one month — conditional
-    aggregation over a broadcast dim join; the month predicate prunes
-    row groups on time-sorted lineitem."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    part = _t(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .agg(
-            r4(
-                100.0
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0))
-                / F.sum(rev)
-            ).alias("promo_revenue_pct")
-        )
-    )
 
 
-@query(
+sql_query(
     "tpch_q15_top_supplier",
     """
     WITH revenue AS (
@@ -1484,42 +1086,11 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier JOIN revenue ON s_suppkey = supplier_no
     WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
     """,
+    "TPC-H Q15: supplier(s) achieving the maximum quarterly revenue.",
 )
-def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15: supplier(s) achieving the maximum quarterly revenue.
-    The scalar-subquery MAX is a two-pass aggregate over the (small)
-    revenue view — a global MAX broadcast back as an equality filter —
-    NOT a rank window: same tie semantics (every supplier at the max
-    surfaces), but the revenue frame never funnels through a
-    single-partition sort, so the plan holds when |suppliers| reaches
-    cluster scale."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-            "total_revenue_raw"
-        )
-    )
-    mx = revenue.agg(F.max("total_revenue_raw").alias("__mx"))
-    top = (
-        revenue.crossJoin(F.broadcast(mx))
-        .where(F.col("total_revenue_raw") == F.col("__mx"))
-        .drop("__mx")
-    )
-    supp = _t(spark, sf_dir, "supplier")
-    return (
-        supp.join(F.broadcast(top), supp.s_suppkey == F.col("supplier_no"))
-        .select(
-            "s_suppkey",
-            "s_name",
-            r2(F.col("total_revenue_raw")).alias("total_revenue"),
-        )
-    )
 
 
-@query(
+sql_query(
     "tpch_q17_small_quantity_revenue",
     """
     WITH pa AS (SELECT l_partkey AS pk, 0.5 * AVG(l_quantity) AS half_avg
@@ -1529,27 +1100,12 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN pa ON l_partkey = pk
     WHERE p_brand = 'Brand#13' AND l_quantity < half_avg
     """,
+    "TPC-H Q17: small-quantity-order revenue — the correlated AVG subquery "
+    "decorrelates into a per-part aggregate joined back to the fact.",
 )
-def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17: small-quantity-order revenue — the correlated AVG
-    subquery decorrelates into a per-part aggregate joined back to the
-    fact.  At 100 TB the brand filter should semi-reduce the aggregate
-    input too; Spark does that via the broadcast part join on both
-    branches of the self-join."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#13")
-    pa = li.groupBy(F.col("l_partkey").alias("pk")).agg(
-        (0.5 * F.avg("l_quantity")).alias("half_avg")
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(pa, li.l_partkey == pa.pk)
-        .where(F.col("l_quantity") < F.col("half_avg"))
-        .agg(r2(F.sum("l_extendedprice") / 7.0).alias("avg_yearly"))
-    )
 
 
-@query(
+sql_query(
     "tpch_q19_disjunctive_predicates",
     """
     SELECT ROUND(1e-9 + SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
@@ -1562,33 +1118,12 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 35
              AND l_quantity >= 20 AND l_quantity <= 30)
     """,
+    "TPC-H Q19: OR-of-ANDs mixing build-side (part) and probe-side "
+    "(lineitem) predicates.",
 )
-def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19: OR-of-ANDs mixing build-side (part) and probe-side
-    (lineitem) predicates.  Catalyst extracts the common p_brand IN (...)
-    / l_quantity range implied by the disjunction and pushes those to the
-    scans; the residual disjunction evaluates post-join in codegen."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    j = li.join(F.broadcast(part), part.p_partkey == li.l_partkey)
-    arm = lambda brand, szhi, qlo, qhi: (
-        (F.col("p_brand") == brand)
-        & (F.col("p_size") >= 1) & (F.col("p_size") <= szhi)
-        & (F.col("l_quantity") >= qlo) & (F.col("l_quantity") <= qhi)
-    )
-    return j.where(
-        arm("Brand#1", 15, 1, 11)
-        | arm("Brand#13", 25, 10, 20)
-        | arm("Brand#23", 35, 20, 30)
-    ).agg(
-        r2(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        ).alias("revenue"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
 
 
-@query(
+sql_query(
     "tpch_q22_idle_customers",
     """
     WITH avg_bal AS (SELECT AVG(c_acctbal) AS a FROM customer
@@ -1601,34 +1136,14 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
                       AND o_orderpriority = '1-URGENT')
     GROUP BY c_mktsegment
     """,
+    "TPC-H Q22 shape: rich customers with no urgent orders (scalar-subquery "
+    "threshold + anti join), grouped by market segment (the schema has no "
+    "phone country codes; the priority predicate keeps the anti join "
+    "selective on synthetic data where every customer orders).",
 )
-def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: rich customers with no urgent orders
-    (scalar-subquery threshold + anti join), grouped by market segment
-    (the schema has no phone country codes; the priority predicate keeps
-    the anti join selective on synthetic data where every customer
-    orders).  The threshold is a 1-row broadcast cross join; the anti
-    join probes a filtered distinct-custkey build side."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").where(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    avg_bal = cust.where(F.col("c_acctbal") > 0.0).agg(
-        F.avg("c_acctbal").alias("a")
-    )
-    return (
-        cust.join(F.broadcast(avg_bal))
-        .where(F.col("c_acctbal") > F.col("a"))
-        .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            r2(F.sum("c_acctbal")).alias("totacctbal"),
-        )
-    )
 
 
-@query(
+sql_query(
     "argmin_cheapest_part_per_type",
     """
     WITH ranked AS (
@@ -1640,30 +1155,13 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT p_partkey, p_name, p_brand, p_type, p_retailprice
     FROM ranked WHERE rn = 1
     """,
+    "TPC-H Q2's argmin-join-back pattern on available columns: the cheapest "
+    "part per type with full row recovery, as a single partitioned "
+    "ROW_NUMBER window (one shuffle on p_type) instead of a min-aggregat",
 )
-def q_argmin_cheapest_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2's argmin-join-back pattern on available columns: the
-    cheapest part per type with full row recovery, as a single
-    partitioned ROW_NUMBER window (one shuffle on p_type) instead of a
-    min-aggregate + self-join (two shuffles + a join)."""
-    part = _t(spark, sf_dir, "part")
-    w = Window.partitionBy("p_type").orderBy(
-        F.asc("p_retailprice"), F.asc("p_partkey")
-    )
-    return (
-        part.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "p_partkey",
-            "p_name",
-            "p_brand",
-            "p_type",
-            r2(F.col("p_retailprice")).alias("p_retailprice"),
-        )
-    )
 
 
-@query(
+sql_query(
     "tpch_q8_market_share",
     """
     WITH trade AS (
@@ -1683,53 +1181,12 @@ def q_argmin_cheapest_part(spark: SparkSession, sf_dir: str) -> DataFrame:
                  THEN volume ELSE 0 END) / SUM(volume), 4) AS mkt_share
     FROM trade GROUP BY o_year
     """,
+    "TPC-H Q8: one nation's share of supplier revenue into a region, by year "
+    "— conditional-sum ratio over the star join.",
 )
-def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8: one nation's share of supplier revenue into a region,
-    by year — conditional-sum ratio over the star join.  The share
-    nation is NOT a filter (both arms of the ratio need all suppliers);
-    only the customer-region predicate cuts the fact."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
-    cn = nat.select(
-        F.col("n_nationkey").alias("cn_key"),
-        F.col("n_regionkey").alias("cn_region"),
-    )
-    sn = nat.select(
-        F.col("n_nationkey").alias("sn_key"),
-        F.col("n_name").alias("supp_nation"),
-    )
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    trade = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(cn), cust.c_nationkey == F.col("cn_key"))
-        .join(F.broadcast(reg), F.col("cn_region") == reg.r_regionkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(sn), supp.s_nationkey == F.col("sn_key"))
-        .select(
-            F.year("o_orderdate").cast("int").alias("o_year"),
-            vol.alias("volume"),
-            "supp_nation",
-        )
-    )
-    return trade.groupBy("o_year").agg(
-        r4(
-            F.sum(
-                F.when(
-                    F.col("supp_nation") == "NATION_7", F.col("volume")
-                ).otherwise(0.0)
-            )
-            / F.sum("volume")
-        ).alias("mkt_share")
-    )
 
 
-@query(
+sql_query(
     "tpch_q16_supplier_variety",
     """
     SELECT p_brand, p_type, p_size,
@@ -1740,33 +1197,9 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
     GROUP BY p_brand, p_type, p_size
     """,
+    "TPC-H Q16 shape (partsupp → lineitem supplier pairs): distinct supplier "
+    "variety per part attribute with a NOT-IN exclusion list.",
 )
-def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape (partsupp → lineitem supplier pairs): distinct
-    supplier variety per part attribute with a NOT-IN exclusion list.
-    NOT IN compiles to a broadcast null-aware anti join — safe here
-    because s_suppkey is non-null; the distinct count shuffles hashed
-    (part-attrs, suppkey) pairs, already pre-shrunk by the dim filter."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").where(
-        (F.col("p_brand") != "Brand#1")
-        & F.col("p_size").isin(1, 5, 9, 13, 17)
-    )
-    bad_supp = _t(spark, sf_dir, "supplier").where(
-        F.col("s_acctbal") < 0
-    ).select("s_suppkey")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(
-            F.broadcast(bad_supp),
-            li.l_suppkey == bad_supp.s_suppkey,
-            "left_anti",
-        )
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(
-            F.countDistinct("l_suppkey").cast("bigint").alias("supplier_cnt")
-        )
-    )
 
 
 @query(
@@ -1790,11 +1223,11 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-semi join against a HAVING-filtered aggregate.  The part
     filter broadcasts into the fact scan; the qualifying supplier set
     is tiny and broadcasts into the dim."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_sf_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    pp = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO").select(
+    pp = read_sf_table(spark, sf_dir, "part").where(F.col("p_type") == "PROMO").select(
         "p_partkey"
     )
     vol = (
@@ -1804,7 +1237,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("qty") > 100)
         .select("l_suppkey")
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = read_sf_table(spark, sf_dir, "supplier")
     return (
         supp.join(
             F.broadcast(vol), supp.s_suppkey == vol.l_suppkey, "left_semi"
@@ -1813,7 +1246,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "tpch_q21_sole_late_supplier",
     """
     WITH l AS (SELECT l_orderkey, l_suppkey, l_shipdate FROM lineitem),
@@ -1834,56 +1267,13 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l1.l_suppkey, s_name
     ORDER BY numwait DESC, l1.l_suppkey ASC LIMIT 25
     """,
+    "TPC-H Q21 shape (\"late\" = shipped >60 days after order, since the "
+    "schema has no commit/receipt dates): suppliers who were the SOLE late "
+    "supplier on multi-supplier orders.",
 )
-def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape ("late" = shipped >60 days after order, since the
-    schema has no commit/receipt dates): suppliers who were the SOLE
-    late supplier on multi-supplier orders.  The double correlated
-    EXISTS decorrelates to a left-semi (another supplier exists on the
-    order) + left-anti (no OTHER late supplier) against per-order
-    aggregates — both build sides are per-order supplier stats, far
-    smaller than the fact, and broadcast."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    orders = _t(spark, sf_dir, "orders")
-    supp = _t(spark, sf_dir, "supplier")
-    late = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .where(
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    # EXISTS other-supplier: orders with >1 distinct supplier
-    multi = (
-        li.groupBy("l_orderkey")
-        .agg(F.countDistinct("l_suppkey").alias("ns"))
-        .where(F.col("ns") > 1)
-        .select("l_orderkey")
-    )
-    # NOT EXISTS other-late-supplier: orders with exactly one late supplier
-    solo_late = (
-        late.groupBy("l_orderkey")
-        .agg(F.countDistinct("l_suppkey").alias("nl"))
-        .where(F.col("nl") == 1)
-        .select("l_orderkey")
-    )
-    return (
-        late.join(F.broadcast(multi), "l_orderkey", "left_semi")
-        .join(F.broadcast(solo_late), "l_orderkey", "left_semi")
-        .join(F.broadcast(supp), late.l_suppkey == supp.s_suppkey)
-        .groupBy("l_suppkey", "s_name")
-        .agg(
-            F.countDistinct("l_orderkey").cast("bigint").alias("numwait")
-        )
-        .orderBy(F.desc("numwait"), F.asc("l_suppkey"))
-        .limit(25)
-    )
 
 
-@query(
+sql_query(
     "tpch_q11_value_concentration",
     """
     WITH pr AS (
@@ -1894,30 +1284,13 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE value > (SELECT SUM(value) * 0.0007 FROM pr)
     ORDER BY value DESC, l_partkey ASC
     """,
+    "TPC-H Q11 shape (revenue standing in for ps_supplycost*availqty): parts "
+    "holding an outsized share of total value — a per-key aggregate filtered "
+    "by a scalar subquery over ITS OWN total.",
 )
-def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape (revenue standing in for ps_supplycost*availqty):
-    parts holding an outsized share of total value — a per-key aggregate
-    filtered by a scalar subquery over ITS OWN total.  One fact
-    aggregate, reused for both the rows and the threshold (Spark plans
-    the reuse as a shuffle-stage reuse; the threshold side collapses to
-    one row and broadcasts)."""
-    li = _t(spark, sf_dir, "lineitem")
-    pr = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-            "value_raw"
-        )
-    )
-    thr = pr.agg((F.sum("value_raw") * 0.0007).alias("thr"))
-    return (
-        pr.join(F.broadcast(thr))
-        .where(F.col("value_raw") > F.col("thr"))
-        .select("l_partkey", r2(F.col("value_raw")).alias("value"))
-        .orderBy(F.desc("value"), F.asc("l_partkey"))
-    )
 
 
-@query(
+sql_query(
     "tpch_q12_shipmode_priority",
     """
     SELECT l_returnflag AS ship_class,
@@ -1931,34 +1304,13 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate <  TIMESTAMP '1998-01-01'
     GROUP BY l_returnflag
     """,
+    "TPC-H Q12 shape (l_returnflag standing in for l_shipmode, which the "
+    "testdata lacks): per ship class, how many lines came from high- vs "
+    "low-priority orders in one year.",
 )
-def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (l_returnflag standing in for l_shipmode, which the
-    testdata lacks): per ship class, how many lines came from high- vs
-    low-priority orders in one year.  The IN filter and the date range
-    both push to the lineitem scan; orders is projected to
-    (o_orderkey, o_orderpriority) before the join so the shuffle carries
-    16 bytes + a small string per row.  At 100 TB both sides are large
-    -> sort-merge join on orderkey; the conditional SUMs fold into one
-    hash aggregate with map-side partials over only 2 group keys."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        F.col("l_returnflag").isin("R", "A")
-        & (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(F.col("l_returnflag").alias("ship_class"))
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
 
 
-@query(
+sql_query(
     "cube_volume",
     """
     SELECT l_returnflag, l_linestatus,
@@ -1967,19 +1319,7 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
+    "CUBE over (returnflag, linestatus): all 2^2 grouping combinations in "
+    "one pass — completes the multi-grouping trio next to rollup_pricing and "
+    "grouping_sets_volume.",
 )
-def q_cube_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (returnflag, linestatus): all 2^2 grouping combinations
-    in one pass — completes the multi-grouping trio next to
-    rollup_pricing and grouping_sets_volume.  Spark plans CUBE as one
-    Expand (4x the rows into the partial aggregate) — at 100 TB prefer
-    explicit GROUPING SETS limited to the combinations a dashboard
-    actually reads; the shape and the exchange are identical."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            r2(F.sum("l_quantity")).alias("sum_qty"),
-        )
-    )

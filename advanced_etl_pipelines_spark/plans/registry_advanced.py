@@ -22,7 +22,8 @@ from advanced_etl_pipelines_spark.functions import text as T
 from advanced_etl_pipelines_spark.operators.dedup import POLY_P, poly_hash
 from advanced_etl_pipelines_spark.operators.sampling import KNUTH, MOD
 from advanced_etl_pipelines_spark.plans import oracle_replays
-from advanced_etl_pipelines_spark.plans.registry import _t, query, r2, r4
+from advanced_etl_pipelines_spark.plans.registry import query, r2, r4, sql_query
+from advanced_etl_pipelines_spark.sources.readers import read_sf_table
 from advanced_etl_pipelines_spark.plans.registry_llm import (
     _POSTING_JACCARD_SQL,
 )
@@ -78,7 +79,7 @@ def q_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-agg keyed by doc_id — no global state, scales linearly.
     ``keep`` is derived from the ROUNDED score so the boundary decision
     is stable across engine float-accumulation order."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", T.word_tokens("text").alias("toks")
     ).where(F.size("toks") > 0)
@@ -147,7 +148,7 @@ def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is the one you'd want at 100 TB (no global sort, no driver
     state).  Change detection keeps the row iff lag(state) differs;
     valid_to = lead(valid_from) over the surviving change rows."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     chg = (
         ev.withColumn("prev", F.lag("event_type").over(w))
@@ -209,7 +210,7 @@ def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count is unchanged and the s<d SQL oracle stays valid.  The
     closing probe (e3) is a hash equi-join on the oriented edge pair;
     the degree frame is node-sized and broadcast."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = read_sf_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
     pairs = (
         a.join(b, "l_orderkey")
@@ -322,7 +323,7 @@ def q_cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the ~O(days) frame — at 100 TB that frame is still a few
     thousand rows, so the ordered window is trivially cheap and the
     plan's only real cost is the initial scan+agg."""
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
         F.avg("value").alias("x")
     )
@@ -384,7 +385,7 @@ def q_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by token count, or a broadcast when the vocabulary is capped
     (the production form: top-V vocab + <unk>, making both count frames
     small).  No Python, no state, fully linear in corpus size."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tk = docs.select(
         "doc_id", "lang", T.word_tokens("text").alias("toks")
     )
@@ -471,7 +472,7 @@ def q_pit_join_state_at_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash exchange on user_id — the plan you'd want at 100 TB."""
     from advanced_etl_pipelines_spark.operators.timeseries import asof_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     nonp = ev.where(F.col("event_type") != "purchase")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     wd = Window.partitionBy("user_id", "ts").orderBy(F.desc("event_id"))
@@ -527,7 +528,7 @@ def q_salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     you reach for when the per-key *reduce-side* state is the bottleneck
     (collect_list/percentile per hot key) — this query pins the
     pattern's correctness so those can reuse it."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     partial = (
         ev.withColumn("salt", F.col("event_id") % 32)
         .groupBy("event_type", "salt")
@@ -575,7 +576,7 @@ def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     dots) runs on the k×d centroid frame — dashboard-sized.  This is
     the same partial-moment trick as the PCA/k-means operators
     (operators/linalg.py) expressed in pure SQL."""
-    emb = _t(spark, sf_dir, "embeddings").where(F.col("label").isNotNull())
+    emb = read_sf_table(spark, sf_dir, "embeddings").where(F.col("label").isNotNull())
     c = (
         emb.select("label", F.posexplode("embedding").alias("pos0", "fv"))
         .groupBy("label", (F.col("pos0") + 1).alias("pos"))
@@ -612,7 +613,7 @@ def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "dedup_incremental_against_base",
     """
     WITH tagged AS (
@@ -635,50 +636,12 @@ def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT source, status, CAST(COUNT(*) AS BIGINT) AS n_docs
     FROM cls GROUP BY source, status
     """,
+    "Incremental (daily-ingest) exact dedup: classify each NEW batch "
+    "document as new / duplicate-of-the-existing-corpus / "
+    "duplicate-within-batch — the operational form of dedup_exact_stats (a "
+    "real pipeline never re-dedups 100 TB from scratch; it checks the day's "
+    "increment against the standing digest index).",
 )
-def q_dedup_incremental_against_base(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Incremental (daily-ingest) exact dedup: classify each NEW batch
-    document as new / duplicate-of-the-existing-corpus /
-    duplicate-within-batch — the operational form of dedup_exact_stats
-    (a real pipeline never re-dedups 100 TB from scratch; it checks the
-    day's increment against the standing digest index).  The base/
-    increment split is the deterministic unit_hash (70% base), so the
-    scenario is reproducible and oracle-checkable.
-
-    Scale shape: both the base index and the batch shuffle their 64-bit
-    ``xxhash64`` text digests, never the document bodies (the oracle
-    joins on raw text — identical counts absent hash collisions, the
-    same digest discipline as operators/dedup.py).  The base side of
-    the anti-probe is digest-distinct — at 100 TB it is the standing
-    dedup index you'd keep as a bucketed table, making the probe a
-    shuffle-free bucket join."""
-    docs = _t(spark, sf_dir, "documents")
-    from advanced_etl_pipelines_spark.operators.sampling import unit_hash
-
-    tagged = docs.select(
-        "doc_id",
-        "source",
-        F.xxhash64("text").alias("digest"),
-        (unit_hash("doc_id") < 0.7).alias("is_base"),
-    )
-    base = tagged.where("is_base").select("digest").distinct()
-    inc = tagged.where(~F.col("is_base"))
-    w = Window.partitionBy("digest").orderBy(F.asc("doc_id"))
-    rn = inc.withColumn("rn", F.row_number().over(w))
-    cls = rn.join(
-        base.withColumn("in_base", F.lit(True)), "digest", "left"
-    ).select(
-        "source",
-        F.when(F.col("in_base"), "dup_vs_base")
-        .when(F.col("rn") > 1, "dup_within_batch")
-        .otherwise("new")
-        .alias("status"),
-    )
-    return cls.groupBy("source", "status").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    )
 
 
 @query(
@@ -721,7 +684,7 @@ def q_span_corruption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python; the whole operator pipelines inside one codegen stage over
     the scan.  String assembly is exact integer/string arithmetic, so
     the oracle match is bit-exact, not rounded."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", T.word_tokens("text").alias("toks"))
 
     def sentinel(i):
@@ -775,7 +738,7 @@ def q_span_corruption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "tpch_q2_min_cost_supplier",
     """
     WITH ps AS (
@@ -801,65 +764,11 @@ def q_span_corruption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                          AND c.supplycost = mn.min_cost
     ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 20
     """,
+    "TPC-H Q2 shape (minus partsupp, which the driver schema lacks — "
+    "lineitem stands in as the part-supplier cost relation, supplycost = min "
+    "unit price observed): for each size-15 part, the EUROPEAN supplier "
+    "offering it at minimum cost, top-20 by account balance.",
 )
-def q_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape (minus partsupp, which the driver schema lacks —
-    lineitem stands in as the part-supplier cost relation, supplycost =
-    min unit price observed): for each size-15 part, the EUROPEAN
-    supplier offering it at minimum cost, top-20 by account balance.
-    Completes the 22-query TPC-H suite (Q1, Q3-Q22 already registered).
-
-    The interesting part is the correlated subquery
-    (supplycost = MIN(supplycost) per part): expressed as a groupBy +
-    self-equi-join rather than a per-part subquery, which is exactly
-    how Catalyst decorrelates it — one hash aggregate and one hash join
-    keyed by p_partkey, both parallel.  The region/nation/supplier dim
-    chain broadcasts; the float-equality join is sound because both
-    sides compute the same IEEE division and MIN picks a member of the
-    same value set."""
-    li = _t(spark, sf_dir, "lineitem")
-    ps = li.groupBy(
-        F.col("l_partkey"), F.col("l_suppkey")
-    ).agg(
-        F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
-            "supplycost"
-        )
-    )
-    sup = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
-    eu = (
-        sup.join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("s_suppkey", "s_acctbal", "s_name", "n_name")
-    )
-    part = _t(spark, sf_dir, "part").where(F.col("p_size") == 15)
-    costs = (
-        part.join(ps, part.p_partkey == ps.l_partkey)
-        .join(eu, ps.l_suppkey == eu.s_suppkey)
-        .select("p_partkey", "supplycost", "s_acctbal", "s_name", "n_name")
-    )
-    c = costs.alias("c")
-    mn = (
-        costs.groupBy("p_partkey")
-        .agg(F.min("supplycost").alias("min_cost"))
-        .select(F.col("p_partkey").alias("mk"), "min_cost")
-    )
-    out = c.join(
-        mn,
-        (F.col("c.p_partkey") == F.col("mk"))
-        & (F.col("c.supplycost") == F.col("min_cost")),
-    ).select(
-        r2(F.col("c.s_acctbal")).alias("s_acctbal"),
-        F.col("c.s_name").alias("s_name"),
-        F.col("c.n_name").alias("n_name"),
-        F.col("c.p_partkey").alias("p_partkey"),
-        r4(F.col("c.supplycost")).alias("supplycost"),
-    )
-    return out.orderBy(
-        F.desc("s_acctbal"), F.asc("n_name"), F.asc("s_name"),
-        F.asc("p_partkey"),
-    ).limit(20)
 
 
 @query(
@@ -886,7 +795,7 @@ def q_char_coverage_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_partitions rows regardless of corpus bytes; every window after
     runs on the alphabet-sized frame.  The explode itself never
     shuffles — it pipelines into the partial aggregate."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     cnt = (
         docs.select(F.explode(F.split("text", "")).alias("c"))
         .groupBy("c")
@@ -940,7 +849,7 @@ def q_duplicated_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent collisions — the dedup-family digest discipline).  Postings
     are bounded by corpus token count, identical to the inverted-index
     Jaccard operator."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tk = docs.select("doc_id", T.word_tokens("text").alias("toks"))
     g = (
         tk.where(F.size("toks") >= 5)
@@ -1022,7 +931,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutting/scoring, so thresholds and comparisons see identical
     doubles in both engines (unrounded sums differ in the last ULP and
     can flip a boundary customer's quintile)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_sf_table(spark, sf_dir, "orders")
     ref = orders.agg(F.max("o_orderdate").alias("mx"))
     base = (
         orders.crossJoin(F.broadcast(ref))
@@ -1116,7 +1025,7 @@ def q_association_rules_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame dashboard-sized at 100 TB (raise the floor with scale — the
     statistics only get better).  All metrics are exact integer ratios,
     so cross-engine parity is arithmetic, not accumulation-order."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     # the distinct basket-item frame feeds the order count, the item
     # counts AND both sides of the pair self-join — persist so the
     # full-table distinct shuffle runs once, not four times
@@ -1187,7 +1096,7 @@ def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash parity against DuckDB pins every bit of every row."""
     from advanced_etl_pipelines_spark.functions.text import bind_once
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     masks = F.lit([1 << b for b in range(16)])
     bit_idx = F.sequence(F.lit(1), F.lit(16))
 
@@ -1247,7 +1156,7 @@ def q_text_fingerprint_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint while the per-token hashes stay cacheable.  Pure
     per-row fold — zero shuffle; intermediate values stay below
     131*(1e9+7)+1e9+7 < 2^63, so ANSI overflow checking never fires."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
 
     def fold(tokens):
         return F.aggregate(
@@ -1318,7 +1227,7 @@ def q_dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     quality = docs.select(
         "doc_id",
         T.bind_once(
@@ -1391,7 +1300,7 @@ def q_quality_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale while the per-doc work is one map-side aggregate —
     the same distinct-value pre-aggregation that fixed drift_ks_value's
     tie nondeterminism (ADVICE r1) doubles as the scale strategy here."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     scored = docs.select(
         "lang",
         T.bind_once(
@@ -1467,7 +1376,7 @@ def q_gini_revenue_concentration(
         global_running_sums,
     )
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_sf_table(spark, sf_dir, "orders")
     rev = orders.groupBy("o_custkey").agg(
         F.sum("o_totalprice").alias("revenue")
     )
@@ -1520,7 +1429,7 @@ def q_corr_matrix_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec; the Spark plan is the efficient form — at 100 TB one pass vs
     six is the difference that matters).  ``stack`` reshapes the 1x6
     aggregate row to long form driver-free."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     pairs = [
         (a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]
@@ -1560,7 +1469,7 @@ def q_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluated once per row (bind-once) and only its LENGTH survives the
     projection, so the shuffle carries (source, bucket) pairs, never
     tokens."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     n_toks = T.bind_once(T.word_tokens("text"), F.size)
     return (
         docs.select(
@@ -1578,7 +1487,7 @@ def q_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cdc_snapshot_from_changelog",
     """
     WITH log AS (
@@ -1596,52 +1505,14 @@ def q_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n_ops AS BIGINT) AS n_ops
     FROM r WHERE rn = 1 AND op <> 'D'
     """,
+    "CDC changelog -> snapshot: compact an insert/update/delete event stream "
+    "(Debezium-shaped, here simulated from event_type: signup=I, error=D, "
+    "rest=U) into current state — last write wins per key, and a key whose "
+    "LAST op is a delete is absent from the snapshot.",
 )
-def q_cdc_snapshot_from_changelog(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """CDC changelog -> snapshot: compact an insert/update/delete event
-    stream (Debezium-shaped, here simulated from event_type: signup=I,
-    error=D, rest=U) into current state — last write wins per key, and a
-    key whose LAST op is a delete is absent from the snapshot.  This is
-    the batch replay that bootstraps a MERGE-maintained table
-    (sources/sinks.py upsert) from a log backfill.
-
-    Per-key ordering lives in a window PARTITIONED BY user_id — one
-    shuffle on the key, each group sorted independently, no global sort.
-    At 100 TB the same plan applies per day-partition of the log, and
-    day snapshots chain via the same last-write-wins merge (associative,
-    so the compaction is re-aggregable)."""
-    ev = _t(spark, sf_dir, "events")
-    log = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "value",
-        F.when(F.col("event_type") == "signup", F.lit("I"))
-        .when(F.col("event_type") == "error", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .withColumn(
-            "n_ops", F.count(F.lit(1)).over(Window.partitionBy("user_id"))
-        )
-        .filter((F.col("rn") == 1) & (F.col("op") != "D"))
-        .select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            r4(F.col("value")).alias("last_value"),
-            F.col("n_ops").cast("bigint").alias("n_ops"),
-        )
-    )
 
 
-@query(
+sql_query(
     "lang_temperature_sampling",
     """
     WITH c AS (SELECT lang, COUNT(*) AS n_docs
@@ -1660,48 +1531,12 @@ def q_cdc_snapshot_from_changelog(
            CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept
     FROM r LEFT JOIN k ON r.lang = k.lang
     """,
+    "Temperature-scaled language rebalancing (the mC4/multilingual-T5 "
+    "alpha-sampling recipe at alpha=0.5): keep-rate per language = "
+    "sqrt(n_rarest / n_lang), so the rarest language keeps everything and a "
+    "language 4x larger keeps half — flattening the distribution between "
+    "proportional (alpha=1) and uniform (alpha=0).",
 )
-def q_lang_temperature_sampling(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Temperature-scaled language rebalancing (the mC4/multilingual-T5
-    alpha-sampling recipe at alpha=0.5): keep-rate per language =
-    sqrt(n_rarest / n_lang), so the rarest language keeps everything and
-    a language 4x larger keeps half — flattening the distribution
-    between proportional (alpha=1) and uniform (alpha=0).  alpha=0.5 is
-    deliberate: the rate reduces to a SQRT of a count ratio, which IEEE
-    requires to be correctly rounded, so the keep decisions are
-    bit-identical across engines (a pow(x, 0.3) would be libm-dependent)
-    — same portability argument as operators/sampling.py::unit_hash.
-
-    Two scans: a tiny per-lang count (broadcast back), then a map-side
-    hash-vs-rate Bernoulli keep — no corpus-scale shuffle, rerun-stable
-    keep set."""
-    from advanced_etl_pipelines_spark.operators.sampling import unit_hash
-
-    docs = _t(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
-    n_min = counts.agg(F.min("n_docs").alias("n_min"))
-    rates = counts.crossJoin(F.broadcast(n_min)).select(
-        "lang",
-        "n_docs",
-        F.sqrt(F.col("n_min").cast("double") / F.col("n_docs")).alias(
-            "rate"
-        ),
-    )
-    kept = (
-        docs.select("doc_id", "lang")
-        .join(F.broadcast(rates.select("lang", "rate")), "lang")
-        .filter(unit_hash("doc_id") < F.col("rate"))
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-    )
-    return rates.join(kept, "lang", "left_outer").select(
-        "lang",
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        r4(F.col("rate")).alias("keep_rate"),
-        F.coalesce("n_kept", F.lit(0)).cast("bigint").alias("n_kept"),
-    )
 
 
 @query(
@@ -1747,7 +1582,7 @@ def q_substring_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     string (collision odds at 64 bits are ~n^2/2^65 — negligible);
     the string form is registered because the oracle must reproduce
     keys exactly, and the plan is identical either way."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tk = docs.select(
         "doc_id", T.word_tokens("text").alias("toks")
     )
@@ -1840,7 +1675,7 @@ def q_decile_mobility_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_running_sums,
     )
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_sf_table(spark, sf_dir, "orders")
 
     def spend(year: int, alias: str) -> DataFrame:
         return (
@@ -1967,7 +1802,7 @@ def q_corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from advanced_etl_pipelines_spark.operators.sampling import unit_hash
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     feat = docs.select(
         "doc_id",
         "lang",
@@ -2109,7 +1944,7 @@ def q_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     round is an aggregate + two semi-joins keyed on node ids."""
     from advanced_etl_pipelines_spark.operators.graph import k_core
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = read_sf_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     pairs = (
         li.alias("a")
         .join(li.alias("b"), "l_orderkey")
@@ -2154,9 +1989,9 @@ def q_mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed input is |nations| x |months| regardless of order volume,
     so the only data-scale work is the grouped aggregate underneath.
     Dimension joins broadcast."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = read_sf_table(spark, sf_dir, "orders")
+    c = read_sf_table(spark, sf_dir, "customer")
+    n = read_sf_table(spark, sf_dir, "nation")
     rev = (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -2208,7 +2043,7 @@ def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle: the per-user mean is a window aggregate partitioned by
     user_id computed in the same pass as the output, the global mean is
     a broadcast scalar — no second scan, no driver round-trip."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
         "user_id",
@@ -2240,7 +2075,7 @@ def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "regr_slope_by_nation",
     """
     SELECT n.n_name,
@@ -2256,31 +2091,10 @@ def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation n ON s.s_nationkey = n.n_nationkey
     GROUP BY n.n_name
     """,
+    "Per-supplier-nation price~quantity regression line via the ANSI regr_* "
+    "aggregate family (slope, intercept, R²) — grouped OLS as a pure "
+    "aggregate, the declarative sibling of ols2_fit_score's closed-form fit.",
 )
-def q_regr_slope_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-supplier-nation price~quantity regression line via the ANSI
-    regr_* aggregate family (slope, intercept, R²) — grouped OLS as a
-    pure aggregate, the declarative sibling of ols2_fit_score's
-    closed-form fit.  One scan, broadcast dimension joins, co-moments
-    combine map-side like any algebraic aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            r4(F.regr_slope("l_extendedprice", "l_quantity")).alias(
-                "slope"
-            ),
-            r4(
-                F.regr_intercept("l_extendedprice", "l_quantity")
-            ).alias("intercept"),
-            r4(F.regr_r2("l_extendedprice", "l_quantity")).alias("r2"),
-        )
-    )
 
 
 @query(
@@ -2330,7 +2144,7 @@ def q_local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune, then a rank over <= 20 x n_partitions survivors)."""
     from advanced_etl_pipelines_spark.operators.scale import top_k_global
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = read_sf_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
     pairs = (
         a.join(b, "l_orderkey")
@@ -2451,7 +2265,7 @@ def q_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-scale work is the first count.  Weekday is ISO (0=Monday) on
     both engines — Spark weekday() and DuckDB isodow()-1 — because the
     default dayofweek() numberings disagree (Sunday=1 vs Sunday=0)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     obs = ev.groupBy(
         "event_type", F.weekday("ts").alias("wd")
     ).agg(F.count(F.lit(1)).alias("o"))
@@ -2519,7 +2333,7 @@ def q_mannwhitney_u_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_running_sums,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     pool = ev.where(
         F.col("event_type").isin("purchase", "click")
         & F.col("value").isNotNull()
@@ -2594,7 +2408,7 @@ def q_attribution_markov_removal(
         markov_removal_effects,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     trans = journey_transitions(
         ev, "user_id", "ts", "event_type", "purchase",
         order_cols=["event_id"],
@@ -2640,7 +2454,7 @@ def q_importance_weight_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     them.  Same broadcast-model scoring pass as
     ``dsir_importance_weights``; ESS adds only two more algebraic
     aggregates on the per-doc frame."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         "source",
@@ -2684,35 +2498,17 @@ _CATALOG_TABLES = [
 ]
 
 
-@query(
+sql_query(
     "catalog_table_stats",
     "\nUNION ALL\n".join(
         f"SELECT '{t}' AS table_name, CAST(COUNT(*) AS BIGINT) AS n_rows,"
         f" {c} AS n_cols FROM {t}"
         for t, c in _CATALOG_TABLES
     ),
+    "ANALYZE-style catalog sweep: row and column counts for every table the "
+    "engine serves — the freshness/health report a catalog keeps per "
+    "snapshot.",
 )
-def q_catalog_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANALYZE-style catalog sweep: row and column counts for every
-    table the engine serves — the freshness/health report a catalog
-    keeps per snapshot.  COUNT(*) over parquet is footer-metadata work
-    (row-group counts), no data scan at any scale; the per-table counts
-    union into one frame."""
-    parts = []
-    for t, c in _CATALOG_TABLES:
-        parts.append(
-            _t(spark, sf_dir, t).agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows")
-            ).select(
-                F.lit(t).alias("table_name"),
-                "n_rows",
-                F.lit(c).alias("n_cols"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
 
 
 @query(
@@ -2786,7 +2582,7 @@ def q_minhash_vs_exact_calibration(
         word_ngrams,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     cand = minhash_portable_pairs(
         docs, "text", "doc_id", num_perm=16, bands=8, threshold=0.0
     ).select("id_a", "id_b", F.col("est_jaccard").alias("est"))
@@ -2882,7 +2678,7 @@ def q_holt_winters_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         holt_linear_arrow,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.sum("value").alias("v"))
@@ -2944,7 +2740,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same polarity split."""
     from advanced_etl_pipelines_spark.functions import vectors as V
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("n_label"),
@@ -3028,7 +2824,7 @@ def q_watermark_lag_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame stays millions, not billions; the per-event join back is an
     equi-join on (type, bucket).  Exact per-type percentiles on the
     lag are a grouped aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     b = ev.select(
         "event_type",
         (F.col("event_id") / 100).cast("bigint").alias("bkt"),
@@ -3092,7 +2888,7 @@ def q_weekday_seasonality_index(
     complements holt_winters_daily's level+trend (Holt-Winters' missing
     third component, computed the ratio-to-average way).  Two cascaded
     tiny aggregates off one scan; the join-back is broadcast."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",
         F.to_date("ts").alias("d"),
@@ -3158,7 +2954,7 @@ def q_item_item_similarity_topk(
     # the distinct basket frame feeds both self-join sides and the
     # degree aggregate — persist so its shuffle runs once (same rule as
     # association_rules_pairs / degree_assortativity, sf1-measured)
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_sf_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     ).distinct().transform(tracked_persist)
     a, b = li.alias("a"), li.alias("b")
@@ -3224,7 +3020,7 @@ def q_kcenter_coreset_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         kcenter_select,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     rows = kcenter_select(emb, "embedding", "vec_id", k=16)
     return spark.createDataFrame(
         [(r, i, round(d + 1e-9, 4)) for r, i, d in rows],
@@ -3265,7 +3061,7 @@ def q_anomaly_seasonal_adjusted(
     traffic on a Sunday" flags.  Catches exactly what raw z-scores
     (anomaly_zscore_daily) miss under weekly seasonality.  Three
     cascaded tiny aggregates off one scan; join-backs broadcast."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",
         F.to_date("ts").alias("d"),
@@ -3341,7 +3137,7 @@ def q_decile_rate_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_running_sums,
     )
 
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     scored = ev.select(
         "value", (F.col("event_type") == "purchase").alias("actual")
     )
@@ -3400,7 +3196,7 @@ def q_funnel_latency_percentiles(
     conversion counts omit (how MANY convert vs how LONG they take).
     Two grouped aggregates on the user key plus one equi-join; exact
     percentiles on the per-user lag frame (one row per converter)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     v = (
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -3477,7 +3273,7 @@ def q_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition; the global top-10 goes through the two-level top-k."""
     from advanced_etl_pipelines_spark.operators.scale import top_k_global
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     o = ev.select(
         "user_id",
@@ -3552,7 +3348,7 @@ def q_rolling_corr_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows regardless of fact volume (same bounded-frame contract as
     cusum/char-coverage), and the daily aggregate underneath is the
     only data-scale work."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.to_date("l_shipdate").alias("d")).agg(
         F.sum("l_extendedprice").alias("rev"),
         F.sum("l_quantity").alias("qty"),
@@ -3598,7 +3394,7 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|² cells."""
     from advanced_etl_pipelines_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
         docs, "text", "doc_id", "lang", n=3, threshold=0.15
     )
@@ -3647,7 +3443,7 @@ def q_token_fertility_by_lang(
     treats each language fairly; high fertility = a language pays more
     sequence length for the same text.  One map-side token count into a
     per-lang aggregate."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     n_toks = T.bind_once(T.word_tokens("text"), F.size)
     return (
         docs.select("lang", "n_chars", n_toks.alias("n_tokens"))
@@ -3686,7 +3482,7 @@ def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_session_paths should sit far right of p95) and retention
     windows.  One LAG window partitioned by user, then a global
     aggregate with exact percentiles."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = (
         F.unix_micros(F.col("ts").cast("timestamp"))
@@ -3703,7 +3499,7 @@ def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "basket_size_stats",
     """
     WITH b AS (
@@ -3716,29 +3512,13 @@ def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + AVG(order_value / n_lines), 2) AS avg_line_value
     FROM b GROUP BY n_lines
     """,
+    "Basket-size distribution: orders per line-count with average order and "
+    "per-line value — the AOV-by-basket-size curve behind cross-sell "
+    "analysis (and the degree profile of the co-purchase graph family).",
 )
-def q_basket_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Basket-size distribution: orders per line-count with average
-    order and per-line value — the AOV-by-basket-size curve behind
-    cross-sell analysis (and the degree profile of the co-purchase
-    graph family).  Two cascaded aggregates keyed on the order key."""
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum("l_extendedprice").alias("order_value"),
-    )
-    return b.groupBy(
-        F.col("n_lines").cast("bigint").alias("basket_size")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        r2(F.avg("order_value")).alias("avg_order_value"),
-        r2(F.avg(F.col("order_value") / F.col("n_lines"))).alias(
-            "avg_line_value"
-        ),
-    )
 
 
-@query(
+sql_query(
     "attribution_position_based",
     """
     WITH j AS (
@@ -3774,60 +3554,13 @@ def q_basket_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_touches
     FROM credit GROUP BY event_type
     """,
+    "Position-based (U-shaped, 40/20/40) attribution — the third standard "
+    "model beside attribution_last_touch (rule: last wins) and "
+    "attribution_markov_removal (data-driven): on each converting user's "
+    "pre-conversion path, the first and last touch get 40% credit each and "
+    "the middle touches split 20%; single-touch paths take 100%, two-touch "
+    "paths 50/50.",
 )
-def q_attribution_position_based(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Position-based (U-shaped, 40/20/40) attribution — the third
-    standard model beside attribution_last_touch (rule: last wins) and
-    attribution_markov_removal (data-driven): on each converting user's
-    pre-conversion path, the first and last touch get 40% credit each
-    and the middle touches split 20%; single-touch paths take 100%,
-    two-touch paths 50/50.  Everything is windows partitioned by user
-    plus a grouped sum — one shuffle on the user key."""
-    ev = _t(spark, sf_dir, "events")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    j = ev.withColumn(
-        "prior_convs",
-        F.coalesce(
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).over(wu.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    converters = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id")
-        .distinct()
-    )
-    path = (
-        j.where(
-            (F.col("prior_convs") == 0)
-            & (F.col("event_type") != "purchase")
-        )
-        .join(converters, "user_id", "left_semi")
-    )
-    pos = path.select(
-        "event_type",
-        F.row_number().over(wu).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n"),
-    )
-    w = (
-        F.when(F.col("n") == 1, F.lit(1.0))
-        .when(F.col("n") == 2, F.lit(0.5))
-        .when(F.col("rn") == 1, F.lit(0.4))
-        .when(F.col("rn") == F.col("n"), F.lit(0.4))
-        .otherwise(0.2 / (F.col("n") - 2))
-    )
-    return (
-        pos.select(F.col("event_type").alias("channel"), w.alias("w"))
-        .groupBy("channel")
-        .agg(
-            r4(F.sum("w")).alias("credit"),
-            F.count(F.lit(1)).cast("bigint").alias("n_touches"),
-        )
-    )
 
 
 @query(
@@ -3862,7 +3595,7 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from advanced_etl_pipelines_spark.operators.scale import top_k_global
 
     cutoffs = [10, 50, 100, 500, 1000]
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(T.word_tokens("text")).alias("token"))
     # vocab feeds the totals AND the top-k ranking, and ranked feeds one
     # slice per cutoff — persist both so the corpus tokenizes once and
@@ -3940,7 +3673,7 @@ def q_kneser_ney_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (bigram, context, follower-diversity, continuation),
     scoring joins on 8-byte-ish keys, everything linear in corpus
     size; production caps the vocab so all model frames broadcast."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tk = docs.select(
         "doc_id", "lang", T.word_tokens("text").alias("toks")
     )
@@ -4009,7 +3742,7 @@ def q_new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     one per-user aggregate joined back by the 8-byte user key; the
     daily distinct is a (day, user) aggregate.  Two shuffles on keys,
     both data-bounded."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("first_day")
     )
@@ -4063,7 +3796,7 @@ def q_ab_test_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     MDE = (z_{a/2} + z_beta) * sqrt(2 p (1-p) / (n/2)); the z constants
     are literals so the whole statistic is one aggregate + arithmetic
     (SQRT only — engine-portable bit-for-bit)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     assign = ev.groupBy("user_id").agg(
         F.max(
             F.when(
@@ -4127,7 +3860,7 @@ def q_ltv_cohort_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the running sum windows over the (cohort x 4 weeks) frame — a few
     hundred rows at any corpus scale — and everything underneath is
     keyed aggregates and an 8-byte-key join back."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.date_format(
             F.date_trunc("month", F.min("ts")), "yyyy-MM"
@@ -4187,7 +3920,7 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     formatting, so both engines extract identical digits.  One grouped
     count plus broadcast total; the expected-share LOG10 runs on the 9
     digit literals only."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
+    o = read_sf_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
     d = o.select(
         F.substring(
             F.round(F.col("o_totalprice") * 100, 0)
@@ -4214,7 +3947,7 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "attribution_model_comparison",
     """
     WITH j AS (
@@ -4249,58 +3982,12 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ELSE 0.2 / (n - 2) END), 4) AS position_based
     FROM pos GROUP BY event_type
     """,
+    "Side-by-side attribution: last-touch, LINEAR (equal split), and "
+    "position-based credit per channel from ONE pass over the pre-conversion "
+    "paths — the comparison table marketing reviews before standardizing on "
+    "a model (when the three disagree, the journey structure matters; when "
+    "they agree, any is fine).",
 )
-def q_attribution_model_comparison(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Side-by-side attribution: last-touch, LINEAR (equal split), and
-    position-based credit per channel from ONE pass over the
-    pre-conversion paths — the comparison table marketing reviews
-    before standardizing on a model (when the three disagree, the
-    journey structure matters; when they agree, any is fine).  Same
-    user-partitioned windows as attribution_position_based; the three
-    models are just different per-row weight expressions summed in one
-    aggregate."""
-    ev = _t(spark, sf_dir, "events")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    j = ev.withColumn(
-        "prior_convs",
-        F.coalesce(
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).over(wu.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    converters = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id")
-        .distinct()
-    )
-    path = j.where(
-        (F.col("prior_convs") == 0) & (F.col("event_type") != "purchase")
-    ).join(converters, "user_id", "left_semi")
-    pos = path.select(
-        "event_type",
-        F.row_number().over(wu).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n"),
-    )
-    position = (
-        F.when(F.col("n") == 1, F.lit(1.0))
-        .when(F.col("n") == 2, F.lit(0.5))
-        .when(F.col("rn") == 1, F.lit(0.4))
-        .when(F.col("rn") == F.col("n"), F.lit(0.4))
-        .otherwise(0.2 / (F.col("n") - 2))
-    )
-    return pos.groupBy(F.col("event_type").alias("channel")).agg(
-        r4(
-            F.sum(
-                F.when(F.col("rn") == F.col("n"), 1.0).otherwise(0.0)
-            )
-        ).alias("last_touch"),
-        r4(F.sum(1.0 / F.col("n"))).alias("linear"),
-        r4(F.sum(position)).alias("position_based"),
-    )
 
 
 @query(
@@ -4322,7 +4009,7 @@ def q_daily_value_ribbon(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (percentile() is partial-merge capable); at 100 TB swap
     in approx_percentile/KLL per day if exactness isn't required —
     same query shape."""
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     return ev.groupBy(
         F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")
     ).agg(
@@ -4333,7 +4020,7 @@ def q_daily_value_ribbon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "moments_by_returnflag",
     """
     WITH s AS (
@@ -4357,41 +4044,10 @@ def q_daily_value_ribbon(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + m4 / (m2 * m2) - 3.0, 4) AS kurtosis_g2
     FROM m
     """,
+    "Population skewness (g1) and excess kurtosis (g2) of extended price per "
+    "return flag, from RAW POWER SUMS — deliberately not the built-in "
+    "skewness()/kurtosis(), whose bias conventions differ between en",
 )
-def q_moments_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population skewness (g1) and excess kurtosis (g2) of extended
-    price per return flag, from RAW POWER SUMS — deliberately not the
-    built-in skewness()/kurtosis(), whose bias conventions differ
-    between engines (Spark returns population moments, DuckDB
-    sample-corrected G1/G2); the explicit central-moment algebra is the
-    portable common ground AND the mergeable form (power sums
-    partial-aggregate map-side like any algebraic aggregate, which is
-    also how a 100 TB run wants its higher moments)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = F.col("l_extendedprice")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(p).alias("mu"),
-        F.sum(F.pow(p, 2)).alias("s2"),
-        F.sum(F.pow(p, 3)).alias("s3"),
-        F.sum(F.pow(p, 4)).alias("s4"),
-    )
-    mu, n = F.col("mu"), F.col("n")
-    m2 = F.col("s2") / n - mu * mu
-    m3 = F.col("s3") / n - 3 * mu * F.col("s2") / n + 2 * F.pow(mu, 3)
-    m4 = (
-        F.col("s4") / n
-        - 4 * mu * F.col("s3") / n
-        + 6 * mu * mu * F.col("s2") / n
-        - 3 * F.pow(mu, 4)
-    )
-    return s.select(
-        "l_returnflag",
-        n.cast("bigint").alias("n"),
-        r2(mu).alias("mean"),
-        r4(m3 / F.pow(m2, 1.5)).alias("skewness_g1"),
-        r4(m4 / (m2 * m2) - 3.0).alias("kurtosis_g2"),
-    )
 
 
 @query(
@@ -4429,7 +4085,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     it feeds the degree aggregate AND both endpoint joins, and
     recomputing it per consumer tripled the query at sf1 (round-3
     sweep: 21.5 s → 4.5 s)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = read_sf_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
     pairs = (
         a.join(b, "l_orderkey")
@@ -4500,7 +4156,7 @@ def q_burstiness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     and sizes streaming state (bursty streams need bigger watermark
     slack, cf. watermark_lag_profile).  One LAG window on the
     (user, type) key, then a per-type algebraic aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy(
         "ts", "event_id"
     )
@@ -4527,7 +4183,7 @@ def q_burstiness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "price_dispersion_topk",
     """
     WITH per AS (
@@ -4548,47 +4204,11 @@ def q_burstiness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + cv, 4) AS price_cv, CAST(rnk AS BIGINT) AS rnk
     FROM r WHERE rnk <= 20
     """,
+    "Cross-supplier price dispersion per part (coefficient of variation of "
+    "per-supplier unit price; >= 3 suppliers), top 20 — the "
+    "procurement-audit query (high CV = inconsistent pricing or a data "
+    "problem).",
 )
-def q_price_dispersion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-supplier price dispersion per part (coefficient of
-    variation of per-supplier unit price; >= 3 suppliers), top 20 —
-    the procurement-audit query (high CV = inconsistent pricing or a
-    data problem).  Two cascaded keyed aggregates; the top-20 runs
-    through the two-level top-k, never a global sort over parts."""
-    from advanced_etl_pipelines_spark.operators.scale import top_k_global
-
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 0)
-    per = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.avg(F.col("l_extendedprice") / F.col("l_quantity")).alias(
-            "unit_price"
-        )
-    )
-    disp = (
-        per.groupBy("l_partkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_suppliers"),
-            F.avg("unit_price").alias("mu"),
-            F.stddev_samp("unit_price").alias("sd"),
-        )
-        .where(F.col("n_suppliers") >= 3)
-        .select(
-            "l_partkey",
-            "n_suppliers",
-            (F.col("sd") / F.col("mu")).alias("cv"),
-        )
-    )
-    # rank by the OUTPUT-rounded cv: mathematically-tied parts (sf1
-    # replicas) differ only by engine-specific float noise in the raw
-    # ratio, which resolved the ties differently per engine
-    top = top_k_global(
-        disp, [F.desc(r4(F.col("cv"))), F.asc("l_partkey")], 20
-    )
-    return top.select(
-        "l_partkey",
-        F.col("n_suppliers").cast("bigint").alias("n_suppliers"),
-        r4(F.col("cv")).alias("price_cv"),
-        F.col("rnk").cast("bigint").alias("rnk"),
-    )
 
 
 @query(
@@ -4613,8 +4233,8 @@ def q_return_rate_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality screen (a brand whose return rate doubles is a supplier or
     listing problem).  One broadcast dimension join, one grouped
     aggregate; the returned-value sum rides the same pass."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = read_sf_table(spark, sf_dir, "lineitem")
+    p = read_sf_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
         "p_brand",
         (F.col("l_returnflag") == "R").alias("returned"),
@@ -4667,7 +4287,7 @@ def q_conversion_window_sensitivity(
     funnel metric (too short undercounts, too long inflates).  Same
     first-view/first-purchase join as funnel_latency_percentiles; the
     three windows are conditional sums in one aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     v = (
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -4721,7 +4341,7 @@ def q_conversion_window_sensitivity(
     )
 
 
-@query(
+sql_query(
     "priority_sla_report",
     """
     SELECT o_orderpriority,
@@ -4732,26 +4352,13 @@ def q_conversion_window_sensitivity(
              AS fulfilled_rate
     FROM orders GROUP BY o_orderpriority
     """,
+    "Order fulfillment by priority tier: volume, average value, and "
+    "fulfilled ('F') rate per o_orderpriority — the SLA report that checks "
+    "whether high-priority orders actually complete more often.",
 )
-def q_priority_sla_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order fulfillment by priority tier: volume, average value, and
-    fulfilled ('F') rate per o_orderpriority — the SLA report that
-    checks whether high-priority orders actually complete more often.
-    One grouped aggregate, conditional sums in the same pass."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        r2(F.avg("o_totalprice")).alias("avg_value"),
-        r4(
-            F.sum(
-                F.when(F.col("o_orderstatus") == "F", 1.0).otherwise(0.0)
-            )
-            / F.count(F.lit(1))
-        ).alias("fulfilled_rate"),
-    )
 
 
-@query(
+sql_query(
     "acctbal_spend_corr",
     """
     WITH spend AS (
@@ -4765,27 +4372,13 @@ def q_priority_sla_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer c JOIN spend s ON c.c_custkey = s.o_custkey
     GROUP BY c.c_mktsegment
     """,
+    "Does account balance predict spend? Pearson correlation of c_acctbal vs "
+    "lifetime order value per market segment — the credit-vs-behavior screen "
+    "(a segment where balance and spend decouple prices risk wrong).",
 )
-def q_acctbal_spend_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Does account balance predict spend?  Pearson correlation of
-    c_acctbal vs lifetime order value per market segment — the
-    credit-vs-behavior screen (a segment where balance and spend
-    decouple prices risk wrong).  Per-customer spend aggregates once;
-    the customer dimension joins broadcast; corr is algebraic."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    spend = o.groupBy("o_custkey").agg(
-        F.sum("o_totalprice").alias("total_spend")
-    )
-    j = spend.join(F.broadcast(c), spend.o_custkey == c.c_custkey)
-    return j.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-        r4(F.corr("c_acctbal", "total_spend")).alias("bal_spend_corr"),
-        r2(F.avg("total_spend")).alias("avg_spend"),
-    )
 
 
-@query(
+sql_query(
     "segment_share_by_year",
     """
     WITH rev AS (
@@ -4803,35 +4396,9 @@ def q_acctbal_spend_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS share_delta
     FROM rev r JOIN tot t ON r.yr = t.yr
     """,
+    "Market-segment revenue share per year with year-over-year share delta — "
+    "the mix-shift report (is BUILDING gaining at AUTOMOBILE's expense?).",
 )
-def q_segment_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-segment revenue share per year with year-over-year share
-    delta — the mix-shift report (is BUILDING gaining at AUTOMOBILE's
-    expense?).  The share window runs over the (segment x year) frame —
-    dozens of rows at any scale; data-scale work is one grouped
-    aggregate under a broadcast dimension join."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    rev = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.year("o_orderdate").alias("yr"),
-        )
-        .agg(F.sum("o_totalprice").alias("revenue"))
-    )
-    tot = rev.groupBy("yr").agg(F.sum("revenue").alias("yr_total"))
-    share = F.col("revenue") / F.col("yr_total")
-    w = Window.partitionBy("segment").orderBy("yr")
-    return (
-        rev.join(F.broadcast(tot), "yr")
-        .select(
-            "segment",
-            F.col("yr").cast("bigint").alias("yr"),
-            r4(share).alias("share"),
-            r4(share - F.lag(share).over(w)).alias("share_delta"),
-        )
-    )
 
 
 @query(
@@ -4860,7 +4427,7 @@ def q_context_fit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for each source.  Map-side token count into one grouped aggregate;
     the window sizes are scaled to this corpus's ~25-90-token docs (in
     production: 512/1k/2k/4k, same query)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     n_toks = T.bind_once(T.word_tokens("text"), F.size)
     tk = docs.select("source", n_toks.alias("n_tokens"))
 
@@ -4923,7 +4490,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from advanced_etl_pipelines_spark.operators import similarity as S
     from advanced_etl_pipelines_spark.plans.registry import QUERIES
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < 20)
 
     def lsh(df, q):
@@ -5020,7 +4587,7 @@ def q_topk_churn_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-month top-20 is a rank-limit window partitioned by month
     (WindowGroupLimit prunes map-side); consecutive-month overlap is an
     equi-join on (month, part) over the 20-row-per-month survivors."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     rev = li.groupBy(
         F.date_format("l_shipdate", "yyyy-MM").alias("month"),
         "l_partkey",
@@ -5068,7 +4635,7 @@ def q_topk_churn_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "source_lang_entropy",
     """
     WITH c AS (SELECT source, lang, COUNT(*) AS n
@@ -5082,30 +4649,14 @@ def q_topk_churn_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c JOIN t ON c.source = t.source
     GROUP BY c.source
     """,
+    "Language-mix entropy per source (bits): 0 = monolingual source, "
+    "log2(|langs|) = perfectly balanced — the diversity axis of the mixture "
+    "design next to lang_temperature_sampling's rebalancing (temperature "
+    "sampling only helps sources that HAVE a mix).",
 )
-def q_source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-mix entropy per source (bits): 0 = monolingual source,
-    log2(|langs|) = perfectly balanced — the diversity axis of the
-    mixture design next to lang_temperature_sampling's rebalancing
-    (temperature sampling only helps sources that HAVE a mix).  Two
-    tiny cascaded aggregates off one scan."""
-    docs = _t(spark, sf_dir, "documents")
-    c = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    t = c.groupBy("source").agg(F.sum("n").alias("tot"))
-    p = F.col("n") * 1.0 / F.col("tot")
-    return (
-        c.join(F.broadcast(t), "source")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_langs"),
-            r4(F.sum(-p * F.log2(p))).alias("lang_entropy_bits"),
-        )
-    )
 
 
-@query(
+sql_query(
     "engagement_breadth",
     """
     WITH u AS (
@@ -5120,30 +4671,11 @@ def q_source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + AVG(converted * 1.0), 4) AS conversion_rate
     FROM u GROUP BY breadth
     """,
+    "Engagement breadth vs conversion: users bucketed by how many DISTINCT "
+    "non-purchase event types they use, with the purchase rate per bucket — "
+    "the classic activation insight (breadth predicts conversion better than "
+    "volume).",
 )
-def q_engagement_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engagement breadth vs conversion: users bucketed by how many
-    DISTINCT non-purchase event types they use, with the purchase rate
-    per bucket — the classic activation insight (breadth predicts
-    conversion better than volume).  One per-user aggregate, one tiny
-    rollup."""
-    ev = _t(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.countDistinct(
-            F.when(
-                F.col("event_type") != "purchase", F.col("event_type")
-            )
-        ).alias("breadth"),
-        F.max(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).alias("converted"),
-    )
-    return u.groupBy(
-        F.col("breadth").cast("bigint").alias("breadth")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        r4(F.avg(F.col("converted") * 1.0)).alias("conversion_rate"),
-    )
 
 
 @query(
@@ -5175,7 +4707,7 @@ def q_rare_token_share_by_source(
     as an anti-membership probe; one token explode, two aggregates."""
     from advanced_etl_pipelines_spark.operators.scale import top_k_global
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(T.word_tokens("text")).alias("token")
     )
@@ -5225,7 +4757,7 @@ def q_order_cadence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a global aggregate with exact percentiles; complements
     survival_km_repeat_purchase's first-to-second-order curve with
     all-order cadence."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_sf_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         "o_orderdate", "o_orderkey"
     )
@@ -5271,7 +4803,7 @@ def q_month_end_loading(spark: SparkSession, sf_dir: str) -> DataFrame:
     forensic (organic demand spreads ~10% over 3 days; >20% flags
     pull-forward).  One scan, conditional sum keyed on last_day
     arithmetic, per-month rollup."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_sf_table(spark, sf_dir, "orders")
     in_tail = F.datediff(
         F.last_day(F.to_date("o_orderdate")), F.to_date("o_orderdate")
     ) < 3
@@ -5295,7 +4827,7 @@ def q_month_end_loading(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "hhi_by_nation",
     """
     WITH rev AS (
@@ -5314,43 +4846,11 @@ def q_month_end_loading(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation n ON r.c_nationkey = n.n_nationkey
     GROUP BY n.n_name
     """,
+    "Herfindahl-Hirschman index of customer revenue concentration per "
+    "nation: sum of squared revenue shares — the antitrust-style "
+    "concentration number beside gini_revenue_concentration's global "
+    "inequality (HHI near 1/n = fragmented, near 1 = one whale).",
 )
-def q_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl-Hirschman index of customer revenue concentration per
-    nation: sum of squared revenue shares — the antitrust-style
-    concentration number beside gini_revenue_concentration's global
-    inequality (HHI near 1/n = fragmented, near 1 = one whale).  Two
-    keyed aggregates, broadcast joins back; no ordering needed at all
-    (unlike Gini, HHI is rank-free, hence the cheaper metric at
-    scale)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    rev = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_nationkey", "o_custkey")
-        .agg(F.sum("o_totalprice").alias("cust_rev"))
-    )
-    tot = rev.groupBy("c_nationkey").agg(
-        F.sum("cust_rev").alias("nation_rev")
-    )
-    return (
-        rev.join(F.broadcast(tot), "c_nationkey")
-        .join(
-            F.broadcast(n), rev.c_nationkey == n.n_nationkey
-        )
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-            r4(
-                F.sum(
-                    F.pow(
-                        F.col("cust_rev") / F.col("nation_rev"), 2
-                    )
-                )
-            ).alias("hhi"),
-        )
-    )
 
 
 @query(
@@ -5391,7 +4891,7 @@ def q_lang_divergence_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (p*log2(p/(p/2)) = p), so their mass folds in as
     0.5*(1 - shared_mass) per side — an inner join plus a closed-form
     correction, no outer join needed."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     ch = docs.select(
         "lang",
         F.explode(
@@ -5520,7 +5020,7 @@ def q_catalog_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             return "double", f"cast({c} as double)"
         return dt, c
 
-    frames = {t: _t(spark, sf_dir, t) for t, _ in _PROFILE_COLS}
+    frames = {t: read_sf_table(spark, sf_dir, t) for t, _ in _PROFILE_COLS}
     schemas = {
         t: {f.name: f.dataType.simpleString() for f in df.schema.fields}
         for t, df in frames.items()
@@ -5666,7 +5166,7 @@ def q_catalog_null_profile_approx(
     Measured at sf0.1: 27 → 5 Spark jobs, wall 5.6 → 3.5 s same box;
     the ten per-table aggregates + 3 spot subtrees collapsed into two
     shuffle pairs + one broadcast join."""
-    frames = {t: _t(spark, sf_dir, t) for t, _ in _PROFILE_COLS}
+    frames = {t: read_sf_table(spark, sf_dir, t) for t, _ in _PROFILE_COLS}
     schemas = {
         t: {f.name: f.dataType.simpleString() for f in df.schema.fields}
         for t, df in frames.items()
@@ -5780,7 +5280,7 @@ def q_catalog_null_profile_approx(
     )
 
 
-@query(
+sql_query(
     "simpsons_paradox_probe",
     """
     WITH g AS (
@@ -5799,48 +5299,15 @@ def q_catalog_null_profile_approx(
             <> SIGN(SUM(g.slope * g.n) / SUM(g.n))) AS reversal_flag
     FROM g CROSS JOIN o GROUP BY o.overall
     """,
+    "Simpson's-paradox probe on the discount->quantity relationship: the "
+    "POOLED regression slope vs the weighted WITHIN-part-type slope — a sign "
+    "flip (reversal_flag) means the aggregate trend is a composition "
+    "artifact and any discount-elasticity conclusion must be drawn within "
+    "groups.",
 )
-def q_simpsons_paradox_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson's-paradox probe on the discount->quantity relationship:
-    the POOLED regression slope vs the weighted WITHIN-part-type slope —
-    a sign flip (reversal_flag) means the aggregate trend is a
-    composition artifact and any discount-elasticity conclusion must be
-    drawn within groups.  Two regr_slope aggregates off one scan each
-    (broadcast dimension join); the comparison row is scalar."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    g = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_type")
-        .agg(
-            F.regr_slope("l_quantity", "l_discount").alias("slope"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    o = li.agg(
-        F.regr_slope("l_quantity", "l_discount").alias("overall")
-    )
-    within = F.sum(F.col("slope") * F.col("n")) / F.sum("n")
-    return (
-        g.crossJoin(F.broadcast(o))
-        .groupBy("overall")
-        .agg(
-            r4(within).alias("within_group_slope"),
-            F.count(F.lit(1)).cast("bigint").alias("n_groups"),
-            (F.signum(F.col("overall")) != F.signum(within)).alias(
-                "reversal_flag"
-            ),
-        )
-        .select(
-            r4(F.col("overall")).alias("overall_slope"),
-            "within_group_slope",
-            "n_groups",
-            "reversal_flag",
-        )
-    )
 
 
-@query(
+sql_query(
     "dedup_exact_vectors",
     """
     WITH g AS (
@@ -5854,33 +5321,11 @@ def q_simpsons_paradox_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(n_copies) AS BIGINT) AS max_copies
     FROM g
     """,
+    "Exact-duplicate VECTOR audit: group embeddings by their full float "
+    "array (bit-exact equality — the failure mode where a feature pipeline "
+    "emits the same embedding for different items, which silently poisons "
+    "ANN results and contrastive training).",
 )
-def q_dedup_exact_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-duplicate VECTOR audit: group embeddings by their full
-    float array (bit-exact equality — the failure mode where a feature
-    pipeline emits the same embedding for different items, which
-    silently poisons ANN results and contrastive training).  The
-    text-side twin is dedup_exact_stats; min-id keep rule matches the
-    engine-wide policy.  At 100 TB hash the vector bytes first
-    (xxhash64 over the packed array) so the shuffle carries 8-byte
-    keys — same digest-shuffle upgrade as text exact-dedup."""
-    emb = _t(spark, sf_dir, "embeddings")
-    g = emb.groupBy("embedding").agg(
-        F.count(F.lit(1)).alias("n_copies"),
-        F.min("vec_id").alias("keep_vec_id"),
-    )
-    return g.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct_vectors"),
-        F.sum("n_copies").cast("bigint").alias("n_vectors"),
-        F.sum(
-            F.when(
-                F.col("n_copies") > 1, F.col("n_copies") - 1
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_redundant"),
-        F.max("n_copies").cast("bigint").alias("max_copies"),
-    )
 
 
 @query(
@@ -5911,7 +5356,7 @@ def q_shuffle_skew_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is per-PARTITION).  The bucket assignment uses the portable
     unit hash so both engines agree; 32 bucket counts aggregate
     map-side and the ordered stats run on 32 rows."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     from advanced_etl_pipelines_spark.operators.sampling import unit_hash
 
     # explicit FLOOR: DuckDB's double->int CAST rounds-to-nearest while
@@ -5975,7 +5420,7 @@ def q_quality_ppl_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pipeline should keep both.  Reuses the add-k LM's count
     frames and the diversity fold; the final corr is one algebraic
     aggregate over per-doc pairs joined on the 8-byte doc key."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tk = docs.select(
         "doc_id", "lang", T.word_tokens("text").alias("toks")
     ).transform(tracked_persist)
@@ -6071,7 +5516,7 @@ def q_peak_concurrent_sessions(
         global_running_sums,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = (
         F.unix_micros(F.col("ts").cast("timestamp"))
@@ -6147,7 +5592,7 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_running_sums,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
         F.sum("l_extendedprice").alias("r")
     )
@@ -6168,7 +5613,7 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "suspect_duplicate_orders",
     """
     WITH g AS (
@@ -6183,41 +5628,13 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS value_at_risk
     FROM g
     """,
+    "Double-billing forensic: order groups with the SAME customer, SAME "
+    "total, SAME day — the classic duplicate-submission signature (retry "
+    "storms, double clicks, reprocessed batches).",
 )
-def q_suspect_duplicate_orders(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Double-billing forensic: order groups with the SAME customer,
-    SAME total, SAME day — the classic duplicate-submission signature
-    (retry storms, double clicks, reprocessed batches).  One grouped
-    aggregate on the composite key; the summary counts suspect groups,
-    surplus orders, and the refund exposure.  Empty result = clean
-    ledger (the count row still emits, so the check is observable)."""
-    o = _t(spark, sf_dir, "orders")
-    g = (
-        o.groupBy(
-            "o_custkey",
-            "o_totalprice",
-            F.to_date("o_orderdate").alias("d"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )
-    return g.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_suspect_groups"),
-        F.coalesce(F.sum(F.col("n") - 1), F.lit(0))
-        .cast("bigint")
-        .alias("n_extra_orders"),
-        r2(
-            F.coalesce(
-                F.sum((F.col("n") - 1) * F.col("o_totalprice")),
-                F.lit(0.0),
-            )
-        ).alias("value_at_risk"),
-    )
 
 
-@query(
+sql_query(
     "sample_accuracy_report",
     """
     WITH s AS (
@@ -6241,50 +5658,16 @@ def q_suspect_duplicate_orders(
                  / (f.sd / SQRT(sp.n_s)), 4) AS err_in_se_units
     FROM full_stats f CROSS JOIN samp sp
     """,
+    "Sampling-based profiling accuracy: a deterministic 10% hash sample's "
+    "mean/std vs the full scan, with the mean error expressed in "
+    "standard-error units (should be O(1) if the sample is unbiased) — the "
+    "evidence that a 100 TB profiling pass can run on a sample, and the "
+    "check that the hash sample ISN'T biased (err_in_se_units >> 2 would "
+    "mean the key correlates with the metric).",
 )
-def q_sample_accuracy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sampling-based profiling accuracy: a deterministic 10% hash
-    sample's mean/std vs the full scan, with the mean error expressed
-    in standard-error units (should be O(1) if the sample is unbiased)
-    — the evidence that a 100 TB profiling pass can run on a sample,
-    and the check that the hash sample ISN'T biased (err_in_se_units
-    >> 2 would mean the key correlates with the metric).  One scan
-    computes both branches (the sample is a filter, not a second
-    read)."""
-    from advanced_etl_pipelines_spark.operators.sampling import unit_hash
-
-    li = _t(spark, sf_dir, "lineitem")
-    s = li.select(
-        "l_extendedprice",
-        (unit_hash("l_orderkey") < 0.1).alias("in_sample"),
-    )
-    f = s.agg(
-        F.avg("l_extendedprice").alias("mu"),
-        F.stddev_samp("l_extendedprice").alias("sd"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    sp = s.where("in_sample").agg(
-        F.avg("l_extendedprice").alias("mu_s"),
-        F.stddev_samp("l_extendedprice").alias("sd_s"),
-        F.count(F.lit(1)).alias("n_s"),
-    )
-    return f.crossJoin(F.broadcast(sp)).select(
-        F.col("n").cast("bigint").alias("n_full"),
-        F.col("n_s").cast("bigint").alias("n_sample"),
-        r4(F.abs(F.col("mu_s") - F.col("mu")) / F.col("mu")).alias(
-            "mean_rel_err"
-        ),
-        r4(F.abs(F.col("sd_s") - F.col("sd")) / F.col("sd")).alias(
-            "std_rel_err"
-        ),
-        r4(
-            F.abs(F.col("mu_s") - F.col("mu"))
-            / (F.col("sd") / F.sqrt(F.col("n_s")))
-        ).alias("err_in_se_units"),
-    )
 
 
-@query(
+sql_query(
     "fk_integrity_sweep",
     """
     SELECT 'lineitem.l_orderkey -> orders' AS fk_edge,
@@ -6316,39 +5699,11 @@ def q_sample_accuracy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation n WHERE NOT EXISTS
       (SELECT 1 FROM region r WHERE r.r_regionkey = n.n_regionkey)
     """,
+    "Referential-integrity sweep over every foreign-key edge of the star "
+    "schema (7 edges): orphan counts per edge in one result — the "
+    "whole-catalog version of dq_constraint_report's single-edge check, and "
+    "the first gate after any load.",
 )
-def q_fk_integrity_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity sweep over every foreign-key edge of the
-    star schema (7 edges): orphan counts per edge in one result — the
-    whole-catalog version of dq_constraint_report's single-edge check,
-    and the first gate after any load.  Each edge is a LEFT ANTI join
-    whose dimension side broadcasts; fact scans prune to the key
-    column."""
-    edges = [
-        ("lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("lineitem", "l_partkey", "part", "p_partkey"),
-        ("lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        ("orders", "o_custkey", "customer", "c_custkey"),
-        ("customer", "c_nationkey", "nation", "n_nationkey"),
-        ("supplier", "s_nationkey", "nation", "n_nationkey"),
-        ("nation", "n_regionkey", "region", "r_regionkey"),
-    ]
-    out = None
-    for ft, fk, dt, dk in edges:
-        fact = _t(spark, sf_dir, ft).select(fk)
-        dim = _t(spark, sf_dir, dt).select(dk)
-        row = (
-            fact.join(
-                dim, fact[fk] == dim[dk], "left_anti"
-            )
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_orphans"))
-            .select(
-                F.lit(f"{ft}.{fk} -> {dt}").alias("fk_edge"),
-                "n_orphans",
-            )
-        )
-        out = row if out is None else out.unionAll(row)
-    return out
 
 
 @query(
@@ -6385,7 +5740,7 @@ def q_traffic_shape_similarity(
     flat-lining while views breathe daily) is its own regime.  The
     profiles are 168-row frames per type; everything after the first
     grouped count is arithmetic on KB-sized data."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     prof = ev.groupBy(
         "event_type",
         (
@@ -6459,7 +5814,7 @@ def q_user_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the running total — THE growth chart.  First-seen is one per-user
     aggregate; the running sum windows over the per-DAY frame (bounded
     by calendar length, not users), so no data-scale sort exists."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("d")
     )
@@ -6528,7 +5883,7 @@ def q_categorical_entropy_profile(
     the tolerance it already grants reduce-order noise."""
     out = None
     for t, c in _ENTROPY_COLS:
-        df = _t(spark, sf_dir, t)
+        df = read_sf_table(spark, sf_dir, t)
         cnt = df.groupBy(c).agg(F.count(F.lit(1)).alias("n"))
         n = F.col("n") * 1.0
         row = (
@@ -6589,7 +5944,7 @@ def q_wow_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Monday-anchored week grid so weeks are comparable.  The
     (user, week) distinct frame self-joins on (user, week+1) — an
     equi-join on the user key; weekly rollups are tiny."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     anchor = F.lit("1995-01-02").cast("date")
     wk = ev.select(
         "user_id",
@@ -6659,7 +6014,7 @@ def q_max_token_run_by_source(
     convert to run ids with a per-doc running sum, group to run
     lengths.  Every window is partitioned by doc_id — document-sized
     frames, one shuffle on the doc key."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         "source",
@@ -6689,7 +6044,7 @@ def q_max_token_run_by_source(
     )
 
 
-@query(
+sql_query(
     "nation_revenue_index",
     """
     WITH rev AS (
@@ -6704,32 +6059,10 @@ def q_max_token_run_by_source(
            ROUND(1e-9 + 100.0 * rev.r / b.base_r, 4) AS revenue_index
     FROM rev JOIN base b ON rev.n_name = b.n_name
     """,
+    "Indexed revenue comparison: every nation's yearly revenue as an index "
+    "with 1995 = 100 — the chart normalization that makes small and large "
+    "nations' GROWTH comparable on one axis.",
 )
-def q_nation_revenue_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Indexed revenue comparison: every nation's yearly revenue as an
-    index with 1995 = 100 — the chart normalization that makes small
-    and large nations' GROWTH comparable on one axis.  Grouped
-    aggregate under broadcast dimension joins; the base year joins back
-    broadcast on the nation key."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    rev = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name", F.year("o_orderdate").alias("yr"))
-        .agg(F.sum("o_totalprice").alias("r"))
-    )
-    base = rev.where(F.col("yr") == 1995).select(
-        "n_name", F.col("r").alias("base_r")
-    )
-    return rev.join(F.broadcast(base), "n_name").select(
-        "n_name",
-        F.col("yr").cast("bigint").alias("yr"),
-        r4(100.0 * F.col("r") / F.col("base_r")).alias(
-            "revenue_index"
-        ),
-    )
 
 
 @query(
@@ -6764,7 +6097,7 @@ def q_session_depth_histogram(
     size for stateful streaming sessionization.  Same per-user
     sessionizing windows as top_session_paths; the histogram is two
     keyed aggregates."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = (
         F.unix_micros(F.col("ts").cast("timestamp"))
@@ -6841,7 +6174,7 @@ def q_stratified_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_running_sums,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.sum(
             F.when(
@@ -6885,7 +6218,7 @@ def q_stratified_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cramers_v_source_lang",
     """
     WITH obs AS (SELECT source, lang, COUNT(*) AS o
@@ -6908,53 +6241,15 @@ def q_stratified_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS cramers_v
     FROM chi
     """,
+    "Cramér's V between source and language — the normalized [0,1] "
+    "association strength that chi-square alone can't give (chi2 grows with "
+    "n; V is comparable across tables): V near 0 means sources draw "
+    "languages independently (mixing is free), near 1 means sources ARE "
+    "language silos (rebalancing must shuffle sources too).",
 )
-def q_cramers_v_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cramér's V between source and language — the normalized [0,1]
-    association strength that chi-square alone can't give (chi2 grows
-    with n; V is comparable across tables): V near 0 means sources draw
-    languages independently (mixing is free), near 1 means sources ARE
-    language silos (rebalancing must shuffle sources too).  Same
-    broadcast-margin contingency shape as chisq_independence with the
-    closed-form normalization."""
-    docs = _t(spark, sf_dir, "documents")
-    obs = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("o")
-    )
-    tot = obs.agg(
-        F.sum("o").alias("n"),
-        F.countDistinct("source").alias("r"),
-        F.countDistinct("lang").alias("c"),
-    )
-    rowt = obs.groupBy("source").agg(F.sum("o").alias("rt"))
-    colt = obs.groupBy("lang").agg(F.sum("o").alias("ct"))
-    e = F.col("rt") * F.col("ct") * 1.0 / F.col("n")
-    chi = (
-        obs.join(F.broadcast(rowt), "source")
-        .join(F.broadcast(colt), "lang")
-        .crossJoin(F.broadcast(tot))
-        .agg(
-            F.sum(F.pow(F.col("o") - e, 2) / e).alias("chi2"),
-            F.max("n").alias("n"),
-            F.max("r").alias("r"),
-            F.max("c").alias("c"),
-        )
-    )
-    return chi.select(
-        r4(F.col("chi2")).alias("chi2"),
-        ((F.col("r") - 1) * (F.col("c") - 1))
-        .cast("bigint")
-        .alias("dof"),
-        r4(
-            F.sqrt(
-                F.col("chi2")
-                / (F.col("n") * (F.least("r", "c") - 1))
-            )
-        ).alias("cramers_v"),
-    )
 
 
-@query(
+sql_query(
     "eb_shrunk_return_rates",
     """
     WITH per AS (
@@ -6985,56 +6280,15 @@ def q_cramers_v_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rnk AS BIGINT) AS rnk
     FROM r WHERE rnk <= 15
     """,
+    "Empirical-Bayes shrinkage of per-part return rates: a Beta prior fitted "
+    "by method of moments from the cross-part rate distribution pulls "
+    "small-sample rates toward the corpus mean, so a 2-of-3 returned part no "
+    "longer outranks a 40-of-100 one — the ranking fix every small-n "
+    "leaderboard needs (same machinery as baseball batting averages).",
 )
-def q_eb_shrunk_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical-Bayes shrinkage of per-part return rates: a Beta prior
-    fitted by method of moments from the cross-part rate distribution
-    pulls small-sample rates toward the corpus mean, so a 2-of-3
-    returned part no longer outranks a 40-of-100 one — the ranking fix
-    every small-n leaderboard needs (same machinery as baseball batting
-    averages).  Moments come from one aggregate over per-part rates;
-    the prior broadcasts back; top-15 via the two-level top-k."""
-    from advanced_etl_pipelines_spark.operators.scale import top_k_global
-
-    li = _t(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-        ).alias("k"),
-    )
-    rate = F.col("k") * 1.0 / F.col("n")
-    mom = per.where(F.col("n") >= 5).agg(
-        F.avg(rate).alias("mu"), F.var_samp(rate).alias("v")
-    )
-    common = F.col("mu") * (1 - F.col("mu")) / F.col("v") - 1
-    prior = mom.select(
-        F.greatest(F.col("mu") * common, F.lit(0.5)).alias("alpha"),
-        F.greatest((1 - F.col("mu")) * common, F.lit(0.5)).alias(
-            "beta"
-        ),
-    )
-    shr = per.crossJoin(F.broadcast(prior)).select(
-        "l_partkey",
-        "n",
-        "k",
-        (
-            (F.col("k") + F.col("alpha"))
-            / (F.col("n") + F.col("alpha") + F.col("beta"))
-        ).alias("shrunk"),
-    )
-    top = top_k_global(shr, [F.desc("shrunk"), F.asc("l_partkey")], 15)
-    return top.select(
-        "l_partkey",
-        F.col("n").cast("bigint").alias("n_lines"),
-        F.col("k").cast("bigint").alias("n_returned"),
-        r4(F.col("k") * 1.0 / F.col("n")).alias("raw_rate"),
-        r4(F.col("shrunk")).alias("shrunk_rate"),
-        F.col("rnk").cast("bigint").alias("rnk"),
-    )
 
 
-@query(
+sql_query(
     "daily_autocorrelation",
     """
     WITH daily AS (
@@ -7051,32 +6305,14 @@ def q_eb_shrunk_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + corr(cnt, lag7), 4) AS acf_lag7
     FROM lagged GROUP BY event_type
     """,
+    "Autocorrelation of daily volumes at lag 1 (momentum) and lag 7 (weekly "
+    "periodicity) per event type — the two numbers that decide which "
+    "forecaster fits: high acf_lag7 demands the seasonal index "
+    "(weekday_seasonality_index), high acf_lag1 alone suffices for Holt.",
 )
-def q_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation of daily volumes at lag 1 (momentum) and lag 7
-    (weekly periodicity) per event type — the two numbers that decide
-    which forecaster fits: high acf_lag7 demands the seasonal index
-    (weekday_seasonality_index), high acf_lag1 alone suffices for Holt.
-    LAG and corr both run on the per-day frame (bounded by calendar),
-    partitioned by type."""
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("event_type").orderBy("d")
-    lagged = daily.select(
-        "event_type",
-        "cnt",
-        F.lag("cnt", 1).over(w).alias("lag1"),
-        F.lag("cnt", 7).over(w).alias("lag7"),
-    )
-    return lagged.groupBy("event_type").agg(
-        r4(F.corr("cnt", "lag1")).alias("acf_lag1"),
-        r4(F.corr("cnt", "lag7")).alias("acf_lag7"),
-    )
 
 
-@query(
+sql_query(
     "part_price_drift",
     """
     WITH yearly AS (
@@ -7103,49 +6339,10 @@ def q_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rnk AS BIGINT) AS rnk
     FROM r WHERE rnk <= 15
     """,
+    "Per-part price drift: the OLS slope of yearly average unit price over "
+    "years (>=3 observed years), normalized by the part's price level, top "
+    "15 movers by |relative drift| — the repricing/cost-creep screen.",
 )
-def q_part_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-part price drift: the OLS slope of yearly average unit price
-    over years (>=3 observed years), normalized by the part's price
-    level, top 15 movers by |relative drift| — the repricing/cost-creep
-    screen.  Grouped regr_slope over the per-(part, year) aggregate;
-    top-15 via the two-level top-k so no global sort over parts."""
-    from advanced_etl_pipelines_spark.operators.scale import top_k_global
-
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 0)
-    yearly = li.groupBy(
-        "l_partkey", F.year("l_shipdate").alias("yr")
-    ).agg(
-        F.avg(
-            F.col("l_extendedprice") / F.col("l_quantity")
-        ).alias("unit_price")
-    )
-    fit = (
-        yearly.groupBy("l_partkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_years"),
-            F.regr_slope("unit_price", "yr").alias("slope"),
-            F.avg("unit_price").alias("avg_price"),
-        )
-        .where(F.col("n_years") >= 3)
-        .withColumn(
-            "rel_drift", F.col("slope") / F.col("avg_price")
-        )
-    )
-    # rank by the OUTPUT-rounded |drift| (sf1-replica ties resolved by
-    # engine-specific float noise in the raw ratio otherwise)
-    top = top_k_global(
-        fit,
-        [F.desc(r4(F.abs(F.col("rel_drift")))), F.asc("l_partkey")],
-        15,
-    )
-    return top.select(
-        "l_partkey",
-        F.col("n_years").cast("bigint").alias("n_years"),
-        r4(F.col("slope")).alias("slope_per_year"),
-        r4(F.col("rel_drift")).alias("rel_drift"),
-        F.col("rnk").cast("bigint").alias("rnk"),
-    )
 
 
 @query(
@@ -7173,7 +6370,7 @@ def q_new_buyer_revenue_share(
     new buyers is buying growth; mostly repeat is compounding).  MIN
     string month per customer is one aggregate joined back by the
     customer key; the monthly rollup carries both sums in one pass."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_sf_table(spark, sf_dir, "orders")
     month = F.date_format("o_orderdate", "yyyy-MM")
     first_m = o.groupBy("o_custkey").agg(
         F.min(month).alias("first_month")
@@ -7220,7 +6417,7 @@ def q_qq_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     p means the difference lives in the tail.  Both quantile vectors
     come from one grouped exact-percentile aggregate each; the QQ join
     is 9 rows."""
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     ps = [i / 10.0 for i in range(1, 10)]
 
     def quantiles(etype: str, alias: str) -> DataFrame:
@@ -7289,8 +6486,8 @@ def q_brand_cannibalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates stable; bottom-10 by lift through the two-level top-k."""
     from advanced_etl_pipelines_spark.operators.scale import top_k_global
 
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = read_sf_table(spark, sf_dir, "lineitem")
+    p = read_sf_table(spark, sf_dir, "part")
     ob = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select("l_orderkey", "p_brand")
@@ -7388,7 +6585,7 @@ def q_lorenz_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_running_sums,
     )
 
-    o = _t(spark, sf_dir, "orders")
+    o = read_sf_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("r"))
     tot = rev.agg(
         F.count(F.lit(1)).alias("n"), F.sum("r").alias("tr")
@@ -7441,8 +6638,8 @@ def q_hierarchical_revenue_shares(
     All three window sums run over the (brand x type) AGGREGATE (a few
     hundred rows); the unpartitioned total is over that same bounded
     frame, never the fact table."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = read_sf_table(spark, sf_dir, "lineitem")
+    p = read_sf_table(spark, sf_dir, "part")
     rev = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type")
@@ -7484,7 +6681,7 @@ def q_event_position_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     history, averaged per type — signups should sit near 0, purchases
     late; an error type drifting earlier over releases is an onboarding
     regression.  One per-user window pass, then a per-type aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wn = Window.partitionBy("user_id")
     rel = (F.row_number().over(wu) - 1) * 1.0 / F.greatest(
@@ -7521,7 +6718,7 @@ def q_hapax_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     content) from template spam (low hapax), and the quantity Good-
     Turing smoothing keys on.  Per-(source, token) counts partial-
     aggregate map-side; the rollup is per-source."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(T.word_tokens("text")).alias("token")
     )
@@ -7562,7 +6759,7 @@ def q_unseen_mass_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     data (cf. oov_rate_topv, which measures OOV against a CHOSEN vocab;
     this estimates it against the corpus itself).  Same per-(lang,
     token) aggregate as the hapax profile."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "lang", F.explode(T.word_tokens("text")).alias("token")
     )
@@ -7579,7 +6776,7 @@ def q_unseen_mass_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "purchase_index_value",
     """
     WITH p AS (
@@ -7593,32 +6790,11 @@ def q_unseen_mass_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + AVG(value), 4) AS avg_value
     FROM p WHERE idx <= 10 GROUP BY idx
     """,
+    "Average purchase value by purchase INDEX (a user's 1st, 2nd, ...",
 )
-def q_purchase_index_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Average purchase value by purchase INDEX (a user's 1st, 2nd, ...
-    10th purchase) — the expansion-vs-decay read (rising curve =
-    customers deepen; falling = promo-driven first orders), the
-    behavioral twin of ltv_cohort_curve's time axis.  One per-user
-    rank window over purchases only, then a tiny per-index aggregate."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    p = (
-        ev.where(
-            (F.col("event_type") == "purchase")
-            & F.col("value").isNotNull()
-        )
-        .withColumn("idx", F.row_number().over(w))
-        .where(F.col("idx") <= 10)
-    )
-    return p.groupBy(
-        F.col("idx").cast("bigint").alias("purchase_index")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_purchases"),
-        r4(F.avg("value")).alias("avg_value"),
-    )
 
 
-@query(
+sql_query(
     "single_source_parts",
     """
     WITH ps AS (
@@ -7633,32 +6809,14 @@ def q_purchase_index_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ps CROSS JOIN tot
     GROUP BY n_suppliers
     """,
+    "Supply-chain concentration: parts bucketed by their number of distinct "
+    "suppliers, with the revenue share each bucket carries — the "
+    "single-source-risk report (revenue riding on n_suppliers = 1 has no "
+    "failover).",
 )
-def q_single_source_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supply-chain concentration: parts bucketed by their number of
-    distinct suppliers, with the revenue share each bucket carries —
-    the single-source-risk report (revenue riding on n_suppliers = 1
-    has no failover).  One grouped aggregate with a COUNT DISTINCT on
-    the 8-byte supplier key, then a bucket rollup."""
-    li = _t(spark, sf_dir, "lineitem")
-    ps = li.groupBy("l_partkey").agg(
-        F.countDistinct("l_suppkey").alias("n_suppliers"),
-        F.sum("l_extendedprice").alias("rev"),
-    )
-    tot = ps.agg(F.sum("rev").alias("tr"))
-    return (
-        ps.crossJoin(F.broadcast(tot))
-        .groupBy(
-            F.col("n_suppliers").cast("bigint").alias("n_suppliers")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_parts"),
-            r4(F.sum("rev") / F.max("tr")).alias("revenue_share"),
-        )
-    )
 
 
-@query(
+sql_query(
     "price_ending_bias",
     """
     WITH c AS (
@@ -7677,38 +6835,12 @@ def q_single_source_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(r.rnk AS BIGINT) AS rnk
     FROM r CROSS JOIN tot t WHERE r.rnk <= 10
     """,
+    "Price-ending (cents-digit) bias: the ten most common cent endings of "
+    "order totals with their lift over a uniform ending distribution — the "
+    "psychological-pricing / fabrication forensic beside benford_first_digit "
+    "(human-set prices pile on .00/.99; machine-generated sums spread "
+    "uniformly).",
 )
-def q_price_ending_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Price-ending (cents-digit) bias: the ten most common cent
-    endings of order totals with their lift over a uniform ending
-    distribution — the psychological-pricing / fabrication forensic
-    beside benford_first_digit (human-set prices pile on .00/.99;
-    machine-generated sums spread uniformly).  Cents come from integer
-    arithmetic on rounded totals so both engines bucket identically;
-    the ending histogram is at most 100 rows."""
-    o = _t(spark, sf_dir, "orders")
-    cents = (
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint") % 100
-    )
-    obs = o.select(cents.alias("cents")).groupBy("cents").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    tot = obs.agg(
-        F.sum("n").alias("nn"), F.count(F.lit(1)).alias("k")
-    )
-    w = Window.orderBy(F.desc("n"), F.asc("cents"))
-    r = obs.withColumn("rnk", F.row_number().over(w)).where(
-        F.col("rnk") <= 10
-    )
-    return r.crossJoin(F.broadcast(tot)).select(
-        F.col("cents").cast("bigint").alias("cents"),
-        F.col("n").cast("bigint").alias("n_orders"),
-        r4(F.col("n") * 1.0 / F.col("nn")).alias("share"),
-        r4(F.col("n") * 1.0 * F.col("k") / F.col("nn")).alias(
-            "vs_uniform"
-        ),
-        F.col("rnk").cast("bigint").alias("rnk"),
-    )
 
 
 @query(
@@ -7738,7 +6870,7 @@ def q_quality_length_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (all loss in one corner = a data artifact, spread loss = a real
     quality spectrum).  Map-side arithmetic into a <=30-cell aggregate;
     the uniq=1.0 edge folds into the top band via LEAST."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     s = docs.select(
         T.bind_once(
             T.word_tokens("text"),
@@ -7797,7 +6929,7 @@ def q_text_reuse_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte ids."""
     from advanced_etl_pipelines_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
         docs, "text", "doc_id", "lang", n=3, threshold=0.15
     )
@@ -7822,7 +6954,7 @@ def q_text_reuse_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "numeric_contract_check",
     """
     SELECT
@@ -7839,35 +6971,15 @@ def q_text_reuse_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
                        ELSE 1.0 END), 4) AS frac_nonpositive_price
     FROM lineitem
     """,
+    "Numeric-contract validation on the fact table: quantities must be "
+    "whole, discounts in [0,1], taxes non-negative, prices positive — the "
+    "semantic checks a schema cannot express (doubles happily store 2.5 "
+    "units or a 140% discount), complementing fk_integrity_sweep's "
+    "referential layer and dq_constraint_report's row rules.",
 )
-def q_numeric_contract_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Numeric-contract validation on the fact table: quantities must
-    be whole, discounts in [0,1], taxes non-negative, prices positive —
-    the semantic checks a schema cannot express (doubles happily store
-    2.5 units or a 140% discount), complementing fk_integrity_sweep's
-    referential layer and dq_constraint_report's row rules.  One scan,
-    four conditional means."""
-    li = _t(spark, sf_dir, "lineitem")
-
-    def viol(cond) -> F.Column:
-        return r4(F.avg(F.when(cond, 0.0).otherwise(1.0)))
-
-    return li.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        viol(F.col("l_quantity") == F.floor("l_quantity")).alias(
-            "frac_fractional_qty"
-        ),
-        viol(F.col("l_discount").between(0, 1)).alias(
-            "frac_discount_oob"
-        ),
-        viol(F.col("l_tax") >= 0).alias("frac_negative_tax"),
-        viol(F.col("l_extendedprice") > 0).alias(
-            "frac_nonpositive_price"
-        ),
-    )
 
 
-@query(
+sql_query(
     "icc_value_by_user",
     """
     WITH g AS (
@@ -7888,42 +7000,15 @@ def q_numeric_contract_check(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + var_between / vt, 4) AS icc
     FROM betw
     """,
+    "Intraclass correlation of event values by user: the share of total "
+    "value variance explained by WHICH user produced the event — the "
+    "clustering diagnostic that decides experiment design (high ICC means "
+    "user-level randomization and cluster-robust errors are mandatory; near "
+    "0 means events are exchangeable).",
 )
-def q_icc_value_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intraclass correlation of event values by user: the share of
-    total value variance explained by WHICH user produced the event —
-    the clustering diagnostic that decides experiment design (high ICC
-    means user-level randomization and cluster-robust errors are
-    mandatory; near 0 means events are exchangeable).  Per-user means
-    in one aggregate, global moments in another, one scalar division."""
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    g = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"), F.avg("value").alias("mu")
-    )
-    tot = ev.agg(
-        F.avg("value").alias("gmu"),
-        F.var_samp("value").alias("vt"),
-        F.count(F.lit(1)).alias("n_obs"),
-    )
-    betw = g.crossJoin(F.broadcast(tot)).agg(
-        (
-            F.sum(
-                F.col("n") * F.pow(F.col("mu") - F.col("gmu"), 2)
-            )
-            / (F.max("n_obs") - 1)
-        ).alias("var_between"),
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.max("vt").alias("vt"),
-        F.max("n_obs").cast("bigint").alias("n_obs"),
-    )
-    return betw.select(
-        "n_users",
-        "n_obs",
-        r4(F.col("var_between") / F.col("vt")).alias("icc"),
-    )
 
 
-@query(
+sql_query(
     "hourly_conversion_profile",
     """
     WITH h AS (
@@ -7939,31 +7024,10 @@ def q_icc_value_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS purchase_rate
     FROM h CROSS JOIN tot
     """,
+    "Conversion rate vs traffic share by hour of day — the intent profile "
+    "(hours where purchase rate beats the average while traffic is low are "
+    "underpriced ad inventory).",
 )
-def q_hourly_conversion_profile(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Conversion rate vs traffic share by hour of day — the intent
-    profile (hours where purchase rate beats the average while traffic
-    is low are underpriced ad inventory).  One 24-row aggregate off a
-    single scan."""
-    ev = _t(spark, sf_dir, "events")
-    h = ev.groupBy(F.hour("ts").alias("hr")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).alias("n_purchases"),
-    )
-    tot = h.agg(F.sum("n_events").alias("total"))
-    return h.crossJoin(F.broadcast(tot)).select(
-        F.col("hr").cast("bigint").alias("hr"),
-        r4(F.col("n_events") * 1.0 / F.col("total")).alias(
-            "traffic_share"
-        ),
-        r4(F.col("n_purchases") * 1.0 / F.col("n_events")).alias(
-            "purchase_rate"
-        ),
-    )
 
 
 @query(
@@ -7996,7 +7060,7 @@ def q_revenue_ma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossover месяц is the turn).  Only emitted once the 12-month
     window is full, so every ma12 is a true 12-month mean.  All windows
     run over the per-month frame — bounded by calendar length."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_sf_table(spark, sf_dir, "orders")
     m = o.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month")
     ).agg(F.sum("o_totalprice").alias("rev"))
@@ -8054,7 +7118,7 @@ def q_error_rate_pchart(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-score anomalies (no volume adjustment) and CUSUM (drift, not
     spikes).  One daily aggregate plus a broadcast center line; all
     limit math is +-*/ and SQRT."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     d = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -8101,7 +7165,7 @@ def q_weekend_conversion_split(
     with hourly_conversion_profile when it does).  One grouped
     aggregate; ISO weekday keeps both engines' weekend definition
     identical."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     u = ev.groupBy(
         "user_id", (F.weekday("ts") >= 5).alias("weekend")
     ).agg(
@@ -8117,7 +7181,7 @@ def q_weekend_conversion_split(
     )
 
 
-@query(
+sql_query(
     "discount_depth_response",
     """
     WITH b AS (
@@ -8134,37 +7198,11 @@ def q_weekend_conversion_split(
              AS qty_lift_vs_zero
     FROM b CROSS JOIN base GROUP BY band
     """,
+    "Discount-depth response curve: average quantity per 5-point discount "
+    "band, normalized by the zero-discount baseline — the "
+    "promo-effectiveness table (a flat lift curve means discounts move "
+    "margin, not volume; cf.",
 )
-def q_discount_depth_response(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Discount-depth response curve: average quantity per 5-point
-    discount band, normalized by the zero-discount baseline — the
-    promo-effectiveness table (a flat lift curve means discounts move
-    margin, not volume; cf. simpsons_paradox_probe before trusting the
-    pooled slope).  Band assignment floors explicitly (the engines'
-    double->int casts disagree on rounding); two aggregates off one
-    scan each."""
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.floor(F.col("l_discount") * 20).cast("int").alias("band"),
-        "l_quantity",
-    )
-    base = li.where(F.col("l_discount") == 0).agg(
-        F.avg("l_quantity").alias("q0")
-    )
-    return (
-        b.crossJoin(F.broadcast(base))
-        .groupBy(F.col("band").cast("bigint").alias("discount_band"))
-        .agg(
-            r4(F.max(F.col("band") * 5.0)).alias("discount_pct_lo"),
-            F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-            r4(F.avg("l_quantity")).alias("avg_qty"),
-            r4(F.avg("l_quantity") / F.max("q0")).alias(
-                "qty_lift_vs_zero"
-            ),
-        )
-    )
 
 
 @query(
@@ -8236,7 +7274,7 @@ def q_link_prediction_adamic_adar(
     )
 
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_sf_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
@@ -8263,7 +7301,7 @@ def q_link_prediction_adamic_adar(
     )
 
 
-@query(
+sql_query(
     "incremental_agg_maintenance",
     """
     WITH signed AS (
@@ -8282,61 +7320,8 @@ def q_link_prediction_adamic_adar(
     HAVING SUM(dr) > 0
     ORDER BY user_id
     """,
+    "Incremental materialized-view maintenance (Blakeley et al.",
 )
-def q_incremental_agg_maintenance(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Incremental materialized-view maintenance (Blakeley et al. 1986
-    delta propagation): a per-user (row-count, value-total) aggregate
-    is FIRST materialized from the changelog prefix before 2024-01-21,
-    then refreshed by applying only the signed post-split delta through
-    operators/relational.py maintain_additive_agg — the base facts are
-    never rescanned.  Changelog algebra: signup = insert (+1, +value),
-    error = retraction (-1, -value), other events = in-place value
-    delta (0, +value); groups whose row count nets to zero disappear.
-
-    The DuckDB oracle recomputes the view FLAT over the whole log —
-    equality of the two is precisely the IVM correctness statement
-    (delta application == recomputation), so the oracle checks the
-    algorithm, not just the arithmetic.  At 100 TB the base state is a
-    key-bucketed table and each refresh is a delta-sized co-located
-    merge: the cost of maintenance is proportional to the CHANGE, not
-    to the data."""
-    from advanced_etl_pipelines_spark.operators.relational import (
-        maintain_additive_agg,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    signed = ev.select(
-        "user_id",
-        "ts",
-        F.when(F.col("event_type") == "signup", F.lit(1))
-        .when(F.col("event_type") == "error", F.lit(-1))
-        .otherwise(F.lit(0))
-        .alias("dr"),
-        F.when(F.col("event_type") == "error", -F.col("value"))
-        .otherwise(F.col("value"))
-        .alias("dv"),
-    )
-    split = F.lit("2024-01-21").cast("timestamp")
-    base = signed.where(F.col("ts") < split).groupBy("user_id").agg(
-        F.sum("dr").alias("dr"), F.sum("dv").alias("dv")
-    )
-    delta = signed.where(F.col("ts") >= split).select(
-        "user_id", "dr", "dv"
-    )
-    refreshed = maintain_additive_agg(
-        base, delta, ["user_id"], ["dr", "dv"]
-    )
-    return (
-        refreshed.where(F.col("dr") > 0)
-        .select(
-            "user_id",
-            F.col("dr").cast("bigint").alias("net_rows"),
-            r4(F.col("dv")).alias("net_value"),
-        )
-        .orderBy("user_id")
-    )
 
 
 # closed-form 16-bit Morton interleave (z = pk bits at odd positions,
@@ -8416,7 +7401,7 @@ def q_zorder_layout_pruning(
     BIGINT floor-division normalization instead of that operator's
     float min/max scaling because the DuckDB oracle must reproduce the
     bucket assignment bit-for-bit."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_sf_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_orderkey"
     )
     dims = li.agg(
@@ -8534,7 +7519,7 @@ def q_spearman_corr_bounded(
     the exact-cents BIGINT banding makes the bucket assignment
     bit-identical across engines.  The unpartitioned window runs over
     <=256 rows by construction -> whitelisted in tests/test_plans.py."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     t = li.select(
         F.col("l_quantity").cast("bigint").alias("q"),
         F.round(F.col("l_discount") * 100)
@@ -8584,7 +7569,7 @@ def q_spearman_corr_bounded(
     )
 
 
-@query(
+sql_query(
     "neyman_allocation_sample",
     """
     WITH s AS (
@@ -8614,79 +7599,15 @@ def q_spearman_corr_bounded(
     FROM alloc a LEFT JOIN kept k ON a.stratum = k.stratum
     ORDER BY a.stratum
     """,
+    "Neyman-optimal stratified sampling (Neyman 1934): a fixed survey budget "
+    "of 1000 rows is allocated across order-priority strata proportional to "
+    "N_h * S_h — size TIMES within-stratum spread — the allocation that "
+    "minimizes the stratified estimator's variance (proportional allocation "
+    "ignores S_h; uniform ignores both).",
 )
-def q_neyman_allocation_sample(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Neyman-optimal stratified sampling (Neyman 1934): a fixed
-    survey budget of 1000 rows is allocated across order-priority
-    strata proportional to N_h * S_h — size TIMES within-stratum
-    spread — the allocation that minimizes the stratified estimator's
-    variance (proportional allocation ignores S_h; uniform ignores
-    both).  The high-variance strata get oversampled, exactly what a
-    quality-audit or labeling-budget pipeline wants.
-
-    Shape: one aggregate for per-stratum (N_h, S_h), a broadcast of
-    the 5-row allocation table, then the map-side deterministic
-    keep (unit_hash(key) < rate — same rerun-stable Bernoulli as
-    operators/sampling.py stratified_sample / the temperature-sampling
-    query) and one aggregate over survivors.  No corpus-scale shuffle;
-    the keep rate is rounded to 6 decimals on BOTH engines so the
-    stddev reduce-order noise (~1e-12 relative) can never flip a
-    hash-vs-rate comparison."""
-    from advanced_etl_pipelines_spark.operators.sampling import unit_hash
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-    s = o.groupBy(F.col("o_orderpriority").alias("stratum")).agg(
-        F.count(F.lit(1)).alias("nh"),
-        F.stddev_pop("o_totalprice").alias("sh"),
-    )
-    tot = s.agg(F.sum(F.col("nh") * F.col("sh")).alias("z"))
-    alloc = s.crossJoin(F.broadcast(tot)).select(
-        "stratum",
-        "nh",
-        "sh",
-        F.round(
-            F.lit(1e-9)
-            + F.least(
-                F.lit(1.0),
-                (F.lit(1000.0) * F.col("nh") * F.col("sh") / F.col("z"))
-                / F.col("nh"),
-            ),
-            6,
-        ).alias("keep_rate"),
-    )
-    kept = (
-        o.join(
-            F.broadcast(alloc.select("stratum", "keep_rate")),
-            o.o_orderpriority == F.col("stratum"),
-        )
-        .where(unit_hash("o_orderkey") < F.col("keep_rate"))
-        .groupBy("stratum")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.avg("o_totalprice").alias("kept_mean"),
-        )
-    )
-    return (
-        alloc.join(kept, "stratum", "left_outer")
-        .select(
-            "stratum",
-            F.col("nh").cast("bigint").alias("n_pop"),
-            r2(F.col("sh")).alias("stddev_price"),
-            "keep_rate",
-            F.coalesce("n_kept", F.lit(0))
-            .cast("bigint")
-            .alias("n_kept"),
-            r2(F.col("kept_mean")).alias("kept_mean_price"),
-        )
-        .orderBy("stratum")
-    )
 
 
-@query(
+sql_query(
     "k_anonymity_audit",
     """
     WITH qi AS (
@@ -8712,61 +7633,13 @@ def q_neyman_allocation_sample(
     FROM g CROSS JOIN (VALUES (2), (5), (10)) AS ks(k)
     GROUP BY k ORDER BY k
     """,
+    "k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala 2007) "
+    "over the customer quasi-identifier triple (nation, market segment, "
+    "$1000 account-balance band): for k in {2, 5, 10}, how many QI "
+    "equivalence classes are smaller than k and what fraction of ROWS sits "
+    "in them — the re-identification exposure a release of this projection "
+    "would carry.",
 )
-def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
-    2007) over the customer quasi-identifier triple (nation, market
-    segment, $1000 account-balance band): for k in {2, 5, 10}, how
-    many QI equivalence classes are smaller than k and what fraction
-    of ROWS sits in them — the re-identification exposure a release
-    of this projection would carry.  l-diversity uses a 7-class
-    synthetic sensitive attribute (custkey mod 7, the deterministic
-    stand-in for a real sensitive column) and counts classes with
-    fewer than 2 distinct sensitive values.
-
-    The privacy gate a training-data pipeline runs before exporting
-    user-derived tables.  Shape: ONE hash aggregate over the QI tuple
-    (the only data-scale pass, count + small exact distinct), then
-    the k-threshold sweep is a 3-way rollup of the group-size frame —
-    the audit cost does not depend on k.  At 100 TB the QI aggregate
-    is the same shuffle any groupBy pays; generalization search
-    (coarsening bands until k holds) reruns only the small frame."""
-    c = _t(spark, sf_dir, "customer")
-    qi = c.select(
-        "c_nationkey",
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias(
-            "bal_band"
-        ),
-        (F.col("c_custkey") % 7).alias("sens"),
-    )
-    g = qi.groupBy("c_nationkey", "c_mktsegment", "bal_band").agg(
-        F.count(F.lit(1)).alias("grp_n"),
-        F.countDistinct("sens").alias("l_div"),
-    )
-    ks = spark.createDataFrame([(2,), (5,), (10,)], "k int")
-    below = F.col("grp_n") < F.col("k")
-    return (
-        g.crossJoin(F.broadcast(ks))
-        .groupBy("k")
-        .agg(
-            F.sum(F.when(below, 1).otherwise(0))
-            .cast("bigint")
-            .alias("groups_below_k"),
-            F.sum(F.when(below, F.col("grp_n")).otherwise(0))
-            .cast("bigint")
-            .alias("rows_below_k"),
-            r4(
-                F.sum(F.when(below, F.col("grp_n")).otherwise(0))
-                * 100.0
-                / F.sum("grp_n")
-            ).alias("pct_rows_at_risk"),
-            F.sum(F.when(F.col("l_div") < 2, 1).otherwise(0))
-            .cast("bigint")
-            .alias("groups_below_l2"),
-        )
-        .orderBy("k")
-    )
 
 
 # Croston fold, shared shape on both engines: elements are mapped to
@@ -8856,7 +7729,7 @@ def q_croston_intermittent_demand(
     never reorder it.  Both engines run the IDENTICAL fold arithmetic
     (struct-mapped elements, first-gap init, 0.2/0.8 IEEE doubles), so
     the oracle matches exactly."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     wk = (
         li.select(
             "l_partkey",
@@ -8963,7 +7836,7 @@ def q_difference_in_differences(
     arithmetic on the 4-row frame — the estimator costs exactly one
     groupBy at any scale.  The four cell counts ship alongside the
     point estimate so downstream can compute its preferred variance."""
-    ev = _t(spark, sf_dir, "events").where(
+    ev = read_sf_table(spark, sf_dir, "events").where(
         F.col("event_type") == "purchase"
     )
     labeled = ev.select(
@@ -9005,7 +7878,7 @@ def q_difference_in_differences(
     )
 
 
-@query(
+sql_query(
     "huber_location_by_segment",
     """
     WITH base AS (
@@ -9047,72 +7920,12 @@ def q_difference_in_differences(
     FROM m0 JOIN sc ON m0.seg = sc.seg JOIN i3 ON m0.seg = i3.seg
     ORDER BY c_mktsegment
     """,
+    "Huber M-estimator of location (Huber 1964) per market segment: 3 fixed "
+    "IRLS rounds with psi-weights w = min(1, 1.345*s/|x - m|), seeded at the "
+    "exact group median with MAD*1.4826 scale — the robust mean that "
+    "downweights (not drops) tail balances, reported beside the plain mean "
+    "so the outlier pull is visible.",
 )
-def q_huber_location_by_segment(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Huber M-estimator of location (Huber 1964) per market segment:
-    3 fixed IRLS rounds with psi-weights w = min(1, 1.345*s/|x - m|),
-    seeded at the exact group median with MAD*1.4826 scale — the
-    robust mean that downweights (not drops) tail balances, reported
-    beside the plain mean so the outlier pull is visible.  Completes
-    the robust-statistics family: MAD anomaly flags point outliers,
-    Theil-Sen robustifies slopes, winsorized/trimmed hard-clip — this
-    one is the smooth-reweighting estimator production monitoring
-    favors.
-
-    Shape: each IRLS round is ONE hash aggregate over the data joined
-    to the broadcast 5-row current-estimate frame — fixed iteration
-    count, so the whole estimator is 5 aggregates (median, MAD, 3
-    rounds) and unrolls into oracle SQL the same way the fixed-round
-    graph queries do."""
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_mktsegment").alias("seg"),
-        F.col("c_acctbal").alias("x"),
-    )
-    m0 = c.groupBy("seg").agg(
-        F.expr("percentile(x, 0.5)").alias("m"),
-        F.count(F.lit(1)).alias("n"),
-        F.avg("x").alias("plain_mean"),
-    )
-    sc = (
-        c.join(F.broadcast(m0.select("seg", "m")), "seg")
-        .groupBy("seg")
-        .agg(
-            F.greatest(
-                F.expr("percentile(abs(x - m), 0.5)") * 1.4826,
-                F.lit(1e-9),
-            ).alias("s")
-        )
-    )
-    cur = m0.select("seg", "m")
-    for _ in range(3):
-        w = F.least(
-            F.lit(1.0),
-            F.lit(1.345)
-            * F.col("s")
-            / F.greatest(F.abs(F.col("x") - F.col("m")), F.lit(1e-12)),
-        )
-        cur = (
-            c.join(F.broadcast(cur), "seg")
-            .join(F.broadcast(sc), "seg")
-            .groupBy("seg")
-            .agg((F.sum(w * F.col("x")) / F.sum(w)).alias("m"))
-        )
-    return (
-        m0.select("seg", "n", "m", "plain_mean")
-        .join(F.broadcast(sc), "seg")
-        .join(cur.select("seg", F.col("m").alias("hm")), "seg")
-        .select(
-            F.col("seg").alias("c_mktsegment"),
-            F.col("n").cast("bigint").alias("n"),
-            r4(F.col("m")).alias("median_bal"),
-            r4(F.col("s")).alias("mad_scale"),
-            r4(F.col("plain_mean")).alias("plain_mean"),
-            r4(F.col("hm")).alias("huber_mean"),
-        )
-        .orderBy("c_mktsegment")
-    )
 
 
 @query(
@@ -9178,7 +7991,7 @@ def q_attribution_shapley(
     pareto_frontier_parts (bounded domain) and attribution_markov
     (event-type-bounded transition matrix).  phi sums to v(N) - v(0)
     by the efficiency axiom, so share_pct is a true decomposition."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     conv = ev.groupBy("user_id").agg(
         (
             F.max(F.when(F.col("event_type") == "click", 1).otherwise(0))
@@ -9289,7 +8102,7 @@ def q_sprt_conversion_monitor(
     One corpus-scale day aggregate; the cumulative LLR is a window
     over the per-day frame (calendar-bounded, whitelisted like
     cusum_changepoint_daily) and the boundary test is arithmetic."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(
@@ -9393,11 +8206,11 @@ def q_fdr_bh_nation_tests(
     a special-function p-value oracle-checkable at all.  Shape: two
     aggregates (per-nation, global), then every BH step runs on the
     25-row frame (bounded window, whitelisted)."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = read_sf_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = read_sf_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = read_sf_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     pern = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -9512,7 +8325,7 @@ def q_brier_decomposition(
     join + doc aggregate as quality_classifier_linear; the
     decomposition adds one 20-bin aggregate and a scalar rollup —
     nothing beyond two hash aggregates at any scale."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang", T.word_tokens("text").alias("toks")
     ).where(F.size("toks") > 0)
@@ -9631,7 +8444,7 @@ def q_classifier_auc_rank(
     one hash aggregate, the midrank prefix sum runs over that small
     frame (whitelisted window), and the AUC is three scalar sums.  No
     global sort of rows, ever."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang", T.word_tokens("text").alias("toks")
     ).where(F.size("toks") > 0)

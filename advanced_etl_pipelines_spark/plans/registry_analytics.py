@@ -18,7 +18,8 @@ from pyspark.sql.window import Window
 from advanced_etl_pipelines_spark.functions import text as T
 from advanced_etl_pipelines_spark.operators import scale as S
 from advanced_etl_pipelines_spark.plans import oracle_replays
-from advanced_etl_pipelines_spark.plans.registry import _t, query, r2, r4
+from advanced_etl_pipelines_spark.plans.registry import query, r2, r4, sql_query
+from advanced_etl_pipelines_spark.sources.readers import read_sf_table
 from advanced_etl_pipelines_spark.operators.caching import (
     tracked_persist,
 )
@@ -48,7 +49,7 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (last(ignorenulls) over an unbounded-preceding frame shifted one row
     back) — no self-join, one shuffle on user_id; purchases with no
     prior touch fall to '(direct)'."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.asc("ts"), F.asc("event_id"))
@@ -95,7 +96,7 @@ def q_ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-aware lambda), normalize by the geometric-series sum — no
     self-join, no iteration, one shuffle for the daily rollup and the
     window reuses it (same key prefix)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("d")
     ).agg(F.sum("value").alias("rev"))
@@ -122,7 +123,7 @@ def q_ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "rolling_7d_active_users",
     """
     WITH du AS (
@@ -132,30 +133,11 @@ def q_ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM days a JOIN du b ON b.d BETWEEN a.d - 6 AND a.d
     GROUP BY a.d
     """,
+    "Rolling 7-day distinct active users per day — the WAU curve.",
 )
-def q_rolling_7d_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 7-day distinct active users per day — the WAU curve.
-    COUNT(DISTINCT) over a sliding frame has no direct window form, so:
-    pre-reduce to distinct (day, user) pairs (the only big shuffle),
-    broadcast the tiny day spine, range-join pairs into each trailing
-    window, count distinct per day.  The pre-reduction means the join
-    fans out days×7 pairs, not raw events."""
-    ev = _t(spark, sf_dir, "events")
-    du = ev.select(F.to_date("ts").alias("d"), "user_id").distinct()
-    days = du.select("d").distinct()
-    b, a = du.alias("b"), F.broadcast(days.alias("a"))
-    return (
-        b.join(
-            a,
-            (F.col("b.d") <= F.col("a.d"))
-            & (F.col("b.d") >= F.date_sub(F.col("a.d"), 6)),
-        )
-        .groupBy(F.col("a.d").alias("d"))
-        .agg(F.count_distinct("b.user_id").alias("active_users_7d"))
-    )
 
 
-@query(
+sql_query(
     "entropy_event_types",
     """
     WITH c AS (
@@ -172,27 +154,9 @@ def q_rolling_7d_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + MAX(ent), 4) AS max_entropy
     FROM e
     """,
+    "Shannon entropy of each user's event-type mix (behavioral diversity "
+    "score), rolled up to corpus stats.",
 )
-def q_entropy_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon entropy of each user's event-type mix (behavioral
-    diversity score), rolled up to corpus stats.  Two cheap aggregates:
-    (user,type) counts, then a per-user window normalization feeding the
-    entropy sum — partitioning reused across both (one shuffle)."""
-    ev = _t(spark, sf_dir, "events")
-    c = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    wu = Window.partitionBy("user_id")
-    p = F.col("n") / F.sum("n").over(wu)
-    ent = c.select("user_id", (-p * F.log(p)).alias("term")).groupBy(
-        "user_id"
-    ).agg(F.sum("term").alias("ent"))
-    return ent.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        r4(F.avg("ent")).alias("avg_entropy"),
-        r4(F.min("ent")).alias("min_entropy"),
-        r4(F.max("ent")).alias("max_entropy"),
-    )
 
 
 @query(
@@ -223,7 +187,7 @@ def q_anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolated percentiles (breakdown-point-0.5 robust, unlike
     mean±3σ); the per-type statistics are tiny and broadcast back, so
     the fact table is scanned twice but never shuffled."""
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     med = ev.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.5)).alias("med")
     )
@@ -273,7 +237,7 @@ def q_winsorized_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag — the tail-robust KPI variant.  Exact percentiles per group are
     3 rows: broadcast back over the fact scan; clip is pure arithmetic
     in codegen."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     q = li.groupBy("l_returnflag").agg(
         F.percentile("l_extendedprice", F.lit(0.05)).alias("p05"),
         F.percentile("l_extendedprice", F.lit(0.95)).alias("p95"),
@@ -335,7 +299,7 @@ def q_heavy_hitters_cumshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative shares diverge (caught by the sf1 answer gate); at the
     rounded key, ties fall through to the deterministic l_partkey
     tiebreak on both engines."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     s = li.groupBy("l_partkey").agg(
         F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
             "rev"
@@ -399,7 +363,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative to the corpus and broadcast into the scoring join — the
     token stream shuffles once (on token) for DF, once (lang,token) for
     scoring, then a 5-row-per-lang window top-k."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang", F.explode(T.word_tokens("text")).alias("token")
     )
@@ -496,7 +460,7 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates — the only distributed-bootstrap formulation that works
     at 100 TB (resampling by materializing replicas would be 20x the
     I/O; this is 40 extra codegen aggregates on one pass)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     key = (F.col("l_orderkey") * 10 + F.col("l_linenumber")) % F.lit(
         2147483648
     )
@@ -534,7 +498,7 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "heatmap_2d_bins",
     """
     WITH b AS (
@@ -548,19 +512,13 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS cnt
     FROM lineitem, b GROUP BY 1, 2
     """,
+    "2-D density binning (quantity x price, 20x20) — the engine's answer to "
+    "the reference's row-capped scatter chart (S13 samples 2,000 rows \"for "
+    "performance\"; this aggregates every row into 400 cells in o",
 )
-def q_heatmap_2d_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-D density binning (quantity x price, 20x20) — the engine's
-    answer to the reference's row-capped scatter chart (S13 samples
-    2,000 rows "for performance"; this aggregates every row into 400
-    cells in one codegen pass, scale-invariant)."""
-    from advanced_etl_pipelines_spark.operators.relational import histogram2d
-
-    li = _t(spark, sf_dir, "lineitem")
-    return histogram2d(li, "l_quantity", "l_extendedprice", 20, 20)
 
 
-@query(
+sql_query(
     "grouping_id_report",
     """
     SELECT COALESCE(l_returnflag, '(all)') AS returnflag,
@@ -572,25 +530,10 @@ def q_heatmap_2d_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
+    "CUBE with GROUPING_ID: the bitmask distinguishes a subtotal NULL from a "
+    "NULL data value — without it, rollup/cube outputs are ambiguous the "
+    "moment a grouping column is nullable.",
 )
-def q_grouping_id_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE with GROUPING_ID: the bitmask distinguishes a subtotal NULL
-    from a NULL data value — without it, rollup/cube outputs are
-    ambiguous the moment a grouping column is nullable.  Single
-    Expand+HashAggregate pass like the plain cube; COALESCE renders
-    subtotal rows with an explicit '(all)' label."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.grouping_id().alias("gid"),
-        F.count(F.lit(1)).alias("cnt"),
-        r2(F.sum("l_extendedprice")).alias("sum_price"),
-    ).select(
-        F.coalesce("l_returnflag", F.lit("(all)")).alias("returnflag"),
-        F.coalesce("l_linestatus", F.lit("(all)")).alias("linestatus"),
-        "gid",
-        "cnt",
-        "sum_price",
-    )
 
 
 @query(
@@ -647,7 +590,7 @@ def q_ols2_fit_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     equations); scoring = second pass with the coefficient row broadcast
     back, emitting RMSE/R².  Both passes are plain codegen aggregates, so
     the "training" scales exactly like any other groupBy at 100 TB."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     x1, x2, y = F.col("l_quantity"), F.col("l_discount"), F.col("l_extendedprice")
     m = li.agg(
         F.count(F.lit(1)).alias("n"),
@@ -699,7 +642,7 @@ def q_ols2_fit_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "tree_score_confusion",
     """
     WITH scored AS (
@@ -723,42 +666,12 @@ def q_ols2_fit_score(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS recall_
     FROM scored
     """,
+    "Decision-tree model serving as native expressions: a (fixed, "
+    "pre-trained) depth-2 tree compiles to nested CASE WHEN — the "
+    "operator-fusion way to run tree inference inside the scan, in "
+    "whole-stage codegen, with the confusion matrix and precision/recall "
+    "aggregated in the same pass.",
 )
-def q_tree_score_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decision-tree model serving as native expressions: a (fixed,
-    pre-trained) depth-2 tree compiles to nested CASE WHEN — the
-    operator-fusion way to run tree inference inside the scan, in
-    whole-stage codegen, with the confusion matrix and precision/recall
-    aggregated in the same pass.  A real forest compiles the same way
-    (sum of per-tree CASEs); no model server round-trip, no Python."""
-    ev = _t(spark, sf_dir, "events")
-    actual = F.col("event_type") == "purchase"
-    pred = (
-        F.when(F.col("value").isNull(), F.lit(False))
-        .when(F.col("value") > 75.0, F.lit(True))
-        .when(
-            (F.col("value") > 40.0) & (F.hour("ts") >= 18), F.lit(True)
-        )
-        .otherwise(F.lit(False))
-    )
-    s = ev.select(actual.alias("actual"), pred.alias("pred"))
-    b = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
-    tp = b(F.col("actual") & F.col("pred"))
-    fp = b(~F.col("actual") & F.col("pred"))
-    fn_ = b(F.col("actual") & ~F.col("pred"))
-    tn = b(~F.col("actual") & ~F.col("pred"))
-    return s.agg(
-        tp.alias("tp"),
-        fp.alias("fp"),
-        fn_.alias("fn"),
-        tn.alias("tn"),
-        r4(
-            tp * 1.0 / F.greatest(b(F.col("pred")), F.lit(1))
-        ).alias("precision_"),
-        r4(
-            tp * 1.0 / F.greatest(b(F.col("actual")), F.lit(1))
-        ).alias("recall_"),
-    )
 
 
 @query(
@@ -820,7 +733,7 @@ def q_nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame.  Unseen-in-class tokens get the +1 floor via the
     left join's COALESCE — semantics identical on both engines, so the
     whole classifier is oracle-checked."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     n_docs_total = docs.count()
     # tokenize ONCE: the token stream feeds the vocab build, the scoring
     # stream AND the per-class counts — persisting the pre-explode array
@@ -933,7 +846,7 @@ def q_pca_embedding_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         pca_project,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     fit = pca_fit(emb, "embedding", k=2)
     proj = pca_project(
         emb, "embedding", "vec_id", fit["mean"], fit["components"]
@@ -968,7 +881,7 @@ def q_kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing row-scale ever reaches the driver."""
     from advanced_etl_pipelines_spark.operators.linalg import kmeans_lloyd
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     _, assign = kmeans_lloyd(emb, "embedding", "vec_id", k=8, iters=3)
     labeled = assign.join(
         emb.select(F.col("vec_id").alias("id"), "label"), "id"
@@ -1038,7 +951,7 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity test in tests/test_graph.py stays as the independent pin."""
     from advanced_etl_pipelines_spark.operators.graph import pagerank
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = read_sf_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
     edges = a.join(b, "l_orderkey").where(
         F.col("a.l_partkey") != F.col("b.l_partkey")
@@ -1084,7 +997,7 @@ def q_recursive_calendar_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     its days with sequence() — same spine, an order of magnitude fewer
     sequential stages.  That depth-vs-work trade is the general recipe
     for recursive CTEs on this engine."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     ev.createOrReplaceTempView("__rcg_events")
     return spark.sql(
         """
@@ -1145,7 +1058,7 @@ def q_zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab aggregate, an exact two-level top-k (``top_k_global`` — ranks
     of survivors equal their global ranks, so ln(rank) is exact), then a
     closed-form simple regression — all single-pass aggregates."""
-    toks = _t(spark, sf_dir, "documents").select(
+    toks = read_sf_table(spark, sf_dir, "documents").select(
         F.explode(T.word_tokens("text")).alias("token")
     )
     v = S.top_k_global(
@@ -1170,7 +1083,7 @@ def q_zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "drift_psi_value",
     """
     WITH tagged AS (
@@ -1200,52 +1113,11 @@ def q_zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_buckets
     FROM p
     """,
+    "Population Stability Index between the first and second half of the "
+    "event window (10 equal-width buckets over the shared range, +0.5 "
+    "Laplace smoothing so empty buckets stay finite) — THE standard "
+    "feature-drift alarm for a deployed model (psi > 0.2 = investigate).",
 )
-def q_drift_psi_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index between the first and second half of
-    the event window (10 equal-width buckets over the shared range,
-    +0.5 Laplace smoothing so empty buckets stay finite) — THE standard
-    feature-drift alarm for a deployed model (psi > 0.2 = investigate).
-    One scan builds both distributions side by side (conditional
-    aggregates), so drift monitoring costs a single pass however wide
-    the table."""
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    tagged = ev.select(
-        "value", (F.to_date("ts") >= F.lit("2024-01-16")).alias("recent")
-    )
-    b = tagged.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-    wb = tagged.crossJoin(F.broadcast(b))
-    # degenerate-range guard (ADVICE.md): constant column -> bucket 0,
-    # not an all-NULL bucket from the zero-width divide
-    bucket = F.when(
-        F.col("hi") > F.col("lo"),
-        F.least(
-            F.floor(
-                (F.col("value") - F.col("lo"))
-                / ((F.col("hi") - F.col("lo")) / 10.0)
-            ).cast("int"),
-            F.lit(9),
-        ),
-    ).otherwise(F.lit(0))
-    dist = wb.groupBy(bucket.alias("bucket")).agg(
-        F.sum(F.when(~F.col("recent"), 1).otherwise(0)).alias("n_ref"),
-        F.sum(F.when(F.col("recent"), 1).otherwise(0)).alias("n_cur"),
-    )
-    tot = dist.agg(
-        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
-    )
-    p = dist.crossJoin(F.broadcast(tot)).select(
-        ((F.col("n_ref") + 0.5) / (F.col("t_ref") + 5.0)).alias("pr"),
-        ((F.col("n_cur") + 0.5) / (F.col("t_cur") + 5.0)).alias("pc"),
-    )
-    return p.agg(
-        F.round(
-            F.lit(1e-9)
-            + F.sum((F.col("pc") - F.col("pr")) * F.log(F.col("pc") / F.col("pr"))),
-            6,
-        ).alias("psi"),
-        F.count(F.lit(1)).alias("n_buckets"),
-    )
 
 
 @query(
@@ -1284,7 +1156,7 @@ def q_drift_ks_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition full-data sort exists in the plan.  The bucketed
     approximation for when even the distinct-value frame is huge is
     ``drift_ks_bucketed``."""
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     tagged = ev.select(
         "value", (F.to_date("ts") >= F.lit("2024-01-16")).alias("recent")
     )
@@ -1349,7 +1221,7 @@ def q_drift_ks_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     variation (parity vs the exact form pinned in
     tests/test_registry_smoke.py); this is the form to reach for when
     even the distinct-value frame of ``drift_ks_value`` is corpus-scale."""
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     tagged = ev.select(
         "value", (F.to_date("ts") >= F.lit("2024-01-16")).alias("recent")
     )
@@ -1430,7 +1302,7 @@ def q_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``global_running_sums``' distributed prefix sum for the cumulative
     count — range-partitioned windows + broadcast offsets, no
     single-partition sort anywhere in the plan."""
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     scored = ev.select(
         "value", (F.col("event_type") == "purchase").alias("actual")
     )
@@ -1501,7 +1373,7 @@ def q_ab_test_zstat(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-test between arms.  Everything is two aggregates; an A/A test on
     this data should hover near z=0 — the engine-level sanity check
     every experimentation platform runs before trusting its bucketing."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     in_a = (
         (F.col("user_id") % F.lit(2147483648)) * F.lit(2654435761)
         % F.lit(4294967296)
@@ -1592,7 +1464,7 @@ def q_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     set stays finite identically on both engines.  The windows order a
     frame of distinct durations (≤ horizon days), never raw events, so
     the single-partition sort is bounded regardless of corpus size."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     wp = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     p = (
         ev.where(F.col("event_type") == "purchase")
@@ -1706,7 +1578,7 @@ def q_community_label_propagation(
     )
     from advanced_etl_pipelines_spark.operators.scale import top_k_global
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = read_sf_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
     edges = (
         a.join(b, "l_orderkey")
@@ -1729,7 +1601,7 @@ def q_community_label_propagation(
     ).select(F.col("label").cast("bigint").alias("label"), "size")
 
 
-@query(
+sql_query(
     "theilsen_slope_by_nation",
     """
     WITH m AS (
@@ -1757,76 +1629,15 @@ def q_community_label_propagation(
     FROM ts JOIN ols ON ts.n_name = ols.n_name
     ORDER BY ts.n_name
     """,
+    "Theil–Sen robust trend estimator (Theil 1950 / Sen 1968): per nation, "
+    "the MEDIAN of all pairwise slopes between monthly revenue points — the "
+    "breakdown-resistant complement of the OLS trend (trend_regression_daily "
+    "/ regr_slope_by_nation), reported side by side with the OLS slope so "
+    "outlier months are visible as the gap between the two.",
 )
-def q_theilsen_slope_by_nation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Theil–Sen robust trend estimator (Theil 1950 / Sen 1968): per
-    nation, the MEDIAN of all pairwise slopes between monthly revenue
-    points — the breakdown-resistant complement of the OLS trend
-    (trend_regression_daily / regr_slope_by_nation), reported side by
-    side with the OLS slope so outlier months are visible as the gap
-    between the two.
-
-    Scale shape: the pair explode is CALENDAR-squared, not data-
-    squared — the monthly rollup first reduces the fact table to
-    (nation x month) rows (one hash aggregate over the join), and only
-    that bounded frame self-joins (~84 months -> ~3.5k pairs per key,
-    forever, regardless of fact-table size).  The exact per-key median
-    runs on those bounded groups.  This is the honest way to run an
-    O(n^2) estimator at 100 TB: collapse to the estimator's true
-    support (the calendar) before the quadratic step."""
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_totalprice", "o_orderdate"
-    )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    monthly = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(
-            "n_name",
-            (
-                (F.year("o_orderdate") - F.lit(1992)) * 12
-                + F.month("o_orderdate")
-            ).alias("mi"),
-        )
-        .agg(F.sum("o_totalprice").alias("rev"))
-    )
-    a = monthly.alias("a")
-    b = monthly.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.n_name") == F.col("b.n_name"))
-            & (F.col("a.mi") < F.col("b.mi")),
-        )
-        .select(
-            F.col("a.n_name").alias("n_name"),
-            (
-                (F.col("b.rev") - F.col("a.rev"))
-                / (F.col("b.mi") - F.col("a.mi")).cast("double")
-            ).alias("slope"),
-        )
-    )
-    ts = pairs.groupBy("n_name").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        r4(F.expr("percentile(slope, 0.5)")).alias("theil_sen_slope"),
-    )
-    ols = monthly.groupBy("n_name").agg(
-        r4(
-            F.covar_pop("rev", F.col("mi").cast("double"))
-            / F.var_pop(F.col("mi").cast("double"))
-        ).alias("ols_slope")
-    )
-    return (
-        ts.join(ols, "n_name")
-        .select("n_name", "n_pairs", "theil_sen_slope", "ols_slope")
-        .orderBy("n_name")
-    )
 
 
-@query(
+sql_query(
     "pareto_frontier_parts",
     """
     WITH cand AS (
@@ -1845,57 +1656,14 @@ def q_theilsen_slope_by_nation(
     GROUP BY fr.size, fr.mp
     ORDER BY p_size
     """,
+    "Skyline / Pareto-frontier query (Borzsony, Kossmann & Stocker, "
+    "ICDE'01): the parts not dominated in (MINIMIZE retail price, MAXIMIZE "
+    "size) — no other part is at-least-as-good on both axes and strictly "
+    "better on one.",
 )
-def q_pareto_frontier_parts(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Skyline / Pareto-frontier query (Borzsony, Kossmann & Stocker,
-    ICDE'01): the parts not dominated in (MINIMIZE retail price,
-    MAXIMIZE size) — no other part is at-least-as-good on both axes
-    and strictly better on one.  The classic multi-criteria OLAP
-    operator the reference family lacks entirely.
-
-    Scale shape — the bounded-domain skyline reduction: dominance only
-    ever needs the cheapest part PER SIZE, and size is a bounded
-    attribute domain (50 distinct values in TPC-H, and any real
-    catalog's size/quality axis is similarly enumerable).  So the
-    data-scale work is ONE hash aggregate (min price per size); the
-    quadratic dominance test runs on that <=|domain| candidate frame
-    via a broadcast self-anti-join (50x50, constant forever); winners
-    broadcast-join back to collect the tied parts at each frontier
-    point.  An unbounded second axis would instead use the
-    sort-by-one-axis running-min formulation over range partitions —
-    this query pins the domain-bounded form."""
-    part = _t(spark, sf_dir, "part").select("p_size", "p_retailprice")
-    cand = part.groupBy(F.col("p_size").alias("size")).agg(
-        F.min("p_retailprice").alias("mp")
-    )
-    dom = cand.select(
-        F.col("size").alias("bs"), F.col("mp").alias("bmp")
-    )
-    frontier = cand.join(
-        F.broadcast(dom),
-        (F.col("bs") > F.col("size")) & (F.col("bmp") <= F.col("mp")),
-        "left_anti",
-    )
-    return (
-        part.join(
-            F.broadcast(frontier),
-            (part.p_size == frontier.size)
-            & (part.p_retailprice == frontier.mp),
-        )
-        .groupBy("size", "mp")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_parts"))
-        .select(
-            F.col("size").cast("int").alias("p_size"),
-            r2(F.col("mp")).alias("frontier_price"),
-            "n_parts",
-        )
-        .orderBy("p_size")
-    )
 
 
-@query(
+sql_query(
     "lateral_top3_orders_per_nation",
     """
     SELECT n.n_name, t.o_orderkey, t.o_totalprice
@@ -1907,38 +1675,15 @@ def q_pareto_frontier_parts(
       ORDER BY o.o_totalprice DESC, o.o_orderkey ASC LIMIT 3) t
     ORDER BY n.n_name ASC, t.o_totalprice DESC, t.o_orderkey ASC
     """,
+    "LATERAL correlated subquery (SQL:1999; Spark 4 supports it natively): "
+    "for each nation, the subquery re-executes with that nation's key in "
+    "scope — top-3 orders by value per nation, written the declarative way "
+    "instead of the window-rank idiom (window_topk_per_group is the API "
+    "twin; this pins the SQL surface).",
 )
-def q_lateral_top3_orders_per_nation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """LATERAL correlated subquery (SQL:1999; Spark 4 supports it
-    natively): for each nation, the subquery re-executes with that
-    nation's key in scope — top-3 orders by value per nation, written
-    the declarative way instead of the window-rank idiom
-    (window_topk_per_group is the API twin; this pins the SQL
-    surface).  Catalyst DECORRELATES the lateral into a ranked join —
-    the plan is the same shuffle-on-key + per-group limit the window
-    form produces, which is exactly the point: the correlated
-    re-execution semantics cost nothing extra at scale.  Identical
-    SQL text runs on both engines."""
-    for t in ("nation", "customer", "orders"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"__lat_{t}")
-    return spark.sql(
-        """
-        SELECT n.n_name, t.o_orderkey, t.o_totalprice
-        FROM __lat_nation n,
-        LATERAL (
-          SELECT o.o_orderkey, o.o_totalprice
-          FROM __lat_orders o
-          JOIN __lat_customer c ON o.o_custkey = c.c_custkey
-          WHERE c.c_nationkey = n.n_nationkey
-          ORDER BY o.o_totalprice DESC, o.o_orderkey ASC LIMIT 3) t
-        ORDER BY n.n_name ASC, t.o_totalprice DESC, t.o_orderkey ASC
-        """
-    )
 
 
-@query(
+sql_query(
     "mann_kendall_trend",
     """
     WITH m AS (
@@ -1971,85 +1716,13 @@ def q_lateral_top3_orders_per_nation(
     FROM s JOIN nm ON s.n_name = nm.n_name
     ORDER BY s.n_name
     """,
+    "Mann-Kendall monotonic-trend test (Mann 1945; Kendall 1975) on the "
+    "monthly revenue series per nation: S = sum of pairwise signs, tau = S / "
+    "n_pairs, and the continuity-corrected normal statistic z = (S -/+ "
+    "1)/sqrt(n(n-1)(2n+5)/18) — the NONPARAMETRIC trend detector that pairs "
+    "with theilsen_slope_by_nation (same pair frame: MK answers IS there a "
+    "monotone trend, Theil-Sen answers how steep).",
 )
-def q_mann_kendall_trend(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Mann-Kendall monotonic-trend test (Mann 1945; Kendall 1975) on
-    the monthly revenue series per nation: S = sum of pairwise signs,
-    tau = S / n_pairs, and the continuity-corrected normal statistic
-    z = (S -/+ 1)/sqrt(n(n-1)(2n+5)/18) — the NONPARAMETRIC trend
-    detector that pairs with theilsen_slope_by_nation (same pair
-    frame: MK answers IS there a monotone trend, Theil-Sen answers
-    how steep).  Sign counts are exact integers, so everything before
-    the final two rounded ratios is integer arithmetic — no float
-    drift anywhere in the statistic.
-
-    Same bounded-pair scale shape as Theil-Sen: the monthly rollup
-    collapses the fact table first; the quadratic step runs on
-    calendar-bounded groups (~84 months per key, forever).  The
-    no-ties variance is exact here because monthly revenue sums never
-    tie in practice; a tie-corrected variance subtracts the
-    tie-group term and drops in without changing the plan."""
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_totalprice", "o_orderdate"
-    )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    monthly = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(
-            "n_name",
-            (
-                (F.year("o_orderdate") - F.lit(1992)) * 12
-                + F.month("o_orderdate")
-            ).alias("mi"),
-        )
-        .agg(F.sum("o_totalprice").alias("rev"))
-    )
-    a, b = monthly.alias("a"), monthly.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.n_name") == F.col("b.n_name"))
-        & (F.col("a.mi") < F.col("b.mi")),
-    ).select(
-        F.col("a.n_name").alias("n_name"),
-        F.when(F.col("b.rev") > F.col("a.rev"), 1)
-        .when(F.col("b.rev") < F.col("a.rev"), -1)
-        .otherwise(0)
-        .alias("sgn"),
-    )
-    s = pairs.groupBy("n_name").agg(
-        F.sum("sgn").alias("s"), F.count(F.lit(1)).alias("n_pairs")
-    )
-    nm = monthly.groupBy("n_name").agg(F.count(F.lit(1)).alias("n"))
-    corr_s = (
-        F.when(F.col("s") > 0, F.col("s") - 1)
-        .when(F.col("s") < 0, F.col("s") + 1)
-        .otherwise(0)
-    )
-    return (
-        s.join(nm, "n_name")
-        .select(
-            "n_name",
-            F.col("n").cast("bigint").alias("n_months"),
-            F.col("s").cast("bigint").alias("kendall_s"),
-            r4(F.col("s") * 1.0 / F.col("n_pairs")).alias(
-                "kendall_tau"
-            ),
-            r4(
-                corr_s
-                / F.sqrt(
-                    F.col("n")
-                    * (F.col("n") - 1.0)
-                    * (2 * F.col("n") + 5.0)
-                    / 18.0
-                )
-            ).alias("mk_z"),
-        )
-        .orderBy("n_name")
-    )
 
 
 @query(
@@ -2104,10 +1777,10 @@ def q_conformal_interval_coverage(
     boundary row."""
     from advanced_etl_pipelines_spark.operators.sampling import unit_hash
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_sf_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice"
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    part = read_sf_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     j = li.join(part, li.l_partkey == part.p_partkey).select(
         "p_brand",
         F.col("l_extendedprice").alias("y"),
@@ -2198,7 +1871,7 @@ def q_periodogram_fixed_freqs(
     units (revenue² scale) with 4-decimal rounding; cos/sin ULP
     differences between engines' libm are ~1e-16 relative and vanish
     under it."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_sf_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.datediff("o_orderdate", F.lit("1992-01-01")).alias("t")
     ).agg(F.sum("o_totalprice").alias("x"))
@@ -2237,7 +1910,7 @@ def q_periodogram_fixed_freqs(
     ).orderBy("period")
 
 
-@query(
+sql_query(
     "price_elasticity_loglog",
     """
     WITH pts AS (
@@ -2252,46 +1925,11 @@ def q_periodogram_fixed_freqs(
            ROUND(1e-9 + REGR_R2(lq, lp), 4) AS r2
     FROM pts GROUP BY p_brand ORDER BY p_brand
     """,
+    "Own-price demand elasticity by the log-log regression (the econometric "
+    "workhorse: in ln q = a + b ln p, the slope IS the elasticity — percent "
+    "quantity change per percent price change), fit per brand over order "
+    "lines with unit price = extended/qty.",
 )
-def q_price_elasticity_loglog(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Own-price demand elasticity by the log-log regression (the
-    econometric workhorse: in ln q = a + b ln p, the slope IS the
-    elasticity — percent quantity change per percent price change),
-    fit per brand over order lines with unit price = extended/qty.
-    Reported with R² so a near-zero fit (as expected on TPC-H's
-    price-independent quantities — another pinned negative control)
-    can't be mistaken for a real elasticity.
-
-    One scan + one hash aggregate per brand: REGR_SLOPE/R² are
-    single-pass moment aggregates (Σx, Σy, Σxy, Σx², Σy²), the same
-    shape in both engines — regression at 100 TB costs exactly one
-    groupBy."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 0)
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    pts = li.join(part, li.l_partkey == part.p_partkey).select(
-        "p_brand",
-        F.log(F.col("l_extendedprice") / F.col("l_quantity")).alias(
-            "lp"
-        ),
-        F.log("l_quantity").alias("lq"),
-    )
-    sl = F.covar_pop("lq", "lp") / F.var_pop("lp")
-    r2v = (
-        F.covar_pop("lq", "lp")
-        * F.covar_pop("lq", "lp")
-        / (F.var_pop("lp") * F.var_pop("lq"))
-    )
-    return (
-        pts.groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-            r4(sl).alias("elasticity"),
-            r4(r2v).alias("r2"),
-        )
-        .orderBy("p_brand")
-    )
 
 
 @query(
@@ -2328,8 +1966,8 @@ def q_newsvendor_stock_levels(
     interpolated quantiles per brand over calendar-bounded groups —
     the same (n-1)p convention pinned across both engines by the
     Huber/Theil-Sen medians."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = read_sf_table(spark, sf_dir, "lineitem")
+    part = read_sf_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     wk = (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy(
@@ -2420,7 +2058,7 @@ def q_personalized_pagerank_recs(
     from advanced_etl_pipelines_spark.operators.graph import pagerank
     from advanced_etl_pipelines_spark.operators.scale import top_k_global
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = read_sf_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
     e = (
         a.join(b, "l_orderkey")
@@ -2492,7 +2130,7 @@ def q_forecast_backtest_daily(
     windows over the calendar-bounded daily frame (whitelisted, same
     class as cusum/sprt), first 7 warm-up days excluded on both
     engines."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_sf_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.sum("o_totalprice").alias("x")
     )

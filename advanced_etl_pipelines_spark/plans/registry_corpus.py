@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 from advanced_etl_pipelines_spark.functions import text as T
 from advanced_etl_pipelines_spark.operators import sampling as SA
 from advanced_etl_pipelines_spark.plans import oracle_replays
-from advanced_etl_pipelines_spark.plans.registry import _t, query, r4
+from advanced_etl_pipelines_spark.plans.registry import query, r4, sql_query
+from advanced_etl_pipelines_spark.sources.readers import read_sf_table
 from advanced_etl_pipelines_spark.operators.caching import (
     tracked_persist,
 )
@@ -33,7 +34,7 @@ _TOKENS_SQL = (
 )
 
 
-@query(
+sql_query(
     "corpus_source_stats",
     """
     SELECT source,
@@ -45,23 +46,9 @@ _TOKENS_SQL = (
     FROM documents
     GROUP BY source
     """,
+    "Per-source corpus audit: volume, average size, language spread, and "
+    "exact-duplicate pressure.",
 )
-def q_corpus_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source corpus audit: volume, average size, language spread,
-    and exact-duplicate pressure.  COUNT(DISTINCT text) at 100 TB should
-    hash the text first (digest-shuffle, operators/dedup.py) so the
-    exchange carries 8-byte keys, not documents — same trick as
-    dedup_exact_stats; cardinalities are identical."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-        r4(F.avg("n_chars")).alias("avg_chars"),
-        F.countDistinct("lang").cast("bigint").alias("n_langs"),
-        (F.count(F.lit(1)) - F.countDistinct("text"))
-        .cast("bigint")
-        .alias("dup_docs"),
-    )
 
 
 @query(
@@ -81,7 +68,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     language (en → 10%) while keeping half of everything else.  The keep
     decision is per-row arithmetic on doc_id — zero shuffle, rerun-stable,
     engine-portable (hence oracle-checkable despite being 'random')."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     kept = SA.stratified_sample(
         docs, "lang", {"en": 0.1}, default_rate=0.5, key="doc_id"
     )
@@ -97,7 +84,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "sample_per_lang_topk",
     f"""
     WITH ranked AS (
@@ -108,13 +95,9 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents)
     SELECT doc_id, lang, sample_rank FROM ranked WHERE sample_rank <= 5
     """,
+    "Fixed-size per-group sample (5 docs per language) — the eval-set / "
+    "spot-check draw.",
 )
-def q_sample_per_lang_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-size per-group sample (5 docs per language) — the eval-set /
-    spot-check draw.  One shuffle on lang; rank-limit truncates
-    per-partition before the sort completes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    return SA.sample_per_group(docs, "lang", 5, "doc_id")
 
 
 @query(
@@ -144,7 +127,7 @@ def q_corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output doubles as a rejection-reason report.  All higher-order
     functions on a bind-once token array — one pass, no Python, no
     shuffle before the final tiny aggregate."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     toks = T.bind_once(
         T.word_tokens("text"),
         lambda t: F.struct(
@@ -180,7 +163,7 @@ def q_corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "multi_count_distinct",
     """
     SELECT event_type,
@@ -189,22 +172,13 @@ def q_corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days
     FROM events GROUP BY event_type
     """,
+    "Cardinality profile with two COUNT(DISTINCT) in one statement — Spark "
+    "plans this as an Expand (row replicated per distinct clause) feeding "
+    "one aggregation, not N scans.",
 )
-def q_multi_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cardinality profile with two COUNT(DISTINCT) in one statement —
-    Spark plans this as an Expand (row replicated per distinct clause)
-    feeding one aggregation, not N scans.  At 100 TB prefer
-    approx_distinct_events (HLL sketch, no Expand blowup) when ±2% is
-    acceptable."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").cast("bigint").alias("n_users"),
-        F.countDistinct(F.to_date("ts")).cast("bigint").alias("n_days"),
-    )
 
 
-@query(
+sql_query(
     "approx_distinct_events",
     """
     SELECT event_type,
@@ -213,41 +187,10 @@ def q_multi_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS within_6pct
     FROM events GROUP BY event_type
     """,
+    "HyperLogLog++ distinct counts per event_type — the scale path for "
+    "multi_count_distinct: constant memory per group, no Expand, sketches "
+    "merge associatively across 1000 executors.",
 )
-def q_approx_distinct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog++ distinct counts per event_type — the scale path for
-    multi_count_distinct: constant memory per group, no Expand, sketches
-    merge associatively across 1000 executors.  rsd=0.02; accuracy vs
-    the exact counts is pinned in tests/test_sampling.py AND by the
-    in-query tolerance flag (exact-twin pattern, round-3 VERDICT item
-    3): DuckDB recomputes the exact counts, and both HLL++ estimates
-    must land within 3·rsd = 6% of them — deterministic for fixed data
-    (fixed hash), so a sketch/merge regression hash-mismatches.  At
-    100 TB only the sketch side ships; the exact twin is the harness."""
-    ev = _t(spark, sf_dir, "events")
-    approx = ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.02).alias("__au"),
-        F.approx_count_distinct(F.to_date("ts"), rsd=0.02).alias("__ad"),
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("exact_users"),
-        F.count_distinct(F.to_date("ts")).alias("exact_days"),
-    )
-    return approx.join(exact, "event_type").select(
-        "event_type",
-        "exact_users",
-        "exact_days",
-        (
-            (
-                F.abs(F.col("__au") - F.col("exact_users"))
-                <= 0.06 * F.col("exact_users")
-            )
-            & (
-                F.abs(F.col("__ad") - F.col("exact_days"))
-                <= 0.06 * F.col("exact_days") + F.lit(1.0)
-            )
-        ).alias("within_6pct"),
-    )
 
 
 @query(
@@ -269,7 +212,7 @@ def q_vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the corpus — the property that keeps this viable at 100 TB."""
     from advanced_etl_pipelines_spark.functions.text import word_tokens
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     term = docs.select(
         "doc_id", F.explode(word_tokens("text")).alias("term")
     )
@@ -321,7 +264,7 @@ def q_split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible in the DuckDB oracle."""
     from advanced_etl_pipelines_spark.operators.dedup import normalize_text
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     u = SA.unit_hash("doc_id")
     split = (
         F.when(u < 0.8, F.lit("train"))
@@ -398,7 +341,7 @@ def q_mixture_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     budget = 1000
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     t = docs.select(
         "source",
         "doc_id",
@@ -468,7 +411,7 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_tokens,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     # tokenize once: the token-array frame feeds BOTH the unigram and
     # the bigram streams, and the unigram count table joins in twice
     # (w1/w2 sides) — persist both so neither recomputes per consumer
@@ -547,7 +490,7 @@ def q_decontaminate_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     contaminate themselves, so `contaminated` >= the eval-set size."""
     from advanced_etl_pipelines_spark.operators import decontamination as DC
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     bench = docs.where((F.col("doc_id") % 101) == 0)
     hits = DC.contaminated_ids(docs, "text", "doc_id", bench, "text", n=5)
     flagged = docs.join(
@@ -562,7 +505,7 @@ def q_decontaminate_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "sample_weighted_topk",
     """
     WITH pri AS (
@@ -578,22 +521,10 @@ def q_decontaminate_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS n_chars
     FROM ranked WHERE rn <= 20
     """,
+    "Weighted sampling without replacement (Efraimidis–Spirakis A-Res), "
+    "length-weighted: longer documents win proportionally more slots in the "
+    "per-language sample of 20.",
 )
-def q_sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted sampling without replacement (Efraimidis–Spirakis A-Res),
-    length-weighted: longer documents win proportionally more slots in
-    the per-language sample of 20.  The priority ln(u)/w is pure per-row
-    arithmetic on the portable Knuth hash — deterministic, re-runnable,
-    cross-engine — and the only shuffle is the per-group top-k window.
-    At 100 TB replace ROW_NUMBER with a size-k per-partition heap
-    (mapPartitions) + final merge if group cardinality is tiny."""
-    from advanced_etl_pipelines_spark.operators.sampling import (
-        weighted_sample_topk,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    out = weighted_sample_topk(docs, "lang", "doc_id", "n_chars", 20)
-    return out.select("lang", "doc_id", F.col("n_chars").cast("long"))
 
 
 @query(
@@ -623,7 +554,7 @@ def q_bpe_vocab_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_freq_table,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     words = word_freq_table(docs, "text")
     merges = bpe_learn(words, n_merges=12)
     return spark.createDataFrame(
@@ -659,7 +590,7 @@ def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_freq_table,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     # ONE corpus-scale tokenize pass (optimization round 10): the
     # (lang, word) count table is computed and persisted first, and the
     # trainer's (word, freq) table is DERIVED from it by summing over
@@ -727,7 +658,7 @@ def q_unigram_lm_fertility(
         unigram_viterbi_words,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     # ONE corpus-scale tokenize pass (same derivation as
     # bpe_fertility_by_lang): (lang, word) counts are persisted and the
     # (word, freq) trainer table is their per-word sum — identical
@@ -801,7 +732,7 @@ def q_unigram_em_refined(
         unigram_viterbi_words,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     # ONE corpus-scale tokenize pass (same derivation as
     # bpe_fertility_by_lang): per-(lang, word) counts are the persisted
     # corpus aggregate and the trainer's (word, freq) table is their
@@ -930,7 +861,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from advanced_etl_pipelines_spark.operators.graph import pagerank
     from advanced_etl_pipelines_spark.operators.scale import top_k_global
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_sf_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.filter(

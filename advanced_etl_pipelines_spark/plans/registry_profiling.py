@@ -10,12 +10,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from advanced_etl_pipelines_spark.plans.registry import _t, query, r2, r4
+from advanced_etl_pipelines_spark.plans.registry import query, r2, r4, sql_query
+from advanced_etl_pipelines_spark.sources.readers import read_sf_table
 
 
-@query(
+sql_query(
     "profile_lineitem_columns",
     """
     SELECT 'l_quantity' AS col,
@@ -45,35 +45,10 @@ from advanced_etl_pipelines_spark.plans.registry import _t, query, r2, r4
            ROUND(1e-9 + STDDEV_SAMP(l_extendedprice), 4)
     FROM lineitem
     """,
+    "ANALYZE-style numeric column profile (null count, NDV, range, moments) "
+    "for three lineitem columns in ONE scan — the per-column aggregates "
+    "compute side by side; only the distinct counts expand.",
 )
-def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANALYZE-style numeric column profile (null count, NDV, range,
-    moments) for three lineitem columns in ONE scan — the per-column
-    aggregates compute side by side; only the distinct counts expand.
-    At 100 TB swap COUNT(DISTINCT) for approx_count_distinct (HLL) —
-    same plan minus the Expand."""
-    li = _t(spark, sf_dir, "lineitem")
-
-    def prof(c: str) -> DataFrame:
-        return li.agg(
-            F.lit(c).alias("col"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count(c).cast("bigint").alias("n_nonnull"),
-            F.countDistinct(c).cast("bigint").alias("n_distinct"),
-            r4(F.min(c)).alias("min_v"),
-            r4(F.max(c)).alias("max_v"),
-            r4(F.avg(c)).alias("mean_v"),
-            r4(F.stddev_samp(c)).alias("std_v"),
-        ).select(
-            "col", "n_rows", "n_nonnull", "n_distinct",
-            "min_v", "max_v", "mean_v", "std_v",
-        )
-
-    return (
-        prof("l_quantity")
-        .unionByName(prof("l_discount"))
-        .unionByName(prof("l_extendedprice"))
-    )
 
 
 @query(
@@ -121,7 +96,7 @@ def q_window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_k_global,
     )
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_sf_table(spark, sf_dir, "orders")
     agg = orders.groupBy("o_custkey").agg(
         r2(F.sum("o_totalprice")).alias("spend")
     )
@@ -183,7 +158,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from that type's mean.  Two cascaded aggregates (daily counts →
     per-type moments) + a broadcast join-back; the fact is scanned
     once."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("d")
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -203,7 +178,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "pivot_multi_agg",
     """
     SELECT l_returnflag,
@@ -217,28 +192,9 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                  THEN l_extendedprice ELSE 0 END), 2) AS o_rev
     FROM lineitem GROUP BY l_returnflag
     """,
+    "Pivot with MULTIPLE aggregates per pivot value (count + revenue per "
+    "linestatus) — A2/A3 generalized.",
 )
-def q_pivot_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with MULTIPLE aggregates per pivot value (count + revenue
-    per linestatus) — A2/A3 generalized.  Explicit pivot values keep
-    the schema static (no distinct-scan job) exactly like the
-    reference-core pivots."""
-    li = _t(spark, sf_dir, "lineitem")
-    out = (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["F", "O"])
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("cnt"),
-            F.round(F.sum("l_extendedprice") + F.lit(1e-9), 2).alias("rev"),
-        )
-    )
-    return out.select(
-        "l_returnflag",
-        F.col("F_cnt").alias("f_cnt"),
-        F.col("F_rev").alias("f_rev"),
-        F.col("O_cnt").alias("o_cnt"),
-        F.col("O_rev").alias("o_rev"),
-    )
 
 
 @query(
@@ -269,7 +225,7 @@ def q_approx_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes them) plus rank-tolerance flags bracketing each t-digest
     estimate between the exact q∓1% and q±1% quantile values — the
     same construction kll_quantile_rollup uses."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_sf_table(spark, sf_dir, "lineitem")
     pcts = F.expr(
         "approx_percentile(l_extendedprice, array(0.5, 0.95, 0.99), 2000)"
     )
@@ -307,7 +263,7 @@ def q_approx_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "skew_key_profile",
     """
     WITH per_key AS (
@@ -320,23 +276,11 @@ def q_approx_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + MAX(cnt) / AVG(cnt), 4) AS skew_factor
     FROM per_key
     """,
+    "Join-key skew diagnostic: the distribution of rows-per-key for "
+    "lineitem.l_orderkey — the number you check BEFORE choosing a join "
+    "strategy at 100 TB (skew_factor >> 1 -> salt the key or rely on AQE "
+    "skew-join splitting).",
 )
-def q_skew_key_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnostic: the distribution of rows-per-key for
-    lineitem.l_orderkey — the number you check BEFORE choosing a join
-    strategy at 100 TB (skew_factor >> 1 -> salt the key or rely on AQE
-    skew-join splitting).  Two cascaded hash aggregates; the second input
-    is one row per key, so the heavy shuffle carries (key, count) pairs
-    only."""
-    li = _t(spark, sf_dir, "lineitem")
-    per_key = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("cnt"))
-    return per_key.agg(
-        F.count(F.lit(1)).alias("n_keys"),
-        F.max("cnt").alias("max_cnt"),
-        F.min("cnt").alias("min_cnt"),
-        r4(F.avg("cnt")).alias("avg_cnt"),
-        r4(F.max("cnt") / F.avg("cnt")).alias("skew_factor"),
-    )
 
 
 @query(
@@ -373,8 +317,8 @@ def q_dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on the key — the only shuffle, and at 100 TB it degenerates to
     a broadcast of the orders KEY column if that fits, else a shared
     sort-merge."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = read_sf_table(spark, sf_dir, "orders")
+    li = read_sf_table(spark, sf_dir, "lineitem")
 
     o_checks = orders.agg(
         (F.count(F.lit(1)) - F.countDistinct("o_orderkey")).alias("dup"),
@@ -419,7 +363,7 @@ def q_dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "reconcile_full_outer",
     """
     WITH agg AS (SELECT o_custkey, COUNT(*) AS n_orders
@@ -434,35 +378,14 @@ def q_dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
       CAST(SUM(COALESCE(n_orders, 0)) AS BIGINT) AS total_orders
     FROM customer FULL OUTER JOIN agg ON c_custkey = o_custkey
     """,
+    "Source-vs-target reconciliation via FULL OUTER join: customers with no "
+    "orders (dim_only), order keys with no customer row (fact_only), and the "
+    "matched overlap — the report every migration/backfill runs before "
+    "cutover.",
 )
-def q_reconcile_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source-vs-target reconciliation via FULL OUTER join: customers with
-    no orders (dim_only), order keys with no customer row (fact_only),
-    and the matched overlap — the report every migration/backfill runs
-    before cutover.  The fact side is pre-aggregated to one row per key
-    BEFORE the join, so the full-outer shuffle carries key+count, not
-    raw orders."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    agg = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-    j = cust.join(agg, cust.c_custkey == agg.o_custkey, "full_outer")
-    return j.agg(
-        F.sum(
-            (
-                F.col("c_custkey").isNotNull()
-                & F.col("o_custkey").isNotNull()
-            ).cast("long")
-        ).alias("matched"),
-        F.sum(F.col("o_custkey").isNull().cast("long")).alias("dim_only"),
-        F.sum(F.col("c_custkey").isNull().cast("long")).alias("fact_only"),
-        F.sum(F.coalesce(F.col("n_orders"), F.lit(0))).alias("total_orders"),
-    )
 
 
-@query(
+sql_query(
     "fuzzy_match_blocked",
     """
     WITH pairs AS (
@@ -479,41 +402,8 @@ def q_reconcile_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(1e-9 + AVG(d), 4) AS avg_distance
     FROM pairs GROUP BY nk
     """,
+    "Record linkage: blocked pairwise fuzzy matching.",
 )
-def q_fuzzy_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Record linkage: blocked pairwise fuzzy matching.  Blocking on
-    (nation, 17-char name prefix) keeps the candidate set near-linear —
-    the quadratic all-pairs join never materializes — then exact
-    Levenshtein scores each surviving pair (native `levenshtein`,
-    identical classic DP in Spark and DuckDB).  The standard
-    entity-resolution trade-off: a prefix block can only miss matches
-    that differ inside the prefix; tighter blocks = faster + lower
-    recall.  The prefix length is the scale dial: the round-3 sf1 run
-    caught the old 15-char prefix collapsing this name family to 15
-    blocks whose sizes grow WITH the data (pairs grew 100× for 10×
-    rows); at 17 chars block sizes are bounded (~10) at every sf, so
-    pair count grows linearly.  At 100 TB the block key becomes the
-    shuffle key — profile block sizes first with skew_key_profile."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_nationkey", "c_custkey", "c_name",
-        F.substring("c_name", 1, 17).alias("blk"),
-    )
-    a = cust.alias("a")
-    b = cust.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.c_nationkey") == F.col("b.c_nationkey"))
-        & (F.col("a.blk") == F.col("b.blk"))
-        & (F.col("a.c_custkey") < F.col("b.c_custkey")),
-    ).select(
-        F.col("a.c_nationkey").alias("nationkey"),
-        F.levenshtein(F.col("a.c_name"), F.col("b.c_name")).alias("d"),
-    )
-    return pairs.groupBy("nationkey").agg(
-        F.count(F.lit(1)).alias("n_candidate_pairs"),
-        F.sum((F.col("d") <= 2).cast("long")).alias("n_matches"),
-        r4(F.avg("d")).alias("avg_distance"),
-    )
 
 
 @query(
@@ -540,7 +430,7 @@ def q_reaggregate_daily_to_monthly(spark: SparkSession, sf_dir: str) -> DataFram
     carry (sum, count)).  This is how a 100 TB warehouse serves rollups:
     the fact is aggregated once into the finest grain, every coarser
     grain folds the one below it."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("d")
     ).agg(
@@ -562,7 +452,7 @@ def q_reaggregate_daily_to_monthly(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@query(
+sql_query(
     "hll_sketch_rollup",
     """
     SELECT event_type,
@@ -571,47 +461,10 @@ def q_reaggregate_daily_to_monthly(spark: SparkSession, sf_dir: str) -> DataFram
            TRUE AS within_5pct
     FROM events GROUP BY event_type
     """,
+    "Mergeable-sketch rollup: one HyperLogLog sketch of user_id per "
+    "(event_type, day), then per-type distinct-user estimates from UNIONING "
+    "the daily sketches — no rescan of the fact.",
 )
-def q_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable-sketch rollup: one HyperLogLog sketch of user_id per
-    (event_type, day), then per-type distinct-user estimates from
-    UNIONING the daily sketches — no rescan of the fact.  This is the
-    sketch twin of reaggregate_daily_to_monthly: approx_count_distinct
-    alone cannot be re-aggregated (estimates don't add), but the BINARY
-    SKETCH can, which is what lets a 100 TB warehouse keep per-partition
-    sketches and answer any coarser distinct-count from them.
-
-    Oracle-checked via the exact-twin pattern (round-3 VERDICT item 3,
-    previously rows-only): the output carries the EXACT per-type
-    distinct-user count (which DuckDB recomputes independently) plus a
-    sketch-vs-exact tolerance flag — Spark's DataSketches HLL at the
-    default lgK=12 has ~1.6% relative standard error, so the rolled-up
-    estimate landing within 5% of exact is a deterministic property of
-    the (fixed-hash) sketch on the given data; a rollup bug that merges
-    or estimates wrongly flips the flag and hash-mismatches.  The exact
-    count costs a second scan here; at 100 TB only the sketch side
-    ships (the exact twin is the correctness harness, not the prod
-    plan)."""
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(F.hll_sketch_agg("user_id").alias("sk"))
-    approx = daily.groupBy("event_type").agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_users"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("exact_users")
-    )
-    return approx.join(exact, "event_type").select(
-        "event_type",
-        "n_days",
-        "exact_users",
-        (
-            F.abs(F.col("approx_users") - F.col("exact_users"))
-            <= 0.05 * F.col("exact_users")
-        ).alias("within_5pct"),
-    )
 
 
 @query(
@@ -637,7 +490,7 @@ def q_trend_regression_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-moment aggregates, the same partial+final shape as avg, so they
     scale exactly like any other hash aggregate.  The metric every
     monitoring pipeline wants: is this series drifting, and how fast."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("d")
     ).agg(F.avg("value").alias("day_avg"))
@@ -687,7 +540,7 @@ def q_kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     check uses only the value bounds, not the estimate itself).  The
     exact twin costs a holistic percentile here; at 100 TB only the
     sketch side ships."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
         F.kll_sketch_agg_double("value", 400).alias("sk")
     )
@@ -734,7 +587,7 @@ def q_kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "theta_audience_overlap",
     """
     WITH d AS (SELECT DISTINCT event_type, user_id FROM events),
@@ -754,98 +607,10 @@ def q_kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ov JOIN tot ta ON ov.type_a = ta.event_type
             JOIN tot tb ON ov.type_b = tb.event_type
     """,
+    "Audience-overlap matrix via Theta sketches: one user_id sketch per "
+    "event type, then DISTINCT-SET ALGEBRA on the sketches — the "
+    "intersection/difference HLL fundamentally cannot do (HLL unions only).",
 )
-def q_theta_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audience-overlap matrix via Theta sketches: one user_id sketch
-    per event type, then DISTINCT-SET ALGEBRA on the sketches — the
-    intersection/difference HLL fundamentally cannot do (HLL unions
-    only).  |A∩B| per behavior pair is the funnel-overlap question
-    ("how many viewers also purchased") answered WITHOUT a self-join of
-    the fact: the exact form is a groupBy(user_id) + pairwise
-    co-occurrence explosion; here the fact is scanned once into 5
-    sketches and the 5×5 pair matrix is sketch math on the driver-sized
-    result.  Jaccard falls out as inter/union.
-
-    Oracle-checked via the exact-twin pattern (round-3 VERDICT item 3,
-    previously rows-only): the output carries EXACT overlap counts —
-    which DuckDB recomputes independently through the distinct
-    (type, user) self-join this sketch exists to avoid — plus one
-    tolerance flag asserting every theta estimate (n_a, n_b, n_both,
-    n_any) lands within 5% of its exact value (theta default lgK=12 →
-    <1% RSE; intersections degrade with low overlap, hence the wider
-    bound; +8 absolute slack keeps tiny intersections from flipping the
-    flag on quantization).  Deterministic for fixed data — theta hashing
-    is seeded, not random.  At 100 TB only the sketch side ships; the
-    exact self-join twin is the correctness harness."""
-    ev = _t(spark, sf_dir, "events")
-    per = ev.groupBy("event_type").agg(
-        F.theta_sketch_agg("user_id").alias("sk")
-    )
-    a, b = per.alias("a"), per.alias("b")
-    inter = F.theta_intersection(F.col("a.sk"), F.col("b.sk"))
-    union = F.theta_union(F.col("a.sk"), F.col("b.sk"))
-    est = F.theta_sketch_estimate
-    approx = (
-        a.crossJoin(b)
-        .where(F.col("a.event_type") < F.col("b.event_type"))
-        .select(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-            est(F.col("a.sk")).alias("__ea"),
-            est(F.col("b.sk")).alias("__eb"),
-            est(inter).alias("__eboth"),
-            est(union).alias("__eany"),
-        )
-    )
-    d = ev.select("event_type", "user_id").distinct()
-    tot = d.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    da, db = d.alias("da"), d.alias("db")
-    ov = (
-        da.join(
-            db,
-            (F.col("da.user_id") == F.col("db.user_id"))
-            & (F.col("da.event_type") < F.col("db.event_type")),
-        )
-        .groupBy(
-            F.col("da.event_type").alias("type_a"),
-            F.col("db.event_type").alias("type_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_both"))
-    )
-    exact = (
-        ov.join(
-            F.broadcast(tot.withColumnRenamed("event_type", "type_a"))
-            .withColumnRenamed("n", "n_a"),
-            "type_a",
-        )
-        .join(
-            F.broadcast(tot.withColumnRenamed("event_type", "type_b"))
-            .withColumnRenamed("n", "n_b"),
-            "type_b",
-        )
-        .withColumn("n_any", F.col("n_a") + F.col("n_b") - F.col("n_both"))
-    )
-
-    def close(e, x):
-        return F.abs(e - x) <= (0.05 * x + F.lit(8.0))
-
-    return exact.join(approx, ["type_a", "type_b"]).select(
-        "type_a",
-        "type_b",
-        "n_a",
-        "n_b",
-        "n_both",
-        "n_any",
-        r4(F.col("n_both") * 1.0 / F.col("n_any")).alias("jaccard"),
-        (
-            close(F.col("__ea"), F.col("n_a"))
-            & close(F.col("__eb"), F.col("n_b"))
-            & close(F.col("__eboth"), F.col("n_both"))
-            & close(F.col("__eany"), F.col("n_any"))
-        ).alias("within_5pct"),
-    )
 
 
 # Engine-portable polynomial string hash (the string twin of
@@ -928,7 +693,7 @@ def q_cms_frequency_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the daily tables are a few KB each regardless of row count —
     frequency monitoring without re-scanning history.  Output compares
     estimate vs exact (the CMS guarantee: over-estimate only)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     h = ev.select(
         F.to_date("ts").alias("d"),
         "event_type",

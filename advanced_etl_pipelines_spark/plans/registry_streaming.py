@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from advanced_etl_pipelines_spark.functions.features import epoch_seconds
-from advanced_etl_pipelines_spark.plans.registry import _t, query, r4
+from advanced_etl_pipelines_spark.plans.registry import query, r4, sql_query
+from advanced_etl_pipelines_spark.sources.readers import read_sf_table
 from advanced_etl_pipelines_spark.streaming.windows import windowed_event_stats
 
 
@@ -34,7 +35,7 @@ def q_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     string column (schema-on-read, no parse stage), bucketed aggregate.
     At scale, promote hot JSON fields to columns at ingest; this is the
     exploratory form."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         ev.select(
@@ -79,7 +80,7 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``streaming/stateful.py``; both shuffle once on user_id."""
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     ts_s = epoch_seconds("ts")
     gap = ts_s - F.lag(ts_s).over(w)
@@ -114,7 +115,7 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_windowed_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window stats — the batch twin of the
     Structured Streaming pipeline in ``streaming/windows.py``."""
-    out = windowed_event_stats(_t(spark, sf_dir, "events"))
+    out = windowed_event_stats(read_sf_table(spark, sf_dir, "events"))
     return out.select(
         "window_start",
         "window_end",
@@ -125,7 +126,7 @@ def q_stream_windowed_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@query(
+sql_query(
     "stream_dedup_replay",
     """
     WITH replay AS (
@@ -140,29 +141,11 @@ def q_stream_windowed_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame
            CAST(COUNT(*) - COUNT(DISTINCT event_id) AS BIGINT) AS n_dups
     FROM replay GROUP BY event_type
     """,
+    "At-least-once delivery suppression, batch twin: a deterministic 10% of "
+    "events are re-delivered (portable hash on event_id — the oracle "
+    "rebuilds the same replay), and the ingest must collapse them back to "
+    "one row per event_id.",
 )
-def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """At-least-once delivery suppression, batch twin: a deterministic
-    10% of events are re-delivered (portable hash on event_id — the
-    oracle rebuilds the same replay), and the ingest must collapse them
-    back to one row per event_id.  ``tests/test_streaming_joins.py``
-    pins that `streaming/windows.dedup_stream`
-    (dropDuplicatesWithinWatermark — bounded state, watermark-evicted)
-    running on the same replayed feed keeps exactly ``n_unique`` rows —
-    oracle verifies the semantics, the streaming test verifies the
-    streaming machinery preserves them (same loop-closing pattern as
-    stream_windowed_event_stats)."""
-    from advanced_etl_pipelines_spark.operators.sampling import unit_hash
-
-    ev = _t(spark, sf_dir, "events").select("event_id", "event_type")
-    replay = ev.unionAll(ev.where(unit_hash("event_id") < 0.1))
-    return replay.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_delivered"),
-        F.count_distinct("event_id").cast("bigint").alias("n_unique"),
-        (F.count(F.lit(1)) - F.count_distinct("event_id"))
-        .cast("bigint")
-        .alias("n_dups"),
-    )
 
 
 @query(
@@ -183,7 +166,7 @@ def q_variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-on-read form of the same query).  At 100 TB the parse
     happens once at ingest and lands in a variant COLUMN; every later
     query pays only the typed path read."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     v = F.parse_json(F.col("props"))
     return (
         ev.select(
@@ -233,7 +216,7 @@ def q_session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_window_stats,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     out = session_window_stats(ev, gap_seconds=1800)
     return out.select(
         "user_id",

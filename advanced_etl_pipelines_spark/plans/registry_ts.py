@@ -12,7 +12,8 @@ from pyspark.sql.window import Window
 
 from advanced_etl_pipelines_spark.functions.features import epoch_seconds
 from advanced_etl_pipelines_spark.operators import timeseries as TS
-from advanced_etl_pipelines_spark.plans.registry import _t, query, r4
+from advanced_etl_pipelines_spark.plans.registry import query, r4, sql_query
+from advanced_etl_pipelines_spark.sources.readers import read_sf_table
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -54,7 +55,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no built-in; ours is the union-tag + last_value(ignorenulls)
     window — one shuffle on user_id, no pair explosion
     (operators/timeseries.py::asof_join)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -76,7 +77,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "range_join_price_bands",
     """
     WITH bands AS (
@@ -90,33 +91,9 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON l_extendedprice >= lo AND l_extendedprice < hi
     GROUP BY band
     """,
+    "Range (band) join: fact values classified into [lo, hi) intervals from "
+    "a band dim.",
 )
-def q_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range (band) join: fact values classified into [lo, hi) intervals
-    from a band dim.  Broadcast nested-loop with 5 bands — see
-    operators/timeseries.py::band_join for the bucketed-equi-join scale
-    path when the band table itself is large."""
-    li = _t(spark, sf_dir, "lineitem")
-    bands = li.sparkSession.createDataFrame(
-        [
-            ("b0", 0.0, 20000.0),
-            ("b1", 20000.0, 40000.0),
-            ("b2", 40000.0, 60000.0),
-            ("b3", 60000.0, 80000.0),
-            ("b4", 80000.0, 1e9),
-        ],
-        "band string, lo double, hi double",
-    )
-    return (
-        TS.band_join(li, bands, "l_extendedprice", "lo", "hi")
-        .groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("l_extendedprice") + F.lit(1e-9), 2).alias(
-                "total_price"
-            ),
-        )
-    )
 
 
 @query(
@@ -144,7 +121,7 @@ def q_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL avg — what pandas ``resample`` gives and ``groupBy(window())``
     does not.  The spine is sequence()-generated per group (buckets ×
     groups rows, trivially small next to the fact)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     out = TS.resample_gapfill(
         ev,
         group="event_type",
@@ -163,7 +140,7 @@ def q_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "rolling_avg_24h",
     """
     SELECT event_id, user_id,
@@ -177,23 +154,12 @@ def q_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
            AS n_24h
     FROM events
     """,
+    "Trailing 24-hour per-user average — a RANGE window over epoch seconds "
+    "(two-pointer evaluation, O(n) per partition; no self-join).",
 )
-def q_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 24-hour per-user average — a RANGE window over epoch
-    seconds (two-pointer evaluation, O(n) per partition; no self-join).
-    Peers at an identical timestamp aggregate together on both engines
-    by RANGE-frame semantics."""
-    ev = _t(spark, sf_dir, "events")
-    w = TS.trailing_window(ev, "user_id", "ts", 24 * 3600)
-    return ev.select(
-        "event_id",
-        "user_id",
-        r4(F.avg("value").over(w)).alias("avg_24h"),
-        F.count(F.lit(1)).over(w).alias("n_24h"),
-    )
 
 
-@query(
+sql_query(
     "funnel_view_click_purchase",
     """
     WITH v AS (SELECT user_id, MIN(ts) AS t1 FROM events
@@ -208,38 +174,9 @@ def q_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
            (SELECT COUNT(*) FROM c) AS n_view_click,
            (SELECT COUNT(*) FROM p) AS n_view_click_purchase
     """,
+    "Ordered three-stage funnel: users who viewed, then clicked after the "
+    "first view, then purchased after that first click.",
 )
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered three-stage funnel: users who viewed, then clicked after
-    the first view, then purchased after that first click.  Cascaded
-    per-user MIN aggregates with broadcast join-backs — each stage's
-    frontier is one row per surviving user, so the fact table is scanned
-    exactly three times and everything else is dim-sized."""
-    ev = _t(spark, sf_dir, "events")
-    v = ev.where(F.col("event_type") == "view").groupBy("user_id").agg(
-        F.min("ts").alias("t1")
-    )
-    c = (
-        ev.where(F.col("event_type") == "click")
-        .join(F.broadcast(v), "user_id")
-        .where(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(F.broadcast(c), "user_id")
-        .where(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    return (
-        v.agg(F.count(F.lit(1)).alias("n_view"))
-        .crossJoin(c.agg(F.count(F.lit(1)).alias("n_view_click")))
-        .crossJoin(
-            p.agg(F.count(F.lit(1)).alias("n_view_click_purchase"))
-        )
-    )
 
 
 @query(
@@ -260,7 +197,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily cohort retention (first-seen date × day offset 0-6):
     first-seen is a per-user aggregate broadcast back onto the fact;
     the distinct-user count shuffles on the small (cohort, offset) key."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("cohort_date")
     )
@@ -304,7 +241,7 @@ def q_temporal_validity_intervals(spark: SparkSession, sf_dir: str) -> DataFrame
     billing systems compute).  One shuffle: the window partitioning is
     reused by the groupBy (same key), so Catalyst plans a single
     exchange."""
-    ev = _t(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
+    ev = read_sf_table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     ts_s = epoch_seconds("ts")
     validity = F.lead(ts_s).over(w) - ts_s
@@ -363,7 +300,7 @@ def q_locf_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded-preceding ROWS frame fills each gap with the latest real
     value.  The window partition key is the series key — the same
     shuffle the resample already did, so the fill adds no exchange."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     grid = TS.resample_gapfill(
         ev,
         group="event_type",
@@ -388,7 +325,7 @@ def q_locf_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "event_transition_matrix",
     """
     WITH seq AS (
@@ -403,29 +340,11 @@ def q_locf_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM seq WHERE prev_type IS NOT NULL
     GROUP BY prev_type, event_type
     """,
+    "First-order Markov transition matrix over per-user event streams: LAG "
+    "pairs each event with its predecessor, then (prev, next) counts "
+    "normalize into transition probabilities via a window over the grouped "
+    "counts.",
 )
-def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event streams:
-    LAG pairs each event with its predecessor, then (prev, next) counts
-    normalize into transition probabilities via a window over the
-    grouped counts.  Two shuffles total — the per-user window and the
-    pair groupBy; the probability window runs on the tiny aggregated
-    frame."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    seq = ev.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).where(F.col("prev_type").isNotNull())
-    counts = seq.groupBy(
-        "prev_type", F.col("event_type").alias("next_type")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    wp = Window.partitionBy("prev_type")
-    return counts.select(
-        "prev_type",
-        "next_type",
-        "n",
-        r4(F.col("n") / F.sum("n").over(wp)).alias("p_next"),
-    )
 
 
 @query(
@@ -448,7 +367,7 @@ def q_user_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick: collect (ts, event_id, payload) STRUCTS, array_sort (struct
     ordering is field-lexicographic), then project the payload out —
     one shuffle, deterministic on ties via event_id."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     packed = ev.groupBy("user_id").agg(
         F.array_sort(
             F.collect_list(F.struct("ts", "event_id", "event_type"))
@@ -519,7 +438,7 @@ def q_seasonal_decompose_daily(
     everything after runs on (types x days) rows with windows
     PARTITIONED BY event_type — one hash exchange, each series sorts
     independently, no global sort.  Output is (types x 7) rows."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_sf_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.sum("value").alias("v"))

@@ -155,24 +155,81 @@ SF_TABLES = (
 )
 
 
-def register_sf_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view so the engine is
-    usable through plain ``spark.sql(...)`` — the SQL front door next to
-    the DataFrame registry.  Views are lazy (no scan happens here) and
-    carry the same nanos-safe reader as ``read_sf_table``, so SQL users
-    inherit the TIMESTAMP(NANOS) handling for free."""
-    for name in SF_TABLES:
-        read_sf_table(spark, sf_dir, name).createOrReplaceTempView(name)
+# SQL text -> the testdata tables it reads (parsed once per text).
+_SQL_TABLES: dict[str, tuple[str, ...]] = {}
+
+
+def sql_tables(spark: SparkSession, query: str) -> tuple[str, ...]:
+    """The testdata tables ``query`` reads: the ``UnresolvedRelation``
+    names of Spark's parsed plan (subquery expressions and CTE bodies
+    included) that name an ``SF_TABLES`` table.  Taken from the parser,
+    not from a word match, so column names and string literals that
+    happen to spell a table name bind nothing."""
+    hit = _SQL_TABLES.get(query)
+    if hit is not None:
+        return hit
+    names: set[str] = set()
+
+    def walk(node) -> None:
+        if node.getClass().getSimpleName() == "UnresolvedRelation":
+            names.add(node.tableName().lower())
+        for seq in (node.children(), node.innerChildren(), node.subqueries()):
+            for i in range(seq.length()):
+                walk(seq.apply(i))
+
+    walk(spark._jsparkSession.sessionState().sqlParser().parsePlan(query))
+    hit = tuple(t for t in SF_TABLES if t in names)
+    _SQL_TABLES[query] = hit
+    return hit
+
+
+# (sf_dir, table) -> (frame, the temp-view definition built from it)
+_VIEWS: dict[tuple[str, str], tuple] = {}
+
+
+def _bind_view(spark: SparkSession, catalog, sf_dir: str, name: str) -> None:
+    """Bind ``name`` to the testdata table as a temp view.  Building the
+    view definition runs a Spark command (about 12 ms); for a cached
+    table, whose frame is the same object on every call, the definition
+    built the first time is put back directly instead."""
+    df = read_sf_table(spark, sf_dir, name)
+    hit = _VIEWS.get((sf_dir, name))
+    if hit is not None and hit[0] is df:
+        catalog.createTempView(name, hit[1], True)
+        return
+    df.createOrReplaceTempView(name)
+    _VIEWS[(sf_dir, name)] = (df, catalog.getRawTempView(name).get())
 
 
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
-    """Run ANSI SQL against the testdata tables (registers views first).
-    Catalyst plans SQL and DataFrame code identically — same optimizer,
-    same physical operators — so everything in the registry could be
-    phrased this way; the registry prefers the DataFrame API for
-    composability, this entry point exists for ad-hoc users."""
-    register_sf_views(spark, sf_dir)
-    return spark.sql(query)
+    """Run SQL over the testdata tables: the plan of every registry
+    entry written as SQL (``plans.registry.sql_query``), and the engine's
+    front door for ad-hoc users.
+
+    Each table the text reads is bound as a temp view for the length of
+    the call, through the same nanos-safe ``read_sf_table`` the DataFrame
+    queries use (so the table cache applies too).  ``spark.sql`` analyzes
+    eagerly, so the returned frame no longer needs the views: they are
+    dropped, and a caller's own temp view of the same name is put back,
+    leaving the session's view namespace as it was.  The session gets
+    the runtime config once per call, as a query built on a session we
+    did not create (the driver's) must."""
+    from advanced_etl_pipelines_spark.session import configure_existing
+
+    configure_existing(spark)
+    catalog = spark._jsparkSession.sessionState().catalog()
+    tables = sql_tables(spark, query)
+    saved = {t: catalog.getRawTempView(t) for t in tables}
+    try:
+        for t in tables:
+            _bind_view(spark, catalog, sf_dir, t)
+        return spark.sql(query)
+    finally:
+        for t, old in saved.items():
+            if old.isDefined():
+                catalog.createTempView(t, old.get(), True)
+            else:
+                catalog.dropTempView(t)
 
 
 def read_xml(

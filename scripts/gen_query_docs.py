@@ -17,10 +17,9 @@ def first_sentence(doc: str | None) -> str:
     if not doc:
         return ""
     text = " ".join(doc.split())
-    for stop in [". ", ".  "]:
-        i = text.find(stop)
-        if i > 0:
-            return text[: i + 1]
+    i = (text + " ").find(". ")
+    if i > 0:
+        return text[: i + 1]
     return text[:200]
 
 

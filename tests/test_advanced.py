@@ -109,9 +109,10 @@ def test_bigram_lm_perplexity_positive(spark, queries):
 def test_salted_agg_matches_plain_groupby(spark, queries):
     """The salted two-phase aggregate must be bit-identical (after the
     shared rounding) to the naive groupBy it protects against skew."""
-    from advanced_etl_pipelines_spark.plans.registry import _t, r2, r4
+    from advanced_etl_pipelines_spark.plans.registry import r2, r4
+    from advanced_etl_pipelines_spark.sources.readers import read_sf_table
 
-    ev = _t(spark, SF, "events")
+    ev = read_sf_table(spark, SF, "events")
     plain = (
         ev.groupBy("event_type")
         .agg(
@@ -200,11 +201,11 @@ def test_span_corruption_roundtrip(spark, queries):
 def test_incremental_dedup_partitions_cover_corpus(spark, queries):
     """new + dup_vs_base + dup_within_batch = the whole increment."""
     from advanced_etl_pipelines_spark.operators.sampling import unit_hash
-    from advanced_etl_pipelines_spark.plans.registry import _t
+    from advanced_etl_pipelines_spark.sources.readers import read_sf_table
 
     rows = queries["dedup_incremental_against_base"](spark, SF).collect()
     total = sum(r.n_docs for r in rows)
-    docs = _t(spark, SF, "documents")
+    docs = read_sf_table(spark, SF, "documents")
     n_inc = docs.where(~(unit_hash("doc_id") < 0.7)).count()
     assert total == n_inc
     assert {r.status for r in rows} <= {
@@ -221,12 +222,13 @@ def test_label_centroid_cos_bounds(spark, queries):
 
 
 def test_rfm_scores_partition_customers(spark, queries):
-    from advanced_etl_pipelines_spark.plans.registry import _t
+    from advanced_etl_pipelines_spark.sources.readers import read_sf_table
 
     rows = queries["rfm_segments"](spark, SF).collect()
     assert rows
     n_customers = sum(r.n_customers for r in rows)
-    base = _t(spark, SF, "orders").select("o_custkey").distinct().count()
+    orders = read_sf_table(spark, SF, "orders")
+    base = orders.select("o_custkey").distinct().count()
     assert n_customers == base
     for r in rows:
         assert 1 <= r.r_score <= 5

@@ -195,3 +195,25 @@ def test_ann_recall_invariant_is_wired_into_rowsonly_path(co):
     # hides a slow decay inside the floors)
     assert '"recalls"' in src
     assert src.count("extra") >= 3
+
+
+def test_body_edit_flips_the_hash_through_the_query_wrapper(co):
+    """``query`` registers a wrapper that configures the session; the
+    hash must still cover the body it wraps, not the wrapper."""
+    from advanced_etl_pipelines_spark.plans import registry
+
+    def body_a(spark, sf_dir):
+        return "a"
+
+    def body_b(spark, sf_dir):
+        return "b"
+
+    try:
+        fa = registry.query("__hash_probe_a")(body_a)
+        fb = registry.query("__hash_probe_b")(body_b)
+    finally:
+        registry.QUERIES.pop("__hash_probe_a", None)
+        registry.QUERIES.pop("__hash_probe_b", None)
+    ha = co._query_hashes({"q": fa}, {})["q"]
+    hb = co._query_hashes({"q": fb}, {})["q"]
+    assert ha != hb

@@ -223,7 +223,8 @@ def test_semdedup_removal_rule_matches_numpy_sf1():
         pytest.skip("scale corpus .localdata/sf1 not built")
 
     from advanced_etl_pipelines_spark.operators.linalg import kmeans_lloyd
-    from advanced_etl_pipelines_spark.plans.registry import QUERIES, _t
+    from advanced_etl_pipelines_spark.plans.registry import QUERIES
+    from advanced_etl_pipelines_spark.sources.readers import read_sf_table
     from advanced_etl_pipelines_spark.session import get_spark
 
     spark = get_spark("semdedup-sf1")
@@ -232,7 +233,7 @@ def test_semdedup_removal_rule_matches_numpy_sf1():
         for r in QUERIES["semdedup_embedding"](spark, sf1).collect()
     }
 
-    emb = _t(spark, sf1, "embeddings")
+    emb = read_sf_table(spark, sf1, "embeddings")
     k = max(16, emb.count() // 256)
     _, assign = kmeans_lloyd(emb, "embedding", "vec_id", k=k, iters=3)
     rows = (

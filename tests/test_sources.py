@@ -187,6 +187,42 @@ def test_sql_front_door_matches_dataframe_plan(spark):
     assert got == RD.read_sf_table(spark, SF, "events").count()
 
 
+def test_sql_binds_the_tables_it_reads_for_one_call(spark):
+    """Tables come from the parsed plan (CTE bodies and subqueries too,
+    string literals and CTE names not), each call binds its own sf, and
+    the caller's temp views are left as they were."""
+    import os
+
+    from advanced_etl_pipelines_spark.sources import readers as RD
+    from conftest import SF_SMOKE
+
+    sf001 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    text = """
+        WITH o AS (SELECT o_custkey FROM orders
+                   WHERE o_custkey IN (SELECT c_custkey FROM customer))
+        SELECT COUNT(*) AS n, 'lineitem' AS label FROM o
+    """
+    assert RD.sql_tables(spark, text) == ("customer", "orders")
+    spark.range(3).createOrReplaceTempView("orders")
+    try:
+        small = RD.sql(spark, SF_SMOKE, text)
+        big = RD.sql(spark, sf001, text)
+        assert small.first().n < big.first().n
+        assert spark.table("orders").count() == 3
+        assert not spark.catalog.tableExists("customer")
+        # cached tables: the second call puts back the view definitions
+        # the first call built
+        RD.cache_sf_tables(spark, SF_SMOKE, ("orders", "customer"))
+        try:
+            again = [RD.sql(spark, SF_SMOKE, text).first().n for _ in "ab"]
+        finally:
+            RD.uncache_sf_tables()
+        assert again == [small.first().n] * 2
+        assert spark.table("orders").count() == 3
+    finally:
+        spark.catalog.dropTempView("orders")
+
+
 def test_python_datasource_partition_parallel_and_deterministic(spark):
     from advanced_etl_pipelines_spark.sources import python_datasource as PDS
 
