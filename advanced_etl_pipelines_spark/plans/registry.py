@@ -26,6 +26,22 @@ a rounding or ordering slip changes both answers alike and the oracle
 gate cannot see it.  ``tests/test_sql_entries.py`` catches it instead,
 by pinning each SQL entry to the answer digests of the DataFrame body it
 replaced.
+
+A SQL entry's text uses spellings both engines parse alike.  Where
+DuckDB has a shorthand Spark lacks, the entry spells it the portable
+way:
+
+=====================================  ==========================================================
+DuckDB-only                            portable spelling
+=====================================  ==========================================================
+``strftime(x, '%Y-%m-%d')``            ``CAST(CAST(x AS DATE) AS STRING)``
+``strftime(x, '%Y-%m')``               ``SUBSTR(CAST(CAST(x AS DATE) AS STRING), 1, 7)``
+``strftime(x, '%Y-%m-%d %H:%M:%S')``   ``SUBSTR(CAST(CAST(x AS TIMESTAMP) AS STRING), 1, 19)``
+``quantile_cont(x, p)``, scalar ``p``  ``percentile_cont(p) WITHIN GROUP (ORDER BY x)``
+``a // b``                             ``CAST(FLOOR(a / b) AS BIGINT)`` (exact for 0 <= a, b < 2^53)
+``CAST(x AS VARCHAR)``                 ``CAST(x AS STRING)``
+``name AS MATERIALIZED (…)``           ``name AS (…)`` (a DuckDB speed hint only)
+=====================================  ==========================================================
 """
 
 from __future__ import annotations
@@ -212,25 +228,18 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "global_summary",
     """
     SELECT COUNT(*) AS rows,
-           STRFTIME(MIN(ts), '%Y-%m-%d %H:%M:%S') AS time_min,
-           STRFTIME(MAX(ts), '%Y-%m-%d %H:%M:%S') AS time_max,
+           SUBSTR(CAST(CAST(MIN(ts) AS TIMESTAMP) AS STRING), 1, 19) AS time_min,
+           SUBSTR(CAST(CAST(MAX(ts) AS TIMESTAMP) AS STRING), 1, 19) AS time_max,
            ROUND(1e-9 + AVG(value), 4) AS value_mean
     FROM events
     """,
+    "A8 one-row global summary "
+    "(`ETL_Weather_API/etl_analysis.py:107-114`).",
 )
-def q_global_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8 one-row global summary (`ETL_Weather_API/etl_analysis.py:107-114`)."""
-    ev = read_sf_table(spark, sf_dir, "events")
-    return ev.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("time_min"),
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("time_max"),
-        r4(F.avg("value")).alias("value_mean"),
-    )
 
 
 sql_query(
@@ -650,13 +659,13 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "tpch_q18_large_orders",
     """
     WITH big AS (SELECT l_orderkey AS o_orderkey FROM lineitem
                  GROUP BY l_orderkey HAVING SUM(l_quantity) > 150)
     SELECT o.o_orderkey,
-           STRFTIME(o.o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
+           SUBSTR(CAST(CAST(o.o_orderdate AS TIMESTAMP) AS STRING), 1, 19) AS o_orderdate,
            ROUND(1e-9 + o.o_totalprice, 2) AS o_totalprice,
            CAST(SUM(l.l_quantity) AS DOUBLE) AS total_qty
     FROM orders o JOIN big USING (o_orderkey)
@@ -665,36 +674,9 @@ sql_query(
     ORDER BY o.o_totalprice DESC, o.o_orderkey ASC
     LIMIT 20
     """,
+    "TPC-H Q18-style: group-by-HAVING feeding a fact join (the classic "
+    "two-pass over lineitem), top-20 with deterministic tie-break.",
 )
-def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18-style: group-by-HAVING feeding a fact join (the classic
-    two-pass over lineitem), top-20 with deterministic tie-break.  The
-    HAVING aggregate is partial+final; the qualifying-key set is tiny and
-    broadcasts into both joins."""
-    li = read_sf_table(spark, sf_dir, "lineitem")
-    orders = read_sf_table(spark, sf_dir, "orders")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("tq"))
-        .where(F.col("tq") > 150)
-        .select(F.col("l_orderkey").alias("o_orderkey"))
-    )
-    return (
-        orders.join(F.broadcast(big), "o_orderkey")
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.sum("l_quantity").cast("double").alias("total_qty"))
-        .select(
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias(
-                "o_orderdate"
-            ),
-            r2(F.col("o_totalprice")).alias("o_totalprice"),
-            "total_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(20)
-    )
 
 
 sql_query(

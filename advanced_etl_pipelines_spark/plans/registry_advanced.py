@@ -109,7 +109,7 @@ def q_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "scd2_user_state",
     """
     WITH ordered AS (
@@ -126,46 +126,20 @@ def q_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS vt
       FROM chg)
     SELECT user_id, event_type,
-           strftime(vf, '%Y-%m-%d %H:%M:%S') AS valid_from,
-           COALESCE(strftime(vt, '%Y-%m-%d %H:%M:%S'), 'current')
+           SUBSTR(CAST(CAST(vf AS TIMESTAMP) AS STRING), 1, 19) AS valid_from,
+           COALESCE(SUBSTR(CAST(CAST(vt AS TIMESTAMP) AS STRING), 1, 19), 'current')
              AS valid_to,
            vt IS NULL AS is_current
     FROM v
     """,
+    "Type-2 slowly-changing-dimension build: collapse each user's event "
+    "stream into state-validity intervals (state = event_type; a new "
+    "row only when the state CHANGES), with half-open [valid_from, "
+    "valid_to) ranges and an is_current flag — the standard warehouse "
+    "dimension-history operator the reference approximates with its "
+    "overwrite-by-key upsert (SURVEY.md §2.1 S7), upgraded to keep "
+    "history instead of destroying it.",
 )
-def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 slowly-changing-dimension build: collapse each user's
-    event stream into state-validity intervals (state = event_type;
-    a new row only when the state CHANGES), with half-open
-    [valid_from, valid_to) ranges and an is_current flag — the standard
-    warehouse dimension-history operator the reference approximates with
-    its overwrite-by-key upsert (SURVEY.md §2.1 S7), upgraded to keep
-    history instead of destroying it.
-
-    Spark-first shape: two windows, both PARTITIONED BY user_id — the
-    only shuffle is one hash exchange on the natural key, identical to
-    any groupBy(user), and each user's slice sorts independently, so the
-    plan is the one you'd want at 100 TB (no global sort, no driver
-    state).  Change detection keeps the row iff lag(state) differs;
-    valid_to = lead(valid_from) over the surviving change rows."""
-    ev = read_sf_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    chg = (
-        ev.withColumn("prev", F.lag("event_type").over(w))
-        .where(F.col("prev").isNull() | (F.col("prev") != F.col("event_type")))
-        .select("user_id", "event_type", "ts", "event_id")
-    )
-    w2 = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    v = chg.withColumn("vt", F.lead("ts").over(w2))
-    return v.select(
-        "user_id",
-        "event_type",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("valid_from"),
-        F.coalesce(
-            F.date_format("vt", "yyyy-MM-dd HH:mm:ss"), F.lit("current")
-        ).alias("valid_to"),
-        F.col("vt").isNull().alias("is_current"),
-    )
 
 
 @query(
@@ -295,7 +269,7 @@ def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "cusum_changepoint_daily",
     """
     WITH daily AS (
@@ -305,45 +279,16 @@ def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     c AS (
       SELECT d, SUM(x - mu) OVER (ORDER BY d) AS cusum
       FROM daily, stats)
-    SELECT strftime(d, '%Y-%m-%d') AS changepoint_day,
+    SELECT CAST(CAST(d AS DATE) AS STRING) AS changepoint_day,
            ROUND(1e-9 + ABS(cusum), 4) AS max_abs_cusum,
            (SELECT CAST(COUNT(*) AS BIGINT) FROM daily) AS n_days
     FROM c ORDER BY ABS(cusum) DESC, d LIMIT 1
     """,
+    "Offline CUSUM change-point detection on the daily mean of "
+    "events.value: the day where the cumulative sum of deviations from "
+    "the global mean peaks in magnitude is the single most likely mean "
+    "shift (Page 1954; the binary-segmentation pivot).",
 )
-def q_cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Offline CUSUM change-point detection on the daily mean of
-    events.value: the day where the cumulative sum of deviations from
-    the global mean peaks in magnitude is the single most likely mean
-    shift (Page 1954; the binary-segmentation pivot).
-
-    Completes the monitoring family (PSI / KS / deciles) with the
-    *sequential* detector.  Scale shape: raw events reduce to one row
-    per day FIRST (hash agg, fully parallel); every window below runs
-    on the ~O(days) frame — at 100 TB that frame is still a few
-    thousand rows, so the ordered window is trivially cheap and the
-    plan's only real cost is the initial scan+agg."""
-    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.avg("value").alias("x")
-    )
-    mu = daily.agg(F.avg("x").alias("mu"))
-    w = Window.orderBy("d")
-    c = (
-        daily.crossJoin(F.broadcast(mu))
-        .withColumn("cusum", F.sum(F.col("x") - F.col("mu")).over(w))
-    )
-    n_days = daily.agg(F.count(F.lit(1)).alias("n_days"))
-    return (
-        c.orderBy(F.desc(F.abs(F.col("cusum"))), F.asc("d"))
-        .limit(1)
-        .crossJoin(F.broadcast(n_days))
-        .select(
-            F.date_format("d", "yyyy-MM-dd").alias("changepoint_day"),
-            r4(F.abs(F.col("cusum"))).alias("max_abs_cusum"),
-            "n_days",
-        )
-    )
 
 
 @query(
@@ -1964,11 +1909,11 @@ def q_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "mom_revenue_growth",
     """
     WITH rev AS (
-      SELECT n.n_name, strftime(o.o_orderdate, '%Y-%m') AS month,
+      SELECT n.n_name, SUBSTR(CAST(CAST(o.o_orderdate AS DATE) AS STRING), 1, 7) AS month,
              SUM(o.o_totalprice) AS revenue
       FROM orders o
       JOIN customer c ON o.o_custkey = c.c_custkey
@@ -1981,34 +1926,9 @@ def q_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rev
     WINDOW w AS (PARTITION BY n_name ORDER BY month)
     """,
+    "Month-over-month revenue growth per customer nation — the "
+    "period-over-period KPI report.",
 )
-def q_mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Month-over-month revenue growth per customer nation — the
-    period-over-period KPI report.  LAG runs in a window partitioned by
-    nation over ~months rows (the PRE-AGGREGATED frame): at 100 TB the
-    windowed input is |nations| x |months| regardless of order volume,
-    so the only data-scale work is the grouped aggregate underneath.
-    Dimension joins broadcast."""
-    o = read_sf_table(spark, sf_dir, "orders")
-    c = read_sf_table(spark, sf_dir, "customer")
-    n = read_sf_table(spark, sf_dir, "nation")
-    rev = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(
-            "n_name",
-            F.date_format("o_orderdate", "yyyy-MM").alias("month"),
-        )
-        .agg(F.sum("o_totalprice").alias("revenue"))
-    )
-    w = Window.partitionBy("n_name").orderBy("month")
-    prev = F.lag("revenue").over(w)
-    return rev.select(
-        "n_name",
-        "month",
-        r2(F.col("revenue")).alias("revenue"),
-        r4((F.col("revenue") - prev) / prev).alias("mom_growth"),
-    )
 
 
 @query(
@@ -3323,14 +3243,14 @@ def q_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "rolling_corr_7d",
     """
     WITH daily AS (
       SELECT CAST(l_shipdate AS DATE) AS d,
              SUM(l_extendedprice) AS rev, SUM(l_quantity) AS qty
       FROM lineitem GROUP BY 1)
-    SELECT STRFTIME(d, '%Y-%m-%d') AS day,
+    SELECT CAST(CAST(d AS DATE) AS STRING) AS day,
            ROUND(1e-9 + corr(rev, qty) OVER (
              ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4)
              AS corr_7d,
@@ -3339,26 +3259,10 @@ def q_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS BIGINT) AS n_days
     FROM daily
     """,
+    "Trailing 7-day correlation between daily revenue and daily "
+    "quantity — the rolling co-movement signal (decoupling = mix shift "
+    "or pricing drift).",
 )
-def q_rolling_corr_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 7-day correlation between daily revenue and daily
-    quantity — the rolling co-movement signal (decoupling = mix shift
-    or pricing drift).  corr is an algebraic aggregate, so it runs as a
-    WINDOW function over the per-day frame: the window sees |days|
-    rows regardless of fact volume (same bounded-frame contract as
-    cusum/char-coverage), and the daily aggregate underneath is the
-    only data-scale work."""
-    li = read_sf_table(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.to_date("l_shipdate").alias("d")).agg(
-        F.sum("l_extendedprice").alias("rev"),
-        F.sum("l_quantity").alias("qty"),
-    )
-    w = Window.orderBy("d").rowsBetween(-6, 0)
-    return daily.select(
-        F.date_format("d", "yyyy-MM-dd").alias("day"),
-        r4(F.corr("rev", "qty").over(w)).alias("corr_7d"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("n_days"),
-    )
 
 
 @query(
@@ -3717,7 +3621,7 @@ def q_kneser_ney_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "new_vs_returning_daily",
     """
     WITH first_seen AS (
@@ -3728,43 +3632,16 @@ def q_kneser_ney_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
              (CAST(e.ts AS DATE) = f.first_day) AS is_new
       FROM events e JOIN first_seen f ON e.user_id = f.user_id
       GROUP BY 1, 2, 3)
-    SELECT STRFTIME(d, '%Y-%m-%d') AS day,
+    SELECT CAST(CAST(d AS DATE) AS STRING) AS day,
            CAST(SUM(CASE WHEN is_new THEN 1 ELSE 0 END) AS BIGINT)
              AS new_users,
            CAST(SUM(CASE WHEN is_new THEN 0 ELSE 1 END) AS BIGINT)
              AS returning_users
     FROM daily GROUP BY d
     """,
+    "New vs returning daily actives — the growth-accounting split "
+    "(acquisition vs engagement) behind every DAU chart.",
 )
-def q_new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """New vs returning daily actives — the growth-accounting split
-    (acquisition vs engagement) behind every DAU chart.  First-seen is
-    one per-user aggregate joined back by the 8-byte user key; the
-    daily distinct is a (day, user) aggregate.  Two shuffles on keys,
-    both data-bounded."""
-    ev = read_sf_table(spark, sf_dir, "events")
-    first_seen = ev.groupBy("user_id").agg(
-        F.min(F.to_date("ts")).alias("first_day")
-    )
-    daily = (
-        ev.join(first_seen, "user_id")
-        .select(
-            F.to_date("ts").alias("d"),
-            "user_id",
-            (F.to_date("ts") == F.col("first_day")).alias("is_new"),
-        )
-        .distinct()
-    )
-    return daily.groupBy(
-        F.date_format("d", "yyyy-MM-dd").alias("day")
-    ).agg(
-        F.sum(F.when(F.col("is_new"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("new_users"),
-        F.sum(F.when(F.col("is_new"), 0).otherwise(1))
-        .cast("bigint")
-        .alias("returning_users"),
-    )
 
 
 @query(
@@ -3892,12 +3769,12 @@ def q_ltv_cohort_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "benford_first_digit",
     """
     WITH d AS (
       SELECT CAST(SUBSTR(CAST(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)
-                         AS VARCHAR), 1, 1) AS INT) AS digit
+                         AS STRING), 1, 1) AS INT) AS digit
       FROM orders WHERE o_totalprice > 0),
     obs AS (SELECT digit, COUNT(*) AS n FROM d GROUP BY digit),
     tot AS (SELECT SUM(n) AS nn FROM obs)
@@ -3911,40 +3788,10 @@ def q_ltv_cohort_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS z_dev
     FROM obs CROSS JOIN tot
     """,
+    "Benford's-law first-digit audit of order totals — the forensic "
+    "data-quality screen (fabricated or capped monetary data deviates "
+    "from the log distribution; z_dev flags which digits).",
 )
-def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-digit audit of order totals — the forensic
-    data-quality screen (fabricated or capped monetary data deviates
-    from the log distribution; z_dev flags which digits).  The first
-    digit comes from the INTEGER cents string, never from float
-    formatting, so both engines extract identical digits.  One grouped
-    count plus broadcast total; the expected-share LOG10 runs on the 9
-    digit literals only."""
-    o = read_sf_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
-    d = o.select(
-        F.substring(
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .cast("string"),
-            1,
-            1,
-        )
-        .cast("int")
-        .alias("digit")
-    )
-    obs = d.groupBy("digit").agg(F.count(F.lit(1)).alias("n"))
-    tot = obs.agg(F.sum("n").alias("nn"))
-    bf = F.log10(1.0 + 1.0 / F.col("digit"))
-    return obs.crossJoin(F.broadcast(tot)).select(
-        "digit",
-        F.col("n").cast("bigint").alias("n"),
-        r4(F.col("n") * 1.0 / F.col("nn")).alias("observed"),
-        r4(bf).alias("benford"),
-        r4(
-            (F.col("n") * 1.0 / F.col("nn") - bf)
-            / F.sqrt(bf * (1 - bf) / F.col("nn"))
-        ).alias("z_dev"),
-    )
 
 
 sql_query(
@@ -3990,34 +3837,21 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "daily_value_ribbon",
     """
-    SELECT STRFTIME(CAST(ts AS DATE), '%Y-%m-%d') AS day,
+    SELECT CAST(CAST(CAST(ts AS DATE) AS DATE) AS STRING) AS day,
            CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND(1e-9 + quantile_cont(value, 0.1), 4) AS p10,
-           ROUND(1e-9 + quantile_cont(value, 0.5), 4) AS p50,
-           ROUND(1e-9 + quantile_cont(value, 0.9), 4) AS p90
+           ROUND(1e-9 + percentile_cont(0.1) WITHIN GROUP (ORDER BY value), 4) AS p10,
+           ROUND(1e-9 + percentile_cont(0.5) WITHIN GROUP (ORDER BY value), 4) AS p50,
+           ROUND(1e-9 + percentile_cont(0.9) WITHIN GROUP (ORDER BY value), 4) AS p90
     FROM events WHERE value IS NOT NULL
     GROUP BY 1
     """,
+    "Daily p10/p50/p90 ribbon of event values — the monitoring chart "
+    "shape (median line with a spread band) that catches distribution "
+    "drift a daily mean hides.",
 )
-def q_daily_value_ribbon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily p10/p50/p90 ribbon of event values — the monitoring chart
-    shape (median line with a spread band) that catches distribution
-    drift a daily mean hides.  Exact per-day percentiles as a grouped
-    aggregate (percentile() is partial-merge capable); at 100 TB swap
-    in approx_percentile/KLL per day if exactness isn't required —
-    same query shape."""
-    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    return ev.groupBy(
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        r4(F.percentile("value", F.lit(0.1))).alias("p10"),
-        r4(F.percentile("value", F.lit(0.5))).alias("p50"),
-        r4(F.percentile("value", F.lit(0.9))).alias("p90"),
-    )
 
 
 sql_query(
@@ -5328,7 +5162,7 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "shuffle_skew_gini",
     """
     WITH b AS (
@@ -5346,38 +5180,13 @@ sql_query(
                       - (COUNT(*) + 1.0) / COUNT(*), 4) AS gini
     FROM r
     """,
+    "Partition-skew report for a 32-way hash layout on user_id: "
+    "max-bucket-over-average (the straggler factor — the slowest "
+    "reducer runs this many times longer than the mean) and the Gini of "
+    "bucket sizes — the pre-flight check before keying a big shuffle or "
+    "a bucketed table on a column (per-PARTITION skew; "
+    "skew_key_profile reports per-KEY skew).",
 )
-def q_shuffle_skew_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-skew report for a 32-way hash layout on user_id:
-    max-bucket-over-average (the straggler factor — the slowest reducer
-    runs this many times longer than the mean) and the Gini of bucket
-    sizes — the pre-flight check before keying a big shuffle or a
-    bucketed table on a column (cf. skew_key_profile for per-KEY skew;
-    this is per-PARTITION).  The bucket assignment uses the portable
-    unit hash so both engines agree; 32 bucket counts aggregate
-    map-side and the ordered stats run on 32 rows."""
-    ev = read_sf_table(spark, sf_dir, "events")
-    from advanced_etl_pipelines_spark.operators.sampling import unit_hash
-
-    # explicit FLOOR: DuckDB's double->int CAST rounds-to-nearest while
-    # Spark's truncates — floor first so both engines bucket identically
-    b = ev.select(
-        F.floor(unit_hash("user_id") * 32).cast("int").alias("bucket")
-    )
-    c = b.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.orderBy("n", "bucket")
-    r = c.withColumn("rnk", F.row_number().over(w))
-    return r.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-        r4(
-            F.max("n") * 1.0 * F.count(F.lit(1)) / F.sum("n")
-        ).alias("max_over_avg"),
-        r4(
-            2.0 * F.sum(F.col("rnk") * F.col("n"))
-            / (F.count(F.lit(1)) * F.sum("n"))
-            - (F.count(F.lit(1)) + 1.0) / F.count(F.lit(1))
-        ).alias("gini"),
-    )
 
 
 @query(
@@ -5794,7 +5603,7 @@ def q_traffic_shape_similarity(
     )
 
 
-@query(
+sql_query(
     "user_growth_curve",
     """
     WITH first_seen AS (
@@ -5802,33 +5611,15 @@ def q_traffic_shape_similarity(
       FROM events GROUP BY user_id),
     daily AS (SELECT d, COUNT(*) AS new_users
               FROM first_seen GROUP BY d)
-    SELECT STRFTIME(d, '%Y-%m-%d') AS day,
+    SELECT CAST(CAST(d AS DATE) AS STRING) AS day,
            CAST(new_users AS BIGINT) AS new_users,
            CAST(SUM(new_users) OVER (ORDER BY d) AS BIGINT)
              AS cumulative_users
     FROM daily
     """,
+    "Cumulative registered-user growth: first-seen users per day and "
+    "the running total — THE growth chart.",
 )
-def q_user_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative registered-user growth: first-seen users per day and
-    the running total — THE growth chart.  First-seen is one per-user
-    aggregate; the running sum windows over the per-DAY frame (bounded
-    by calendar length, not users), so no data-scale sort exists."""
-    ev = read_sf_table(spark, sf_dir, "events")
-    first_seen = ev.groupBy("user_id").agg(
-        F.min(F.to_date("ts")).alias("d")
-    )
-    daily = first_seen.groupBy("d").agg(
-        F.count(F.lit(1)).alias("new_users")
-    )
-    w = Window.orderBy("d")
-    return daily.select(
-        F.date_format("d", "yyyy-MM-dd").alias("day"),
-        F.col("new_users").cast("bigint").alias("new_users"),
-        F.sum("new_users").over(w).cast("bigint").alias(
-            "cumulative_users"
-        ),
-    )
 
 
 _ENTROPY_COLS: list[tuple[str, str]] = [
@@ -6345,49 +6136,26 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "new_buyer_revenue_share",
     """
     WITH first_m AS (
       SELECT o_custkey,
-             MIN(strftime(o_orderdate, '%Y-%m')) AS first_month
+             MIN(SUBSTR(CAST(CAST(o_orderdate AS DATE) AS STRING), 1, 7)) AS first_month
       FROM orders GROUP BY o_custkey)
-    SELECT strftime(o.o_orderdate, '%Y-%m') AS month,
+    SELECT SUBSTR(CAST(CAST(o.o_orderdate AS DATE) AS STRING), 1, 7) AS month,
            ROUND(1e-9 + SUM(o.o_totalprice), 2) AS total_rev,
-           ROUND(1e-9 + SUM(CASE WHEN strftime(o.o_orderdate, '%Y-%m')
+           ROUND(1e-9 + SUM(CASE WHEN SUBSTR(CAST(CAST(o.o_orderdate AS DATE) AS STRING), 1, 7)
                                       = f.first_month
                             THEN o.o_totalprice ELSE 0 END)
                  / SUM(o.o_totalprice), 4) AS new_buyer_share
     FROM orders o JOIN first_m f ON o.o_custkey = f.o_custkey
     GROUP BY 1
     """,
+    "Share of each month's revenue from FIRST-time buyers — the "
+    "acquisition-dependence metric (a business whose revenue is mostly "
+    "new buyers is buying growth; mostly repeat is compounding).",
 )
-def q_new_buyer_revenue_share(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Share of each month's revenue from FIRST-time buyers — the
-    acquisition-dependence metric (a business whose revenue is mostly
-    new buyers is buying growth; mostly repeat is compounding).  MIN
-    string month per customer is one aggregate joined back by the
-    customer key; the monthly rollup carries both sums in one pass."""
-    o = read_sf_table(spark, sf_dir, "orders")
-    month = F.date_format("o_orderdate", "yyyy-MM")
-    first_m = o.groupBy("o_custkey").agg(
-        F.min(month).alias("first_month")
-    )
-    j = o.join(first_m, "o_custkey")
-    return j.groupBy(month.alias("month")).agg(
-        r2(F.sum("o_totalprice")).alias("total_rev"),
-        r4(
-            F.sum(
-                F.when(
-                    month == F.col("first_month"),
-                    F.col("o_totalprice"),
-                ).otherwise(0)
-            )
-            / F.sum("o_totalprice")
-        ).alias("new_buyer_share"),
-    )
 
 
 @query(
@@ -6613,7 +6381,7 @@ def q_lorenz_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "hierarchical_revenue_shares",
     """
     WITH rev AS (
@@ -6628,34 +6396,10 @@ def q_lorenz_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / SUM(r) OVER (), 4) AS brand_share
     FROM rev
     """,
+    "Hierarchical ratio-to-report: each (brand, type) cell carries its "
+    "share WITHIN its brand and the brand's share of the whole — the "
+    "drill-down table every revenue dashboard opens with, in one pass.",
 )
-def q_hierarchical_revenue_shares(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hierarchical ratio-to-report: each (brand, type) cell carries its
-    share WITHIN its brand and the brand's share of the whole — the
-    drill-down table every revenue dashboard opens with, in one pass.
-    All three window sums run over the (brand x type) AGGREGATE (a few
-    hundred rows); the unpartitioned total is over that same bounded
-    frame, never the fact table."""
-    li = read_sf_table(spark, sf_dir, "lineitem")
-    p = read_sf_table(spark, sf_dir, "part")
-    rev = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_type")
-        .agg(F.sum("l_extendedprice").alias("r"))
-    )
-    wb = Window.partitionBy("p_brand")
-    wall = Window.partitionBy()
-    return rev.select(
-        "p_brand",
-        "p_type",
-        r2(F.col("r")).alias("revenue"),
-        r4(F.col("r") / F.sum("r").over(wb)).alias("share_in_brand"),
-        r4(F.sum("r").over(wb) / F.sum("r").over(wall)).alias(
-            "brand_share"
-        ),
-    )
 
 
 @query(
@@ -7201,7 +6945,8 @@ sql_query(
     "Discount-depth response curve: average quantity per 5-point discount "
     "band, normalized by the zero-discount baseline — the "
     "promo-effectiveness table (a flat lift curve means discounts move "
-    "margin, not volume; cf.",
+    "margin, not volume; cf. simpsons_paradox_probe before trusting "
+    "the pooled slope).",
 )
 
 
@@ -7320,7 +7065,8 @@ sql_query(
     HAVING SUM(dr) > 0
     ORDER BY user_id
     """,
-    "Incremental materialized-view maintenance (Blakeley et al.",
+    "Incremental materialized-view maintenance (Blakeley et al. 1986 "
+    "delta propagation).",
 )
 
 
@@ -8152,7 +7898,7 @@ _AS_P_SQL = """(
 )"""
 
 
-@query(
+sql_query(
     "fdr_bh_nation_tests",
     f"""
     WITH pern AS (
@@ -8188,78 +7934,12 @@ _AS_P_SQL = """(
     FROM ranked, kmax
     ORDER BY pval ASC, n_name ASC
     """,
+    "Benjamini-Hochberg FDR control (BH 1995) over 25 simultaneous "
+    "per-nation tests: each nation's mean order value vs the global "
+    "mean (one-sample z), then the step-up procedure at q = 0.1 — "
+    "reject the k smallest p-values where k is the largest rank with "
+    "p_k <= k/m*q.",
 )
-def q_fdr_bh_nation_tests(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Benjamini-Hochberg FDR control (BH 1995) over 25 simultaneous
-    per-nation tests: each nation's mean order value vs the global
-    mean (one-sample z), then the step-up procedure at q = 0.1 —
-    reject the k smallest p-values where k is the largest rank with
-    p_k <= k/m*q.  THE guardrail for dashboard-scale multiple testing
-    (25 nations peeked at once inflate naive alpha to ~72%).
-
-    Engine notes: neither Spark nor DuckDB ships erf, so the normal
-    tail comes from the shared Abramowitz-Stegun 7.1.26 polynomial
-    (module constant, max error 1.5e-7) evaluated on the ROUNDED z —
-    identical literal arithmetic on both engines, which is what makes
-    a special-function p-value oracle-checkable at all.  Shape: two
-    aggregates (per-nation, global), then every BH step runs on the
-    25-row frame (bounded window, whitelisted)."""
-    o = read_sf_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_totalprice"
-    )
-    c = read_sf_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = read_sf_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    pern = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.avg("o_totalprice").alias("m"),
-        )
-    )
-    g = o.agg(
-        F.avg("o_totalprice").alias("mg"),
-        F.stddev_samp("o_totalprice").alias("sg"),
-    )
-    z = pern.crossJoin(F.broadcast(g)).select(
-        "n_name",
-        "n_orders",
-        r4(
-            (F.col("m") - F.col("mg"))
-            / (F.col("sg") / F.sqrt("n_orders"))
-        ).alias("zv"),
-    )
-    p = z.withColumn(
-        "pval",
-        F.round(
-            F.lit(1e-9) + F.expr(_AS_P_SQL.format(z="zv")), 6
-        ),
-    )
-    w = Window.orderBy(F.asc("pval"), F.asc("n_name"))
-    ranked = p.withColumn("rk", F.row_number().over(w)).withColumn(
-        "m_tests", F.count(F.lit(1)).over(Window.partitionBy())
-    )
-    kmax = ranked.where(
-        F.col("pval") <= F.col("rk") * 0.1 / F.col("m_tests")
-    ).agg(F.coalesce(F.max("rk"), F.lit(0)).alias("k"))
-    return (
-        ranked.crossJoin(F.broadcast(kmax))
-        .select(
-            "n_name",
-            F.col("n_orders").cast("bigint").alias("n_orders"),
-            F.col("zv").alias("zscore"),
-            "pval",
-            F.col("rk").cast("bigint").alias("bh_rank"),
-            F.when(F.col("rk") <= F.col("k"), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("rejected"),
-        )
-        .orderBy(F.asc("pval"), F.asc("n_name"))
-    )
 
 
 @query(

@@ -159,17 +159,17 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "anomaly_mad_robust",
     """
     WITH med AS (
-      SELECT event_type, quantile_cont(value, 0.5) AS med
+      SELECT event_type, percentile_cont(0.5) WITHIN GROUP (ORDER BY value) AS med
       FROM events GROUP BY event_type),
     dev AS (
       SELECT e.event_type, e.value, ABS(e.value - m.med) AS adev, m.med
       FROM events e JOIN med m USING (event_type)),
     mad AS (
-      SELECT event_type, quantile_cont(adev, 0.5) AS mad
+      SELECT event_type, percentile_cont(0.5) WITHIN GROUP (ORDER BY adev) AS mad
       FROM dev GROUP BY event_type)
     SELECT d.event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -180,46 +180,18 @@ sql_query(
     FROM dev d JOIN mad m USING (event_type)
     GROUP BY d.event_type
     """,
+    "Robust outlier detection: modified z-score 0.6745·|x−median|/MAD > "
+    "3.5 (Iglewicz–Hoaglin) per event type.",
 )
-def q_anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier detection: modified z-score 0.6745·|x−median|/MAD
-    > 3.5 (Iglewicz–Hoaglin) per event type.  Median/MAD are exact
-    interpolated percentiles (breakdown-point-0.5 robust, unlike
-    mean±3σ); the per-type statistics are tiny and broadcast back, so
-    the fact table is scanned twice but never shuffled."""
-    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    med = ev.groupBy("event_type").agg(
-        F.percentile("value", F.lit(0.5)).alias("med")
-    )
-    dev = ev.join(F.broadcast(med), "event_type").withColumn(
-        "adev", F.abs(F.col("value") - F.col("med"))
-    )
-    mad = dev.groupBy("event_type").agg(
-        F.percentile("adev", F.lit(0.5)).alias("mad")
-    )
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            r4(F.any_value("med")).alias("median_v"),
-            r4(F.any_value("mad")).alias("mad_v"),
-            F.sum(
-                F.when(
-                    F.lit(0.6745) * F.col("adev") / F.col("mad") > 3.5, 1
-                ).otherwise(0)
-            ).alias("n_outliers"),
-        )
-    )
 
 
-@query(
+sql_query(
     "winsorized_mean_price",
     """
     WITH q AS (
       SELECT l_returnflag,
-             quantile_cont(l_extendedprice, 0.05) AS p05,
-             quantile_cont(l_extendedprice, 0.95) AS p95
+             percentile_cont(0.05) WITHIN GROUP (ORDER BY l_extendedprice) AS p05,
+             percentile_cont(0.95) WITHIN GROUP (ORDER BY l_extendedprice) AS p95
       FROM lineitem GROUP BY l_returnflag)
     SELECT l.l_returnflag,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -231,31 +203,9 @@ def q_anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem l JOIN q USING (l_returnflag)
     GROUP BY l.l_returnflag
     """,
+    "Winsorized mean (clip to [p05, p95] before averaging) per return "
+    "flag — the tail-robust KPI variant.",
 )
-def q_winsorized_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized mean (clip to [p05, p95] before averaging) per return
-    flag — the tail-robust KPI variant.  Exact percentiles per group are
-    3 rows: broadcast back over the fact scan; clip is pure arithmetic
-    in codegen."""
-    li = read_sf_table(spark, sf_dir, "lineitem")
-    q = li.groupBy("l_returnflag").agg(
-        F.percentile("l_extendedprice", F.lit(0.05)).alias("p05"),
-        F.percentile("l_extendedprice", F.lit(0.95)).alias("p95"),
-    )
-    clipped = F.least(
-        F.greatest(F.col("l_extendedprice"), F.col("p05")), F.col("p95")
-    )
-    return (
-        li.join(F.broadcast(q), "l_returnflag")
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            r4(F.avg("l_extendedprice")).alias("raw_mean"),
-            r4(F.avg(clipped)).alias("winsorized_mean"),
-            r4(F.any_value("p05")).alias("p05"),
-            r4(F.any_value("p95")).alias("p95"),
-        )
-    )
 
 
 @query(
@@ -1182,7 +1132,7 @@ def q_drift_ks_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "drift_ks_bucketed",
     """
     WITH tagged AS (
@@ -1211,60 +1161,10 @@ def q_drift_ks_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                  6) AS ks_stat
     FROM steps, tot
     """,
+    "Bucketed-CDF KS approximation (PSI's conditional-aggregate shape): "
+    "64 equal-width buckets over [min, max], CDFs evaluated at bucket "
+    "upper edges, max gap.",
 )
-def q_drift_ks_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed-CDF KS approximation (PSI's conditional-aggregate
-    shape): 64 equal-width buckets over [min, max], CDFs evaluated at
-    bucket upper edges, max gap.  One bounds scan + one groupBy — no
-    ordered window over anything bigger than the 64-row bucket frame.
-    Underestimates exact KS by at most the largest within-bucket CDF
-    variation (parity vs the exact form pinned in
-    tests/test_registry_smoke.py); this is the form to reach for when
-    even the distinct-value frame of ``drift_ks_value`` is corpus-scale."""
-    ev = read_sf_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    tagged = ev.select(
-        "value", (F.to_date("ts") >= F.lit("2024-01-16")).alias("recent")
-    )
-    b = tagged.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-    binned = tagged.crossJoin(F.broadcast(b)).select(
-        "recent",
-        F.when(
-            F.col("hi") > F.col("lo"),
-            F.least(
-                F.floor(
-                    (F.col("value") - F.col("lo"))
-                    / ((F.col("hi") - F.col("lo")) / F.lit(64.0))
-                ).cast("int"),
-                F.lit(63),
-            ),
-        ).otherwise(F.lit(0)).alias("bucket"),
-    )
-    d = binned.groupBy("bucket").agg(
-        F.sum(F.when(~F.col("recent"), 1).otherwise(0)).alias("n_ref"),
-        F.sum(F.when(F.col("recent"), 1).otherwise(0)).alias("n_cur"),
-    )
-    tot = d.agg(
-        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
-    )
-    w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    steps = d.select(
-        F.sum("n_ref").over(w).alias("c_ref"),
-        F.sum("n_cur").over(w).alias("c_cur"),
-    )
-    return steps.crossJoin(F.broadcast(tot)).agg(
-        F.round(
-            F.lit(1e-9)
-            + F.max(
-                F.abs(
-                    F.col("c_ref") / F.col("t_ref")
-                    - F.col("c_cur") / F.col("t_cur")
-                )
-            ),
-            6,
-        ).alias("ks_stat")
-    )
 
 
 @query(
@@ -2089,7 +1989,7 @@ def q_personalized_pagerank_recs(
     )
 
 
-@query(
+sql_query(
     "forecast_backtest_daily",
     """
     WITH daily AS (
@@ -2112,49 +2012,10 @@ def q_personalized_pagerank_recs(
              AS mase_ma7
     FROM feat WHERE rn > 7
     """,
+    "Walk-forward forecast backtest (the Hyndman-style eval every "
+    "forecasting chapter opens with): one-step MAE of three baseline "
+    "forecasters on daily revenue — naive (yesterday), 7-day trailing "
+    "mean, seasonal-naive (same weekday last week) — plus MASE (MA7 "
+    "error scaled by the naive error, the scale-free skill score; < 1 "
+    "means the model beats persistence).",
 )
-def q_forecast_backtest_daily(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Walk-forward forecast backtest (the Hyndman-style eval every
-    forecasting chapter opens with): one-step MAE of three baseline
-    forecasters on daily revenue — naive (yesterday), 7-day trailing
-    mean, seasonal-naive (same weekday last week) — plus MASE (MA7
-    error scaled by the naive error, the scale-free skill score;
-    < 1 means the model beats persistence).  The evaluation half the
-    forecasting family was missing: Holt-Winters/Croston/seasonal
-    decompose produce forecasts, this measures whether any of them
-    earns its keep against the baselines every paper demands.
-
-    One corpus-scale day aggregate; all lag/rolling features are
-    windows over the calendar-bounded daily frame (whitelisted, same
-    class as cusum/sprt), first 7 warm-up days excluded on both
-    engines."""
-    o = read_sf_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.sum("o_totalprice").alias("x")
-    )
-    w = Window.orderBy("d")
-    feat = daily.select(
-        "x",
-        F.lag("x", 1).over(w).alias("naive"),
-        F.avg("x").over(w.rowsBetween(-7, -1)).alias("ma7"),
-        F.lag("x", 7).over(w).alias("snaive"),
-        F.row_number().over(w).alias("rn"),
-    ).where(F.col("rn") > 7)
-    return feat.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        r4(F.avg(F.abs(F.col("x") - F.col("naive"))) / 1e3).alias(
-            "mae_naive_k"
-        ),
-        r4(F.avg(F.abs(F.col("x") - F.col("ma7"))) / 1e3).alias(
-            "mae_ma7_k"
-        ),
-        r4(F.avg(F.abs(F.col("x") - F.col("snaive"))) / 1e3).alias(
-            "mae_snaive_k"
-        ),
-        r4(
-            F.avg(F.abs(F.col("x") - F.col("ma7")))
-            / F.avg(F.abs(F.col("x") - F.col("naive")))
-        ).alias("mase_ma7"),
-    )

@@ -138,7 +138,7 @@ def q_window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "anomaly_zscore_daily",
     """
     WITH daily AS (
@@ -147,35 +147,14 @@ def q_window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats AS (
       SELECT event_type, AVG(cnt) AS mu, STDDEV_SAMP(cnt) AS sigma
       FROM daily GROUP BY event_type)
-    SELECT d.event_type, STRFTIME(d.d, '%Y-%m-%d') AS day, d.cnt,
+    SELECT d.event_type, CAST(CAST(d.d AS DATE) AS STRING) AS day, d.cnt,
            ROUND(1e-9 + (d.cnt - s.mu) / s.sigma, 4) AS zscore
     FROM daily d JOIN stats s ON d.event_type = s.event_type
     WHERE ABS((d.cnt - s.mu) / s.sigma) > 1.5
     """,
+    "Volume-anomaly detection: days whose event count deviates >1.5σ "
+    "from that type's mean.",
 )
-def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Volume-anomaly detection: days whose event count deviates >1.5σ
-    from that type's mean.  Two cascaded aggregates (daily counts →
-    per-type moments) + a broadcast join-back; the fact is scanned
-    once."""
-    ev = read_sf_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    stats = daily.groupBy("event_type").agg(
-        F.avg("cnt").alias("mu"), F.stddev_samp("cnt").alias("sigma")
-    )
-    z = (F.col("cnt") - F.col("mu")) / F.col("sigma")
-    return (
-        daily.join(F.broadcast(stats), "event_type")
-        .where(F.abs(z) > 1.5)
-        .select(
-            "event_type",
-            F.date_format("d", "yyyy-MM-dd").alias("day"),
-            "cnt",
-            r4(z).alias("zscore"),
-        )
-    )
 
 
 sql_query(
@@ -406,7 +385,7 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "reaggregate_daily_to_monthly",
     """
     WITH daily AS (
@@ -414,42 +393,19 @@ sql_query(
              COUNT(*) AS cnt, SUM(value) AS sv,
              MIN(value) AS mn, MAX(value) AS mx
       FROM events GROUP BY 1, 2)
-    SELECT event_type, STRFTIME(DATE_TRUNC('month', d), '%Y-%m') AS month,
+    SELECT event_type, SUBSTR(CAST(CAST(DATE_TRUNC('month', d) AS DATE) AS STRING), 1, 7) AS month,
            CAST(SUM(cnt) AS BIGINT) AS cnt,
            ROUND(1e-9 + SUM(sv) / SUM(cnt), 4) AS avg_value,
            ROUND(1e-9 + MIN(mn), 4) AS min_value,
            ROUND(1e-9 + MAX(mx), 4) AS max_value
     FROM daily GROUP BY 1, 2
     """,
+    "Materialized-view maintenance: monthly stats derived from DAILY "
+    "PARTIAL aggregates, never from raw events — count and sum re-add, "
+    "min/max re-min/max, and avg is reconstructed as merged-sum over "
+    "merged-count (avg itself is NOT re-aggregable; the partial must "
+    "carry (sum, count)).",
 )
-def q_reaggregate_daily_to_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized-view maintenance: monthly stats derived from DAILY
-    PARTIAL aggregates, never from raw events — count and sum re-add,
-    min/max re-min/max, and avg is reconstructed as merged-sum over
-    merged-count (avg itself is NOT re-aggregable; the partial must
-    carry (sum, count)).  This is how a 100 TB warehouse serves rollups:
-    the fact is aggregated once into the finest grain, every coarser
-    grain folds the one below it."""
-    ev = read_sf_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("value").alias("sv"),
-        F.min("value").alias("mn"),
-        F.max("value").alias("mx"),
-    )
-    return (
-        daily.groupBy(
-            "event_type", F.date_format("d", "yyyy-MM").alias("month")
-        )
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            r4(F.sum("sv") / F.sum("cnt")).alias("avg_value"),
-            r4(F.min("mn")).alias("min_value"),
-            r4(F.max("mx")).alias("max_value"),
-        )
-    )
 
 
 sql_query(

@@ -41,7 +41,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
+DEFAULT_SHUFFLE_PARTITIONS = "32"
 # Generated classes Spark keeps compiled (its default is 100); see the
 # module docstring.
 CODEGEN_CACHE_ENTRIES = "1024"
@@ -73,12 +73,8 @@ def get_spark(
         # semdedup, PCA/kmeans, multimodal) real matrices instead of
         # 10k-row slivers: measured ~20% faster at sf0.1.  64k rows of a
         # 64-dim double vector is ~32 MB/batch; seams that carry wide
-        # text project it away first.  Override per deployment via
-        # SPARK_GRAFT_ARROW_BATCH when executor memory is tight.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "65536"),
-        )
+        # text project it away first.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Iterative operators (pagerank/LPA) chain lazy localCheckpoints
         # whose materialization nests inside BroadcastExchange futures —

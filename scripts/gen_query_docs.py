@@ -8,9 +8,11 @@ Usage: python scripts/gen_query_docs.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def first_sentence(doc: str | None) -> str:
@@ -35,7 +37,7 @@ def main() -> None:
         rows.append((name, mod, mode, first_sentence(fn.__doc__)))
 
     n_oracle = sum(1 for r in rows if r[2] == "oracle")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
         f.write(
             "# QUERIES — the full registry catalog\n\n"
             "Auto-generated by `scripts/gen_query_docs.py`; regenerate "
@@ -66,7 +68,7 @@ def collected_test_count() -> int:
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     ).stdout
     m = re.search(r"(\d+)/\d+ tests collected|(\d+) tests collected", out)
     if not m:
@@ -82,7 +84,7 @@ def rewrite_readme_counts(n_queries: int, n_oracle: int) -> None:
     import re
 
     n_tests = collected_test_count()
-    path = "/root/repo/README.md"
+    path = os.path.join(ROOT, "README.md")
     with open(path) as f:
         text = f.read()
     text = re.sub(

@@ -12,10 +12,11 @@ parquet table (pure generators) report [].
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this tree's own root, so a copy of the repo tests its own package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 

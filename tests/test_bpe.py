@@ -4,10 +4,6 @@ and partitioning-independence."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def ref_bpe(vocab, k, eow="</w>"):
     """Sennrich et al. 2016 algorithm 1, verbatim sequential form."""

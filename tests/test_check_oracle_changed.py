@@ -217,3 +217,27 @@ def test_body_edit_flips_the_hash_through_the_query_wrapper(co):
     ha = co._query_hashes({"q": fa}, {})["q"]
     hb = co._query_hashes({"q": fb}, {})["q"]
     assert ha != hb
+
+
+def test_import_resolves_the_package_from_its_own_tree(tmp_path):
+    """Importing the script puts ITS repository first on ``sys.path``,
+    so a copy of the tree checks its own package, not another
+    checkout's."""
+    import shutil
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    copy = tmp_path / "tree"
+    skip = shutil.ignore_patterns("__pycache__")
+    for d in ("scripts", "advanced_etl_pipelines_spark"):
+        shutil.copytree(os.path.join(root, d), copy / d, ignore=skip)
+    out = subprocess.run(
+        [
+            sys.executable, "-c",
+            "import scripts.check_oracle, advanced_etl_pipelines_spark as p;"
+            " print(p.__file__)",
+        ],
+        cwd=copy, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert out.startswith(str(copy)), out

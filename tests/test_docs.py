@@ -9,9 +9,6 @@ so the generator is its keeper.)
 from __future__ import annotations
 
 import re
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 
 def _counts():

@@ -7,18 +7,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from advanced_etl_pipelines_spark.sources.layout import (
-    write_zordered,
+from advanced_etl_pipelines_spark.operators.scale import (
+    write_zorder_layout,
     zorder_value,
 )
 
 
 def test_zorder_value_interleaves_known_bits(spark):
-    """bits=2 over [0,4) quantizes each coord to its integer value;
-    morton(x=0b10, y=0b01) = y1 x1 y0 x0 = 0b0110 = 6."""
+    """bits=2 over [0,4) quantizes each coord to one of 4 levels, then
+    interleaves them as y1 x1 y0 x0."""
     df = spark.createDataFrame([(2.0, 1.0)], ["x", "y"])
     z = df.select(
-        zorder_value("x", "y", 0.0, 4.0, 0.0, 4.0, bits=2).alias("z")
+        zorder_value(["x", "y"], [0.0, 0.0], [4.0, 4.0], 2).alias("z")
     ).first()
     # bucket(2.0 over [0,4), 3 levels) = floor(2/4*3)=1 -> 0b01
     # bucket(1.0) = floor(1/4*3)=0 -> 0b00 ; morton(x=01, y=00) = 0b0001
@@ -36,7 +36,7 @@ def test_zorder_locality_beats_shuffled_layout(spark, tmp_path):
     )
     zpath = str(tmp_path / "zordered")
     rpath = str(tmp_path / "shuffled")
-    write_zordered(df, zpath, "x", "y", n_files=16)
+    write_zorder_layout(df, zpath, ["x", "y"], n_files=16)
     df.repartition(16, "id").write.mode("overwrite").parquet(rpath)
 
     pred = (

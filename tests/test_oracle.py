@@ -13,14 +13,10 @@ only sf where their VALUES literals are the right answer.
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from scripts.check_oracle import TABLES, row_multiset  # noqa: E402
+from scripts.check_oracle import TABLES, row_multiset
 
 pytestmark = pytest.mark.oracle
 

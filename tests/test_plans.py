@@ -180,7 +180,13 @@ def _unpartitioned_window_inputs(df) -> list:
         for i in range(ch.length()):
             walk(ch.apply(i))
 
-    walk(df._jdf.queryExecution().analyzed())
+    root = df._jdf.queryExecution().analyzed()
+    walk(root)
+    if root.getClass().getSimpleName() == "WithCTE":
+        # an input cut out of a SQL text may read CTE relations that only
+        # the root defines: carry the definitions along so it can run
+        logical = df.sparkSession._jvm.org.apache.spark.sql.catalyst.plans.logical
+        kids = [logical.WithCTE(kid, root.cteDefs()) for kid in kids]
     return kids
 
 

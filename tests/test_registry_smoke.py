@@ -51,9 +51,6 @@ def test_drift_ks_bucketed_parity_with_exact(spark):
 def test_lineage_extraction_known_queries(spark):
     """Plan-derived lineage matches the known table sets for a star
     join, a documents query, and a generator-only query."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
     from scripts.lineage import tables_of
 

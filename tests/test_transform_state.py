@@ -1,24 +1,13 @@
-"""transformWithStateInPandas operators (Spark 4 StatefulProcessor API):
-cross-batch state, timers, and parity with the classic GroupState twins.
-
-The auto-dispatch operators run in EVERY environment: on the new
-StatefulProcessor API where google.protobuf (the state-server protocol
-encoding) is importable, else on the classic applyInPandasWithState
-twin with identical schema and semantics — so these tests never skip,
-they pin whichever backend the environment resolves to (the round-1
-suite skipped 3 tests wherever protobuf was absent; VERDICT.md)."""
+"""Cross-batch state of ``streaming/stateful.py``'s running counter:
+totals that span micro-batches, and exactly-once recovery from a
+mid-batch kill.  (The sessionizer's tests live in test_stateful.py.)"""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from advanced_etl_pipelines_spark.sources.readers import read_sf_table
-from advanced_etl_pipelines_spark.streaming.transform_state import (
-    TWS_AVAILABLE,
-    ensure_state_store,
-    running_user_stats_auto,
-    sessionize_auto,
-)
+from advanced_etl_pipelines_spark.streaming.stateful import running_user_stats
 from advanced_etl_pipelines_spark.streaming.windows import file_event_stream
 from conftest import drain, run_available_now
 
@@ -27,7 +16,6 @@ SF = "/root/testdata/sf0.001"
 
 def test_tws_running_stats_accumulates_across_batches(spark, tmp_path):
     """4 micro-batches; last update per user == plain batch aggregate."""
-    ensure_state_store(spark)
     events = read_sf_table(spark, SF, "events").select("user_id", "value", "ts")
     src = str(tmp_path / "landing")
     events.repartition(4).write.parquet(src)
@@ -35,7 +23,7 @@ def test_tws_running_stats_accumulates_across_batches(spark, tmp_path):
     stream = file_event_stream(
         spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
     )
-    run_available_now(running_user_stats_auto(stream), "tws_running")
+    run_available_now(running_user_stats(stream), "tws_running")
 
     got = (
         spark.sql("SELECT * FROM tws_running")
@@ -57,86 +45,6 @@ def test_tws_running_stats_accumulates_across_batches(spark, tmp_path):
     }
 
 
-def test_tws_sessionize_matches_classic_twin(spark, tmp_path):
-    """Distinct sessions per user == the batch LAG sessionization."""
-    ensure_state_store(spark)
-    events = read_sf_table(spark, SF, "events").select("user_id", "ts")
-    src = str(tmp_path / "landing")
-    events.coalesce(1).write.parquet(src)
-
-    stream = file_event_stream(spark, src, spark.read.parquet(src).schema)
-    run_available_now(
-        sessionize_auto(stream, gap_seconds=1800, timeout_ms=3000), "tws_sessions"
-    )
-
-    got = spark.sql(
-        "SELECT user_id, COUNT(DISTINCT session_start) AS n "
-        "FROM tws_sessions GROUP BY user_id"
-    ).collect()
-    from pyspark.sql.window import Window
-
-    from advanced_etl_pipelines_spark.functions.features import epoch_seconds
-
-    # epoch_seconds, not a raw cast: events.ts may read as TIMESTAMP_NTZ,
-    # which cannot cast to DOUBLE directly
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap = epoch_seconds("ts") - F.lag(epoch_seconds("ts")).over(w)
-    want = {
-        r["user_id"]: r["n"]
-        for r in events.withColumn(
-            "new_s", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-        )
-        .groupBy("user_id")
-        .agg(F.sum("new_s").alias("n"))
-        .collect()
-    }
-    assert {r["user_id"]: r["n"] for r in got} == want
-
-
-def test_tws_sessionize_gap_splits_and_timer_closes(spark, tmp_path):
-    ensure_state_store(spark)
-    rows = [
-        (1, "2024-01-01 00:00:00"),
-        (1, "2024-01-01 00:10:00"),  # same session
-        (1, "2024-01-01 02:00:00"),  # > 30 min gap -> new session
-        (2, "2024-01-01 00:00:00"),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, t string").select(
-        "user_id", F.to_timestamp("t").alias("ts")
-    )
-    src = str(tmp_path / "landing")
-    df.coalesce(1).write.parquet(src)
-    stream = file_event_stream(spark, src, spark.read.parquet(src).schema)
-    run_available_now(
-        sessionize_auto(stream, gap_seconds=1800, timeout_ms=2000), "tws_gap"
-    )
-    out = spark.sql("SELECT * FROM tws_gap").collect()
-    # timer expiry may re-emit the open session as closed; group by start
-    u1 = {}
-    for r in out:
-        if r["user_id"] == 1:
-            u1.setdefault(r["session_start"], []).append(r)
-    assert len(u1) == 2
-    first, second = (u1[k] for k in sorted(u1))
-    assert any(r["closed"] and r["n_events"] == 2 for r in first)
-    assert all(r["n_events"] == 1 for r in second)
-    assert len({r["session_start"] for r in out if r["user_id"] == 2}) == 1
-
-
-def test_auto_dispatch_resolves_to_available_backend(spark):
-    """The dispatcher must pick transformWithStateInPandas exactly when
-    protobuf is importable, else the classic GroupState twin — checked
-    via the logical plan node name."""
-    events = read_sf_table(spark, SF, "events").select(
-        "user_id", "value", "ts"
-    )
-    plan = running_user_stats_auto(events)._jdf.queryExecution().analyzed().toString()
-    if TWS_AVAILABLE:
-        assert "TransformWithState" in plan
-    else:
-        assert "FlatMapGroupsInPandasWithState" in plan
-
-
 def test_stateful_processor_recovers_from_mid_batch_kill(spark, tmp_path):
     """Round-6 VERDICT item 5 — the custom-stateful analogue of the
     medallion and interval-join mid-batch-kill tests: kill the query on
@@ -147,15 +55,10 @@ def test_stateful_processor_recovers_from_mid_batch_kill(spark, tmp_path):
     PREVIOUS state version, so per-user running totals come out exactly
     once — if the replay ran against the already-advanced state, the
     batch-1 rows would double into u1's count/sum and the final-update
-    compare below would fail.  Runs on whichever backend
-    running_user_stats_auto resolves to (StatefulProcessor where
-    protobuf exists, the classic GroupState twin otherwise), like every
-    test in this file."""
+    compare below would fail."""
     import datetime as dt
 
     import pytest
-
-    ensure_state_store(spark)
 
     def ts(minute):
         return dt.datetime(2024, 1, 1, 10, minute, 0)
@@ -188,7 +91,7 @@ def test_stateful_processor_recovers_from_mid_batch_kill(spark, tmp_path):
             max_files_per_trigger=1,
         )
         return (
-            running_user_stats_auto(stream)
+            running_user_stats(stream)
             .writeStream.foreachBatch(sink)
             .outputMode("update")
             .option("checkpointLocation", ckpt)
