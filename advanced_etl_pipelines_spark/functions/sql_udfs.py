@@ -4,9 +4,11 @@ door, so users migrating from the reference's Python helpers
 (`ETL_Multi_Lvl_API/transform.py`, `ETL_Weather_API/transform.py`) can
 call them from plain `spark.sql(...)` as well as the Column API.
 
-SQL UDFs are expression templates, not Python — the body inlines into
-the calling plan and stays inside whole-stage codegen, so calling these
-from SQL costs exactly what the Column-API versions cost (pinned by
+Each function's body is the one SQL text ``functions/features.py`` keeps
+per feature (``FEATURES``), so the SQL and Column forms cannot drift
+apart.  SQL UDFs are expression templates, not Python — the body inlines
+into the calling plan and stays inside whole-stage codegen, so calling
+these from SQL costs exactly what the Column-API versions cost (pinned by
 tests/test_features.py::test_sql_udfs_match_column_api).
 """
 
@@ -14,61 +16,15 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-# Each body mirrors functions/features.py exactly (boundaries, null
-# handling, term order) — features.py docstrings carry the reference
-# citations; these are the SQL twins.
-_DEFS: dict[str, str] = {
-    "aqi_category": """
-        CREATE OR REPLACE TEMPORARY FUNCTION aqi_category(v DOUBLE)
-        RETURNS STRING RETURN
-        CASE WHEN v IS NULL THEN 'Unknown'
-             WHEN v <= 50 THEN 'Good'
-             WHEN v >= 51 AND v <= 100 THEN 'Moderate'
-             WHEN v >= 101 AND v <= 200 THEN 'Unhealthy'
-             WHEN v >= 201 AND v <= 300 THEN 'Very Unhealthy'
-             WHEN v > 300 THEN 'Hazardous'
-             ELSE 'Unknown' END
-    """,
-    "severity_score": """
-        CREATE OR REPLACE TEMPORARY FUNCTION severity_score(
-            pm2_5 DOUBLE, pm10 DOUBLE, nitrogen_dioxide DOUBLE,
-            sulphur_dioxide DOUBLE, carbon_monoxide DOUBLE, ozone DOUBLE)
-        RETURNS DOUBLE RETURN
-        COALESCE(pm2_5, 0.0) * 5.0
-        + COALESCE(pm10, 0.0) * 3.0
-        + COALESCE(nitrogen_dioxide, 0.0) * 4.0
-        + COALESCE(sulphur_dioxide, 0.0) * 4.0
-        + COALESCE(carbon_monoxide, 0.0) * 2.0
-        + COALESCE(ozone, 0.0) * 3.0
-    """,
-    "risk_class": """
-        CREATE OR REPLACE TEMPORARY FUNCTION risk_class(sev DOUBLE)
-        RETURNS STRING RETURN
-        CASE WHEN sev > 400 THEN 'High Risk'
-             WHEN sev > 200 THEN 'Moderate Risk'
-             ELSE 'Low Risk' END
-    """,
-    "temp_category": """
-        CREATE OR REPLACE TEMPORARY FUNCTION temp_category(t DOUBLE)
-        RETURNS STRING RETURN
-        CASE WHEN t IS NULL OR t <= -100 OR t > 100 THEN NULL
-             WHEN t <= 0 THEN 'very_cold'
-             WHEN t <= 10 THEN 'cold'
-             WHEN t <= 20 THEN 'mild'
-             WHEN t <= 30 THEN 'warm'
-             ELSE 'hot' END
-    """,
-    "feels_like_c": """
-        CREATE OR REPLACE TEMPORARY FUNCTION feels_like_c(
-            temp_c DOUBLE, rel_humidity DOUBLE)
-        RETURNS DOUBLE RETURN
-        temp_c - (rel_humidity / 100.0) * 2.0
-    """,
-}
+from advanced_etl_pipelines_spark.functions.features import FEATURES
 
 
 def register_sql_udfs(spark: SparkSession) -> list[str]:
     """Register every SQL feature UDF on the session; returns names."""
-    for ddl in _DEFS.values():
-        spark.sql(ddl)
-    return sorted(_DEFS)
+    for name, (params, returns, body) in FEATURES.items():
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}"
+            f"({', '.join(f'{p} DOUBLE' for p in params)})"
+            f" RETURNS {returns} RETURN {body.format(**{p: p for p in params})}"
+        )
+    return sorted(FEATURES)

@@ -28,6 +28,9 @@ def run_medallion(
     concurrent Spark actions, the load submitted first as the critical path.
     All of them end before the first failure in submission order is
     re-raised, so no write outlives the call (`etl_pipeline.py:62-79`).
+    The report plans are built before any write is submitted, so the jobs
+    of the writes reach Spark's FIFO scheduler in the same order on every
+    call, whatever the relative speed of plan building and jobs.
 
     Returns seconds per step: ``transform``, and ``load``/``analysis`` when
     run, both timed from the start of the concurrent phase, so they overlap.

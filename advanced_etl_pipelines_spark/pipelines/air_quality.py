@@ -17,6 +17,13 @@ The warehouse upsert and the three report writes depend only on the
 staged table, so they run concurrently (``pipelines.run_medallion``): on
 batch-sized data each write is a fixed 0.1–0.25 s of job setup, commit
 and file I/O (4-core local session), which overlap hides and cores do not.
+The three report plans are built before any write starts, so the
+writes' jobs reach Spark's FIFO scheduler in the same order on every op.
+
+Every derived column and filter is SQL text generated in Python from the
+inferred JSON schema: a ``where`` string costs one py4j round trip and a
+``selectExpr`` one per item plus a few, whatever the item's size, where
+the same expression as a ``Column`` chain costs one or more per method.
 
 Scale notes (100 TB): the only shuffle in the transform is the
 (city, time) dedup aggregate — partial aggregation runs map-side, so the
@@ -30,12 +37,14 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from advanced_etl_pipelines_spark.functions.features import (
+    SEVERITY_WEIGHTS,
     aqi_category_pm25,
+    feature_sql,
     risk_class_from_severity,
     severity_score,
 )
@@ -70,22 +79,30 @@ def _struct_fields(df: DataFrame, name: str) -> list[str]:
     return []
 
 
-def _filename_hint() -> Column:
-    """City from the landing filename, e.g. ``mumbai_raw_2025….json``
-    (`ETL_Multi_Lvl_API/transform.py:104-106`)."""
-    return F.regexp_extract(F.input_file_name(), r"([^/_]+)_raw_", 1)
-
-
 def read_raw(spark: SparkSession, raw_dir: str) -> DataFrame:
     """S4: multiLine JSON directory scan with corrupt-file tolerance
     (`ETL_Multi_Lvl_API/transform.py:83-87,217-222`).  One row per raw
-    payload document, plus the source-filename city hint."""
+    payload document, plus the city hint from the landing filename, e.g.
+    ``mumbai_raw_2025….json`` (`transform.py:104-106`)."""
     return (
         spark.read.option("multiLine", "true")
         .option("mode", "PERMISSIVE")
         .json(f"{raw_dir}/*_raw_*.json")
-        .withColumn("_file_hint", _filename_hint())
+        .withColumn(
+            "_file_hint",
+            F.expr("regexp_extract(input_file_name(), '([^/_]+)_raw_', 1)"),
+        )
     )
+
+
+def _typed(cols: list[str], present: list[str]) -> list[str]:
+    """``cols`` as DOUBLE select items: cast with null-on-failure where
+    present, a NULL column where absent (P4, P9)."""
+    return [
+        f"TRY_CAST(`{c}` AS DOUBLE) AS `{c}`" if c in present
+        else f"CAST(NULL AS DOUBLE) AS `{c}`"
+        for c in cols
+    ]
 
 
 def parse_hourly_array(raw: DataFrame) -> DataFrame:
@@ -101,44 +118,34 @@ def parse_hourly_array(raw: DataFrame) -> DataFrame:
     fields = _struct_fields(raw, "hourly")
     if "time" not in fields:
         return None  # shape not present in this corpus
-    docs = raw.where(F.col("hourly").isNotNull() & F.col("hourly.time").isNotNull())
-
-    zip_cols = [F.col("hourly.time").alias("time")]
-    null_cols: list[str] = []
+    arrays = {}
     for col in POLLUTANT_COLS:
         variants = [col, col.replace("_", "."), col.replace("_", "")]
         found = next((v for v in variants if v in fields), None)
-        if found is None:
-            null_cols.append(col)
-        else:
+        if found is not None:
             # a NULL array (key absent from one document) nulls the zip
-            zip_cols.append(F.coalesce(F.col(f"hourly.`{found}`"), F.array()).alias(col))
+            arrays[col] = f"coalesce(hourly.`{found}`, array())"
 
     # city from payload else filename hint else "unknown"
     # (transform.py:103-106,121; `or` semantics: empty string is falsy)
     top = [f.name for f in raw.schema.fields]
-    city_chain = [
-        F.nullif(F.trim(F.col(c).cast("string")), F.lit(""))
-        for c in ("city", "name")
-        if c in top
-    ]
-    city = F.coalesce(
-        *city_chain, F.nullif(F.col("_file_hint"), F.lit("")), F.lit("unknown")
+    city = ", ".join(
+        [f"nullif(trim(CAST(`{c}` AS STRING)), '')" for c in ("city", "name") if c in top]
+        + ["nullif(_file_hint, '')", "'unknown'"]
     )
-
-    out = docs.select(
-        city.alias("city"), F.explode(F.arrays_zip(*zip_cols)).alias("z")
-    ).select(
-        "city",
-        F.to_timestamp(F.col("z.time")).alias("time"),  # naive ISO → UTC
-        *[
-            F.col(f"z.`{c}`").try_cast("double").alias(c)
-            for c in POLLUTANT_COLS
-            if c not in null_cols
-        ],
-    )
-    return ensure_schema(out, {c: "double" for c in null_cols}).select(
-        "city", "time", *POLLUTANT_COLS
+    return (
+        raw.where("hourly IS NOT NULL AND hourly.time IS NOT NULL")
+        .selectExpr(
+            f"coalesce({city}) AS city",
+            "hourly.time AS time",
+            *[f"{a} AS `{c}`" for c, a in arrays.items()],
+        )
+        .selectExpr("city", f"inline(arrays_zip({', '.join(['time', *arrays])}))")
+        .selectExpr(
+            "city",
+            "to_timestamp(time) AS time",  # naive ISO → UTC
+            *_typed(POLLUTANT_COLS, list(arrays)),
+        )
     )
 
 
@@ -153,14 +160,14 @@ PARAM_SYNONYMS = {
 }
 
 
-def map_param(p: Column) -> Column:
-    """P3: parameter-name normalization
+def map_param(p: str) -> str:
+    """P3: parameter-name normalization of the SQL expression ``p``
     (`ETL_Multi_Lvl_API/transform.py:171-191`); unknown → NULL."""
-    norm = F.lower(F.trim(p))
-    expr = F.lit(None).cast("string")
-    for target, names in reversed(PARAM_SYNONYMS.items()):
-        expr = F.when(norm.isin(names), F.lit(target)).otherwise(expr)
-    return expr
+    whens = " ".join(
+        f"WHEN lower(trim({p})) IN ({', '.join(map(repr, names))}) THEN '{target}'"
+        for target, names in PARAM_SYNONYMS.items()
+    )
+    return f"CASE {whens} ELSE CAST(NULL AS STRING) END"
 
 
 def parse_measurement_list(raw: DataFrame) -> DataFrame:
@@ -171,42 +178,35 @@ def parse_measurement_list(raw: DataFrame) -> DataFrame:
     schema; the long→wide pivot is one conditional mean per listed
     pollutant, so the output schema is fixed in a single aggregate.
     """
-    if "results" not in [f.name for f in raw.schema.fields]:
+    types = {f.name: f.dataType for f in raw.schema.fields}
+    if "results" not in types:
         return None
-    docs = raw.where(F.col("results").isNotNull())
-    loc = docs.select(
-        "_file_hint", F.explode(F.col("results")).alias("r")
-    )
+    el = types["results"].elementType
+    rtypes = {s.name: s.dataType for s in el.fields} if hasattr(el, "fields") else {}
 
-    def first_of(struct: str, fields, names: list[str]) -> Column:
+    def first_of(struct: str, fields, names: list[str]) -> str:
         """The first non-null of ``struct``'s ``names`` present in ``fields``."""
-        present = [F.col(f"{struct}.`{n}`") for n in names if n in fields]
-        return F.coalesce(*present) if present else F.lit(None)
-
-    el = docs.schema["results"].dataType.elementType
-    rfields = [sub.name for sub in el.fields] if hasattr(el, "fields") else []
-    city = F.coalesce(
-        *[
-            F.nullif(F.trim(first_of("r", rfields, [n]).cast("string")), F.lit(""))
-            for n in ("city", "name", "location")
-        ],
-        F.nullif(F.col("_file_hint"), F.lit("")),
-    )
+        present = [f"{struct}.`{n}`" for n in names if n in fields]
+        return f"coalesce({', '.join(present)})" if present else "NULL"
 
     params_field = next(
         (
             n
             for n in ("parameters", "measurements", "latest", "latestMeasurements")
-            if n in rfields
+            if n in rtypes
         ),
         None,
     )
     if params_field is None:
         return None
-    long = loc.select(
-        city.alias("city"), F.explode(F.col(f"r.`{params_field}`")).alias("p")
+    city = ", ".join(
+        [
+            f"nullif(trim(CAST({first_of('r', rtypes, [n])} AS STRING)), '')"
+            for n in ("city", "name", "location")
+        ]
+        + ["nullif(_file_hint, '')"]
     )
-    pt = long.schema["p"].dataType
+    pt = getattr(rtypes[params_field], "elementType", None)
     sub_types = {s.name: s.dataType for s in pt.fields} if hasattr(pt, "fields") else {}
     param = first_of("p", sub_types, ["parameter", "param", "name"])
     value = first_of("p", sub_types, ["lastValue", "value", "avg"])
@@ -215,32 +215,35 @@ def parse_measurement_list(raw: DataFrame) -> DataFrame:
     # the chain — a corpus may mix struct-shaped and string-shaped
     # timestamp fields across files, so each candidate contributes its
     # own variant rather than a struct hijacking the whole chain.
-    ts_parts: list[Column] = []
+    ts_parts: list[str] = []
     for name in ("lastUpdated", "lastUpdatedAt", "date", "time"):
         t = sub_types.get(name)
         if t is None:
             continue
         if hasattr(t, "fields"):
             inner = [s.name for s in t.fields]
-            ts_parts.extend(
-                F.col(f"p.`{name}`.`{k}`") for k in ("utc", "local") if k in inner
-            )
+            ts_parts.extend(f"p.`{name}`.`{k}`" for k in ("utc", "local") if k in inner)
         else:
-            ts_parts.append(F.col(f"p.`{name}`"))
-    ts = F.coalesce(*ts_parts) if ts_parts else F.lit(None)
+            ts_parts.append(f"p.`{name}`")
+    ts = f"coalesce({', '.join(ts_parts)})" if ts_parts else "NULL"
 
-    rows = long.select(
-        "city",
-        F.to_timestamp(ts.cast("string")).alias("time"),
-        map_param(param.cast("string")).alias("param_col"),
-        value.cast("string").try_cast("double").alias("value"),
-    ).where(F.col("param_col").isNotNull())
-
+    rows = (
+        raw.where("results IS NOT NULL")
+        .selectExpr("_file_hint", "explode(results) AS r")
+        .selectExpr(f"coalesce({city}) AS city", f"explode(r.`{params_field}`) AS p")
+        .selectExpr(
+            "city",
+            f"to_timestamp(CAST({ts} AS STRING)) AS time",
+            f"{map_param(f'CAST({param} AS STRING)')} AS param_col",
+            f"TRY_CAST(CAST({value} AS STRING) AS DOUBLE) AS value",
+        )
+        .where("param_col IS NOT NULL")
+    )
     # groupby(city,time,param).mean → pivot_table(mean)  (transform.py:196-202)
     # as one conditional mean per pollutant: a pivot plans two aggregates
     return rows.groupBy("city", "time").agg(
         *[
-            F.avg(F.when(F.col("param_col") == c, F.col("value"))).alias(c)
+            F.expr(f"avg(CASE WHEN param_col = '{c}' THEN value END) AS `{c}`")
             for c in POLLUTANT_COLS
         ]
     )
@@ -262,31 +265,26 @@ def transform(parsed: DataFrame) -> DataFrame:
     """Coerce → drop-all-null → dedup-mean → derived features
     (`transform.py:244-272`).  One lazy plan: the only shuffle is the
     (city, time) aggregate, with map-side partial aggregation."""
-    df = parsed.select(
-        "city",
-        F.col("time"),
-        *[F.col(c).try_cast("double").alias(c) for c in POLLUTANT_COLS],
+    return (
+        parsed.selectExpr("city", "time", *_typed(POLLUTANT_COLS, POLLUTANT_COLS))
+        # P5: keep rows where ANY pollutant is non-null (transform.py:250)
+        .where(" OR ".join(f"{c} IS NOT NULL" for c in POLLUTANT_COLS))
+        # A1: duplicate readings per (city, time) collapse to the mean
+        .groupBy("city", "time")
+        .agg(*[F.expr(f"avg({c}) AS {c}") for c in POLLUTANT_COLS])
+        # F1-F4 as native expressions (no Python apply; transform.py:265-268)
+        .selectExpr(
+            "city",
+            "time",
+            "hour(time) AS hour",
+            *POLLUTANT_COLS,
+            f"{feature_sql('aqi_category', 'pm2_5')} AS aqi_pm25",
+            f"{feature_sql('severity_score', *SEVERITY_WEIGHTS)} AS severity",
+        )
+        .selectExpr(
+            *STAGED_COLS[:-1], f"{feature_sql('risk_class', 'severity')} AS risk_class"
+        )
     )
-    # P5: keep rows where ANY pollutant is non-null (transform.py:250)
-    any_present = None
-    for c in POLLUTANT_COLS:
-        cond = F.col(c).isNotNull()
-        any_present = cond if any_present is None else (any_present | cond)
-    df = df.where(any_present)
-
-    # A1: duplicate readings per (city, time) collapse to the mean
-    df = df.groupBy("city", "time").agg(
-        *[F.avg(c).alias(c) for c in POLLUTANT_COLS]
-    )
-
-    # F1-F4 as native expressions (no Python apply; transform.py:265-268)
-    df = (
-        df.withColumn("hour", F.hour("time"))
-        .withColumn("aqi_pm25", aqi_category_pm25("pm2_5"))
-        .withColumn("severity", severity_score())
-        .withColumn("risk_class", risk_class_from_severity("severity"))
-    )
-    return df.select(*STAGED_COLS)
 
 
 def write_staged(df: DataFrame, path: str) -> None:
@@ -323,37 +321,27 @@ def summary_metrics(df: DataFrame) -> DataFrame:
     (`etl_analysis.py:167-224,359-380`).  Three tiny argmax aggregates;
     ties break like pandas ``idxmax`` (first key in sorted group order)."""
 
-    def argmax(value_col: str, key: Column, metric: str, val_metric: str) -> DataFrame:
-        top = (
-            df.where(key.isNotNull())
-            .groupBy(key.alias("k"))
-            .agg(F.avg(value_col).alias("v"))
-            .where(F.col("v").isNotNull())
-            .orderBy(F.desc("v"), F.asc("k"))
-            .limit(1)
+    def argmax(value_col: str, key: str, metric: str) -> DataFrame:
+        pairs = ", ".join(
+            f"named_struct('metric', '{name}', 'value', CAST({c} AS STRING))"
+            for name, c in ((metric, "k"), (f"{metric}_value", "v"))
         )
-        return top.select(
-            F.explode(
-                F.array(
-                    F.struct(F.lit(metric).alias("metric"), F.col("k").cast("string").alias("value")),
-                    F.struct(F.lit(val_metric).alias("metric"), F.col("v").cast("string").alias("value")),
-                )
-            ).alias("m")
-        ).select("m.metric", "m.value")
+        return (
+            df.selectExpr(f"{key} AS k", f"{value_col} AS x")
+            .where("k IS NOT NULL")
+            .groupBy("k")
+            .agg(F.expr("avg(x) AS v"))
+            .where("v IS NOT NULL")
+            .orderBy(F.desc("v"), "k")
+            .limit(1)
+            .selectExpr(f"inline(array({pairs}))")
+        )
 
-    city_pm = argmax(
-        "pm2_5", F.col("city"), "city_highest_avg_pm2_5", "city_highest_avg_pm2_5_value"
+    return (
+        argmax("pm2_5", "city", "city_highest_avg_pm2_5")
+        .unionAll(argmax("severity", "city", "city_highest_severity"))
+        .unionAll(argmax("pm2_5", "hour(time)", "hour_with_worst_avg_pm2_5"))
     )
-    city_sev = argmax(
-        "severity", F.col("city"), "city_highest_severity", "city_highest_severity_value"
-    )
-    hour_pm = argmax(
-        "pm2_5",
-        F.hour("time"),
-        "hour_with_worst_avg_pm2_5",
-        "hour_with_worst_avg_pm2_5_value",
-    )
-    return city_pm.unionAll(city_sev).unionAll(hour_pm)
 
 
 def city_risk_distribution(df: DataFrame) -> DataFrame:
@@ -361,20 +349,21 @@ def city_risk_distribution(df: DataFrame) -> DataFrame:
     (`etl_analysis.py:227-245`), ordered by city like pandas groupby.
     The pivot is one conditional count per class, and the single output
     partition is sorted in place: no range shuffle for a few rows."""
-    counts = df.groupBy("city").agg(
-        *[F.count(F.when(F.col("risk_class") == c, 1)).alias(c) for c in RISK_CLASSES]
-    )
-    total = sum(F.col(c) for c in RISK_CLASSES)
+    pct = ("pct_high", "pct_moderate", "pct_low")
     return (
-        counts.withColumn("total_hours", total)
-        .withColumn("pct_high", F.col("High Risk") / F.col("total_hours") * 100)
-        .withColumn("pct_moderate", F.col("Moderate Risk") / F.col("total_hours") * 100)
-        .withColumn("pct_low", F.col("Low Risk") / F.col("total_hours") * 100)
+        df.groupBy("city")
+        .agg(
+            *[
+                F.expr(f"count(CASE WHEN risk_class = '{c}' THEN 1 END) AS `{c}`")
+                for c in RISK_CLASSES
+            ]
+        )
+        .selectExpr("*", " + ".join(f"`{c}`" for c in RISK_CLASSES) + " AS total_hours")
+        .selectExpr(
+            "*", *[f"`{c}` / total_hours * 100 AS {p}" for c, p in zip(RISK_CLASSES, pct)]
+        )
         .coalesce(1)
         .sortWithinPartitions("city")
-        .select(
-            "city", *RISK_CLASSES, "total_hours", "pct_high", "pct_moderate", "pct_low"
-        )
     )
 
 
@@ -384,11 +373,7 @@ def pollution_trends(df: DataFrame) -> DataFrame:
     df = ensure_schema(df, {c: "double" for c in ("pm2_5", "pm10", "ozone")})
     return (
         df.groupBy("city", "time")
-        .agg(
-            F.avg("pm2_5").alias("pm2_5"),
-            F.avg("pm10").alias("pm10"),
-            F.avg("ozone").alias("ozone"),
-        )
+        .agg(*[F.expr(f"avg({c}) AS {c}") for c in ("pm2_5", "pm10", "ozone")])
         .coalesce(1)
         .sortWithinPartitions("city", "time")
     )
@@ -397,7 +382,7 @@ def pollution_trends(df: DataFrame) -> DataFrame:
 def analyze(df: DataFrame) -> dict[str, DataFrame]:
     """`etl_analysis.py:346-411` minus the PNG sinks: city trim (P10),
     recompute guard, then the three processed outputs."""
-    df = df.withColumn("city", F.trim(F.col("city").cast("string")))
+    df = df.withColumn("city", F.expr("trim(CAST(city AS STRING))"))
     df = _recompute_guard(df)
     return {
         "summary_metrics": summary_metrics(df),

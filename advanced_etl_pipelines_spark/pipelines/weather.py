@@ -9,6 +9,9 @@ staged CSV) → ``load.py`` (append-insert) → ``etl_analysis.py:98-161``
 The append load and the three report writes run concurrently
 (``pipelines.run_medallion``): each pays a fixed job setup and commit
 cost that dwarfs its few rows, so they overlap instead of queueing.
+Derived columns are SQL text built from the inferred schema (see
+``air_quality``), so a plan costs a few py4j round trips per step, not
+one per ``Column`` call.
 
 Timestamps: the raw payload carries NAIVE local wall-clock strings
 (``timezone=auto`` → Asia/Kolkata in the checked-in data) and the
@@ -24,10 +27,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from advanced_etl_pipelines_spark.functions.features import (
-    feels_like_c,
-    temp_category,
-)
+from advanced_etl_pipelines_spark.functions.features import feature_sql
 from advanced_etl_pipelines_spark.pipelines import run_medallion
 
 RENAMES = {  # P7: ETL_Weather_API/transform.py:62-66
@@ -37,17 +37,6 @@ RENAMES = {  # P7: ETL_Weather_API/transform.py:62-66
 }
 
 SENSOR_COLS = ["temperature_c", "relative_humidity", "wind_speed_kmh"]
-
-STAGED_COLS = [
-    "time",
-    "temperature_c",
-    "relative_humidity",
-    "wind_speed_kmh",
-    "date",
-    "hour",
-    "temp_category",
-    "feels_like_c",
-]
 
 
 def read_raw(spark: SparkSession, paths: str | list[str]) -> DataFrame:
@@ -71,53 +60,53 @@ def flatten(raw: DataFrame) -> DataFrame:
     for f in raw.schema.fields:
         if f.name == "hourly" and hasattr(f.dataType, "fields"):
             fields = [s.name for s in f.dataType.fields]
-    zip_cols = [F.col("hourly.time").alias("time")]
-    missing = []
-    for m in METRIC_FIELDS:
-        if m in fields:
+    present = [m for m in METRIC_FIELDS if m in fields]
+    return (
+        raw.selectExpr(
+            "hourly.time AS time",
             # a NULL array (key absent from one document) nulls the zip
-            zip_cols.append(F.coalesce(F.col(f"hourly.`{m}`"), F.array()).alias(m))
-        else:
-            missing.append(m)
-    out = raw.select(F.explode(F.arrays_zip(*zip_cols)).alias("z")).select(
-        "z.*"
+            *[f"coalesce(hourly.`{m}`, array()) AS {m}" for m in present],
+        )
+        .selectExpr(f"inline(arrays_zip({', '.join(['time', *present])}))")
+        .selectExpr(
+            "time",
+            *[m if m in present else f"CAST(NULL AS DOUBLE) AS {m}" for m in METRIC_FIELDS],
+        )
     )
-    for m in missing:
-        out = out.withColumn(m, F.lit(None).cast("double"))
-    return out.select("time", *METRIC_FIELDS)
 
 
 def transform(flat: DataFrame) -> DataFrame:
     """Rename → coerce → features → drop-all-null
     (`ETL_Weather_API/transform.py:56-81`), one lazy shuffle-free plan."""
-    df = flat.withColumnsRenamed(RENAMES)
-    df = df.withColumn("time", F.to_timestamp("time"))
-    df = df.withColumns(
-        {c: F.col(c).try_cast("double") for c in SENSOR_COLS}
+    return (
+        flat.selectExpr(
+            "to_timestamp(time) AS time",
+            *[f"TRY_CAST({src} AS DOUBLE) AS {dst}" for src, dst in RENAMES.items()],
+        )
+        .selectExpr(
+            "time",
+            *SENSOR_COLS,
+            "to_date(time) AS date",  # F5
+            "hour(time) AS hour",  # F4
+            f"{feature_sql('temp_category', 'temperature_c')} AS temp_category",  # F6
+            f"{feature_sql('feels_like_c', 'temperature_c', 'relative_humidity')}"
+            " AS feels_like_c",  # F7
+        )
+        .na.drop(how="all", subset=SENSOR_COLS)  # P5
     )
-    df = df.withColumns(
-        {
-            "date": F.to_date("time"),  # F5
-            "hour": F.hour("time"),  # F4
-            "temp_category": temp_category("temperature_c"),  # F6
-            "feels_like_c": feels_like_c(),  # F7
-        }
-    )
-    df = df.na.drop(how="all", subset=SENSOR_COLS)  # P5
-    return df.select(*STAGED_COLS)
 
 
 def analysis_summary(df: DataFrame) -> DataFrame:
     """A8: one-row global summary (`ETL_Weather_API/etl_analysis.py:107-122`).
     ``time_min``/``time_max`` are stringified like the reference's
     ``str(Timestamp)``."""
-    return df.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.date_format(F.min("time"), "yyyy-MM-dd HH:mm:ss").alias("time_min"),
-        F.date_format(F.max("time"), "yyyy-MM-dd HH:mm:ss").alias("time_max"),
-        F.avg("temperature_c").alias("temp_mean"),
-        F.avg("relative_humidity").alias("humidity_mean"),
-        F.avg("wind_speed_kmh").alias("wind_mean"),
+    return df.selectExpr(
+        "count(1) AS rows",
+        "date_format(min(time), 'yyyy-MM-dd HH:mm:ss') AS time_min",
+        "date_format(max(time), 'yyyy-MM-dd HH:mm:ss') AS time_max",
+        "avg(temperature_c) AS temp_mean",
+        "avg(relative_humidity) AS humidity_mean",
+        "avg(wind_speed_kmh) AS wind_mean",
     )
 
 
@@ -127,7 +116,7 @@ def hourly_avg_temp(df: DataFrame) -> DataFrame:
     within its single output partition."""
     return (
         df.groupBy("date", "hour")
-        .agg(F.avg("temperature_c").alias("temperature_c"))
+        .agg(F.expr("avg(temperature_c) AS temperature_c"))
         .coalesce(1)
         .sortWithinPartitions("date", "hour")
     )
@@ -138,7 +127,7 @@ def daily_avg_temp(df: DataFrame) -> DataFrame:
     sorted within its single output partition."""
     return (
         df.groupBy("date")
-        .agg(F.avg("temperature_c").alias("temperature_c"))
+        .agg(F.expr("avg(temperature_c) AS temperature_c"))
         .coalesce(1)
         .sortWithinPartitions("date")
     )

@@ -33,6 +33,15 @@ choices are scale-oriented:
   swapped ID (``simpsons_paradox_probe`` recompiled 4 classes on repeat
   runs).  This one is a runtime setting, so ``configure_existing``
   applies it too.
+* No Python call-site capture (``spark.python.sql.dataFrameDebugging``
+  off) — with it on, every classic ``Column`` method and ``F.col`` first
+  records the calling Python line in the JVM: about five extra py4j
+  round trips a call (active session, a reflection lookup of
+  ``PySparkCurrentOrigin``, a config read, ``set``, ``clear``).
+  Measured on 4 vCPU (median of 200 builds): ``(F.col("a") + 1)
+  .alias("b")`` took 3.9 ms with capture and 1.0 ms without.  The captured line only shows in
+  analysis-error messages.  The setting is static, like the codegen
+  cache: only a session ``get_spark`` builds has it off.
 """
 
 from __future__ import annotations
@@ -89,6 +98,7 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -102,7 +112,9 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     Static settings are not in that subset: such a session keeps its own
     codegen cache size (Spark's default is 100 classes), which cannot be
     changed at runtime, so a workload cycling through more generated
-    classes than that recompiles them on every pass."""
+    classes than that recompiles them on every pass.  It also keeps
+    PySpark's call-site capture on, so each ``Column`` call there costs
+    about five more py4j round trips."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")

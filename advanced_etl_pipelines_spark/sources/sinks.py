@@ -16,7 +16,10 @@ Scale notes: the anti-join shuffles on the key columns only; with the
 target partitioned (e.g. by city) a real MERGE prunes to touched
 partitions.  The swap is two-phase (write to a side dir, then rename) so
 readers never observe a half-written table — the single-writer equivalent
-of a lakehouse transaction log.
+of a lakehouse transaction log.  ``upsert_parquet_partitioned`` swaps the
+partition directories it finds in the side dir, under the names Spark
+escaped them to, and refuses a NULL partition value, which its anti join
+could never match.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 
@@ -82,7 +86,11 @@ def upsert_parquet_partitioned(
     I/O, not the table's.
 
     ``partition_col`` must be one of ``keys`` (otherwise a key could move
-    between partitions and leave a stale copy behind).
+    between partitions and leave a stale copy behind).  A NULL
+    ``partition_col`` in a merge raises ``ValueError``: the anti join
+    cannot match a NULL key, so the table would keep the old row beside
+    the new one.  The table is read with ``updates``' schema, partition
+    column last, so the merge runs no schema-inference job.
     """
     if partition_col not in keys:
         raise ValueError("partition_col must be part of the upsert keys")
@@ -91,7 +99,10 @@ def upsert_parquet_partitioned(
         updates.write.mode("overwrite").partitionBy(partition_col).parquet(path)
         return
     parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    existing = spark.read.parquet(path).where(
+    if None in parts:
+        raise ValueError(f"cannot upsert rows with a NULL {partition_col}")
+    fields = sorted(updates.schema.fields, key=lambda f: f.name == partition_col)
+    existing = spark.read.schema(StructType(fields)).parquet(path).where(
         F.col(partition_col).isin(parts)  # partition-pruned scan
     )
     merged = existing.join(updates, list(keys), "left_anti").unionByName(
@@ -100,16 +111,18 @@ def upsert_parquet_partitioned(
     # Two-phase, partition-scoped swap: materialize ONLY the affected
     # partitions to a side dir, then replace those partition dirs in
     # place (Spark can't overwrite a path it is reading; a lakehouse
-    # table format would commit this as one MERGE transaction).
+    # table format would commit this as one MERGE transaction).  The
+    # side dir is listed rather than named from ``parts``: Spark escapes
+    # some characters in partition directory names (``a:b`` is written
+    # as ``a%3Ab``).
     tmp = path.rstrip("/") + "__tmp"
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-    for p in parts:
-        src = os.path.join(tmp, f"{partition_col}={p}")
-        dst = os.path.join(path, f"{partition_col}={p}")
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        if os.path.exists(src):
-            os.replace(src, dst)
+    for name in os.listdir(tmp):
+        if name.startswith(f"{partition_col}="):
+            dst = os.path.join(path, name)
+            if os.path.exists(dst):
+                shutil.rmtree(dst)
+            os.replace(os.path.join(tmp, name), dst)
     shutil.rmtree(tmp, ignore_errors=True)
 
 

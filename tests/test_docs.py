@@ -10,6 +10,10 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
+from scripts.gen_query_docs import first_sentence
+
 
 def _counts():
     import __spark_entry__ as e
@@ -48,3 +52,22 @@ def test_queries_md_counts_match_registry():
     import __spark_entry__ as e
 
     assert set(rows) == set(e.queries()), "QUERIES.md rows drifted"
+
+
+@pytest.mark.parametrize(
+    "doc, want",
+    [
+        ("DSIR-style weighting (Xie et al. 2023): w = p/q. More.",
+         "DSIR-style weighting (Xie et al. 2023): w = p/q."),
+        ("Covers e.g. Latin scripts. More.", "Covers e.g. Latin scripts."),
+        ("Slack grows with lag, cf. Flink. More.", "Slack grows with lag, cf. Flink."),
+        ("Model A vs. model B. More.", "Model A vs. model B."),
+        ("Fills in gaps (a. b. c) per key. More.", "Fills in gaps (a. b. c) per key."),
+        ("A 1st, 2nd (... and so on. ) index. More.", "A 1st, 2nd (... and so on. ) index."),
+        ("One sentence.", "One sentence."),
+        ("No stop at all", "No stop at all"),
+    ],
+    ids=["et-al", "e.g.", "cf.", "vs.", "parentheses", "ellipsis", "one", "none"],
+)
+def test_first_sentence_skips_abbreviations_and_parentheses(doc, want):
+    assert first_sentence(doc) == want

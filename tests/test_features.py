@@ -9,7 +9,6 @@ bins. Expected values are hand-computed from the reference formulas
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from advanced_etl_pipelines_spark.functions.features import (
     aqi_category_pm25,
@@ -158,9 +157,8 @@ def test_sql_udfs_match_column_api(spark):
         aqi_category_pm25("v").alias("a"),
         risk_class_from_severity("v").alias("r"),
         temp_category("v").alias("t"),
-        severity_score("v", "v", F.lit(None), "v", F.lit(None), "v")
-        .alias("s"),
-        feels_like_c("v", F.lit(50.0)).alias("f"),
+        severity_score("v", "v", "NULL", "v", "NULL", "v").alias("s"),
+        feels_like_c("v", "50.0").alias("f"),
     ).collect()
     assert sorted(map(tuple, got), key=str) == sorted(
         map(tuple, want), key=str

@@ -76,3 +76,37 @@ def test_partition_pruning_in_scan_plan(spark, tmp_path):
     )
     assert "PartitionFilters" in plan
     assert "city" in plan.split("PartitionFilters")[1][:200]
+
+
+def test_partitioned_upsert_escaped_partition_value(spark, tmp_path):
+    """Spark escapes some characters in partition directory names
+    (``city=a%3Ab`` for ``a:b``); a second upsert still replaces the
+    overlapping hour and adds the new one."""
+    path = str(tmp_path / "wh")
+    upsert_parquet_partitioned(
+        spark, _aq(spark, "a:b", range(2)), path, ["city", "time"], "city"
+    )
+    upsert_parquet_partitioned(
+        spark, _aq(spark, "a:b", range(1, 3), base_temp=100.0), path,
+        ["city", "time"], "city",
+    )
+    assert [d for d in os.listdir(path) if d.startswith("city=")] == ["city=a%3Ab"]
+    out = spark.read.parquet(path).collect()
+    assert {r["time"].hour: r["pm"] for r in out} == {0: 10.0, 1: 101.0, 2: 102.0}
+    assert {r["city"] for r in out} == {"a:b"}
+
+
+def test_partitioned_upsert_rejects_null_partition_value(spark, tmp_path):
+    """The anti join cannot match a NULL key, so a NULL partition value
+    would leave the old row beside the new one: the merge raises and the
+    table is unchanged."""
+    path = str(tmp_path / "wh")
+    upsert_parquet_partitioned(
+        spark, _aq(spark, "delhi", range(2)), path, ["city", "time"], "city"
+    )
+    with pytest.raises(ValueError, match="NULL city"):
+        upsert_parquet_partitioned(
+            spark, _aq(spark, None, range(2)), path, ["city", "time"], "city"
+        )
+    assert [d for d in os.listdir(path) if d.startswith("city=")] == ["city=delhi"]
+    assert spark.read.parquet(path).count() == 2

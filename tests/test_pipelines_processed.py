@@ -2,7 +2,8 @@
 every processed CSV pinned against an eager pandas evaluation of the
 reference formulas (`ETL_Multi_Lvl_API/transform.py`, `etl_analysis.py`;
 `ETL_Weather_API/transform.py`, `etl_analysis.py`), plus failure
-propagation out of the concurrent load-and-report phase.
+propagation out of the concurrent load-and-report phase and the py4j
+round trips that building the plans costs.
 
 The AQ batch mixes both raw shapes and carries a duplicate reading in each
 (two hourly documents share an hour; one measurement list repeats a
@@ -13,14 +14,18 @@ picks the first city in sorted order.
 
 from __future__ import annotations
 
+import gc
 import glob
 import json
 import math
+from collections import Counter
 
 import pandas as pd
 import pytest
 
+from advanced_etl_pipelines_spark.functions import features
 from advanced_etl_pipelines_spark.pipelines import air_quality as aq
+from advanced_etl_pipelines_spark.pipelines import run_medallion
 from advanced_etl_pipelines_spark.pipelines import weather as wx
 from advanced_etl_pipelines_spark.sources.sinks import (
     append_parquet,
@@ -340,3 +345,91 @@ def test_first_failure_in_submission_order_wins(spark, tmp_path):
     with pytest.raises(RuntimeError, match="load failed"):
         aq.run_pipeline(spark, raw, str(tmp_path / "staged"), str(out), upsert=_failing_load)
     _assert_no_active_job(spark)
+
+
+def test_report_plans_are_built_before_any_write_starts():
+    # a fixed order keeps the upsert's jobs queued behind the reports'
+    # on every op, whatever the relative speed of plan building and jobs
+    events = []
+
+    def analyze(staged):
+        events.append("analyze")
+        return {}
+
+    run_medallion(lambda: "staged", lambda df: events.append("load"), analyze, "unused")
+    assert events == ["analyze", "load"]
+
+
+def test_analyze_failure_submits_no_write():
+    loaded = []
+
+    def analyze(staged):
+        raise RuntimeError("analyze failed")
+
+    with pytest.raises(RuntimeError, match="analyze failed"):
+        run_medallion(lambda: "staged", loaded.append, analyze, "unused")
+    assert loaded == []
+
+
+# ---------- py4j round trips of plan building ----------
+
+# Call, reflection and constructor commands that building both
+# pipelines' plans on the landed batch sends.  A change that adds round
+# trips fails here on any box; lower the pin when a change removes some.
+BUILD_ROUND_TRIPS = 594
+
+
+def _round_trips(spark, build) -> int:
+    """py4j call (``c``), reflection (``r``) and constructor (``i``)
+    commands ``build()`` sends.  Object-release messages depend on when
+    Python frees objects, so they are not counted, and the collector is
+    off meanwhile."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    kinds = Counter()
+
+    def counting(command, *args, **kwargs):
+        kinds[command[:1]] += 1
+        return send(command, *args, **kwargs)
+
+    gc.disable()
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        del client.send_command
+        gc.enable()
+    return kinds["c"] + kinds["r"] + kinds["i"]
+
+
+def test_get_spark_turns_off_call_site_capture(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert is_debugging_enabled() is False
+
+
+def test_each_feature_costs_at_most_three_round_trips(spark):
+    """A feature is one ``F.expr`` over its SQL body: a reflection lookup
+    of the JVM ``functions`` class, one of its ``expr`` member and the
+    call.  The same feature as a ``Column``-method chain costs one or
+    more round trips per method."""
+    builds = {
+        "aqi_category_pm25": lambda: features.aqi_category_pm25("pm2_5"),
+        "severity_score": features.severity_score,
+        "risk_class_from_severity": lambda: features.risk_class_from_severity("severity"),
+        "temp_category": lambda: features.temp_category("temperature_c"),
+        "feels_like_c": features.feels_like_c,
+    }
+    costs = {name: _round_trips(spark, build) for name, build in builds.items()}
+    assert max(costs.values()) <= 3, costs
+
+
+def test_plan_building_round_trips_are_pinned(spark, tmp_path):
+    raw, weather = _land(tmp_path)
+
+    def build():
+        aq.analyze(aq.transform(aq.parse_raw(aq.read_raw(spark, raw))))
+        wx.analyze(wx.transform(wx.flatten(wx.read_raw(spark, weather))))
+
+    build()  # first calls may fill caches on either side of the gateway
+    assert _round_trips(spark, build) == BUILD_ROUND_TRIPS
