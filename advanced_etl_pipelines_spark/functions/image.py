@@ -1,11 +1,9 @@
 """Format-dispatching image decode over the in-repo pure codecs.
 
 One entry point for the multimodal operators: sniff the magic bytes,
-route to ``functions/png.py`` or ``functions/jpeg.py``.  PIL, when
-importable, takes precedence inside the operators themselves
-(operators/multimodal.py:_real_decode); this module is the
-zero-dependency floor that keeps the strict path REAL in containers
-without an image library.
+route to ``functions/png.py`` or ``functions/jpeg.py``.  This is the
+strict path of operators/multimodal.py:_real_decode, and it needs no
+image library.
 """
 
 from __future__ import annotations

@@ -18,13 +18,12 @@ one sample per component), precision 2..16, predictors 1-7, point
 transform Pt >= 0, restart markers.  Subsampled lossless raises
 loudly.
 
-Routed from ``jpeg.decode_jpeg`` on marker 0xC3, the same way SOF2 ->
-jpeg_progressive and SOF9 -> jpeg_arith.
+``jpeg.decode_jpeg`` parses the file with the shared segment walker
+and hands a SOF3 frame to ``_decode_lossless``; the encoder writes its
+segments with the shared writers.
 """
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 
@@ -32,10 +31,12 @@ from advanced_etl_pipelines_spark.functions.jpeg import (
     _BitReader,
     _BitWriter,
     _build_codes,
-    _build_decode,
     _category,
     _extend,
     _huff_decode,
+    _interval,
+    _scan,
+    _write_jpeg,
 )
 
 # Flat canonical table over the 17 lossless DC categories (0..16):
@@ -61,6 +62,41 @@ def _predict(ra: int, rb: int, rc: int, sel: int) -> int:
     if sel == 7:
         return (ra + rb) >> 1
     raise ValueError(f"invalid lossless predictor {sel}")
+
+
+def _samples(h: int, w: int, ri: int):
+    """(y, x, k, first_line) for every MCU (one sample per component)
+    in scan order: k is the restart interval an MCU starts (k = 0 for
+    the scan's first MCU, -1 for MCUs that start none), and
+    ``first_line`` holds until the end of the row that interval starts
+    on (T.81 H.1.2.2: Ra prediction along its first line)."""
+    k = -1
+    first_line = True
+    for y in range(h):
+        for x in range(w):
+            mcu = y * w + x
+            reset = mcu == 0 or bool(ri) and mcu % ri == 0
+            if reset:
+                k += 1
+                first_line = True
+            yield y, x, k if reset else -1, first_line
+            if x == w - 1:
+                first_line = False
+
+
+def _prediction(s, y, x, c, sel, reset, first_line, default) -> int:
+    """Prediction of sample (y, x, c) from its decoded neighbours in
+    ``s``: the default at an interval start, Ra along its first line,
+    Rb at a row start, else predictor ``sel`` (Annex H.1.2.1)."""
+    if reset:
+        return default
+    if first_line:
+        return int(s[y, x - 1, c])  # Ra
+    if x == 0:
+        return int(s[y - 1, x, c])  # row start: Rb
+    return _predict(
+        int(s[y, x - 1, c]), int(s[y - 1, x, c]), int(s[y - 1, x - 1, c]), sel
+    )
 
 
 def encode_jpeg_lossless(
@@ -96,198 +132,62 @@ def encode_jpeg_lossless(
     codes = _build_codes(DCL_BITS, DCL_VALS)
     bw = _BitWriter()
     default = 1 << (precision - pt - 1)
-    preds_reset = True
-    first_line = True  # T.81 H.1.2.2 (ADVICE r6): Ra prediction for
-    # the ENTIRE first line of the scan and of each restart interval
-    mcu = 0
-    restart_at = restart_interval or 0
-    last_restart_mcu = 0
-    for y in range(h):
-        for x in range(w):
-            if (
-                restart_at
-                and mcu
-                and mcu % restart_at == 0
-                and mcu != last_restart_mcu
-            ):
-                bw.marker(0xD0 + (mcu // restart_at - 1) % 8)
-                preds_reset = True
-                first_line = True
-                last_restart_mcu = mcu
-            for c in range(nc):
-                if preds_reset:
-                    px = default
-                elif first_line:
-                    px = int(s[y, x - 1, c])  # Ra
-                elif x == 0:
-                    px = int(s[y - 1, x, c])  # row start: Rb
-                else:
-                    px = _predict(
-                        int(s[y, x - 1, c]),
-                        int(s[y - 1, x, c]),
-                        int(s[y - 1, x - 1, c]),
-                        predictor,
-                    )
-                diff = (int(s[y, x, c]) - px) & 0xFFFF
-                if diff >= 0x8000:
-                    diff -= 0x10000  # modulo-65536 arithmetic per spec
-                if diff == -32768 or diff == 32768:
-                    cat = 16
-                else:
-                    cat = _category(diff)
-                code, length = codes[cat]
-                bw.write(code, length)
-                if 0 < cat < 16:
-                    bw.write(
-                        diff if diff >= 0 else diff + (1 << cat) - 1, cat
-                    )
-            preds_reset = False
-            if x == w - 1:
-                first_line = False  # the interval's first line ends here
-            mcu += 1
+    for y, x, k, first_line in _samples(h, w, restart_interval):
+        if k > 0:
+            bw.marker(0xD0 + (k - 1) % 8)
+        for c in range(nc):
+            px = _prediction(s, y, x, c, predictor, k >= 0, first_line, default)
+            diff = (int(s[y, x, c]) - px) & 0xFFFF
+            if diff >= 0x8000:
+                diff -= 0x10000  # modulo-65536 arithmetic per spec
+            cat = 16 if diff == -32768 else _category(diff)
+            bw.write(*codes[cat])
+            if 0 < cat < 16:
+                bw.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
     bw.flush()
 
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xc3" + struct.pack(
-        ">HBHHB", 8 + 3 * nc, precision, h, w, nc
+    comps = [{"id": c + 1, "h": 1, "v": 1, "tq": 0} for c in range(nc)]
+    return _write_jpeg(
+        0xC3, precision, comps, {"h": h, "w": w}, [],
+        [(0, 0, DCL_BITS, DCL_VALS)],
+        [_scan(comps, predictor, 0, 0, pt, restart_interval)],  # Ss = predictor
+        lambda scan: bytes(bw.out),
     )
-    for c in range(nc):
-        out += bytes([c + 1, 0x11, 0])  # sampling 1x1, no quant table
-    out += b"\xff\xc4" + struct.pack(">H", 19 + len(DCL_VALS))
-    out += bytes([0x00]) + bytes(DCL_BITS) + bytes(DCL_VALS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * nc, nc)
-    for c in range(nc):
-        out += bytes([c + 1, 0x00])
-    out += bytes([predictor, 0, pt])  # Ss=predictor, Se=0, Ah/Al=0/Pt
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
-def decode_lossless(data: bytes) -> np.ndarray:
-    """SOF3 bytes -> integer pixel array, EXACT (uint8/uint16 by
-    precision; shape (H,W) for one component, (H,W,C) otherwise)."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    huff: dict[int, dict] = {}
-    comps: list[dict] = []
-    h = w = 0
-    precision = 8
-    restart_interval = 0
-    scan: list[dict] = []
-    predictor = point_transform = 0
-
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad marker alignment")
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD8:
-            continue
-        seglen = struct.unpack(">H", data[pos : pos + 2])[0]
-        seg = data[pos + 2 : pos + seglen]
-        if marker == 0xC3:
-            precision = seg[0]
-            if not 2 <= precision <= 16:
-                raise ValueError(f"invalid precision {precision}")
-            h, w = struct.unpack(">HH", seg[1:5])
-            nc = seg[5]
-            comps = []
-            for ci in range(nc):
-                cid, hv, _tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                if hv != 0x11:
-                    raise NotImplementedError(
-                        "subsampled lossless JPEG not supported"
-                    )
-                comps.append({"id": cid})
-        elif marker == 0xC4:
-            i = 0
-            while i < len(seg):
-                cls, tid = seg[i] >> 4, seg[i] & 0xF
-                bits = list(seg[i + 1 : i + 17])
-                n = sum(bits)
-                vals = list(seg[i + 17 : i + 17 + n])
-                if cls == 0:
-                    huff[tid] = _build_decode(bits, vals)
-                i += 17 + n
-        elif marker == 0xDD:
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:
-            ns = seg[0]
-            scan = []
-            for si in range(ns):
-                cid, tids = seg[1 + 2 * si : 3 + 2 * si]
-                comp = next(c for c in comps if c["id"] == cid)
-                scan.append({"comp": comp, "dc": tids >> 4})
-            predictor = seg[1 + 2 * ns]
-            point_transform = seg[3 + 2 * ns] & 0xF
-            pos += seglen
-            break
-        pos += seglen
-    if not scan:
-        raise ValueError("no SOS marker found")
-    if len(scan) != len(comps):
-        # ADVICE r6: a multi-scan (non-interleaved) lossless file would
-        # silently decode only its first scan — raise instead, per the
+def _decode_lossless(frame: dict) -> np.ndarray:
+    """SOF3 frame (``jpeg._parse``) -> integer pixel array, EXACT
+    (uint8/uint16 by precision; shape (H,W) for one component, (H,W,C)
+    otherwise)."""
+    scans, comps = frame["scans"], frame["comps"]
+    scan = scans[0]
+    if len(scans) != 1 or len(scan["comps"]) != len(comps):
+        # a multi-scan (non-interleaved) lossless file would otherwise
+        # silently decode only its first scan — raise, per the
         # strict-decode contract
-        raise NotImplementedError(
-            "multi-scan lossless JPEG not supported"
-        )
-
-    nc = len(scan)
+        raise NotImplementedError("multi-scan lossless JPEG not supported")
+    tables = [scan["huff"].get((0, sc["dc"])) for sc in scan["comps"]]
+    if None in tables:
+        raise ValueError("scan references missing table")
+    h, w, nc = frame["geom"]["h"], frame["geom"]["w"], len(comps)
+    pt = scan["al"]
     out = np.zeros((h, w, nc), dtype=np.int64)
-    br = _BitReader(data, pos)
-    default = 1 << (precision - point_transform - 1)
-    preds_reset = True
-    first_line = True  # H.1.2.2: Ra for the whole first line of the
-    # scan and of each restart interval (ADVICE r6)
-    mcu = 0
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                br.align_restart()
-                preds_reset = True
-                first_line = True
-            for ci, sc in enumerate(scan):
-                table = huff.get(sc["dc"])
-                if table is None:
-                    raise ValueError("scan references missing table")
-                cat = _huff_decode(br, table)
-                if cat == 16:
-                    diff = 32768
-                elif cat:
-                    diff = _extend(br.bits(cat), cat)
-                else:
-                    diff = 0
-                if preds_reset:
-                    px = default
-                elif first_line:
-                    px = int(out[y, x - 1, ci])  # Ra
-                elif x == 0:
-                    px = int(out[y - 1, x, ci])
-                else:
-                    px = _predict(
-                        int(out[y, x - 1, ci]),
-                        int(out[y - 1, x, ci]),
-                        int(out[y - 1, x - 1, ci]),
-                        predictor,
-                    )
-                val = (px + diff) & 0xFFFF  # modulo-65536 per spec
-                out[y, x, ci] = val
-            preds_reset = False
-            if x == w - 1:
-                first_line = False
-            mcu += 1
+    default = 1 << (frame["precision"] - pt - 1)
+    for y, x, k, first_line in _samples(h, w, scan["ri"]):
+        if k >= 0:
+            br = _BitReader(_interval(scan, k))
+        for ci in range(nc):
+            cat = _huff_decode(br, tables[ci])
+            if cat == 16:
+                diff = 32768
+            else:
+                diff = _extend(br.bits(cat), cat) if cat else 0
+            px = _prediction(
+                out, y, x, ci, scan["ss"], k >= 0, first_line, default
+            )
+            out[y, x, ci] = (px + diff) & 0xFFFF  # modulo-65536 per spec
 
-    if point_transform:
-        out <<= point_transform
-    dt = np.uint8 if precision <= 8 else np.uint16
-    out = out.astype(dt)
+    if pt:
+        out <<= pt
+    out = out.astype(np.uint8 if frame["precision"] <= 8 else np.uint16)
     return out[:, :, 0] if nc == 1 else out

@@ -8,9 +8,8 @@ Decode: every standard color type (grey 1/2/4/8/16, RGB 8/16,
 grey+alpha 8/16, RGBA 8/16, palette 1/2/4/8 with PLTE + optional
 tRNS), both non-interlaced and Adam7 interlaced, all five scanline
 filters; 16-bit images decode to uint16 arrays.  Encode: 8-bit
-grey/RGB/RGBA, non-interlaced, filters 0-2.  A real deployment can swap PIL in at the
-same call sites; the bytes produced here are standard PNGs any viewer
-opens.
+grey/RGB/RGBA, non-interlaced, filters 0-2.  The bytes produced here
+are standard PNGs any viewer opens.
 
 Implementation notes:
 * decode defilters row-by-row; SUB uses a per-channel cumulative sum,

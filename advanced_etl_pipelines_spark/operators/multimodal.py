@@ -4,11 +4,11 @@ Images/audio/video ride through the engine as opaque ``binary`` columns
 with a typed metadata struct.  The Spark-side architecture is real and
 tested — schema, Arrow-batched ``mapInPandas`` decode, partition-size
 control — and the codec seam now has a REAL image path:
-``decode_media_meta(strict=True)`` decodes PNG and baseline JPEG bytes
-(PIL when importable, else the pure codecs in ``functions/png.py`` /
-``functions/jpeg.py``) and raises ``NotImplementedError`` only for
-formats none of those handle (audio/video containers without
-soundfile/pyav — WAV has its own pure path in ``functions/wav.py``).
+``decode_media_meta(strict=True)`` decodes PNG and JPEG bytes with the
+pure codecs in ``functions/png.py`` / ``functions/jpeg.py``, reads AVI
+headers with ``functions/avi.py``, and raises ``NotImplementedError``
+for any other format (WAV has its own pure path in
+``functions/wav.py``).
 ``strict=False`` keeps the deterministic fake decode for synthetic
 media columns.
 
@@ -49,7 +49,7 @@ def attach_fake_media(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 def _fake_decode(media: bytes, media_type: str) -> tuple[int, int, int]:
     """Deterministic fake (width, height, n_frames) from byte content.
-    A real implementation would dispatch to PIL / soundfile / pyav here."""
+    ``_real_decode`` is the real dispatch."""
     n = len(media)
     head = sum(media[:16]) if n else 0
     width = 16 + (head + n) % 240
@@ -59,42 +59,29 @@ def _fake_decode(media: bytes, media_type: str) -> tuple[int, int, int]:
 
 
 def _real_decode(media: bytes, media_type: str) -> tuple[int, int, int]:
-    """Real codec dispatch for ``strict=True``: PIL when importable
-    (any format PIL knows), else the in-repo pure codecs — PNG (every
-    standard color type, functions/png.py) and JPEG
-    (baseline/progressive/arithmetic SOF9/12-bit/lossless SOF3 —
-    functions/jpeg.py, jpeg_progressive.py, jpeg_arith.py,
-    jpeg_lossless.py; the round-2→6 codec trajectory).  Raises
-    NotImplementedError for formats none of those paths decode —
-    compressed audio beyond PCM/IMA-ADPCM WAV and non-MJPEG video need
-    soundfile/pyav."""
+    """Real codec dispatch for ``strict=True`` over the in-repo pure
+    codecs: AVI main-header meta (functions/avi.py), then a full pixel
+    decode of PNG (every standard color type, functions/png.py) or JPEG
+    (sequential, progressive, arithmetic, 12-bit and lossless —
+    functions/jpeg.py, jpeg_arith.py, jpeg_lossless.py), so a corrupt
+    or truncated image raises.  Raises NotImplementedError for any
+    other format."""
     from advanced_etl_pipelines_spark.functions import avi as A
     from advanced_etl_pipelines_spark.functions import image as I
 
     if A.is_avi(bytes(media[:12])):
         # real container meta: width/height/frame count from the avih
-        # main header (PIL has no AVI reader, so this dispatch comes
-        # first; frame PIXEL decode lives in decode_video_frames)
+        # main header (frame PIXEL decode lives in decode_video_frames)
         w, h, n, _fps = A.avi_meta(bytes(media))
         return w, h, n
-
-    try:
-        import io
-
-        from PIL import Image  # type: ignore[import-not-found]
-
-        with Image.open(io.BytesIO(bytes(media))) as im:
-            return im.width, im.height, getattr(im, "n_frames", 1)
-    except ImportError:
-        pass
     if I.image_format(bytes(media[:8])) is not None:
         arr = I.decode_image(bytes(media))  # full pixel decode, not headers
         h, w = arr.shape[:2]
         return w, h, 1
     raise NotImplementedError(
-        f"no codec for media_type={media_type!r} without PIL "
-        "(pure codecs handle every standard PNG color type and "
-        "baseline/progressive/arithmetic/12-bit/lossless JPEG)"
+        f"no codec for media_type={media_type!r} "
+        "(pure codecs handle AVI headers, every standard PNG color type "
+        "and baseline/progressive/arithmetic/12-bit/lossless JPEG)"
     )
 
 
@@ -102,14 +89,14 @@ def decode_media_meta(df: DataFrame, strict: bool = False) -> DataFrame:
     """Arrow-batched media "decode": (id, media, media_type) ->
     MEDIA_META_SCHEMA rows.
 
-    ``strict=True`` decodes for real — PIL if installed, else the
-    pure-stdlib PNG codec; unsupported formats raise, so a corrupt or
+    ``strict=True`` decodes for real with the pure codecs (see
+    ``_real_decode``); unsupported formats raise, so a corrupt or
     unknown blob fails loudly instead of producing fake dimensions.
     ``strict=False`` is the deterministic fake for synthetic columns.
     """
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: F401  (vectorized paths would use this)
+        import zlib
 
         for pdf in batches:
             out = {
@@ -132,8 +119,6 @@ def decode_media_meta(df: DataFrame, strict: bool = False) -> DataFrame:
                 fs.append(fr)
                 # cheap stable digest of the first KiB (crc32: deterministic
                 # across processes, unlike Python hash())
-                import zlib
-
                 ds.append(zlib.crc32(bytes(media[:1024])))
             out["width"], out["height"], out["n_frames"], out["digest"] = (
                 ws,

@@ -888,9 +888,8 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL media decode end-to-end: every document row gets an actual
     encoded PNG (id-seeded gradient, varying dimensions), and
-    ``decode_media_meta(strict=True)`` decodes the pixels back — PIL
-    when installed, else the pure-stdlib PNG codec
-    (``functions/png.py``).  Round 1 shipped this seam as a stub that
+    ``decode_media_meta(strict=True)`` decodes the pixels back through
+    the pure-stdlib PNG codec (``functions/png.py``).  Round 1 shipped this seam as a stub that
     raised NotImplementedError (VERDICT.md item 7); the strict path now
     performs a full zlib-inflate + defilter pixel decode, so wrong
     dimensions or corrupt bytes fail loudly.  Output aggregates decoded
@@ -1046,7 +1045,7 @@ def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     chroma subsampling — the camera default), and
     ``decode_media_meta(strict=True)`` entropy-decodes, dequantizes,
     IDCTs and upsamples it back through the pure-numpy codec
-    (``functions/jpeg.py``; PIL takes over when installed).  Same
+    (``functions/jpeg.py``).  Same
     output shape as ``multimodal_decode``'s PNG path: decoded
     dimensions aggregated per width bucket, every blob exercised.
 

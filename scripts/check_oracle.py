@@ -224,7 +224,9 @@ def norm_cell(v):
         # above 1e10.
         m = abs(v)
         digits = 4 if m < 1e6 else 9 - int(math.log10(m))
-        return round(v, digits)
+        # -0.0 and 0.0 are one answer, but their reprs differ: DuckDB's
+        # ROUND returns -0.0 where Spark's returns 0.0
+        return round(v, digits) or 0.0
     if hasattr(v, "isoformat"):
         return v.isoformat()
     if isinstance(v, bytes):

@@ -171,12 +171,6 @@ def test_strict_decode_rejects_non_png_without_pil(spark):
         decode_media_meta,
     )
 
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL installed: non-PNG formats may decode for real")
-    except ImportError:
-        pass
     df = spark.createDataFrame([(1, "just text")], "doc_id long, text string")
     media = attach_fake_media(df, "text", "doc_id")
     with pytest.raises(Exception, match="no codec|NotImplementedError"):
@@ -701,9 +695,7 @@ def test_progressive_jpeg_baseline_parity():
     import numpy as np
 
     from advanced_etl_pipelines_spark.functions import jpeg as J
-    from advanced_etl_pipelines_spark.functions import (
-        jpeg_progressive as P,
-    )
+    from advanced_etl_pipelines_spark.functions import jpeg as P
 
     rng = np.random.RandomState(3)
     cases = [
@@ -739,9 +731,7 @@ def test_progressive_12bit_baseline_parity():
     import numpy as np
 
     from advanced_etl_pipelines_spark.functions import jpeg as J
-    from advanced_etl_pipelines_spark.functions import (
-        jpeg_progressive as P,
-    )
+    from advanced_etl_pipelines_spark.functions import jpeg as P
 
     rng = np.random.RandomState(9)
     for shape in ((13, 20, 3), (15, 18)):
@@ -946,9 +936,7 @@ def test_arith_progressive_baseline_parity():
     import numpy as np
 
     from advanced_etl_pipelines_spark.functions import jpeg as J
-    from advanced_etl_pipelines_spark.functions import (
-        jpeg_arith_progressive as AP,
-    )
+    from advanced_etl_pipelines_spark.functions import jpeg_arith as AP
 
     rng = np.random.RandomState(3)
     cases = [
@@ -982,9 +970,7 @@ def test_arith_progressive_restart_markers_decode_identically():
     import numpy as np
 
     from advanced_etl_pipelines_spark.functions import jpeg as J
-    from advanced_etl_pipelines_spark.functions import (
-        jpeg_arith_progressive as AP,
-    )
+    from advanced_etl_pipelines_spark.functions import jpeg_arith as AP
 
     rng = np.random.RandomState(11)
     arr = rng.randint(0, 256, (24, 37, 3)).astype(np.uint8)
@@ -1004,9 +990,7 @@ def test_arith_progressive_12bit_parity():
     import numpy as np
 
     from advanced_etl_pipelines_spark.functions import jpeg as J
-    from advanced_etl_pipelines_spark.functions import (
-        jpeg_arith_progressive as AP,
-    )
+    from advanced_etl_pipelines_spark.functions import jpeg_arith as AP
 
     rng = np.random.RandomState(9)
     for shape in ((13, 20, 3), (15, 18)):
@@ -1062,8 +1046,6 @@ def test_strict_seam_dispatches_sof9_and_12bit(spark):
     from advanced_etl_pipelines_spark.functions import jpeg as J
     from advanced_etl_pipelines_spark.functions.jpeg_arith import (
         encode_jpeg_arith,
-    )
-    from advanced_etl_pipelines_spark.functions.jpeg_arith_progressive import (  # noqa: E501
         encode_jpeg_arith_progressive,
     )
     from advanced_etl_pipelines_spark.operators import multimodal as M
@@ -1107,6 +1089,36 @@ def test_jpeg_marker_scan_robustness():
             J.jpeg_meta(blob[:cut] + b"\xff")
     with _pytest.raises((ValueError, NotImplementedError)):
         J.decode_jpeg(blob[: len(blob) // 2])
+
+    # every coding mode, gray and RGB (4:2:0 for the DCT modes): the
+    # header read agrees with the full decode, and a buffer cut anywhere
+    # (inside a segment, inside entropy-coded data, before EOI) raises
+    from advanced_etl_pipelines_spark.functions import jpeg_arith as A
+    from advanced_etl_pipelines_spark.functions import jpeg_lossless as L
+
+    encoders = {
+        "sof0": lambda a: J.encode_jpeg(a, 85, "420", restart_interval=2),
+        "sof2": lambda a: J.encode_jpeg_progressive(a, 85, "420"),
+        "sof9": lambda a: A.encode_jpeg_arith(a, 85, "420"),
+        "sof10": lambda a: A.encode_jpeg_arith_progressive(a, 85, "420"),
+        "sof3": lambda a: L.encode_jpeg_lossless(a, restart_interval=40),
+    }
+    rng = np.random.RandomState(5)
+    ramp = np.add.outer(np.arange(24) * 9, np.arange(24) * 5) % 256
+    for shape in ((24, 24), (24, 24, 3)):
+        img = np.clip(
+            ramp.reshape(24, 24, *([1] * (len(shape) - 2)))
+            + rng.randint(-30, 31, shape), 0, 255,
+        ).astype(np.uint8)
+        for mode, encode in encoders.items():
+            blob = encode(img)
+            out = J.decode_jpeg(blob)
+            assert J.jpeg_meta(blob) == (
+                out.shape[1], out.shape[0], 1 if out.ndim == 2 else 3
+            ), mode
+            for cut in range(len(blob)):
+                with _pytest.raises(ValueError):
+                    J.decode_jpeg(blob[:cut])
 
 
 def test_avi_mux_demux_roundtrip():

@@ -37,6 +37,14 @@ def answer_digest(rows, cols) -> str:
     return hashlib.sha1(body.encode()).hexdigest()[:16]
 
 
+def test_answer_digest_ignores_the_sign_of_zero():
+    # DuckDB's ROUND gives -0.0 where Spark's gives 0.0 (mom_revenue_growth
+    # at sf0.1); the two are one answer
+    assert answer_digest([(-0.0,)], ["x"]) == answer_digest([(0.0,)], ["x"])
+    assert answer_digest([(-0.00001,)], ["x"]) == answer_digest([(0.0,)], ["x"])
+    assert answer_digest([(-1.5,)], ["x"]) != answer_digest([(1.5,)], ["x"])
+
+
 def _pins() -> dict[str, list[str]]:
     with open(PINS) as f:
         return json.load(f)
